@@ -56,16 +56,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = LocalSession.cpus
+    val spark = LocalSession()
 
     // SPARK_GRAFT_ONLY: comma-separated query names — time just those
     // (iteration aid; the driver never sets it)
@@ -197,7 +189,7 @@ object Bench {
     // whose map is the 12-anchor subset (that number lives in
     // BENCH_full_latest.json, and here under `full_total`)
     val anchorTotal = anchors.flatMap(a => rmap.get(a).flatten).sum
-    val anchorLine = s"""{"metric":"anchor12_total","value":${fmt3(anchorTotal)},"unit":"sec","queries":$aqs,"full_total":${fmt3(total)},"errors":$errors,"sf":"$sfDir","cpus":$cpus,"subset":"anchor12_of_${results.size}","full":"BENCH_full_latest.json"}"""
+    val anchorLine = s"""{"metric":"anchor12_total","value":${fmt3(anchorTotal)},"unit":"sec","queries":$aqs,"full_total":${fmt3(total)},"errors":$errors,"sf":"$sfDir","cpus":$cpus,"subset":"anchor12_of_${results.size}","full":"${fullArtifact(cpus)}"}"""
     val qs3 = results
       .map { case (k, v) => "\"" + k + "\":" + v.map(fmt3).getOrElse("-1.0") }
       .mkString("{", ",", "}")
@@ -233,48 +225,62 @@ object Bench {
       // scaling sweep runs SECOND and used to clobber it (r20 lost its
       // c32 per-query record that way). Non-32-core runs stamp their own
       // cpus-suffixed artifact instead.
-      val suffix = if (cpus == "32") "" else s"_c$cpus"
-      persistAtRepoRoot("bench", line, s"BENCH_full_latest$suffix.json")
+      persistAtRepoRoot("bench", line, fullArtifact(cpus))
       // the anchor-12 map ALSO lands as its own small durable artifact:
       // three rounds of driver-side stdout parsing came back `parsed:
       // null` despite head+tail anchor emission, so the normative
       // BASELINE.md §B comparison must never depend on stdout at all
-      persistAtRepoRoot("bench", anchorLine, s"BENCH_anchor_latest$suffix.json")
+      persistAtRepoRoot("bench", anchorLine, s"BENCH_anchor_latest${artifactSuffix(cpus)}.json")
     }
     spark.stop()
   }
 
+  /** Repo-root artifact suffix: the 32-core run owns the bare names,
+    * every other core count stamps `_c{N}`. */
+  private[graft] def artifactSuffix(cpus: String): String =
+    if (cpus == "32") "" else s"_c$cpus"
+
+  /** The full-catalog artifact a `cpus`-core run writes and compares
+    * against. */
+  private[graft] def fullArtifact(cpus: String): String =
+    s"BENCH_full_latest${artifactSuffix(cpus)}.json"
+
   /** Per-query minimums from the previous committed full-catalog artifact
-    * (repo-root `BENCH_full_latest.json`), for the idle-machine guard —
-    * empty when the file is absent, unparsable, or recorded a DIFFERENT
-    * sf dir (cross-sf comparison would re-sample everything for nothing).
-    * Hand-rolled extraction (no JSON lib on the unmanaged classpath): the
-    * artifact is this object's own single-line output, so the quoted-key
-    * number-value shape is stable by construction.
+    * ([[fullArtifact]] at the repo root), for the idle-machine guard —
+    * empty when the file is absent or not [[comparableBaseline]].
     */
   private def previousCommitted(sfDir: String, cpus: String): Map[String, Double] =
     try {
-      val suffix = if (cpus == "32") "" else s"_c$cpus"
-      val p = java.nio.file.Paths.get(s"BENCH_full_latest$suffix.json")
+      val p = java.nio.file.Paths.get(fullArtifact(cpus))
       if (!java.nio.file.Files.exists(p)) Map.empty
-      else {
-        val line = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        // a mismatched sf or core count is not a comparable baseline
-        // (legacy artifacts without a cpus field are accepted as-is)
-        if (!line.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-        else if ("\"cpus\":([0-9]+)".r.findFirstMatchIn(line)
-                   .exists(_.group(1) != cpus)) Map.empty
-        else {
-          val start = line.indexOf("\"queries\":{")
-          val end = line.indexOf("}", start)
-          if (start < 0 || end < 0) Map.empty
-          else "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r
-            .findAllMatchIn(line.substring(start + 11, end))
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter(_._2 > 0).toMap
-        }
-      }
+      else comparableBaseline(
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"), sfDir, cpus)
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
+
+  /** The per-query map of an artifact line — empty when it is unparsable,
+    * or recorded a DIFFERENT sf dir or core count (a cross-config
+    * comparison would re-sample everything for nothing). A legacy line
+    * with no cpus field predates core-count stamping, when every run was
+    * 32-core, so it compares only against a 32-core run. Hand-rolled
+    * extraction (no JSON lib on the unmanaged classpath): the artifact is
+    * this object's own single-line output, so the quoted-key number-value
+    * shape is stable by construction.
+    */
+  private[graft] def comparableBaseline(line: String, sfDir: String,
+                                        cpus: String): Map[String, Double] = {
+    val recordedCpus = "\"cpus\":([0-9]+)".r.findFirstMatchIn(line).map(_.group(1))
+    if (!line.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
+    else if (recordedCpus.getOrElse("32") != cpus) Map.empty
+    else {
+      val start = line.indexOf("\"queries\":{")
+      val end = line.indexOf("}", start)
+      if (start < 0 || end < 0) Map.empty
+      else "\"([A-Za-z0-9_]+)\":(-?[0-9.]+)".r
+        .findAllMatchIn(line.substring(start + 11, end))
+        .map(m => m.group(1) -> m.group(2).toDouble)
+        .filter(_._2 > 0).toMap
+    }
+  }
 
   /** µs precision is plenty for wall-clock seconds, and the shorter line
     * raises how many per-query entries survive a truncated stdout capture.

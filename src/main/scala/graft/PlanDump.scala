@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev aid for the optimization rounds: writes `.explain("formatted")` of
   * selected catalog queries to files, so plan-shape claims (Exchange
   * count, join strategy, PushedFilters/ReadSchema) are auditable without
@@ -21,20 +19,11 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val names: Seq[String] =
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq.filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[plandump] no such query: $n")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.SimHashAgg
 
@@ -140,7 +140,6 @@ object Dedup {
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct().cache()
-    val reliable = vertices.sparkSession.sparkContext.getCheckpointDir.isDefined
     var labels = vertices
       .select(col(idCol).cast("long").as("id"))
       .withColumn("rep_id", col("id"))
@@ -164,19 +163,17 @@ object Dedup {
       val tagged = labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"), col("rep_id").as("old_rep"),
           least(col("rep_id"), coalesce(col("nbr_min"), col("rep_id"))).as("rep_id"))
-      val next =
-        if (reliable) tagged.checkpoint(eager = true)
-        else tagged.localCheckpoint(eager = true)
+      val next = Iterative.checkpoint(tagged)
       changed = next.filter(col("rep_id") =!= col("old_rep")).count()
       // `next` no longer reads round iter-1's blocks — release them now,
       // or maxIters label-table copies pile up in storage memory for the
       // life of the session
-      if (prev != null) releaseCheckpoint(prev)
+      if (prev != null) Iterative.releaseCheckpoint(prev)
       prev = if (iter > 0) labels else null // round 0's `labels` is the lazy seed
       labels = next
       iter += 1
     }
-    if (prev != null) releaseCheckpoint(prev)
+    if (prev != null) Iterative.releaseCheckpoint(prev)
     edges.unpersist()
     require(changed == 0,
       s"connectedComponents did not converge in $maxIters rounds — " +
@@ -184,9 +181,6 @@ object Dedup {
         "or use a star-contraction variant")
     labels.select(col("id"), col("rep_id"))
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    Iterative.releaseCheckpoint(df)
 
   /** Connected components by alternating star contraction (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") — the high-diameter
@@ -220,9 +214,6 @@ object Dedup {
   def connectedComponentsStar(vertices: DataFrame, idCol: String,
                               pairs: DataFrame, maxIters: Int = 48): DataFrame = {
     requireIntegralId(vertices, idCol, "connectedComponentsStar")
-    val reliable = vertices.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
 
     // canonical edges: larger id -> smaller id, self-loops dropped
     val init = pairs
@@ -275,19 +266,19 @@ object Dedup {
         .filter(col("c") > 1 || (col("c") > 0 && col("r") > 0))
         .limit(1).count() == 0
 
-    var edges = ckpt(init)
+    var edges = Iterative.checkpoint(init)
     var prev: DataFrame = null
     var done = isStarForest(edges)
     var iter = 0
     while (!done && iter < maxIters) {
-      val next = ckpt(smallStar(largeStar(edges)))
+      val next = Iterative.checkpoint(smallStar(largeStar(edges)))
       done = isStarForest(next)
-      if (prev != null) releaseCheckpoint(prev)
+      if (prev != null) Iterative.releaseCheckpoint(prev)
       prev = edges
       edges = next
       iter += 1
     }
-    if (prev != null) releaseCheckpoint(prev)
+    if (prev != null) Iterative.releaseCheckpoint(prev)
     require(done,
       s"connectedComponentsStar did not converge in $maxIters rounds — " +
         "this exceeds the O(log^2 n) contract; raise maxIters")
@@ -331,8 +322,7 @@ object Dedup {
     * ingest are exactly where diameter grows).
     */
   def incrementalComponents(oldLabels: DataFrame, newIds: DataFrame,
-                            idCol: String, newPairs: DataFrame,
-                            scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+                            idCol: String, newPairs: DataFrame): DataFrame = {
     requireIntegralId(newIds, idCol, "incrementalComponents")
     val old = oldLabels.select(col("id").cast("long").as("id"),
       col("rep_id").cast("long").as("rep_id"))
@@ -355,19 +345,15 @@ object Dedup {
     // Catalyst re-analyzed all of it on every action. Truncation bounds
     // the plan at a batch-sized leaf; reliable when a checkpoint dir is
     // set (the connectedComponents durability contract), executor-local
-    // otherwise. `scope` stays in the signature for callers that pinned
-    // through it historically — the checkpoint supersedes it here.
-    val reliable = newPairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
-    val cached = ckpt(contracted)
+    // otherwise.
+    val cached = Iterative.checkpoint(contracted)
     val touched = cached.select(col("d1").as("id"))
       .union(cached.select(col("d2").as("id"))).distinct()
     // the sub-clustering output is referenced by BOTH final label joins;
     // checkpointing it too keeps the returned plan constant-sized (two
     // joins against two batch-sized leaves) instead of duplicating the
     // CC fixpoint plan per side
-    val sub = ckpt(connectedComponentsStar(touched, "id", cached)
+    val sub = Iterative.checkpoint(connectedComponentsStar(touched, "id", cached)
       .select(col("id").as("t_id"), col("rep_id").as("t_rep")))
     // compose: members of touched old components re-point at the merged
     // rep; everything else keeps its label. One rep-keyed join each side
@@ -505,26 +491,17 @@ object Dedup {
                          rowsPerBand: Int = 4, threshold: Double = 0.5,
                          seed: Long = 42L): DataFrame = {
     graft.functions.VectorExprs.register(train.sparkSession) // native bandSigs
+    val p = LshParams(n, bands, rowsPerBand, seed)
     val edocs = shingleIdArrays(evalSet, idCol, textCol, n)
       .select(col(idCol).as("eval_id"), col("ids").as("e_ids"))
-    val ebuckets = edocs
-      .select(col("eval_id"),
-        explode(bandSigs(col("e_ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("eval_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
     val tdocs = shingleIdArrays(train, idCol, textCol, n)
-    val tbuckets = tdocs
-      .select(col(idCol), explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-    val cand = tbuckets.join(broadcast(ebuckets), Seq("band", "bsig"))
+    val cand = bandBuckets(tdocs, idCol, "ids", p)
+      .join(broadcast(bandBuckets(edocs, "eval_id", "e_ids", p)), Seq("band", "bsig"))
       .select(col(idCol), col("eval_id")).distinct()
     cand
       .join(tdocs, Seq(idCol))
       .join(broadcast(edocs), Seq("eval_id"))
-      .select(col(idCol), col("eval_id"),
-        size(array_intersect(col("ids"), col("e_ids"))).as("i"),
-        size(col("ids")).as("n1"), size(col("e_ids")).as("n2"))
-      .select(col(idCol), col("eval_id"),
-        (col("i") * lit(1.0) / (col("n1") + col("n2") - col("i"))).as("jacc"))
+      .select(col(idCol), col("eval_id"), arrayJaccard(col("ids"), col("e_ids")).as("jacc"))
       .filter(col("jacc") >= threshold)
   }
 
@@ -638,10 +615,19 @@ object Dedup {
     inter
       .join(sz.select(col(idCol).as("d1"), col("n_sh").as("n1")), Seq("d1"))
       .join(sz.select(col(idCol).as("d2"), col("n_sh").as("n2")), Seq("d2"))
-      .select(col("d1"), col("d2"),
-        (col("i") * lit(1.0) / (col("n1") + col("n2") - col("i"))).as("jacc"))
+      .select(col("d1"), col("d2"), jaccard(col("i"), col("n1"), col("n2")).as("jacc"))
       .filter(col("jacc") >= threshold)
   }
+
+  /** Exact Jaccard from an intersection size and the two set sizes — the
+    * verify column of every Jaccard pair path. */
+  private def jaccard(i: Column, n1: Column, n2: Column): Column =
+    i * lit(1.0) / (n1 + n2 - i)
+
+  /** [[jaccard]] of two shingle-hash arrays, distinct by construction, via
+    * the codegen'd built-in `array_intersect` (no UDF in the plan). */
+  private def arrayJaccard(a: Column, b: Column): Column =
+    jaccard(size(array_intersect(a, b)), size(a), size(b))
 
   /** MinHash + LSH banding: candidate pairs whose signatures collide in at
     * least one band, then exact-Jaccard verification of candidates only.
@@ -662,17 +648,10 @@ object Dedup {
                  threshold: Double = 0.5, seed: Long = 42L,
                  scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
     val (docs, cand) = lshStages(df, idCol, textCol, n, bands, rowsPerBand, seed, scope)
-    // exact intersection size via the built-in array_intersect (codegen'd;
-    // no UDF in the plan) — `ids` arrays are distinct by construction
-    // (shingleSet emits distinct shingles), so no-dedup-ambiguity applies
     cand
       .join(docs.select(col(idCol).as("d1"), col("ids").as("ids1")), Seq("d1"))
       .join(docs.select(col(idCol).as("d2"), col("ids").as("ids2")), Seq("d2"))
-      .select(col("d1"), col("d2"),
-        size(array_intersect(col("ids1"), col("ids2"))).as("i"),
-        size(col("ids1")).as("n1"), size(col("ids2")).as("n2"))
-      .select(col("d1"), col("d2"),
-        (col("i") * lit(1.0) / (col("n1") + col("n2") - col("i"))).as("jacc"))
+      .select(col("d1"), col("d2"), arrayJaccard(col("ids1"), col("ids2")).as("jacc"))
       .filter(col("jacc") >= threshold)
   }
 
@@ -687,6 +666,17 @@ object Dedup {
                            seed: Long = 42L,
                            scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
     lshStages(df, idCol, textCol, n, bands, rowsPerBand, seed, scope)._2
+
+  /** Banding parameters of a MinHash-LSH pass: shingle size, bands ×
+    * rows per band, and the rehash seed. */
+  private[graft] case class LshParams(n: Int, bands: Int, rowsPerBand: Int, seed: Long)
+
+  /** A MinHash-LSH index as frames — band buckets (c_id, band, bsig),
+    * verify arrays (c_id, c_ids) — with the parameters that banded it:
+    * built in memory by [[lshIndex]] or read back from a [[buildLshIndex]]
+    * artifact by [[readLshIndex]]. This object is the only code that
+    * knows the persisted layout. */
+  private[graft] case class LshIndex(buckets: DataFrame, arrays: DataFrame, params: LshParams)
 
   /** Build the corpus's MinHash-LSH index ONCE and persist it — the text
     * sibling of `Similarity.buildIvfIndex`, and the serving shape for a
@@ -710,15 +700,8 @@ object Dedup {
                     rowsPerBand: Int = 4, seed: Long = 42L): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.functions.VectorExprs.register(spark) // native bandSigs
-    val cdocs = shingleIdArrays(corpus, idCol, textCol, n)
-    cdocs.select(col(idCol).as("c_id"), col("ids").as("c_ids"))
-      .write.mode("overwrite").parquet(s"$indexDir/arrays")
-    cdocs
-      .select(col(idCol).as("c_id"),
-        explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("c_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$indexDir/buckets")
+    writeLshIndex(corpus, idCol, textCol, LshParams(n, bands, rowsPerBand, seed),
+      indexDir, "overwrite")
     Seq((n, bands, rowsPerBand, seed))
       .toDF("n", "bands", "rows_per_band", "seed")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/params")
@@ -734,77 +717,116 @@ object Dedup {
     * gate's accept set is distinct by construction).
     */
   def appendToLshIndex(accepted: DataFrame, idCol: String, textCol: String,
-                       indexDir: String): Unit = {
-    val spark = accepted.sparkSession
-    graft.functions.VectorExprs.register(spark) // native bandSigs
-    val p = spark.read.parquet(s"$indexDir/params").head()
-    val (n, bands, rowsPerBand, seed) =
-      (p.getAs[Int]("n"), p.getAs[Int]("bands"),
-        p.getAs[Int]("rows_per_band"), p.getAs[Long]("seed"))
-    val cdocs = shingleIdArrays(accepted, idCol, textCol, n)
-    cdocs.select(col(idCol).as("c_id"), col("ids").as("c_ids"))
-      .write.mode("append").parquet(s"$indexDir/arrays")
-    cdocs
-      .select(col(idCol).as("c_id"),
-        explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("c_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-      .write.mode("append").partitionBy("band").parquet(s"$indexDir/buckets")
+                       indexDir: String): Unit =
+    writeLshIndex(accepted, idCol, textCol,
+      readLshParams(accepted.sparkSession, indexDir), indexDir, "append")
+
+  /** The one writer of an index's buckets and arrays: `overwrite` builds,
+    * `append` extends under the same band partitions. */
+  private def writeLshIndex(docs: DataFrame, idCol: String, textCol: String,
+                            p: LshParams, indexDir: String, mode: String): Unit = {
+    val index = lshIndex(docs, idCol, textCol, p)
+    index.arrays.write.mode(mode).parquet(s"$indexDir/arrays")
+    index.buckets.write.mode(mode).partitionBy("band").parquet(s"$indexDir/buckets")
+  }
+
+  private def readLshParams(spark: org.apache.spark.sql.SparkSession,
+                            indexDir: String): LshParams = {
+    val r = spark.read.parquet(s"$indexDir/params").head()
+    LshParams(r.getAs[Int]("n"), r.getAs[Int]("bands"),
+      r.getAs[Int]("rows_per_band"), r.getAs[Long]("seed"))
+  }
+
+  /** A persisted [[buildLshIndex]] artifact as index frames, banded under
+    * its own recorded params. */
+  private[graft] def readLshIndex(spark: org.apache.spark.sql.SparkSession,
+                                  indexDir: String): LshIndex =
+    LshIndex(spark.read.parquet(s"$indexDir/buckets"),
+      spark.read.parquet(s"$indexDir/arrays"), readLshParams(spark, indexDir))
+
+  /** The index frames of a corpus, in memory — what [[buildLshIndex]]
+    * persists, and the static side of the fused ingest gate. Docs with no
+    * shingles have no buckets. */
+  private[graft] def lshIndex(corpus: DataFrame, idCol: String, textCol: String,
+                              p: LshParams): LshIndex = {
+    graft.functions.VectorExprs.register(corpus.sparkSession) // native bandSigs
+    val arrays = shingleIdArrays(corpus, idCol, textCol, p.n)
+      .select(col(idCol).as("c_id"), col("ids").as("c_ids"))
+    LshIndex(bandBuckets(arrays, "c_id", "c_ids", p), arrays, p)
+  }
+
+  /** The batch-vs-index probe shared by the ingest gate
+    * (`StreamDedup.dedupAgainstLshIndex` and its fused form) and
+    * [[lshIndexPairs]]: each incoming ROW's shingle-hash array and band
+    * signatures computed MAP-SIDE, the (band, bsig) bucket join, exact
+    * Jaccard against the stored arrays. One row per (incoming doc, band
+    * collision): (s_id, c_id, jacc). Left joins keep no-candidate docs
+    * alive with null c_id and jacc, and `explode_outer` of a null band
+    * array keeps shingle-less docs. Streaming-legal by construction — no
+    * aggregation, no distinct — so the gate can run it on a stream and
+    * fold it with its one per-document aggregation.
+    */
+  private[graft] def probeLshIndex(index: LshIndex, incoming: DataFrame,
+                                   idCol: String, textCol: String): DataFrame = {
+    val p = index.params
+    graft.functions.VectorExprs.register(incoming.sparkSession) // native bandSigs
+    // `array_distinct` over hashes mirrors shingleSet's distinct-shingle
+    // contract (identical sets absent 64-bit collisions); the token array
+    // materializes first per the HOF re-evaluation rule in TextOps
+    val sh = if (p.n == 1) col("__toks") else TextOps.shingles(col("__toks"), p.n)
+    incoming
+      .select(col(idCol).as("s_id"), TextOps.tokens(col(textCol)).as("__toks"))
+      .select(col("s_id"),
+        array_sort(array_distinct(transform(sh, x => xxhash64(x)))).as("s_ids"))
+      .select(col("s_id"), col("s_ids"),
+        explode_outer(when(size(col("s_ids")) > 0, bandSigs(col("s_ids"), p))).as("bk"))
+      .select(col("s_id"), col("s_ids"),
+        col("bk.band").as("band"), col("bk.bsig").as("bsig"))
+      .join(index.buckets, Seq("band", "bsig"), "left")
+      .join(index.arrays, Seq("c_id"), "left")
+      .select(col("s_id"), col("c_id"),
+        when(col("c_ids").isNotNull, arrayJaccard(col("s_ids"), col("c_ids"))).as("jacc"))
   }
 
   /** Near-dup PAIRS for an ingest batch against a persisted
     * [[buildLshIndex]] artifact — the pair-producing probe the
-    * incremental clustering fold consumes: batch-vs-corpus candidates
-    * from the stored band buckets (exact-Jaccard verified against the
-    * stored arrays) plus batch-vs-batch pairs from banding the batch
-    * itself, both under the band parameters the index records. The union
-    * is EXACTLY the full-corpus [[minHashLSH]] pair set restricted to
-    * pairs involving a batch doc — a band signature depends only on a
-    * doc's own shingles and the shared seed, so probing stored buckets
-    * and banding the union produce the same collisions — which is why
-    * [[incrementalComponents]] over these pairs reproduces the
-    * from-scratch clustering without ever re-shingling the corpus.
-    * Returns (d1, d2, jacc) with d1 < d2. Batch-sized work throughout:
-    * the corpus contributes two parquet reads (buckets join + verify
-    * arrays join), never a shingle pass.
+    * incremental clustering fold consumes: batch-vs-corpus pairs from
+    * [[probeLshIndex]] (the ingest gate's own probe, so a batch doc is a
+    * gate duplicate exactly when it pairs with an indexed doc here) plus
+    * batch-vs-batch pairs from banding the batch itself, both under the
+    * band parameters the index records. The union is EXACTLY the
+    * full-corpus [[minHashLSH]] pair set restricted to pairs involving a
+    * batch doc — a band signature depends only on a doc's own shingles
+    * and the shared seed, so probing stored buckets and banding the union
+    * produce the same collisions — which is why [[incrementalComponents]]
+    * over these pairs reproduces the from-scratch clustering without ever
+    * re-shingling the corpus. Returns (d1, d2, jacc) with d1 < d2.
+    * Batch-sized work throughout: the corpus contributes two parquet reads
+    * (buckets join + verify arrays join), never a shingle pass.
     */
   def lshIndexPairs(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
                     idCol: String, textCol: String, indexDir: String,
                     threshold: Double = 0.5): DataFrame = {
-    graft.functions.VectorExprs.register(spark) // native bandSigs
-    val p = spark.read.parquet(s"$indexDir/params").head()
-    val (n, bands, rowsPerBand, seed) =
-      (p.getAs[Int]("n"), p.getAs[Int]("bands"),
-        p.getAs[Int]("rows_per_band"), p.getAs[Long]("seed"))
-    val ndocs = shingleIdArrays(batch, idCol, textCol, n)
-    val nbuckets = ndocs
-      .select(col(idCol).as("n_id"),
-        explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("n_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-    val cand = nbuckets
-      .join(spark.read.parquet(s"$indexDir/buckets"), Seq("band", "bsig"))
-      .select(col("n_id"), col("c_id")).distinct()
-    val batchVsCorpus = cand
-      .join(spark.read.parquet(s"$indexDir/arrays"), Seq("c_id"))
-      .join(ndocs.select(col(idCol).as("n_id"), col("ids").as("n_ids")), Seq("n_id"))
-      .select(col("n_id"), col("c_id"),
-        size(array_intersect(col("n_ids"), col("c_ids"))).as("i"),
-        size(col("n_ids")).as("n1"), size(col("c_ids")).as("n2"))
-      .select(col("n_id"), col("c_id"),
-        (col("i") * lit(1.0) / (col("n1") + col("n2") - col("i"))).as("jacc"))
+    val index = readLshIndex(spark, indexDir)
+    val p = index.params
+    // a pair colliding in several bands verifies once per band; the
+    // distinct folds the byte-identical repeats
+    val batchVsCorpus = probeLshIndex(index, batch, idCol, textCol)
       .filter(col("jacc") >= threshold)
-      .select(least(col("n_id"), col("c_id")).as("d1"),
-        greatest(col("n_id"), col("c_id")).as("d2"), col("jacc"))
-    val batchVsBatch = minHashLSH(batch, idCol, textCol, n, bands,
-      rowsPerBand, threshold, seed)
+      .select(least(col("s_id"), col("c_id")).as("d1"),
+        greatest(col("s_id"), col("c_id")).as("d2"), col("jacc"))
+      .distinct()
+    val batchVsBatch = minHashLSH(batch, idCol, textCol, p.n, p.bands,
+      p.rowsPerBand, threshold, p.seed)
     batchVsCorpus.union(batchVsBatch.select(col("d1"), col("d2"), col("jacc")))
   }
 
   /** Band signatures as a map-side array expression over a sorted
     * shingle-hash array column: one `(band, bsig)` struct per band, bsig =
     * hash of the band's `rowsPerBand` min-rehashes. Shared by the batch
-    * LSH pair path and the streaming ingest-dedup path (which computes it
-    * per incoming row with NO shuffle — band routing is the whole point
-    * of LSH at ingest time).
+    * LSH pair paths and [[probeLshIndex]] (which computes it per incoming
+    * row with NO shuffle — band routing is the whole point of LSH at
+    * ingest time).
     *
     * Evaluates through the native [[graft.functions.LshBandSigs]]
     * expression: the fold form below runs bands×rowsPerBand interpreted
@@ -814,11 +836,17 @@ object Dedup {
     * bit-identical by construction (parity-pinned in TextHashExprsSpec
     * against [[bandSigsFold]]). Callers must have run
     * `VectorExprs.register` on the session — every entry point in this
-    * file and StreamDedup does.
+    * file does.
     */
-  private[graft] def bandSigs(idsCol: org.apache.spark.sql.Column,
-                              bands: Int, rowsPerBand: Int, seed: Long) =
-    graft.functions.TextHashExprs.lshBandSigs(idsCol, bands, rowsPerBand, seed)
+  private def bandSigs(idsCol: Column, p: LshParams): Column =
+    graft.functions.TextHashExprs.lshBandSigs(idsCol, p.bands, p.rowsPerBand, p.seed)
+
+  /** One row per (doc, band): `idCol` and the band-bucket key (band, bsig)
+    * of the sorted shingle-hash array in `idsCol`, computed map-side. */
+  private def bandBuckets(docs: DataFrame, idCol: String, idsCol: String,
+                          p: LshParams): DataFrame =
+    docs.select(col(idCol), explode(bandSigs(col(idsCol), p)).as("bk"))
+      .select(col(idCol), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
 
   /** The lambda-fold construction [[bandSigs]] replaced — kept as the
     * dependency-free parity baseline the native expression is pinned
@@ -836,8 +864,8 @@ object Dedup {
 
   /** Per-doc sorted shingle-hash arrays — the `ids` representation every
     * LSH/dense path verifies against. */
-  private[graft] def shingleIdArrays(df: DataFrame, idCol: String,
-                                     textCol: String, n: Int): DataFrame =
+  private def shingleIdArrays(df: DataFrame, idCol: String,
+                              textCol: String, n: Int): DataFrame =
     TextOps.shingleSet(df, idCol, textCol, n)
       .groupBy(col(idCol))
       .agg(sort_array(collect_list(xxhash64(col("sh")))).as("ids"))
@@ -850,11 +878,7 @@ object Dedup {
                         scope: graft.CacheScope): (DataFrame, DataFrame) = {
     graft.functions.VectorExprs.register(df.sparkSession) // native bandSigs
     val docs = scope.pin(shingleIdArrays(df, idCol, textCol, n))
-    // band signature = hash of the band's rowsPerBand min-rehashes,
-    // computed per row from the hash array (map-side only)
-    val buckets = docs
-      .select(col(idCol), explode(bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
+    val buckets = bandBuckets(docs, idCol, "ids", LshParams(n, bands, rowsPerBand, seed))
     val cand = buckets.as("l").join(buckets.as("r"), Seq("band", "bsig"))
       .filter(col(s"l.$idCol") < col(s"r.$idCol"))
       .select(col(s"l.$idCol").as("d1"), col(s"r.$idCol").as("d2"))

@@ -102,10 +102,4 @@ object Det {
 
   /** Canonical date rendering (matches DuckDB strftime '%Y-%m-%d'). */
   def fmtDate(c: Column): Column = date_format(c, "yyyy-MM-dd")
-
-  /** Total order over every output column — ASC NULLS FIRST, mirrored in the
-    * oracle as explicit `ASC NULLS FIRST` (DuckDB defaults to NULLS LAST).
-    */
-  def orderAll(df: DataFrame): DataFrame =
-    df.orderBy(df.columns.map(n => col(n).asc_nulls_first).toIndexedSeq: _*)
 }

@@ -14,6 +14,16 @@ import org.apache.spark.sql.Dataset
   * whose files the ContextCleaner reclaims when the RDD is collected.)
   */
 private[operators] object Iterative {
+
+  /** Eager lineage truncation under one durability policy: RELIABLE
+    * checkpoints (HDFS/object-store backed, survive executor loss) when
+    * the session has a checkpoint dir, executor-local blocks otherwise —
+    * free on a single JVM, lost with an executor on a real cluster.
+    */
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(eager = true)
+    else ds.localCheckpoint(eager = true)
+
   def releaseCheckpoint(ds: Dataset[_]): Unit =
     ds.queryExecution.logical.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd

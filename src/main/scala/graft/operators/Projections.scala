@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Column-level "maps": projection, rename, type conversion, derived
@@ -26,13 +26,6 @@ object Projections {
   def rename(df: DataFrame, from: String, to: String): DataFrame =
     df.withColumnRenamed(from, to)
 
-  /** Cast a column to a new type (`ref:P/maps/ConvertColumnMap.java`).
-    * `typeName` is any Spark SQL type string ("double", "string", "date",
-    * "timestamp", "long", ...).
-    */
-  def convert(df: DataFrame, column: String, typeName: String): DataFrame =
-    df.withColumn(column, col(column).cast(typeName))
-
   /** Derived column from a SQL expression — the engine's answer to the
     * reference's JS-UDF column (`ref:P/maps/CreateColumnJSMap.java`):
     * Catalyst-compiled, codegen'd, optimizable; no interpreter in the row
@@ -40,9 +33,6 @@ object Projections {
     */
   def derive(df: DataFrame, name: String, sqlExpr: String): DataFrame =
     df.withColumn(name, expr(sqlExpr))
-
-  def deriveCol(df: DataFrame, name: String, c: Column): DataFrame =
-    df.withColumn(name, c)
 
   /** Extract a key from a JSON string column into a new column
     * (`ref:P/maps/ExtractValueFromKeyMap.java`).

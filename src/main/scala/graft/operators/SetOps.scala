@@ -18,7 +18,6 @@ object SetOps {
   def unionView(df: DataFrame, p1: Column, p2: Column): DataFrame     = df.filter(p1 || p2)
   def intersectView(df: DataFrame, p1: Column, p2: Column): DataFrame = df.filter(p1 && p2)
   def minusView(df: DataFrame, p1: Column, p2: Column): DataFrame     = df.filter(p1 && !p2)
-  def replaceView(df: DataFrame, p2: Column): DataFrame               = df.filter(p2)
 
   /** Materialized set ops (arbitrary frames, bag semantics where noted). */
   def unionAll(a: DataFrame, b: DataFrame): DataFrame =

@@ -27,20 +27,10 @@ object Windows {
     df.withColumn(rankCol, row_number().over(spec(partitionBy, orderBy)))
       .filter(col(rankCol) <= n)
 
-  def withRank(df: DataFrame, partitionBy: Seq[String], orderBy: Seq[SortKey],
-               dense: Boolean = false, rankCol: String = "rk"): DataFrame =
-    df.withColumn(rankCol,
-      (if (dense) dense_rank() else rank()).over(spec(partitionBy, orderBy)))
-
   def withLag(df: DataFrame, partitionBy: Seq[String], orderBy: Seq[SortKey],
               valueCol: String, offset: Int = 1,
               outCol: String = "lag_val"): DataFrame =
     df.withColumn(outCol, lag(col(valueCol), offset).over(spec(partitionBy, orderBy)))
-
-  def withLead(df: DataFrame, partitionBy: Seq[String], orderBy: Seq[SortKey],
-               valueCol: String, offset: Int = 1,
-               outCol: String = "lead_val"): DataFrame =
-    df.withColumn(outCol, lead(col(valueCol), offset).over(spec(partitionBy, orderBy)))
 
   /** Running total with a rows frame (exact decimal sum → double for
     * oracle determinism).

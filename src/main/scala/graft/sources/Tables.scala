@@ -223,7 +223,4 @@ object Tables {
   // Sinks (`ref:P/storage/CsvFileWriter.java` — export current view).
   def exportCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  def exportParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 }

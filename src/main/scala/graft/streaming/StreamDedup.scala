@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.operators.{Dedup, Similarity, TextOps}
+import graft.operators.{Dedup, Similarity}
 
 /** Incremental ingest dedup (SURVEY.md §2.9 × §2.11): documents arriving
   * as a STREAM are near-dup-checked against a STATIC reference corpus —
@@ -110,20 +110,11 @@ object StreamDedup {
   def dedupAgainstCorpus(corpus: DataFrame, incoming: DataFrame,
                          idCol: String, textCol: String,
                          n: Int = 2, bands: Int = 8, rowsPerBand: Int = 4,
-                         threshold: Double = 0.5, seed: Long = 42L): DataFrame = {
-    graft.functions.VectorExprs.register(corpus.sparkSession) // native bandSigs
-    // static side: per-doc shingle arrays + band buckets (the "index"
-    // `Dedup.buildLshIndex` persists; docs with no shingles have no
-    // buckets)
-    val cdocs = Dedup.shingleIdArrays(corpus, idCol, textCol, n)
-    val cbuckets = cdocs
-      .select(col(idCol).as("c_id"),
-        explode(Dedup.bandSigs(col("ids"), bands, rowsPerBand, seed)).as("bk"))
-      .select(col("c_id"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-    val carrs = cdocs.select(col(idCol).as("c_id"), col("ids").as("c_ids"))
-    flagAgainst(cbuckets, carrs, incoming, idCol, textCol,
-      n, bands, rowsPerBand, threshold, seed)
-  }
+                         threshold: Double = 0.5, seed: Long = 42L): DataFrame =
+    // static side: the in-memory frames of the index `Dedup.buildLshIndex`
+    // persists
+    flagAgainst(Dedup.lshIndex(corpus, idCol, textCol,
+      Dedup.LshParams(n, bands, rowsPerBand, seed)), incoming, idCol, textCol, threshold)
 
   /** Serve-side twin of [[dedupAgainstCorpus]] probing a PERSISTED
     * `Dedup.buildLshIndex` artifact: no corpus shingling at ingest time —
@@ -137,63 +128,24 @@ object StreamDedup {
     */
   def dedupAgainstLshIndex(spark: SparkSession, incoming: DataFrame,
                            idCol: String, textCol: String, indexDir: String,
-                           threshold: Double = 0.5): DataFrame = {
-    val p = spark.read.parquet(s"$indexDir/params").head()
-    val (n, bands, rowsPerBand, seed) =
-      (p.getAs[Int]("n"), p.getAs[Int]("bands"),
-        p.getAs[Int]("rows_per_band"), p.getAs[Long]("seed"))
-    flagAgainst(
-      spark.read.parquet(s"$indexDir/buckets"),
-      spark.read.parquet(s"$indexDir/arrays"),
-      incoming, idCol, textCol, n, bands, rowsPerBand, threshold, seed)
-  }
+                           threshold: Double = 0.5): DataFrame =
+    flagAgainst(Dedup.readLshIndex(spark, indexDir), incoming, idCol, textCol, threshold)
 
-  /** Shared tail of the fused and index-served ingest forms: map-side
-    * probe signatures on the incoming rows, (band, bsig) candidate join,
-    * exact-Jaccard verify against the stored arrays, one streaming-legal
-    * distinct-match aggregation.
+  /** Shared tail of the fused and index-served ingest forms: the
+    * batch-vs-index probe (`Dedup.probeLshIndex` — map-side signatures,
+    * candidate join, exact verify) folded by one streaming-legal
+    * distinct-match aggregation per incoming doc (collect_list skips
+    * nulls; array_distinct folds the same pair colliding in several
+    * bands).
     */
-  private def flagAgainst(cbuckets: DataFrame, carrs: DataFrame,
-                          incoming: DataFrame, idCol: String, textCol: String,
-                          n: Int, bands: Int, rowsPerBand: Int,
-                          threshold: Double, seed: Long): DataFrame = {
-    graft.functions.VectorExprs.register(incoming.sparkSession) // native bandSigs
-    // stream side: shingle-hash array and band signatures per ROW —
-    // `array_distinct` over hashes mirrors shingleSet's distinct-shingle
-    // contract (identical sets absent 64-bit collisions); the token array
-    // materializes first per the HOF re-evaluation rule in TextOps
-    val sh = if (n == 1) col("__toks") else TextOps.shingles(col("__toks"), n)
-    val withIds = incoming
-      .select(col(idCol).as("s_id"), TextOps.tokens(col(textCol)).as("__toks"))
-      .select(col("s_id"),
-        array_sort(array_distinct(transform(sh, x => xxhash64(x)))).as("s_ids"))
-    val sBands = withIds.select(
-      col("s_id"), col("s_ids"),
-      explode_outer(when(size(col("s_ids")) > 0,
-        Dedup.bandSigs(col("s_ids"), bands, rowsPerBand, seed))).as("bk"))
-      .select(col("s_id"), col("s_ids"),
-        col("bk.band").as("band"), col("bk.bsig").as("bsig"))
-
-    // candidates + exact verify; left joins keep no-candidate docs alive
-    val verified = sBands
-      .join(cbuckets, Seq("band", "bsig"), "left")
-      .join(carrs, Seq("c_id"), "left")
-      .select(col("s_id"),
-        when(col("c_ids").isNotNull, {
-          val i = size(array_intersect(col("s_ids"), col("c_ids")))
-          i * lit(1.0) / (size(col("s_ids")) + size(col("c_ids")) - i)
-        }).as("jacc"),
-        col("c_id"))
-
-    // one streaming-legal aggregation: distinct verified corpus matches
-    // per incoming doc (collect_list skips nulls; array_distinct folds
-    // the same pair colliding in several bands)
-    verified
+  private def flagAgainst(index: Dedup.LshIndex, incoming: DataFrame,
+                          idCol: String, textCol: String,
+                          threshold: Double): DataFrame =
+    Dedup.probeLshIndex(index, incoming, idCol, textCol)
       .groupBy(col("s_id").as("doc_id"))
       .agg(size(array_distinct(collect_list(
         when(col("jacc") >= threshold, col("c_id"))))).cast("long").as("n_matches"))
       .withColumn("is_dup", col("n_matches") > 0)
-  }
 
   /** Embedding sibling of [[dedupAgainstCorpus]]: incoming vectors are
     * near-dup-flagged against a static corpus through its IVF coarse
@@ -252,11 +204,8 @@ object StreamDedup {
   def assignCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       cs: Seq[Seq[Double]]): DataFrame = {
     require(cs.nonEmpty, "centroid list must be non-empty")
-    graft.functions.VectorExprs.register(corpus.sparkSession)
-    import graft.functions.VectorExprs.nearestCentroids
-    corpus
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
-      .withColumn("bucket", element_at(nearestCentroids(col("c_vec"), cs, 1), 1))
+    Similarity.assignNearest(corpus, idCol, vecCol, cs)
+      .select(col("n_id").as("c_id"), col("n_vec").as("c_vec"), col("bucket"))
   }
 
   /** [[embeddingDedupWithCentroids]] with the corpus ASSIGNMENT side
@@ -290,13 +239,10 @@ object StreamDedup {
                                     indexDir: String, nprobe: Int = 4,
                                     threshold: Double = 0.45): DataFrame = {
     graft.functions.VectorExprs.register(spark)
-    val cs: Seq[Seq[Double]] = spark.read.parquet(s"$indexDir/centroids")
-      .orderBy(col("bucket"))
-      .select(col("centroid"))
-      .collect().map(_.getSeq[Double](0): Seq[Double]).toSeq
-    val cbuckets = spark.read.parquet(s"$indexDir/assignments")
+    val cbuckets = Similarity.ivfIndexAssignments(spark, indexDir)
       .select(col("n_id").as("c_id"), col("n_vec").as("c_vec"), col("bucket"))
-    flagEmbedding(cbuckets, incoming, idCol, vecCol, cs, nprobe, threshold)
+    flagEmbedding(cbuckets, incoming, idCol, vecCol,
+      Similarity.ivfIndexCentroids(spark, indexDir), nprobe, threshold)
   }
 
   /** Shared tail of the fused and index-served embedding gates: map-side

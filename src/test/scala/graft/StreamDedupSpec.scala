@@ -211,6 +211,41 @@ class StreamDedupSpec extends SparkSpec {
         == canon(StreamDedup.dedupAgainstLshIndex(spark, probe, "doc_id", "text", rebuilt)))
   }
 
+  test("gate verdict = has an lshIndexPairs pair with an indexed doc, before and after an append") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    val corpus = docs.filter(!pmod(col("doc_id"), lit(10)).isin(0, 5))
+    val batch1 = docs.filter(pmod(col("doc_id"), lit(10)) === 5)
+    val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/lsh_spec/probe"
+    graft.operators.Dedup.buildLshIndex(corpus, "doc_id", "text", dir)
+    // returns the batch's accepted (non-dup) ids
+    def check(batch: org.apache.spark.sql.DataFrame): Seq[Long] = {
+      val gate = StreamDedup.dedupAgainstLshIndex(spark, batch, "doc_id", "text", dir)
+        .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
+      val ids = batch.select("doc_id").as[Long].collect().toSet
+      assert(gate.keySet == ids, "the gate answers for every batch doc")
+      val pairedWithIndex = graft.operators.Dedup
+        .lshIndexPairs(spark, batch, "doc_id", "text", dir)
+        .select(col("d1").cast("long"), col("d2").cast("long")).as[(Long, Long)]
+        .collect().flatMap { case (a, b) =>
+          if (ids(a) && !ids(b)) Seq(a) else if (ids(b) && !ids(a)) Seq(b) else Nil
+        }.toSet
+      assert(gate.filter(_._2).keySet == pairedWithIndex)
+      gate.filterNot(_._2).keys.toSeq.sorted
+    }
+    val accepted = check(batch1)
+    assert(accepted.nonEmpty)
+    graft.operators.Dedup.appendToLshIndex(
+      batch1.filter(col("doc_id").isin(accepted: _*)), "doc_id", "text", dir)
+    // batch 2 carries a copy of an accepted batch-1 doc under a fresh id:
+    // only the appended index can pair it, and the gate must agree
+    val copyId = docs.agg(max(col("doc_id"))).head.getLong(0) + 1
+    val batch2 = docs.filter(pmod(col("doc_id"), lit(10)) === 0).union(
+      batch1.filter(col("doc_id") === accepted.head)
+        .select(lit(copyId).as("doc_id"), col("text")))
+    assert(!check(batch2).contains(copyId))
+  }
+
   test("appendToIvfIndex: accepted vectors gate the next batch; exact mode stays exact") {
     import spark.implicits._
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
