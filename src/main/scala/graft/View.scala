@@ -32,8 +32,9 @@ final case class ViewNode(id: ViewId, df: DataFrame, parent: Option[ViewId], op:
   *    of paper §3.2;
   *  - `progressive` re-creates streamed `PartialResult`s
   *    (`ref:P/dataset/api/PartialResult.java`): the sketch runs per
-  *    partition batch and a caller-supplied monoid merge folds partials
-  *    into a refining result with monotone progress;
+  *    file slice and a caller-supplied monoid merge folds each partial
+  *    into the materialized running result, one action per step, with
+  *    monotone progress;
   *  - `samplingRate` is the paper's resolution-aware approximation rule
   *    (§4.1): sampled histograms are indistinguishable at pixel
   *    resolution once rate ≈ pixelHeight²·buckets/rowCount.
@@ -61,6 +62,18 @@ final class ViewSession(spark: SparkSession, memoCap: Int = 256) {
 
   private def nextId(name: String): ViewId = ViewId(s"$name-${seq.incrementAndGet()}")
   private def jobGroup(id: ViewId): String = s"graft-view-${id.value}"
+
+  /** Run `f` under the view's job group (interrupt-on-cancel), so
+    * `cancel(id)` reaches every job it starts; the group is cleared after.
+    */
+  private def underGroup[T](id: ViewId, what: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(jobGroup(id), s"view=${id.value} $what", interruptOnCancel = true)
+    try f finally sc.clearJobGroup()
+  }
+
+  private def local(rows: Array[Row], schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Register a root view (a loaded table). */
   def open(name: String, df: DataFrame): ViewId = {
@@ -114,27 +127,30 @@ final class ViewSession(spark: SparkSession, memoCap: Int = 256) {
   /** Run a sketch (small-result aggregation) for a view, under the view's
     * job group so `cancel(id)` aborts it. Memoized by (view, opKey, the
     * CANONICALIZED PLAN of op(view)) — full structural plan equality, not
-    * a hash that could collide: `op` is always applied (plan building is
-    * milliseconds; no data moves), so reusing an opKey with a different
-    * op can never serve a stale result — the plan key diverges and both
-    * entries coexist. Entries are LRU-evicted past `memoCap` (the
-    * driver-resident memo cannot grow without bound in a long session).
+    * a hash that could collide: `op` is always applied, so reusing an
+    * opKey with a different op can never serve a stale result — the plan
+    * key diverges and both entries coexist. Entries are LRU-evicted past
+    * `memoCap` (the driver-resident memo cannot grow without bound in a
+    * long session).
+    *
+    * Contract: `op` builds its plan without running a job, so a memo hit
+    * starts none and a miss runs every phase inside the one `collect`.
+    * An op that does run jobs while building (`Quantiles.exact`'s eager
+    * histogram passes are the measured exception) re-runs them on every
+    * call, hit or miss; `op` is applied under the view's job group, so
+    * `cancel(id)` still reaches those jobs.
     */
   def sketch(id: ViewId, opKey: String)(op: DataFrame => DataFrame): DataFrame = {
-    val result = op(views(id).df)
+    val result = underGroup(id, s"op=$opKey")(op(views(id).df))
     val key = (id, opKey, result.queryExecution.analyzed.canonicalized)
     Option(memo.get(key)) match {
       case Some((schema, rows)) =>
         memoHitCount.incrementAndGet()
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        local(rows, schema)
       case None =>
-        val sc = spark.sparkContext
-        sc.setJobGroup(jobGroup(id), s"view=${id.value} op=$opKey", interruptOnCancel = true)
-        try {
-          val rows = result.collect()
-          memo.put(key, (result.schema, rows))
-          spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-        } finally sc.clearJobGroup()
+        val rows = underGroup(id, s"op=$opKey")(result.collect())
+        memo.put(key, (result.schema, rows))
+        local(rows, result.schema)
     }
   }
 
@@ -154,9 +170,14 @@ final class ViewSession(spark: SparkSession, memoCap: Int = 256) {
     * steps by construction, unlike partition-id slicing, which can
     * migrate rows between re-executions when the plan contains a
     * round-robin repartition, a sample, or an AQE-replanned shuffle.
-    * Partials are materialized (sketch results are small by contract), so
-    * the running merge never re-executes earlier slices. Views with no
-    * file-backed scan are rejected.
+    *
+    * Each step is ONE action under the view's job group (`cancel(id)`
+    * aborts it): `merge(acc, sketchOp(slice))` is collected, where `acc`
+    * is the previous step's running result as a local relation. The
+    * yielded result is that materialized running result (sketch results
+    * are small by contract), so collecting it starts no job and a step
+    * never re-executes earlier slices or merges. Views with no file-backed
+    * scan are rejected.
     */
   def progressive(id: ViewId, batches: Int,
                   sketchOp: DataFrame => DataFrame,
@@ -164,10 +185,10 @@ final class ViewSession(spark: SparkSession, memoCap: Int = 256) {
     val slices = graft.plans.FileSlices.slices(views(id).df, batches)
     var acc: Option[DataFrame] = None
     slices.iterator.zipWithIndex.map { case (sliceDf, i) =>
-      val sliceResult = sketchOp(sliceDf)
-      val rows = sliceResult.collect()
-      val slice = spark.createDataFrame(java.util.Arrays.asList(rows: _*), sliceResult.schema)
-      acc = Some(acc.fold(slice)(a => merge(a, slice)))
+      val part = sketchOp(sliceDf)
+      val step = acc.fold(part)(merge(_, part))
+      val rows = underGroup(id, s"progressive ${i + 1}/$batches")(step.collect())
+      acc = Some(local(rows, step.schema))
       ((i + 1).toDouble / batches, acc.get)
     }
   }

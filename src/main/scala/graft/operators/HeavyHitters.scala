@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * Reference analogs: `ref:P/sketches/FreqKSketch.java` (Misra-Gries
   * candidates, paper §4.4) and `ref:P/sketches/ExactFreqSketch.java`
   * (second exact pass over candidates). The UI then filters rows to/from
-  * the heavy set — a semi/anti-join against a literal list.
+  * the heavy set — a semi/anti-join against its broadcast tuples.
   *
   * Two implementations, cross-checked in tests:
   *  - `exact`: groupBy(keys).count().filter(cnt >= threshold) — one shuffle
@@ -118,20 +118,23 @@ object HeavyHitters {
     * then the UI filters the table to the heavy rows):
     *
     *   phase 1  Misra-Gries sketch over the key tuple — shuffle-free
-    *            partial aggregation; ≤ k candidate tuples (a sketch-sized
-    *            result, within the collect contract) reach the driver;
-    *   phase 2  exact probe of ONLY those candidates: one shuffle of
-    *            matching (tuple, partialCount) pairs;
+    *            partial aggregation; its ≤ k candidate tuples stay in the
+    *            plan as a broadcast subplan (no driver list);
+    *   phase 2  exact count of ONLY the rows matching a candidate: a
+    *            null-safe broadcast semi join, then one shuffle of
+    *            (tuple, partialCount) pairs;
     *   phase 3  semi join of the base table against the candidates whose
     *            EXACT count clears `minCount` (broadcast of ≤ k tuples).
     *
-    * Returns the heavy base-table rows. Guarantees: MG has no false
-    * negatives above N/(k+1), and phase 2 replaces MG's lower-bound counts
-    * with exact ones, so for minCount > N/(k+1) the result is exactly the
-    * rows whose tuple frequency >= minCount; with k > |distinct tuples| the
-    * chain is exact for ANY minCount. The sketch key is the actual value
-    * STRUCT ([[graft.functions.MisraGriesSketch]]), and both the probe and
-    * the final join are null-safe — tuples with null parts or
+    * Returns the heavy base-table rows as ONE lazy plan: building it runs
+    * no job (so a memoized `ViewSession.sketch` hit starts none), and every
+    * phase executes inside the caller's action. Guarantees: MG has no
+    * false negatives above N/(k+1), and phase 2 replaces MG's lower-bound
+    * counts with exact ones, so for minCount > N/(k+1) the result is
+    * exactly the rows whose tuple frequency >= minCount; with
+    * k > |distinct tuples| the chain is exact for ANY minCount. The sketch
+    * key is the actual value STRUCT ([[graft.functions.MisraGriesSketch]]),
+    * and both semi joins are null-safe — tuples with null parts or
     * arbitrary-content strings flow through every phase faithfully.
     */
   def twoPhase(df: DataFrame, keys: Seq[String], k: Int, minCount: Long): DataFrame = {
@@ -139,13 +142,11 @@ object HeavyHitters {
     val cands = df
       .agg(graft.functions.MisraGries.sketchStruct(keys.map(col), k).as("mg"))
       .select(explode(map_keys(col("mg"))).as("cand"))
-      .collect() // <= k candidate tuples — sketch-sized by contract
-      .map { r =>
-        val t = r.getStruct(0)
-        (0 until t.length).map(t.get): Seq[Any]
-      }
-      .toSeq
-    val exact = exactProbeTuples(df, keys, cands)
+      .select(col("cand.*"))
+      .toDF(keys: _*)
+    val exact = filterToHeavy(df, keys, cands, keep = true)
+      .groupBy(keys.map(col).toIndexedSeq: _*)
+      .agg(count(lit(1)).as("cnt"))
     filterToHeavy(df, keys, exact.filter(col("cnt") >= minCount), keep = true)
   }
 }

@@ -99,7 +99,6 @@ class PlanGuardSpec extends SparkSpec {
       // grid) + ≤ 2·|probs| order statistics; exactPerGroup: the
       // (group, bin) histogram, ≤ maxHistRows by the guarded contract
       "Quantiles.scala"     -> 3,
-      "HeavyHitters.scala"  -> 1,  // twoPhase phase 1: ≤ k MG candidates
       "Histograms.scala"    -> 1,  // equiDepth: k-1 boundary rows (the sketch)
       // ntileMapSide: the (group, bin) histogram (≤ maxHistRows by the
       // guarded contract) + the groups·(k-1) boundary composites (the

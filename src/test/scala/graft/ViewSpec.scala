@@ -1,11 +1,16 @@
 package graft
 
-import scala.concurrent.{Await, Future}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, Future, Promise}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import graft.operators.Histograms
+import graft.operators.{HeavyHitters, Histograms}
 
 /** View/session-layer checks: lineage, sketch memoization, job-group
   * cancellation, progressive partials (the reference's interactive model).
@@ -13,6 +18,30 @@ import graft.operators.Histograms
 class ViewSpec extends SparkSpec {
 
   private def newSession = new ViewSession(spark)
+
+  /** Run `body` with `listener` registered; the listener bus is drained on
+    * both sides, so earlier jobs' events cannot leak in and `body`'s own
+    * events have all arrived on return.
+    */
+  private def withListener[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    org.apache.spark.graftest.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftest.ListenerDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Spark jobs started while `action` runs. */
+  private def jobsStarted(action: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    withListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })(action)
+    n.get()
+  }
 
   test("child views chain lineage and stay lazy over the parent plan") {
     val s = newSession
@@ -80,6 +109,67 @@ class ViewSpec extends SparkSpec {
     val err = intercept[Exception](Await.result(fut, 60.seconds))
     val msg = (err.getMessage + Option(err.getCause).map(_.getMessage).getOrElse("")).toLowerCase
     assert(msg.contains("cancel"), s"expected cancellation, got: $msg")
+  }
+
+  test("a memo hit of twoPhase heavy hitters starts no job") {
+    val s = newSession
+    val root = s.open("lineitem", sources.Tables.open(spark, sf, "lineitem"))
+    def run() = s.sketch(root, "hh:l_returnflag,l_linestatus")(
+      HeavyHitters.twoPhase(_, Seq("l_returnflag", "l_linestatus"), k = 10, minCount = 100L))
+    val first = run().collect()
+    var second = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsStarted { second = run().collect() }
+    assert(s.memoHits == 1)
+    assert(jobs == 0, s"a memo hit re-ran $jobs jobs")
+    assert(first.nonEmpty && first.toSeq == second.toSeq)
+  }
+
+  test("cancel(viewId) aborts a running progressive step") {
+    val s = newSession
+    val dir = java.nio.file.Files.createTempDirectory("graft_prog_cancel").toString
+    spark.range(0L, 400L, 1L, 2).write.mode("overwrite").parquet(dir)
+    val root = s.open("slow", spark.read.parquet(dir))
+    // ~5 s of sleeping per 200-row slice: long enough to cancel mid-step
+    val slow = udf((x: Long) => { Thread.sleep(25); x })
+    val steps = s.progressive(root, 2,
+      _.agg(sum(slow(col("id"))).as("s")),
+      (a: DataFrame, b: DataFrame) => a.unionByName(b).agg(sum("s").as("s")))
+    val started = Promise[Unit]()
+    val err = withListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.trySuccess(())
+    }) {
+      val fut = Future(steps.next())
+      Await.result(started.future, 60.seconds)
+      s.cancel(root)
+      intercept[Exception](Await.result(fut, 60.seconds))
+    }
+    val msg = (err.getMessage + Option(err.getCause).map(_.getMessage).getOrElse("")).toLowerCase
+    assert(msg.contains("cancel"), s"expected cancellation, got: $msg")
+  }
+
+  test("each progressive step yields its materialized running result") {
+    val s = newSession
+    val dir = java.nio.file.Files.createTempDirectory("graft_prog_local").toString
+    sources.Tables.open(spark, sf, "lineitem")
+      .select("l_orderkey", "l_extendedprice")
+      .repartition(8).write.mode("overwrite").parquet(dir)
+    val root = s.open("li8", spark.read.parquet(dir))
+    def hist(df: DataFrame) = Histograms.histogram1d(df, "l_extendedprice", 900.0, 105000.0, 40)
+    val merge = (a: DataFrame, b: DataFrame) =>
+      a.unionByName(b).groupBy("bucket").agg(sum("cnt").as("cnt"))
+    val it = s.progressive(root, 4, hist, merge)
+    val jobsPerStep = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var last: DataFrame = null
+    while (it.hasNext) {
+      jobsPerStep += jobsStarted { last = it.next()._2 }
+      assert(last.queryExecution.analyzed.isInstanceOf[LocalRelation],
+        s"step result is not materialized:\n${last.queryExecution.analyzed}")
+      assert(jobsStarted(last.collect()) == 0, "collecting a step's result started a job")
+    }
+    assert(jobsPerStep.last <= jobsPerStep(1), s"a step's jobs grow with the step: $jobsPerStep")
+    val got = last.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val want = hist(s(root).df).collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(got == want, "the final running result equals the one-shot sketch")
   }
 
   test("progressive partials refine monotonically to the exact result") {
