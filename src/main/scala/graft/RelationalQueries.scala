@@ -701,7 +701,8 @@ object RelationalQueries {
     // row set is ONE task's sort — a 100× straggler). This is the
     // catalog's quantile-cohort primitive at scale; the SQL row stays as
     // the dialect-parity contrast. Plan shape (no full-corpus per-key
-    // window) is asserted in WindowSpec.
+    // window) is asserted in PlanGuardSpec; tile parity with the window
+    // form in RandomizedParitySpec.
     Q("window_ntile_scalable", sqlNtile) {
       (s, d) =>
         Windows.ntileMapSide(t(s, d, "orders"), Seq("o_orderpriority"),

@@ -176,13 +176,7 @@ object Histograms {
   def equiDepthPerGroup(df: DataFrame, groupCol: String, column: String,
                         k: Int): DataFrame = {
     require(k >= 2 && k <= 4096, s"k must be in [2, 4096], got $k")
-    val probs = (1 until k).map(_.toDouble / k)
-    val th = Quantiles.exactPerGroup(df, groupCol, column, probs)
-    val joined = probs.zipWithIndex.foldLeft(df) { case (acc, (_, i)) =>
-      val tk = th.filter(col("q") > (i + 0.5) / k && col("q") < (i + 1.5) / k)
-        .select(col(groupCol), col("value").as(s"__t$i"))
-      acc.join(broadcast(tk), Seq(groupCol))
-    }
+    val joined = Quantiles.withGroupThresholds(df, groupCol, column, k)
     val v = col(column).cast("double")
     val bucket = (0 until k - 1).foldLeft(lit(0)) { (acc, i) =>
       acc + when(v > col(s"__t$i"), 1).otherwise(0)

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Quantile sketches.
   *
@@ -23,33 +24,28 @@ object Quantiles {
     exactNamed(df, column, probs, probs.map(p => s"p${(p * 100).round}"))
 
   /** Exact interpolated percentiles WITHOUT a global sort — the
-    * histogram-cut pattern ([[exactPerGroup]]'s global sibling). Spark's
+    * histogram cut ([[rankCut]]) over one global group. Spark's
     * `percentile` aggregate buffers the entire column in one aggregation
     * buffer — at 100 TB that is an OOM, not a plan — and the
     * sort+zipWithIndex form this replaces range-shuffles the whole
     * column just to read back ≤ 2·|probs| order statistics. Instead:
     *  1. one agg pass for (count, finite min/max) to auto-fit a monotone
     *     bin grid of ~2¹⁶ cells across the observed range;
-    *  2. one linear bin-count shuffle whose output (≤ ~10·2¹⁶ rows of
-    *     (bin, count)) is driver-walked to locate, per interpolation
-    *     rank, the boundary bin and residual within-bin rank;
-    *  3. ONLY boundary-bin rows (≈ n/bins each) pay an exact window to
-    *     yield the order statistics.
-    * The grid is exactness-preserving: `floor(v·10^s)` is monotone in v
-    * (IEEE multiply by a positive constant is monotone), so the bins are
-    * consecutive value ranges and the within-bin window orders by the
-    * EXACT value — the rank-r statistic is the same value the full sort
-    * would pick (ties are value-ties; saturated/NaN bins still order
-    * correctly inside their window). Semantics are unchanged from the
-    * sort form and match `percentile`/`quantile_cont`: nulls dropped,
-    * NaN ranks above every value, interpolation
-    * `lower + (higher - lower) * frac` in IEEE double, one HALF_UP
-    * round to 6. A constant or all-NaN column degenerates to a single
-    * bin whose window IS the old sort — still exact. The binned column
-    * is pinned across its two passes and released before returning.
+    *  2. the cut: one linear bin-count pass, the driver walk to each
+    *     interpolation rank's boundary bin, and a window over ONLY the
+    *     boundary-bin rows, which yield the order statistics.
+    * Semantics are unchanged from the sort form and match
+    * `percentile`/`quantile_cont`: nulls dropped, NaN ranks above every
+    * value, interpolation `lower + (higher - lower) * frac` in IEEE
+    * double (an integral position returns its order statistic, so ±∞
+    * survives), one HALF_UP round to 6. A constant or all-NaN column
+    * degenerates to a single bin whose window IS the old sort — still
+    * exact. The value column is pinned across its three passes and
+    * released before returning.
     */
   private def exactNamed(df: DataFrame, column: String, probs: Seq[Double],
                          names: Seq[String]): DataFrame = {
+    require(probs.forall(p => p >= 0 && p <= 1), s"probs must be in [0, 1], got $probs")
     val spark = df.sparkSession
     val schema = StructType(names.map(n => StructField(n, DoubleType)))
     // filter ONLY nulls — na.drop would also drop NaN, which percentile
@@ -76,43 +72,22 @@ object Quantiles {
             if (range > 0 && !range.isInfinite)
               math.min(18.0, math.max(-18.0, math.floor(math.log10(65536.0 / range))))
             else 0.0
-          val cmul = math.pow(10, s10)
-          val binned = vals.withColumn("__bin",
-            when(isnan(col("v")), lit(Long.MaxValue))
-              .otherwise(floor(col("v") * cmul).cast("long")))
-          val hist = binned.groupBy(col("__bin")).agg(count(lit(1)).as("c"))
-            .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
           val ranks = probs.map { p =>
             val pos = p * (n - 1)
             val lo = math.floor(pos).toLong
-            (p, lo, math.ceil(pos).toLong, pos - lo)
+            (lo, math.ceil(pos).toLong, pos - lo)
           }
-          // per needed 0-based rank: boundary bin + 1-based within rank
-          // (needed is sorted, so one cumulative walk covers all ranks)
-          val needed = ranks.flatMap(r => Seq(r._2, r._3)).distinct.sorted
-          var cum = 0L
-          var bi = 0
-          val cuts = needed.map { r =>
-            val target = r + 1
-            while (cum + hist(bi)._2 < target) { cum += hist(bi)._2; bi += 1 }
-            Row(r, hist(bi)._1, target - cum)
-          }
-          val cutSchema = StructType(Seq(
-            StructField("__rank", org.apache.spark.sql.types.LongType, nullable = false),
-            StructField("__cbin", org.apache.spark.sql.types.LongType, nullable = false),
-            StructField("__within", org.apache.spark.sql.types.LongType, nullable = false)))
-          val cutDf = spark.createDataFrame(java.util.Arrays.asList(cuts: _*), cutSchema)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("__cbin"), col("__rank")).orderBy(col("v").asc)
-          // sketch-sized collect: one row per needed order statistic
-          val picked: Map[Long, Double] = binned
-            .join(broadcast(cutDf), col("__bin") === col("__cbin"))
-            .withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === col("__within"))
-            .select(col("__rank"), col("v"))
-            .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-          Row(ranks.map { case (_, lo, hi, frac) =>
-            Det.round6(picked(lo) + (picked(hi) - picked(lo)) * frac)
+          // the 0-based ranks to fetch; target i of the cut is rank needed(i)
+          val needed = ranks.flatMap(r => Seq(r._1, r._2)).distinct
+          val binned = withBin(vals.withColumn("__g", lit(0)), col("v"), s10)
+          // sketch-sized: one row per needed order statistic
+          val picked: Map[Long, Double] =
+            rankCut(binned, "__g", _ => needed.map(_ + 1), Seq(col("v").asc), "Quantiles.exact")
+              .select(col("__t"), col("v"))
+              .collect().map(r => needed(r.getInt(0)) -> r.getDouble(1)).toMap
+          Row(ranks.map { case (lo, hi, frac) =>
+            Det.round6(
+              if (lo == hi) picked(lo) else picked(lo) + (picked(hi) - picked(lo)) * frac)
           }: _*)
         }
       spark.createDataFrame(java.util.Arrays.asList(out), schema)
@@ -120,95 +95,128 @@ object Quantiles {
   }
 
   /** EXACT discrete quantiles PER GROUP without a per-group sort — the
-    * histogram-cut pattern ([[Sampling.selectByBudget]]'s sibling):
-    * the naive `row_number().over(partitionBy(group).orderBy(v))` sorts
-    * every group's full value set through one task per group, which is
-    * precisely what dies when a 100 TB table has 6 groups. Instead:
-    *  1. per-(group, bin) counts on a coarse monotone grid (one linear
-    *     shuffle; sketch-sized result, guarded);
-    *  2. the driver walks each group's bins in value order to locate,
-    *     for every requested quantile q, the boundary bin holding rank
-    *     `max(1, ceil(q·n))` and the residual rank within it;
-    *  3. ONLY boundary-bin rows (≈ 1/bins of each group) are windowed to
-    *     pick the exact order statistic.
-    * Binning is exactness-preserving (monotone grid ⇒ bins are
-    * consecutive value ranges; the within-bin refinement orders by the
-    * exact value), and the discrete rank-`ceil(q·n)` semantics are the
-    * engine-portable ones (no interpolation — the value RETURNED exists
-    * in the data). Ties are value-ties, so any value-consistent order
-    * yields the same order statistic. Null VALUES are dropped; NaN ranks
-    * above every value (Spark sort order) — mirror the oracle accordingly.
-    * A null GROUP is a real group (null-safe boundary join) and gets its
-    * quantiles like any other. Returns (group, q, value), one row per
-    * (group, requested q).
+    * histogram cut ([[rankCut]]): the naive
+    * `row_number().over(partitionBy(group).orderBy(v))` sorts every
+    * group's full value set through one task per group, which is
+    * precisely what dies when a 100 TB table has 6 groups. The cut
+    * counts (group, bin) cells on a coarse grid, walks each group's bins
+    * to the one holding rank `max(1, ceil(q·n))` for every requested q,
+    * and windows ONLY those boundary-bin rows. The discrete
+    * rank-`ceil(q·n)` semantics are the engine-portable ones (no
+    * interpolation — the value RETURNED exists in the data). Ties are
+    * value-ties, so any value-consistent order yields the same order
+    * statistic. Null VALUES are dropped; NaN ranks above every value
+    * (Spark sort order) — mirror the oracle accordingly. A null GROUP is
+    * a real group and gets its quantiles like any other. Returns
+    * (group, q, value), one row per (group, requested q). The binned
+    * rows are pinned on the session scope; the histogram pass runs while
+    * the plan is built, the pick stays lazy.
     */
   def exactPerGroup(df: DataFrame, groupCol: String, valueCol: String,
-                    probs: Seq[Double], binScale: Int = 2,
-                    maxHistRows: Int = 1 << 20,
-                    scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+                    probs: Seq[Double], binScale: Int = 2): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p > 0 && p <= 1),
       s"probs must be in (0, 1], got $probs")
-    val spark = df.sparkSession
     val rows = df.select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
       .filter(col("v").isNotNull)
-    // NaN: floor(NaN·s) is null-ish — bin NaN explicitly ABOVE all finite
-    // bins so its grid position matches its sort position
-    val binExpr = when(isnan(col("v")), lit(Long.MaxValue))
-      .otherwise(floor(col("v") * math.pow(10, binScale)).cast("long"))
-    val binned = scope.pin(rows.withColumn("__bin", binExpr))
-    val hist = binned.groupBy(col("g"), col("__bin"))
-      .agg(count(lit(1)).as("c"))
-      .limit(maxHistRows + 1).collect()
-    require(hist.length <= maxHistRows,
-      s"exactPerGroup histogram exceeds $maxHistRows (group, bin) rows — " +
-        "lower binScale or raise maxHistRows")
-    // driver walk: per group, ascending bins; per prob, the boundary bin
-    // and within-bin residual rank
-    val cuts = hist.groupBy(_.get(0)).flatMap { case (g, rs) =>
+    val binned = graft.CacheScope.session.pin(withBin(rows, col("v"), binScale))
+    rankCut(binned, "g", n => probs.map(p => math.max(1L, math.ceil(p * n).toLong)),
+        Seq(col("v").asc), "exactPerGroup")
+      .select(col("g").as(groupCol), typedlit(probs).getItem(col("__t")).as("q"),
+        col("v").as("value"))
+  }
+
+  /** `df` inner-joined with one broadcast column `__t<i>` per group: the
+    * group's [[exactPerGroup]] quantile at (i+1)/k, for i in 0 until k-1
+    * — the per-group threshold table that equi-depth histograms and
+    * quality tiers compare each row against map-side. A group with no
+    * non-null value has no thresholds, so the inner joins drop it.
+    */
+  private[operators] def withGroupThresholds(df: DataFrame, groupCol: String,
+                                             valueCol: String, k: Int): DataFrame = {
+    val probs = (1 until k).map(_.toDouble / k)
+    val th = exactPerGroup(df, groupCol, valueCol, probs)
+    probs.indices.foldLeft(df) { (acc, i) =>
+      val tk = th.filter(col("q") > (i + 0.5) / k && col("q") < (i + 1.5) / k)
+        .select(col(groupCol), col("value").as(s"__t$i"))
+      acc.join(broadcast(tk), Seq(groupCol))
+    }
+  }
+
+  // ---- The histogram cut ---------------------------------------------------
+  // Exact rank selection without a per-group sort: bin the values on a
+  // monotone grid, count (group, bin) cells, walk the counts on the driver
+  // to the bin holding each target rank, and window only those boundary
+  // bins. Exact, not approximate: the bins are consecutive value ranges,
+  // and the within-bin window orders by the exact value.
+
+  /** Most (group, bin) rows a cut brings to the driver; a larger
+    * histogram fails loudly rather than collecting unbounded. */
+  private[operators] val MaxHistRows: Int = 1 << 20
+
+  /** `df` plus `__bin`, the grid cell `floor(v·10^scale)` of `v` as a
+    * long. `floor(v·10^s)` is monotone in v (IEEE multiply by a positive
+    * constant is monotone), so bins are consecutive value ranges. NaN
+    * bins at `Long.MaxValue`, above every finite bin, as Spark sorts it
+    * (its floor would read as 0). A scaled value past the long range
+    * (|v| ≥ ~9.2×10^18/10^scale, ±∞) saturates to `Long.MinValue` or
+    * `Long.MaxValue`: bin order still follows value order, that range is
+    * just not subdivided, and the exact-value window orders it (+∞ below
+    * NaN inside the shared top bin).
+    */
+  private[operators] def withBin(df: DataFrame, v: Column, scale: Double): DataFrame =
+    df.withColumn("__bin", when(isnan(v), lit(Long.MaxValue))
+      .otherwise(floor(v * math.pow(10, scale)).cast("long")))
+
+  /** Runs a per-(group, `__bin`) aggregate and brings its rows to the
+    * driver, failing loudly past [[MaxHistRows]]. */
+  private[operators] def collectHist(hist: DataFrame, what: String): Array[Row] = {
+    val rows = hist.limit(MaxHistRows + 1).collect()
+    require(rows.length <= MaxHistRows,
+      s"$what histogram exceeds $MaxHistRows (group, bin) rows — coarsen the " +
+        "grid (lower binScale); the driver cut table must stay sketch-sized")
+    rows
+  }
+
+  /** The rank selector: for every value of column `group` of `binned`
+    * (a [[withBin]] frame), the rows at the 1-based ranks `ranks(n)` of
+    * the group's `order` (n = the group's row count; each rank in
+    * 1..n), one row per (group, target), with `__t` the target's index
+    * in `ranks(n)`. Runs the histogram pass now; the pick is a lazy
+    * window partitioned by (group, target), so it stays
+    * bin-sized whatever the group's size. `order` must refine the value
+    * order the bins follow. Groups match null-safely (a null group is a
+    * real group); a null value has no rank and fails loudly.
+    */
+  private[operators] def rankCut(binned: DataFrame, group: String, ranks: Long => Seq[Long],
+                                 order: Seq[Column], what: String): DataFrame = {
+    val hist = collectHist(
+      binned.groupBy(col(group), col("__bin")).agg(count(lit(1)).as("c")), what)
+    require(hist.forall(!_.isNullAt(1)),
+      s"$what has null values, which have no rank — filter them first")
+    val cuts = hist.groupBy(_.get(0)).toSeq.flatMap { case (g, rs) =>
       val bins = rs.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-      val n = bins.map(_._2).sum
-      probs.map { p =>
-        val target = math.max(1L, math.ceil(p * n).toLong)
-        var cum = 0L
-        // explicit found flag: a genuine Long.MinValue bin (values past the
-        // double->long saturation point) must not read as "not found yet"
-        // and let a later bin overwrite the boundary
-        var found = false
-        var bin = 0L
-        var within = 0L
-        val it = bins.iterator
-        while (it.hasNext && !found) {
-          val (b, c) = it.next()
-          if (cum + c >= target) { found = true; bin = b; within = target - cum }
-          else cum += c
-        }
-        assert(found, s"exactPerGroup: target rank $target unreachable in group $g ($n rows)")
-        Row(g, p, bin, within)
+      // cum(j) = rows in the bins before bin j; counts are positive, so
+      // the first j with cum(j) >= rank is one past the rank's bin
+      val cum = bins.toIndexedSeq.scanLeft(0L)(_ + _._2)
+      ranks(cum.last).zipWithIndex.map { case (rank, t) =>
+        assert(rank >= 1 && rank <= cum.last,
+          s"$what: rank $rank outside 1..${cum.last} in group $g")
+        val j = cum.search(rank).insertionPoint
+        Row(g, t, bins(j - 1)._1, rank - cum(j - 1))
       }
-    }.toSeq
-    val groupField = df.schema(df.schema.fieldIndex(groupCol))
+    }
     val cutSchema = StructType(Seq(
-      groupField.copy(name = "g"),
-      StructField("q", DoubleType, nullable = false),
-      StructField("__bin", org.apache.spark.sql.types.LongType, nullable = false),
-      StructField("__rk", org.apache.spark.sql.types.LongType, nullable = false)))
-    val cutDf = spark.createDataFrame(java.util.Arrays.asList(cuts: _*), cutSchema)
-    // boundary fetch: rows of the right (group, bin) fan out per requested
-    // q (bins rarely coincide across probs, and the fan-out is bounded by
-    // |probs|), then a window over (group, q) — boundary-bin-sized — picks
-    // the exact order statistic
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("g"), col("q")).orderBy(col("v").asc)
-    // null-safe group match (<=>): a null group is a real group — its cut
-    // row must reach its bin rows, matching the naive window form (which
-    // partitions nulls into their own group) instead of silently dropping
-    // the group's quantiles at this equi-join
-    val cut = broadcast(cutDf).withColumnRenamed("g", "__cg")
-      .withColumnRenamed("__bin", "__cbin")
-    binned.join(cut, col("g") <=> col("__cg") && col("__bin") === col("__cbin"))
+      binned.schema(group).copy(name = "__cg"),
+      StructField("__t", IntegerType, nullable = false),
+      StructField("__cbin", LongType, nullable = false),
+      StructField("__rk", LongType, nullable = false)))
+    val cut = binned.sparkSession.createDataFrame(java.util.Arrays.asList(cuts: _*), cutSchema)
+    // a boundary bin's rows fan out once per target in it (≤ |ranks|)
+    val w = Window.partitionBy(col(group), col("__t")).orderBy(order: _*)
+    binned.join(broadcast(cut), col(group) <=> col("__cg") && col("__bin") === col("__cbin"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === col("__rk"))
-      .select(col("g").as(groupCol), col("q"), col("v").as("value"))
+      .drop("__cg", "__cbin", "__rk", "__rn")
   }
 
   /** Approximate percentiles — GK sketch, the single-pass bounded-memory

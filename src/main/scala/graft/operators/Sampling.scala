@@ -332,7 +332,7 @@ object Sampling {
     *  1. bin scores on a coarse monotone grid (`floor(score·10^binScale)`)
     *     and aggregate per-(group, bin) weight sums — one linear shuffle
     *     whose output is groups·bins rows, SKETCH-sized by contract
-    *     (guarded by `maxHistRows`, loud failure);
+    *     (guarded by [[Quantiles.MaxHistRows]], loud failure);
     *  2. on the driver, walk each group's bins in score order to find the
     *     boundary bin where the budget runs out — bins strictly above it
     *     are selected WHOLE (map-side broadcast-join filter, no shuffle),
@@ -349,7 +349,7 @@ object Sampling {
     */
   def selectByBudget(df: DataFrame, groupCol: String, idCol: String,
                      weightCol: String, scoreCol: String, budget: Long,
-                     binScale: Int = 3, maxHistRows: Int = 1 << 20,
+                     binScale: Int = 3,
                      scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     val spark = df.sparkSession
@@ -357,21 +357,11 @@ object Sampling {
     val rows = df.filter(col(scoreCol).isNotNull &&
       col(weightCol).isNotNull && col(weightCol) > 0)
     // binned feeds BOTH the histogram and the selection passes — pin it.
-    // NaN scores bin explicitly ABOVE all finite bins (Long.MaxValue) so
-    // the grid position matches NaN's sort position in the exact window
-    // (Spark orders NaN above every finite double) — same contract as
-    // Quantiles.exactPerGroup.
-    val scoreD = col(scoreCol).cast("double")
-    val binned = scope.pin(rows.withColumn("__bin",
-      when(isnan(scoreD), lit(Long.MaxValue))
-        .otherwise(floor(scoreD * math.pow(10, binScale)).cast("long"))))
-    val hist = binned.groupBy(col(groupCol), col("__bin"))
-      .agg(sum(col(weightCol).cast("long")).as("__w"))
-      .limit(maxHistRows + 1).collect()
-    require(hist.length <= maxHistRows,
-      s"selectByBudget histogram exceeds $maxHistRows (group, bin) rows — " +
-        "lower binScale or raise maxHistRows; the driver cut table must " +
-        "stay sketch-sized")
+    // The grid is the histogram cut's (Quantiles.withBin): NaN scores bin
+    // above every finite bin, where the exact window sorts them.
+    val binned = scope.pin(Quantiles.withBin(rows, col(scoreCol).cast("double"), binScale))
+    val hist = Quantiles.collectHist(binned.groupBy(col(groupCol), col("__bin"))
+      .agg(sum(col(weightCol).cast("long")).as("__w")), "selectByBudget")
     // per group: bins in score order (desc); boundary = first bin whose
     // cumulative weight overflows the budget. Bins above it select whole;
     // the boundary bin gets the residual budget; bins below drop whole.
@@ -476,13 +466,7 @@ object Sampling {
   def qualityTiers(df: DataFrame, groupCol: String, scoreCol: String,
                    tiers: Int = 3): DataFrame = {
     require(tiers >= 2, s"tiers must be >= 2, got $tiers")
-    val probs = (1 until tiers).map(_.toDouble / tiers)
-    val th = Quantiles.exactPerGroup(df, groupCol, scoreCol, probs)
-    val joined = probs.zipWithIndex.foldLeft(df) { case (acc, (p, i)) =>
-      val tk = th.filter(col("q") > (i + 0.5) / tiers && col("q") < (i + 1.5) / tiers)
-        .select(col(groupCol), col("value").as(s"__t$i"))
-      acc.join(broadcast(tk), Seq(groupCol))
-    }
+    val joined = Quantiles.withGroupThresholds(df, groupCol, scoreCol, tiers)
     val tier = (0 until tiers - 1).foldLeft(when(lit(false), 0)) { (c, i) =>
       c.when(col(scoreCol) <= col(s"__t$i"), i)
     }.otherwise(tiers - 1)

@@ -60,19 +60,16 @@ object Windows {
     * group key (the common quantile-cohort shape: ~5 priorities, a few
     * sources) caps parallelism at the key count and each partition
     * becomes a multi-GB single-task straggler at 100×. Instead, the
-    * histogram-cut pattern ([[Quantiles.exactPerGroup]] /
-    * [[Histograms.equiDepthPerGroup]]):
-    *  1. per-(group, bin) counts on a monotone value grid (one linear
-    *     shuffle; sketch-sized, guarded by `maxHistRows`);
-    *  2. the driver derives each group's k-1 tile-boundary RANKS from
-    *     ntile's standard size rule (n = q·k + m ⇒ tile i ends at rank
-    *     i·q + min(i, m): the first m tiles hold q+1 rows, the rest q)
-    *     and walks the bins to the boundary bin + residual within-rank;
-    *  3. ONLY boundary-bin rows (≈ n/bins per group) pay a window —
-    *     partitioned by (group, boundary), bin-sized, never key-sized —
-    *     to extract the exact boundary (value, tie) composite;
-    *  4. boundaries collect (groups·(k-1) rows — the sketch itself,
-    *     like [[Histograms.equiDepth]]'s threshold collect), broadcast
+    * histogram cut ([[Quantiles.rankCut]], shared with
+    * [[Quantiles.exactPerGroup]]):
+    *  1. the cut finds, per group, the rows at the k-1 tile-boundary
+    *     RANKS of ntile's standard size rule (n = q·k + m ⇒ tile i ends
+    *     at rank i·q + min(i, m): the first m tiles hold q+1 rows, the
+    *     rest q) — a linear (group, bin) count pass, a driver walk, and a
+    *     window over ONLY the boundary-bin rows, ordered by (value, tie);
+    *  2. those boundary (value, tie) composites come to the driver
+    *     (groups·(k-1) rows — the sketch itself, like
+    *     [[Histograms.equiDepth]]'s threshold collect), are broadcast
     *     back as one row per group, and every row takes
     *     `tile = 1 + #{boundaries strictly below its (value, tie)}`
     *     map-side.
@@ -80,18 +77,20 @@ object Windows {
     * order, so "composite strictly below rank-r's composite" ⇔ "rank
     * < r", and when a group has fewer rows than tiles the repeated
     * boundary ranks collapse tiles just as ntile does (parity
-    * property-tested in WindowSpec). Three linear passes replace the
-    * per-key sort; ~5-key 100 TB inputs ntile at full cluster width.
+    * property-tested in RandomizedParitySpec; the plan shape, no Window
+    * in the served plan, in PlanGuardSpec). Three linear passes replace
+    * the per-key sort; ~5-key 100 TB inputs ntile at full cluster width.
     *
-    * Contract: `valueCol` numeric and non-null (loud failure otherwise);
-    * `tieCol` integral and unique within its group (the same total-order
-    * determinism contract the SQL form needs); groups·bins must fit
-    * `maxHistRows` (the per-group-quantile sketch contract). NaN values
-    * rank above every finite value (Spark sort order), matching the
-    * window form. `groupCols` takes any non-empty column list — the
-    * columns key an internal struct, so a (source, language)-style
-    * two-key cohort needs no pre-concat (the [[withNtile]] signature
-    * parity).
+    * Contract: `valueCol` numeric and non-null (a null fails loudly:
+    * ntile over nulls is engine-divergent, Spark NULLS FIRST vs ANSI
+    * options — filter first); `tieCol` integral and unique within its
+    * group (the same total-order determinism contract the SQL form
+    * needs); groups·bins must fit [[Quantiles.MaxHistRows]] (the
+    * per-group-quantile sketch contract). NaN values rank above every
+    * finite value (Spark sort order), matching the window form.
+    * `groupCols` takes any non-empty column list — the columns key an
+    * internal struct, so a (source, language)-style two-key cohort
+    * needs no pre-concat (the [[withNtile]] signature parity).
     *
     * Precision bound: binning, boundary extraction and the final
     * comparison all run on `valueCol` CAST TO DOUBLE, while the window
@@ -101,16 +100,13 @@ object Windows {
     * by the `tieCol` order instead of the native value order. Exact
     * window parity therefore holds for double-representable values
     * (the tie key still makes the assignment deterministic outside that
-    * range). Bin saturation: bins are `floor(v·10^binScale)` cast to
-    * long, so finite values ≥ ~9.2×10^18/10^binScale saturate into the
-    * NaN sentinel bin `Long.MaxValue` — the assignment stays correct
-    * (bin order remains monotone with value order since NaN sorts above
-    * all finites, and the within-bin window refines by exact (v, tie)),
-    * it just stops sub-dividing the overflow range.
+    * range). Bins saturate past the long range ([[Quantiles.withBin]]);
+    * the assignment stays exact there, the grid just stops
+    * sub-dividing.
     */
   def ntileMapSide(df: DataFrame, groupCols: Seq[String], valueCol: String,
                    tieCol: String, k: Int, outCol: String = "tile",
-                   binScale: Int = 2, maxHistRows: Int = 1 << 20): DataFrame = {
+                   binScale: Int = 2): DataFrame = {
     require(k > 0, s"ntile k must be > 0, got $k")
     require(groupCols.nonEmpty,
       "ntileMapSide needs at least one group column (use a constant for a global cohort)")
@@ -122,73 +118,19 @@ object Windows {
     if (k == 1) return df.withColumn(outCol, lit(1))
     val spark = df.sparkSession
     val v = col(valueCol).cast("double")
-    val binExpr = when(isnan(v), lit(Long.MaxValue))
-      .otherwise(floor(v * math.pow(10, binScale)).cast("long"))
-    // the group key is one struct of the grouping columns: groupBy,
-    // driver maps, and both broadcast joins key on the struct value
+    val tie = col(tieCol).cast("long")
+    // the group key is one struct of the grouping columns: the cut,
+    // driver maps, and the broadcast join key on the struct value
     // (Row equality driver-side, null-safe struct compare plan-side),
     // so multi-column cohorts cost nothing extra
-    val binned = df.withColumn("__gk", struct(groupCols.map(col): _*))
-      .withColumn("__bin", binExpr)
+    val binned = Quantiles.withBin(df.withColumn("__gk", struct(groupCols.map(col): _*)),
+        v, binScale)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val hist = binned.groupBy(col("__gk").as("__g"), col("__bin"))
-        .agg(count(lit(1)).as("c"))
-        .limit(maxHistRows + 1).collect()
-      require(hist.length <= maxHistRows,
-        s"ntileMapSide histogram exceeds $maxHistRows (group, bin) rows — " +
-          "lower binScale or raise maxHistRows")
-      require(hist.forall(!_.isNullAt(1)),
-        s"ntileMapSide: '$valueCol' has null values — ntile over nulls is " +
-          "engine-divergent (Spark NULLS FIRST vs ANSI options); filter first")
-      // driver walk: per group, the k-1 boundary ranks and their
-      // (boundary bin, within-bin residual rank)
-      val cuts = hist.groupBy(_.get(0)).flatMap { case (g, rs) =>
-        val bins = rs.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-        val n = bins.map(_._2).sum
-        val q = n / k
-        val m = n % k
-        (1 until k).map { i =>
-          val target = math.max(1L, i * q + math.min(i.toLong, m))
-          var cum = 0L
-          var found = false
-          var bin = 0L
-          var within = 0L
-          val it = bins.iterator
-          while (it.hasNext && !found) {
-            val (b, c) = it.next()
-            if (cum + c >= target) { found = true; bin = b; within = target - cum }
-            else cum += c
-          }
-          assert(found, s"ntileMapSide: rank $target unreachable in group $g ($n rows)")
-          org.apache.spark.sql.Row(g, i - 1, bin, within) // 0-based boundary index
-        }
-      }.toSeq
-      val groupField = org.apache.spark.sql.types.StructField("__cg",
-        org.apache.spark.sql.types.StructType(
-          groupCols.map(c => df.schema(df.schema.fieldIndex(c)))),
-        nullable = false)
-      val cutSchema = org.apache.spark.sql.types.StructType(Seq(
-        groupField,
-        org.apache.spark.sql.types.StructField("__i",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("__cbin",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("__rk",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val cutDf = spark.createDataFrame(java.util.Arrays.asList(cuts: _*), cutSchema)
-      // boundary fetch: only (group, boundary-bin) rows, windowed
-      // per (group, boundary index) — bin-sized partitions, then a
-      // sketch-sized collect (groups·(k-1) composite boundary keys)
-      val bw = Window.partitionBy(col("__cg"), col("__i"))
-        .orderBy(v.asc, col(tieCol).cast("long").asc)
-      val boundaries = binned
-        .join(broadcast(cutDf),
-          col("__gk") <=> col("__cg") && col("__bin") === col("__cbin"))
-        .withColumn("__rn", row_number().over(bw))
-        .filter(col("__rn") === col("__rk"))
-        .select(col("__cg"), col("__i"), v.as("__bv"),
-          col(tieCol).cast("long").as("__bt"))
+      val boundaries = Quantiles.rankCut(binned, "__gk",
+          n => (1 until k).map(i => math.max(1L, i * (n / k) + math.min(i.toLong, n % k))),
+          Seq(v.asc, tie.asc), s"ntileMapSide: '$valueCol'")
+        .select(col("__gk"), col("__t"), v, tie)
         .collect()
       // one broadcast row per group: (g, bv_0, bt_0, …, bv_{k-2}, bt_{k-2})
       val perGroup = boundaries.groupBy(_.get(0)).map { case (g, rs) =>
@@ -200,13 +142,12 @@ object Windows {
           g +: (0 until k - 1).flatMap(i => Seq[Any](byI(i)._1, byI(i)._2)))
       }.toSeq
       val thSchema = org.apache.spark.sql.types.StructType(
-        groupField.copy(name = "__tg") +: (0 until k - 1).flatMap(i => Seq(
+        binned.schema("__gk").copy(name = "__tg") +: (0 until k - 1).flatMap(i => Seq(
           org.apache.spark.sql.types.StructField(s"__bv$i",
             org.apache.spark.sql.types.DoubleType, nullable = false),
           org.apache.spark.sql.types.StructField(s"__bt$i",
             org.apache.spark.sql.types.LongType, nullable = false))))
       val thDf = spark.createDataFrame(java.util.Arrays.asList(perGroup: _*), thSchema)
-      val tie = col(tieCol).cast("long")
       val tile = (0 until k - 1).foldLeft(lit(1)) { (acc, i) =>
         acc + when(v > col(s"__bv$i") ||
           (v === col(s"__bv$i") && tie > col(s"__bt$i")), 1).otherwise(0)

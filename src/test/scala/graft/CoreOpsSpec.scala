@@ -105,6 +105,13 @@ class CoreOpsSpec extends SparkSpec {
     val wide = Quantiles.table(li.limit(500), "l_extendedprice", 128)
     assert(wide.columns.distinct.length == 127)
     assert(wide.count() == 1)
+    // a probability outside [0, 1] names no rank: rejected before any pass
+    for (bad <- Seq(1.5, -0.1)) {
+      val e = intercept[IllegalArgumentException] {
+        Quantiles.exact(li.limit(10), "l_extendedprice", Seq(bad))
+      }
+      assert(e.getMessage.contains("probs must be in [0, 1]"), e.getMessage)
+    }
   }
 
   test("exact quantiles keep percentile's NaN-ranks-last semantics") {

@@ -68,6 +68,25 @@ class PlanGuardSpec extends SparkSpec {
       s"tfidf reintroduced a per-doc window sort (one task per doc's whole vocabulary):\n$plan")
   }
 
+  test("histogram-cut rows window only boundary bins: ntile none, per-group quantiles by (group, target)") {
+    object Nodes extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def windows(name: String) = Nodes.collect(
+        SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan) {
+      case w: org.apache.spark.sql.execution.window.WindowExec => w
+    }
+    // ntileMapSide collected its boundaries while building the plan: the
+    // served plan assigns tiles map-side, with no per-key window sort
+    assert(windows("window_ntile_scalable").isEmpty,
+      "window_ntile_scalable plans a Window: its boundaries must be collected, not windowed")
+    // exactPerGroup's one window is the boundary pick: partitioned by the
+    // group AND the target quantile, so no partition holds a whole group
+    val w = windows("quantiles_per_group")
+    assert(w.size == 1, s"quantiles_per_group plans ${w.size} Windows, expected 1")
+    val keys = w.head.partitionSpec.flatMap(_.references.map(_.name))
+    assert(keys.size == 2 && keys.contains("g"),
+      s"quantiles_per_group windows by $keys, expected (group, target)")
+  }
+
   test("driver-side collect() stays within the sketch/view contract") {
     // file -> number of contract collects (each collects a SKETCH-sized
     // result: memoized sketch rows, progressive partials, REPL render,
@@ -95,21 +114,19 @@ class PlanGuardSpec extends SparkSpec {
       // documented cap — the k-means|| driver-memory contract);
       // appendToIvfIndex: stored centroid table (nlist rows)
       "Similarity.scala"    -> 10,
-      // exact: the global bin histogram (≤ ~10·2^16 rows by the auto-fit
-      // grid) + ≤ 2·|probs| order statistics; exactPerGroup: the
-      // (group, bin) histogram, ≤ maxHistRows by the guarded contract
-      "Quantiles.scala"     -> 3,
+      // collectHist: the (group, bin) histogram of every histogram cut
+      // (exact, exactPerGroup, ntileMapSide, selectByBudget), ≤
+      // MaxHistRows by its guard; exact: ≤ 2·|probs| order statistics
+      "Quantiles.scala"     -> 2,
       "Histograms.scala"    -> 1,  // equiDepth: k-1 boundary rows (the sketch)
-      // ntileMapSide: the (group, bin) histogram (≤ maxHistRows by the
-      // guarded contract) + the groups·(k-1) boundary composites (the
-      // sketch itself — the equiDepth threshold-collect precedent)
-      "Windows.scala"       -> 2,
+      // ntileMapSide: the groups·(k-1) boundary composites (the sketch
+      // itself — the equiDepth threshold-collect precedent)
+      "Windows.scala"       -> 1,
       // temperatureMix + temperatureMixTokens and their portable hash
       // twins (temperatureMixByHash + temperatureMixTokensByHash): one
-      // row per source each; selectByBudget: the (group, bin) histogram,
-      // ≤ maxHistRows by the guarded contract; bucketLogProbs (DSIR):
-      // one buckets-sized model
-      "Sampling.scala"      -> 6,
+      // row per source each; bucketLogProbs (DSIR): one buckets-sized
+      // model
+      "Sampling.scala"      -> 5,
       // bm25TopK: per-query-term document frequencies (≤ |query| rows)
       "TextOps.scala"       -> 1,
       // train: the deterministic codebook sample (sampleSize rows, the

@@ -201,10 +201,14 @@ class RandomizedParitySpec extends SparkSpec {
       val groups = 1 + rnd.nextInt(3)
       val rows = (0L until (20 + rnd.nextInt(80)).toLong).map { id =>
         val g = s"g${rnd.nextInt(groups)}"
-        // negatives, exact ties, and the occasional extreme value
-        val v = rnd.nextInt(5) match {
+        // negatives, exact ties, the occasional extreme value, values
+        // whose scaled floor saturates a long (±1e300), and ±Infinity
+        val v = rnd.nextInt(7) match {
           case 0 => -7.5
           case 1 => 1e6 + rnd.nextInt(3)
+          case 2 => if (rnd.nextBoolean()) 1e300 else -1e300
+          case 3 if rnd.nextInt(3) == 0 =>
+            if (rnd.nextBoolean()) Double.PositiveInfinity else Double.NegativeInfinity
           case _ => math.rint((rnd.nextDouble() * 10 - 5) * 10) / 10.0
         }
         (id, g, v)
@@ -230,17 +234,23 @@ class RandomizedParitySpec extends SparkSpec {
     val rnd = new scala.util.Random(59L)
     (1 to 5).foreach { trial =>
       // negatives, exact ties, huge outliers (stretching the auto grid to
-      // its coarse clamp), and sub-unit clusters (stretching it fine)
-      val rows = (0L until (15 + rnd.nextInt(85)).toLong).map { id =>
-        val v = rnd.nextInt(6) match {
+      // its coarse clamp), sub-unit clusters (stretching it fine), values
+      // whose scaled floor saturates a long (±1e300), and ±Infinity
+      val rows = (0L until (4L * (4 + rnd.nextInt(22)) + 1)).map { id =>
+        val v = rnd.nextInt(8) match {
           case 0 => -1234.5
           case 1 => 9.9e8 + rnd.nextInt(4)
           case 2 => rnd.nextDouble() * 1e-3
+          case 3 => if (rnd.nextBoolean()) 1e300 else -1e300
+          case 4 if rnd.nextInt(3) == 0 =>
+            if (rnd.nextBoolean()) Double.PositiveInfinity else Double.NegativeInfinity
           case _ => math.rint((rnd.nextDouble() * 20 - 10) * 4) / 4.0
         }
         (id, v)
       }
-      val probs = Seq(0.0, 0.25, 0.5, 0.77, 1.0)
+      // n - 1 is a multiple of 4, so every p·(n-1) is an integral position:
+      // the result is an order statistic, whatever interpolation formula
+      val probs = Seq(0.0, 0.25, 0.5, 0.75, 1.0)
       val df = rows.toDF("id", "v")
       val got = graft.operators.Quantiles.exact(df, "v", probs).head()
       val agg = df.agg(percentile(col("v"), typedlit(probs)).as("q"))
@@ -256,15 +266,22 @@ class RandomizedParitySpec extends SparkSpec {
     // straddling tile boundaries (row-splitting, the part a value-only
     // threshold cannot express), groups smaller than the tile count
     // (repeated boundary ranks), negative values (negative bins), a null
-    // group (its own partition), and occasional NaN (ranks above all)
+    // group (its own partition), occasional NaN (ranks above all), ±1e300
+    // (saturated bins) and ±Infinity
     val rnd = new scala.util.Random(47L)
     (1 to 6).foreach { trial =>
       val nGroups = 1 + rnd.nextInt(4)
       val k = 2 + rnd.nextInt(6)
       val rows = (0L until (2 + rnd.nextInt(50)).toLong).map { id =>
         val g = if (rnd.nextInt(8) == 0) null else s"g${rnd.nextInt(nGroups)}"
-        val v = if (rnd.nextInt(15) == 0) Double.NaN
-                else (rnd.nextInt(5) - 2).toDouble // 5 values → heavy ties
+        val v = rnd.nextInt(30) match {
+          case 0 | 1 => Double.NaN
+          case 2 => Double.PositiveInfinity
+          case 3 => Double.NegativeInfinity
+          case 4 => 1e300 // saturates the bin grid, like -1e300
+          case 5 => -1e300
+          case _ => (rnd.nextInt(5) - 2).toDouble // 5 values → heavy ties
+        }
         (g, v, id)
       }
       val df = rows.toDF("g", "v", "id")
