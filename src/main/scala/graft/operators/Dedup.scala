@@ -294,8 +294,8 @@ object Dedup {
     * previous labels (id, rep_id) for every already-clustered doc, the
     * batch's new ids, and `newPairs` = every near-dup pair INVOLVING a
     * new doc (new-vs-corpus from an LSH index probe, new-vs-new from
-    * banding the batch — the [[buildLshIndex]]/probe path produces
-    * exactly this), returns updated (id, rep_id) labels for the union.
+    * banding the batch — [[lshIndexPairs]] produces exactly this),
+    * returns updated (id, rep_id) labels for the union.
     *
     * Why it's correct: the old labels partition the corpus into
     * components whose representative IS the component minimum, so
@@ -310,20 +310,25 @@ object Dedup {
     * the member-level min. Output is exactly
     * `connectedComponents(old ∪ new, oldPairs ∪ newPairs)` (parity-
     * pinned in the spec, including the case where one new doc BRIDGES
-    * two previously-separate old components).
+    * two previously-separate old components, and a long chain of them).
     *
-    * Scale shape (the reason this exists): the iterative CC loop — the
-    * expensive, hard-to-scale part — runs on the touched subgraph only
-    * (≤ 2·|newPairs| vertices); the corpus-sized work is ONE linear
-    * rep-keyed broadcast-able join to re-label members of merged
-    * components. A nightly 0.1% ingest thus pays 0.1%-sized clustering,
-    * not a full recluster. Uses [[connectedComponentsStar]] for the
-    * subgraph (diameter-robust; chains of merges across many rounds of
-    * ingest are exactly where diameter grows).
+    * Scale shape (the reason this exists): the corpus-sized work is the
+    * two id-keyed contraction joins and ONE linear rep-keyed join to
+    * re-label members of merged components, all distributed. The
+    * contracted edge set has at most |newPairs| rows, so it is collected
+    * and clustered on the driver by union-find (the smaller id always
+    * the root, so a root is its component's minimum; no rounds, so a
+    * long chain of merges costs no more than a star). Driver-memory
+    * contract: at most [[MaxContractedEdges]] contracted edges, failing
+    * loudly beyond — fold such an ingest in smaller batches. The result
+    * joins a local (t_id, t_rep) relation, so the returned plan is
+    * constant-sized and nothing is persisted.
     */
   def incrementalComponents(oldLabels: DataFrame, newIds: DataFrame,
                             idCol: String, newPairs: DataFrame): DataFrame = {
     requireIntegralId(newIds, idCol, "incrementalComponents")
+    val spark = oldLabels.sparkSession
+    import spark.implicits._
     val old = oldLabels.select(col("id").cast("long").as("id"),
       col("rep_id").cast("long").as("rep_id"))
     val fresh = newIds.select(col(idCol).cast("long").as("id"))
@@ -336,28 +341,30 @@ object Dedup {
       .select(coalesce(col("ra"), col("a")).as("d1"),
         coalesce(col("rb"), col("b")).as("d2"))
       .filter(col("d1") =!= col("d2"))
-    // the touched subgraph is ingest-batch-sized: CHECKPOINT it (not just
-    // pin) — its plan embeds the whole pair-producer DAG (an LSH index
-    // probe + verify at serving time) and is referenced by the vertex
-    // derivation (twice), the CC loop and the final label joins; pinned-
-    // but-untruncated, the output plan re-embedded that DAG per reference
-    // (305 Exchanges / 2933 plan lines on the served fold row) and
-    // Catalyst re-analyzed all of it on every action. Truncation bounds
-    // the plan at a batch-sized leaf; reliable when a checkpoint dir is
-    // set (the connectedComponents durability contract), executor-local
-    // otherwise.
-    val cached = Iterative.checkpoint(contracted)
-    val touched = cached.select(col("d1").as("id"))
-      .union(cached.select(col("d2").as("id"))).distinct()
-    // the sub-clustering output is referenced by BOTH final label joins;
-    // checkpointing it too keeps the returned plan constant-sized (two
-    // joins against two batch-sized leaves) instead of duplicating the
-    // CC fixpoint plan per side
-    val sub = Iterative.checkpoint(connectedComponentsStar(touched, "id", cached)
-      .select(col("id").as("t_id"), col("rep_id").as("t_rep")))
+    val edges = contracted.limit(MaxContractedEdges + 1).as[(Long, Long)].collect()
+    require(edges.length <= MaxContractedEdges,
+      s"incrementalComponents: the batch's contracted edge set exceeds " +
+        s"$MaxContractedEdges rows — fold the ingest in smaller batches; " +
+        "the touched subgraph is clustered on the driver")
+    // union-find over the touched subgraph: a vertex absent from `parent`
+    // is a root, and the larger root always hangs under the smaller
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.contains(r)) r = parent(r)
+      var y = x // path compression
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // every non-root re-points at its root; roots keep their label
+    val sub = parent.keys.toSeq.map(v => (v, find(v))).toDF("t_id", "t_rep")
     // compose: members of touched old components re-point at the merged
     // rep; everything else keeps its label. One rep-keyed join each side
-    // (sub is batch-sized — broadcast-able at real scale).
+    // against the local relation.
     val updatedOld = old
       .join(sub, old("rep_id") === sub("t_id"), "left")
       .select(col("id"), coalesce(col("t_rep"), col("rep_id")).as("rep_id"))
@@ -366,6 +373,10 @@ object Dedup {
       .select(col("id"), coalesce(col("t_rep"), col("id")).as("rep_id"))
     updatedOld.union(updatedNew)
   }
+
+  /** The cap on [[incrementalComponents]]'s driver-side edge set: the
+    * contracted edges of one ingest batch. */
+  private val MaxContractedEdges: Int = 1 << 20
 
   /** The corpus-level dedup TRANSFORM: keep exactly one representative
     * document per near-dup component (the smallest id), tagged with the
@@ -730,9 +741,13 @@ object Dedup {
     index.buckets.write.mode(mode).partitionBy("band").parquet(s"$indexDir/buckets")
   }
 
+  /** The `params` table's fixed schema: read with it, the one-row table
+    * costs one job, not a schema-inference job first. */
+  private val LshParamsSchema = "n INT, bands INT, rows_per_band INT, seed BIGINT"
+
   private def readLshParams(spark: org.apache.spark.sql.SparkSession,
                             indexDir: String): LshParams = {
-    val r = spark.read.parquet(s"$indexDir/params").head()
+    val r = spark.read.schema(LshParamsSchema).parquet(s"$indexDir/params").head()
     LshParams(r.getAs[Int]("n"), r.getAs[Int]("bands"),
       r.getAs[Int]("rows_per_band"), r.getAs[Long]("seed"))
   }
@@ -790,35 +805,37 @@ object Dedup {
 
   /** Near-dup PAIRS for an ingest batch against a persisted
     * [[buildLshIndex]] artifact — the pair-producing probe the
-    * incremental clustering fold consumes: batch-vs-corpus pairs from
-    * [[probeLshIndex]] (the ingest gate's own probe, so a batch doc is a
-    * gate duplicate exactly when it pairs with an indexed doc here) plus
-    * batch-vs-batch pairs from banding the batch itself, both under the
-    * band parameters the index records. The union is EXACTLY the
-    * full-corpus [[minHashLSH]] pair set restricted to pairs involving a
-    * batch doc — a band signature depends only on a doc's own shingles
+    * incremental clustering fold consumes. ONE [[probeLshIndex]] (the
+    * ingest gate's own probe, so a batch doc is a gate duplicate exactly
+    * when it pairs with an indexed doc here) of the batch against the
+    * stored index frames plus the batch's own [[lshIndex]] frames, both
+    * banded under the parameters the index records; self pairs drop. The
+    * result is EXACTLY the full-corpus [[minHashLSH]] pair set restricted
+    * to pairs involving a batch doc (absent 64-bit shingle-hash
+    * collisions) — a band signature depends only on a doc's own shingles
     * and the shared seed, so probing stored buckets and banding the union
     * produce the same collisions — which is why [[incrementalComponents]]
     * over these pairs reproduces the from-scratch clustering without ever
     * re-shingling the corpus. Returns (d1, d2, jacc) with d1 < d2.
-    * Batch-sized work throughout: the corpus contributes two parquet reads
-    * (buckets join + verify arrays join), never a shingle pass.
+    * Batch-sized work throughout, and nothing persisted: the corpus
+    * contributes two parquet reads (buckets join + verify arrays join),
+    * never a shingle pass.
     */
   def lshIndexPairs(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
                     idCol: String, textCol: String, indexDir: String,
                     threshold: Double = 0.5): DataFrame = {
-    val index = readLshIndex(spark, indexDir)
-    val p = index.params
-    // a pair colliding in several bands verifies once per band; the
-    // distinct folds the byte-identical repeats
-    val batchVsCorpus = probeLshIndex(index, batch, idCol, textCol)
-      .filter(col("jacc") >= threshold)
+    val stored = readLshIndex(spark, indexDir)
+    val own = lshIndex(batch, idCol, textCol, stored.params)
+    val index = LshIndex(stored.buckets.unionByName(own.buckets),
+      stored.arrays.unionByName(own.arrays), stored.params)
+    // a pair colliding in several bands verifies once per band, and a
+    // batch-vs-batch pair once from each side; the distinct folds the
+    // byte-identical repeats
+    probeLshIndex(index, batch, idCol, textCol)
+      .filter(col("s_id") =!= col("c_id") && col("jacc") >= threshold)
       .select(least(col("s_id"), col("c_id")).as("d1"),
         greatest(col("s_id"), col("c_id")).as("d2"), col("jacc"))
       .distinct()
-    val batchVsBatch = minHashLSH(batch, idCol, textCol, p.n, p.bands,
-      p.rowsPerBand, threshold, p.seed)
-    batchVsCorpus.union(batchVsBatch.select(col("d1"), col("d2"), col("jacc")))
   }
 
   /** Band signatures as a map-side array expression over a sorted

@@ -88,4 +88,55 @@ class IncrementalCcSpec extends SparkSpec {
     val l2 = Dedup.incrementalComponents(l1, b2, "doc_id", p2)
     assert(labelsOf(l2) == full)
   }
+
+  test("long chain: 200 new docs bridging old components equal a from-scratch star CC") {
+    import spark.implicits._
+    // old components of 4 docs each, chained internally; the chain
+    // bridges four of them, 1xx and 6xx stay untouched
+    val oldComps = Seq(100L, 200L, 300L, 400L, 600L, 2500L).map(b => (b until b + 4).toSeq)
+    val oldPairs = oldComps.flatMap(c => c.zip(c.tail))
+    val oldIds = oldComps.flatten
+    val oldLabels = Dedup.connectedComponentsStar(oldIds.toDF("doc_id"), "doc_id",
+      oldPairs.toDF("d1", "d2"))
+    // chain position i holds id 2000 + (37·i mod 200): neighbours in the
+    // chain are far apart in id order, so merges do not follow id order
+    val chain = (0 until 200).map(i => 2000L + (37L * i) % 200)
+    val bridges = Seq(0 -> 201L, 50 -> 302L, 100 -> 403L, 150 -> 2501L, 199 -> 203L)
+    val newPairs = chain.zip(chain.tail) ++ bridges.map { case (i, o) => (chain(i), o) }
+    val got = labelsOf(Dedup.incrementalComponents(oldLabels, chain.toDF("doc_id"), "doc_id",
+      newPairs.toDF("d1", "d2")))
+    val full = labelsOf(Dedup.connectedComponentsStar((oldIds ++ chain).toDF("doc_id"),
+      "doc_id", (oldPairs ++ newPairs).toDF("d1", "d2")))
+    assert(got == full)
+    assert(got(chain(0)) == 200L && got(2503L) == 200L && got(601L) == 600L && got(101L) == 100L)
+  }
+
+  /** The ids of the RDDs that running `f` left persisted. */
+  private def persistedBy(f: => Unit): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    f
+    spark.sparkContext.getPersistentRDDs.keySet.diff(before).toSet
+  }
+
+  test("incrementalComponents persists nothing") {
+    import spark.implicits._
+    val oldLabels = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 3L)).toDF("id", "rep_id")
+    val newIds = Seq(5L, 6L, 7L, 8L).toDF("doc_id")
+    val newPairs = Seq((5L, 2L), (5L, 4L), (7L, 8L)).toDF("d1", "d2")
+    val left = persistedBy(
+      Dedup.incrementalComponents(oldLabels, newIds, "doc_id", newPairs).collect())
+    assert(left.isEmpty, s"incrementalComponents left persisted RDDs $left")
+  }
+
+  test("lshIndexPairs persists nothing") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // a batch no other test in this suite pairs, so no earlier pin can
+    // serve it from the cache
+    val oldDocs = docs.filter(pmod(col("doc_id"), lit(10)) =!= 3)
+    val newDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_pin").toString
+    Dedup.buildLshIndex(oldDocs, "doc_id", "text", dir)
+    val left = persistedBy(Dedup.lshIndexPairs(spark, newDocs, "doc_id", "text", dir).collect())
+    assert(left.isEmpty, s"lshIndexPairs left persisted RDDs $left")
+  }
 }

@@ -119,6 +119,10 @@ class PlanGuardSpec extends SparkSpec {
       // MaxHistRows by its guard; exact: ≤ 2·|probs| order statistics
       "Quantiles.scala"     -> 2,
       "Histograms.scala"    -> 1,  // equiDepth: k-1 boundary rows (the sketch)
+      // incrementalComponents: the batch's contracted edges (≤ |newPairs|
+      // rows, ≤ MaxContractedEdges by its guard) for the driver
+      // union-find — batch-sized, the collectHist precedent
+      "Dedup.scala"         -> 1,
       // ntileMapSide: the groups·(k-1) boundary composites (the sketch
       // itself — the equiDepth threshold-collect precedent)
       "Windows.scala"       -> 1,
