@@ -13,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   *    being measured);
   *  - failures are reported as failures (-1 in the per-query map plus an
   *    `errors` list), never as fast successes;
-  *  - the cache is cleared between queries so ops that `cache()` internal
-  *    stages can't leak memory pressure into later measurements;
+  *  - each query runs in one `CacheScope.scoped` block, so the frames
+  *    its operators pin are released before the next query; the cache is
+  *    still cleared between queries, which also drops what the
+  *    `Tables`/`StreamDedup` registries persisted (they re-pin on their
+  *    next use);
   *  - two timed passes (second in REVERSE order so a throttling window's
   *    positional span cannot cover the same query twice), per-query
   *    MINIMUM reported: the host shows minutes-long throttling windows
@@ -35,7 +38,7 @@ object Bench {
     val t0 = System.nanoTime()
     val r =
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        CacheScope.scoped(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
         Some((System.nanoTime() - t0) / 1e9)
       } catch {
         // NonFatal only: an OOM or other fatal JVM error must abort the
@@ -44,6 +47,8 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
           None
       }
+    // also unpersists the Tables/StreamDedup registry entries, which
+    // re-pin themselves on next use
     spark.catalog.clearCache()
     // between-measurement GC (outside the timed window): a heap full of
     // the PREVIOUS query's garbage (e.g. 1500 JPEG buffers before an

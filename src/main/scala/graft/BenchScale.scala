@@ -300,7 +300,7 @@ object BenchScale {
     def q(dir: String, n: String) = SparkEntry.queries(n)(spark, dir)
     val inv = scala.collection.mutable.ListBuffer[(String, Boolean, String)]()
     def check(name: String, cond: => Boolean, detail: => String): Unit =
-      try inv += ((name, cond, detail))
+      try inv += ((name, CacheScope.scoped(cond), detail))
       catch { case scala.util.control.NonFatal(e) => inv += ((name, false, e.toString)) }
     check("dedup_exact_scales_exactly", {
       // per-copy token salting keeps exact-dup groups within copies:

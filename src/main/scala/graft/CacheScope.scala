@@ -5,57 +5,52 @@ import scala.collection.mutable
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
-/** Lifecycle tracker for DataFrames pinned by multi-pass operators
-  * (Dedup.jaccardPairs / minHashLSH, the cleaning pipeline): operators
-  * `pin` the subtrees they evaluate more than once; the caller that
-  * eventually materializes the lazy result calls `release()` when done.
+/** Lifecycle of the DataFrames that multi-pass operators (Dedup's pair
+  * joins, the cleaning pipeline, the histogram cuts) evaluate more than
+  * once. Operators `pin` such a subtree; the call that collects owns the
+  * pins: it runs the operator and its collect inside `scoped { … }`, and
+  * the block releases exactly the pins made inside it on exit — the
+  * session layer per sketch and per progressive step, the REPL per
+  * command, the batch harnesses per catalog row.
   *
-  * Two usage modes:
-  *  - batch harnesses (Verify/Bench) pass the shared [[CacheScope.session]]
-  *    scope and run `spark.catalog.clearCache()` between queries — the pins
-  *    live exactly one query;
-  *  - long-lived sessions (tests, the REPL) use [[CacheScope.scoped]] or an
-  *    explicit instance so pins are released deterministically without
-  *    nuking unrelated cached tables.
+  * A scope belongs to the thread that opened it (a plain thread-local
+  * stack, not inherited by threads it starts), so concurrent callers
+  * never release each other's pins. With no scope open, `pin` persists
+  * nothing and the operator recomputes the subtree per consumer: slower,
+  * never leaked.
   */
-final class CacheScope private[graft] (track: Boolean = true) {
-  private val pinned = mutable.ArrayBuffer.empty[Dataset[_]]
+object CacheScope {
+  private val open = ThreadLocal.withInitial[List[mutable.ArrayBuffer[Dataset[_]]]](() => Nil)
 
   /** Persist (MEMORY_AND_DISK — at 100 TB a hot subtree must degrade to
-    * disk, not OOM) and track for release. A frame that is ALREADY
-    * persisted is not tracked: `storageLevel` resolves through Spark's
-    * CacheManager by canonicalized plan, so it can reflect another
-    * scope's pin of an identical plan — release() must only unpersist
-    * what this scope itself persisted, never a pin it doesn't own.
+    * disk, not OOM) into the innermost open scope. A frame that is
+    * ALREADY persisted is not tracked: `storageLevel` resolves through
+    * Spark's CacheManager by canonicalized plan, so it can reflect an
+    * enclosing scope's pin of an identical plan, and a scope must only
+    * unpersist what it persisted itself.
     */
-  def pin[T](ds: Dataset[T]): Dataset[T] = synchronized {
-    if (ds.storageLevel == StorageLevel.NONE) {
-      ds.persist(StorageLevel.MEMORY_AND_DISK)
-      if (track) pinned += ds
+  def pin[T](ds: Dataset[T]): Dataset[T] = {
+    open.get match {
+      case pins :: _ if ds.storageLevel == StorageLevel.NONE =>
+        ds.persist(StorageLevel.MEMORY_AND_DISK)
+        pins += ds
+      case _ =>
     }
     ds
   }
 
-  /** Unpersist every pinned frame (idempotent). */
-  def release(): Unit = synchronized {
-    pinned.foreach(_.unpersist())
-    pinned.clear()
-  }
-}
-
-object CacheScope {
-  /** Session-lifetime scope: pins are released by the batch harnesses'
-    * `clearCache()` between queries, never individually — so this scope
-    * keeps no references (track = false) and cannot grow driver memory
-    * over a long session.
+  /** Run `f` in a fresh scope on this thread and unpersist its pins when
+    * it returns or throws. `f` must materialize anything it keeps: a lazy
+    * result read after the block recomputes the released subtrees.
     */
-  val session: CacheScope = new CacheScope(track = false)
-
-  /** Run `f` with a fresh scope, releasing every pin afterwards. `f` must
-    * materialize anything it wants to keep (lazy results lose their pins).
-    */
-  def scoped[T](f: CacheScope => T): T = {
-    val s = new CacheScope
-    try f(s) finally s.release()
+  def scoped[T](f: => T): T = {
+    val outer = open.get
+    val pins = mutable.ArrayBuffer.empty[Dataset[_]]
+    open.set(pins :: outer)
+    try f
+    finally {
+      open.set(outer)
+      pins.foreach(_.unpersist())
+    }
   }
 }

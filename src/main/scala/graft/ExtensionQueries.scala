@@ -24,8 +24,7 @@ object ExtensionQueries {
     * `Dedup.jaccardPairsDense` as the exact oracle twin (tests assert the
     * two pipelines agree on the fixture, where LSH recall is 1.0).
     */
-  def cleanCorpus(docs: DataFrame, nearDupPairs: DataFrame => DataFrame,
-                  scope: CacheScope = CacheScope.session): DataFrame = {
+  def cleanCorpus(docs: DataFrame, nearDupPairs: DataFrame => DataFrame): DataFrame = {
     val withTok = docs.join(
       TextOps.tokenCount(docs, "doc_id", "text"), Seq("doc_id"))
     val quality = withTok.filter(col("n_tokens") >= 20)
@@ -33,7 +32,7 @@ object ExtensionQueries {
       .select(col("rep_id").as("doc_id"))
     // survivors feeds BOTH the near-dup pair generation and the final
     // representative join — pin so the quality+dedup pipeline runs once
-    val survivors = scope.pin(Joins.semi(quality, reps, Seq("doc_id")))
+    val survivors = CacheScope.pin(Joins.semi(quality, reps, Seq("doc_id")))
     Dedup.keepRepresentatives(survivors, "doc_id", nearDupPairs(survivors))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"))
@@ -874,7 +873,7 @@ object ExtensionQueries {
         // pinned: incrementalComponents references the label table three
         // times (both contraction joins + the re-label join); without the
         // pin the star-CC setup plan re-executes per reference
-        val oldLabels = graft.CacheScope.session.pin(
+        val oldLabels = CacheScope.pin(
           Dedup.connectedComponentsStar(oldDocs, "doc_id",
             Dedup.minHashLSH(oldDocs, "doc_id", "text", n = 2, threshold = 0.5)))
         val isNew = (c: org.apache.spark.sql.Column) => pmod(c, lit(10)) === 0

@@ -28,7 +28,7 @@ object PlanDump {
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[plandump] no such query: $n")
         case Some(fn) =>
-          try {
+          try CacheScope.scoped {
             val df = fn(spark, sfDir)
             val txt = df.queryExecution.explainString(
               org.apache.spark.sql.execution.FormattedMode)
@@ -37,7 +37,7 @@ object PlanDump {
             System.err.println(s"[plandump] wrote ${n}_$suffix.txt")
           } catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[plandump] $n FAILED: $e")
-          } finally spark.catalog.clearCache() // release CacheScope pins
+          } finally spark.catalog.clearCache() // drop the Tables/StreamDedup registry caches
       }
     }
     spark.stop()

@@ -204,8 +204,10 @@ object Repl {
     parts
   }
 
-  /** One command → one printed result (exposed for scripted tests). */
-  def eval(spark: SparkSession, s: ViewSession, sfDir: String, cmd: String): String = {
+  /** One command → one printed result (exposed for scripted tests). The
+    * command runs in one [[CacheScope.scoped]] block: what its operators
+    * pin is released when it returns. */
+  def eval(spark: SparkSession, s: ViewSession, sfDir: String, cmd: String): String = CacheScope.scoped {
     def df(vid: String): DataFrame = s(ViewId(vid)).df
     // verb + view id + RAW remainder: free-text arguments (filter
     // predicates) must reach expr() untouched — retokenizing with a single

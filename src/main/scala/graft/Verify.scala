@@ -24,8 +24,8 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try CacheScope.scoped(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         System.err.println(s"[verify] $name failed: $msg")
@@ -34,7 +34,8 @@ object Verify {
         Seq(failed(name)).toDF("spark_error")
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // release pins left by multi-pass operators (CacheScope.session)
+      // the row's pins died with its scope; this drops the Tables and
+      // StreamDedup registry caches, which re-pin themselves on next use
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -138,9 +138,11 @@ final class ViewSession(spark: SparkSession, memoCap: Int = 256) {
     * An op that does run jobs while building (`Quantiles.exact`'s eager
     * histogram passes are the measured exception) re-runs them on every
     * call, hit or miss; `op` is applied under the view's job group, so
-    * `cancel(id)` still reaches those jobs.
+    * `cancel(id)` still reaches those jobs. `op`, the memo lookup and the
+    * collect share one [[CacheScope.scoped]] block, so whatever `op` pins
+    * is released when the call returns.
     */
-  def sketch(id: ViewId, opKey: String)(op: DataFrame => DataFrame): DataFrame = {
+  def sketch(id: ViewId, opKey: String)(op: DataFrame => DataFrame): DataFrame = CacheScope.scoped {
     val result = underGroup(id, s"op=$opKey")(op(views(id).df))
     val key = (id, opKey, result.queryExecution.analyzed.canonicalized)
     Option(memo.get(key)) match {
@@ -176,8 +178,9 @@ final class ViewSession(spark: SparkSession, memoCap: Int = 256) {
     * is the previous step's running result as a local relation. The
     * yielded result is that materialized running result (sketch results
     * are small by contract), so collecting it starts no job and a step
-    * never re-executes earlier slices or merges. Views with no file-backed
-    * scan are rejected.
+    * never re-executes earlier slices or merges. Each step is one
+    * [[CacheScope.scoped]] block, so a step's pins die with the step.
+    * Views with no file-backed scan are rejected.
     */
   def progressive(id: ViewId, batches: Int,
                   sketchOp: DataFrame => DataFrame,
@@ -185,10 +188,11 @@ final class ViewSession(spark: SparkSession, memoCap: Int = 256) {
     val slices = graft.plans.FileSlices.slices(views(id).df, batches)
     var acc: Option[DataFrame] = None
     slices.iterator.zipWithIndex.map { case (sliceDf, i) =>
-      val part = sketchOp(sliceDf)
-      val step = acc.fold(part)(merge(_, part))
-      val rows = underGroup(id, s"progressive ${i + 1}/$batches")(step.collect())
-      acc = Some(local(rows, step.schema))
+      acc = Some(CacheScope.scoped {
+        val part = sketchOp(sliceDf)
+        val step = acc.fold(part)(merge(_, part))
+        local(underGroup(id, s"progressive ${i + 1}/$batches")(step.collect()), step.schema)
+      })
       ((i + 1).toDouble / batches, acc.get)
     }
   }

@@ -530,9 +530,8 @@ object Dedup {
     * candidate-local work.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                   n: Int = 2, threshold: Double = 0.5,
-                   scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
-    val bg = scope.pin(TextOps.shingleSet(df, idCol, textCol, n))
+                   n: Int = 2, threshold: Double = 0.5): DataFrame = {
+    val bg = graft.CacheScope.pin(TextOps.shingleSet(df, idCol, textCol, n))
     val dfreq = bg.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     val byDoc = org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))
     val ranked = bg.join(dfreq, Seq("sh"))
@@ -656,9 +655,8 @@ object Dedup {
     */
   def minHashLSH(df: DataFrame, idCol: String, textCol: String,
                  n: Int = 2, bands: Int = 8, rowsPerBand: Int = 4,
-                 threshold: Double = 0.5, seed: Long = 42L,
-                 scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
-    val (docs, cand) = lshStages(df, idCol, textCol, n, bands, rowsPerBand, seed, scope)
+                 threshold: Double = 0.5, seed: Long = 42L): DataFrame = {
+    val (docs, cand) = lshStages(df, idCol, textCol, n, bands, rowsPerBand, seed)
     cand
       .join(docs.select(col(idCol).as("d1"), col("ids").as("ids1")), Seq("d1"))
       .join(docs.select(col(idCol).as("d2"), col("ids").as("ids2")), Seq("d2"))
@@ -674,9 +672,8 @@ object Dedup {
     */
   def minHashLSHCandidates(df: DataFrame, idCol: String, textCol: String,
                            n: Int = 2, bands: Int = 8, rowsPerBand: Int = 4,
-                           seed: Long = 42L,
-                           scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
-    lshStages(df, idCol, textCol, n, bands, rowsPerBand, seed, scope)._2
+                           seed: Long = 42L): DataFrame =
+    lshStages(df, idCol, textCol, n, bands, rowsPerBand, seed)._2
 
   /** Banding parameters of a MinHash-LSH pass: shingle size, bands ×
     * rows per band, and the rehash seed. */
@@ -699,12 +696,14 @@ object Dedup {
     *   `indexDir/buckets`  (c_id, bsig) Hive-partitioned by `band`;
     *   `indexDir/arrays`   (c_id, c_ids) sorted shingle-hash arrays for
     *                       the exact-Jaccard verify join;
-    *   `indexDir/params`   one row (n, bands, rows_per_band, seed) — the
-    *                       serve path derives probe signatures from THIS,
-    *                       so an index probed with mismatched banding
-    *                       (which would silently have zero recall) cannot
-    *                       happen.
-    * `c_id` keeps the corpus id column's own type (no widening).
+    *   `indexDir/params`   one row (n, bands, rows_per_band, seed,
+    *                       id_type) — the serve path derives probe
+    *                       signatures from THIS, so an index probed with
+    *                       mismatched banding (which would silently have
+    *                       zero recall) cannot happen.
+    * `c_id` keeps the corpus id column's own type (no widening); params
+    * records it as DDL (`id_type`), so every table reads back with its
+    * full fixed schema and no schema-inference job.
     */
   def buildLshIndex(corpus: DataFrame, idCol: String, textCol: String,
                     indexDir: String, n: Int = 2, bands: Int = 8,
@@ -713,8 +712,8 @@ object Dedup {
     import spark.implicits._
     writeLshIndex(corpus, idCol, textCol, LshParams(n, bands, rowsPerBand, seed),
       indexDir, "overwrite")
-    Seq((n, bands, rowsPerBand, seed))
-      .toDF("n", "bands", "rows_per_band", "seed")
+    Seq((n, bands, rowsPerBand, seed, corpus.schema(idCol).dataType.sql))
+      .toDF("n", "bands", "rows_per_band", "seed", "id_type")
       .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/params")
   }
 
@@ -730,34 +729,40 @@ object Dedup {
   def appendToLshIndex(accepted: DataFrame, idCol: String, textCol: String,
                        indexDir: String): Unit =
     writeLshIndex(accepted, idCol, textCol,
-      readLshParams(accepted.sparkSession, indexDir), indexDir, "append")
+      readLshParams(accepted.sparkSession, indexDir)._1, indexDir, "append")
 
   /** The one writer of an index's buckets and arrays: `overwrite` builds,
-    * `append` extends under the same band partitions. */
+    * `append` extends under the same band partitions. The arrays are
+    * pinned for the two writes, so the input is shingled once. */
   private def writeLshIndex(docs: DataFrame, idCol: String, textCol: String,
-                            p: LshParams, indexDir: String, mode: String): Unit = {
-    val index = lshIndex(docs, idCol, textCol, p)
-    index.arrays.write.mode(mode).parquet(s"$indexDir/arrays")
-    index.buckets.write.mode(mode).partitionBy("band").parquet(s"$indexDir/buckets")
-  }
+                            p: LshParams, indexDir: String, mode: String): Unit =
+    graft.CacheScope.scoped {
+      val arrays = graft.CacheScope.pin(lshIndex(docs, idCol, textCol, p).arrays)
+      arrays.write.mode(mode).parquet(s"$indexDir/arrays")
+      bandBuckets(arrays, "c_id", "c_ids", p)
+        .write.mode(mode).partitionBy("band").parquet(s"$indexDir/buckets")
+    }
 
   /** The `params` table's fixed schema: read with it, the one-row table
     * costs one job, not a schema-inference job first. */
-  private val LshParamsSchema = "n INT, bands INT, rows_per_band INT, seed BIGINT"
+  private val LshParamsSchema = "n INT, bands INT, rows_per_band INT, seed BIGINT, id_type STRING"
 
+  /** The index's banding and the DDL type of its `c_id` column. */
   private def readLshParams(spark: org.apache.spark.sql.SparkSession,
-                            indexDir: String): LshParams = {
+                            indexDir: String): (LshParams, String) = {
     val r = spark.read.schema(LshParamsSchema).parquet(s"$indexDir/params").head()
-    LshParams(r.getAs[Int]("n"), r.getAs[Int]("bands"),
-      r.getAs[Int]("rows_per_band"), r.getAs[Long]("seed"))
+    (LshParams(r.getAs[Int]("n"), r.getAs[Int]("bands"),
+      r.getAs[Int]("rows_per_band"), r.getAs[Long]("seed")), r.getAs[String]("id_type"))
   }
 
   /** A persisted [[buildLshIndex]] artifact as index frames, banded under
-    * its own recorded params. */
+    * its own recorded params; the params row is its one job. */
   private[graft] def readLshIndex(spark: org.apache.spark.sql.SparkSession,
-                                  indexDir: String): LshIndex =
-    LshIndex(spark.read.parquet(s"$indexDir/buckets"),
-      spark.read.parquet(s"$indexDir/arrays"), readLshParams(spark, indexDir))
+                                  indexDir: String): LshIndex = {
+    val (p, idType) = readLshParams(spark, indexDir)
+    LshIndex(spark.read.schema(s"c_id $idType, bsig BIGINT, band INT").parquet(s"$indexDir/buckets"),
+      spark.read.schema(s"c_id $idType, c_ids ARRAY<BIGINT>").parquet(s"$indexDir/arrays"), p)
+  }
 
   /** The index frames of a corpus, in memory — what [[buildLshIndex]]
     * persists, and the static side of the fused ingest gate. Docs with no
@@ -891,10 +896,9 @@ object Dedup {
     * the band-collision candidate pairs over them.
     */
   private def lshStages(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, bands: Int, rowsPerBand: Int, seed: Long,
-                        scope: graft.CacheScope): (DataFrame, DataFrame) = {
+                        n: Int, bands: Int, rowsPerBand: Int, seed: Long): (DataFrame, DataFrame) = {
     graft.functions.VectorExprs.register(df.sparkSession) // native bandSigs
-    val docs = scope.pin(shingleIdArrays(df, idCol, textCol, n))
+    val docs = graft.CacheScope.pin(shingleIdArrays(df, idCol, textCol, n))
     val buckets = bandBuckets(docs, idCol, "ids", LshParams(n, bands, rowsPerBand, seed))
     val cand = buckets.as("l").join(buckets.as("r"), Seq("band", "bsig"))
       .filter(col(s"l.$idCol") < col(s"r.$idCol"))
@@ -1053,10 +1057,9 @@ object Dedup {
     * on the 10× audio-dedup sweep before the pin).
     */
   def hammingPairs(fp: DataFrame, idCol: String, hashCol: String,
-                   maxHamming: Int = 3,
-                   scope: graft.CacheScope = graft.CacheScope.session): DataFrame =
+                   maxHamming: Int = 3): DataFrame =
     bandCandidates(
-      scope.pin(fp.select(col(idCol), col(hashCol))), idCol, hashCol, maxHamming)
+      graft.CacheScope.pin(fp.select(col(idCol), col(hashCol))), idCol, hashCol, maxHamming)
       .select(col("d1"), col("d2"),
         bit_count(col("h1").bitwiseXOR(col("h2"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)

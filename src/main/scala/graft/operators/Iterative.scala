@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
 
 /** Shared plumbing for iterative DataFrame/Dataset loops (connected
@@ -10,8 +11,10 @@ import org.apache.spark.sql.Dataset
   *
   * `Dataset.unpersist` only clears cache-manager entries — a checkpointed
   * frame's blocks live on the RDD inside its `LogicalRDD` leaf, so that
-  * RDD is what must be unpersisted. (No-op for reliable checkpoints,
-  * whose files the ContextCleaner reclaims when the RDD is collected.)
+  * RDD is what must be unpersisted. A reliable checkpoint's files are
+  * that RDD's checkpoint directory, which Spark never deletes unless
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is set, so the
+  * release deletes it too.
   */
 private[operators] object Iterative {
 
@@ -27,5 +30,9 @@ private[operators] object Iterative {
   def releaseCheckpoint(ds: Dataset[_]): Unit =
     ds.queryExecution.logical.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    }.foreach { rdd =>
+      rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.map(new Path(_))
+        .foreach(p => p.getFileSystem(rdd.context.hadoopConfiguration).delete(p, true))
+    }
 }

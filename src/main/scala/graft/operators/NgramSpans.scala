@@ -84,7 +84,7 @@ object NgramSpans {
   def clean(df: DataFrame, idCol: String, textCol: String, n: Int = 8): DataFrame = {
     // pinned: the span derivation and the cut both start from the token
     // frame — unpinned, the text scan and whitespace split run twice
-    val toks = graft.CacheScope.session.pin(tokenized(df, idCol, textCol))
+    val toks = graft.CacheScope.pin(tokenized(df, idCol, textCol))
     cutSpans(toks, spans(markedOccurrences(toks, idCol, n), idCol, n), idCol)
   }
 
@@ -130,7 +130,7 @@ object NgramSpans {
   def decontamClean(train: DataFrame, eval: DataFrame, idCol: String,
                     textCol: String, n: Int = 8): DataFrame = {
     // same double-consumption pin as [[clean]]
-    val toks = graft.CacheScope.session.pin(tokenized(train, idCol, textCol))
+    val toks = graft.CacheScope.pin(tokenized(train, idCol, textCol))
     cutSpans(toks, spans(evalMarked(toks, eval, idCol, textCol, n), idCol, n), idCol)
   }
 
@@ -265,9 +265,9 @@ object NgramSpans {
     // exploded window frame, and the two exchanges differ (partial-agg vs
     // join shuffle) so Spark cannot reuse one — unpinned, the explode and
     // an md5 per token position run TWICE (the lshStages shingle-array
-    // precedent; MEMORY_AND_DISK, corpus-linear, released by the harness
-    // clearCache / caller scope)
-    val occ = graft.CacheScope.session.pin(windowOccurrences(toks, idCol, n))
+    // precedent; MEMORY_AND_DISK, corpus-linear, released when the
+    // caller's CacheScope closes)
+    val occ = graft.CacheScope.pin(windowOccurrences(toks, idCol, n))
     // only grams that RECUR can mark an occurrence — dropping the
     // unique majority before the join shrinks the build side to the
     // duplicated vocabulary (AQE broadcasts it when small; at web scale

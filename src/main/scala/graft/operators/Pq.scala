@@ -554,8 +554,7 @@ object Pq {
     */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, m: Int = 8, ksub: Int = 16,
-             seed: Long = 42L, refine: Int = 1,
-             scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+             seed: Long = 42L, refine: Int = 1): DataFrame = {
     require(refine >= 1, s"refine must be >= 1, got $refine")
     require(Seq("bigint", "int", "smallint").contains(
       emb.schema(idCol).dataType.simpleString),

@@ -109,8 +109,8 @@ object Quantiles {
     * (Spark sort order) — mirror the oracle accordingly. A null GROUP is
     * a real group and gets its quantiles like any other. Returns
     * (group, q, value), one row per (group, requested q). The binned
-    * rows are pinned on the session scope; the histogram pass runs while
-    * the plan is built, the pick stays lazy.
+    * rows are pinned in the caller's [[graft.CacheScope]]; the histogram
+    * pass runs while the plan is built, the pick stays lazy.
     */
   def exactPerGroup(df: DataFrame, groupCol: String, valueCol: String,
                     probs: Seq[Double], binScale: Int = 2): DataFrame = {
@@ -118,7 +118,7 @@ object Quantiles {
       s"probs must be in (0, 1], got $probs")
     val rows = df.select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
       .filter(col("v").isNotNull)
-    val binned = graft.CacheScope.session.pin(withBin(rows, col("v"), binScale))
+    val binned = graft.CacheScope.pin(withBin(rows, col("v"), binScale))
     rankCut(binned, "g", n => probs.map(p => math.max(1L, math.ceil(p * n).toLong)),
         Seq(col("v").asc), "exactPerGroup")
       .select(col("g").as(groupCol), typedlit(probs).getItem(col("__t")).as("q"),

@@ -349,8 +349,7 @@ object Sampling {
     */
   def selectByBudget(df: DataFrame, groupCol: String, idCol: String,
                      weightCol: String, scoreCol: String, budget: Long,
-                     binScale: Int = 3,
-                     scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+                     binScale: Int = 3): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     val spark = df.sparkSession
     val outCols = df.columns.toIndexedSeq
@@ -359,7 +358,7 @@ object Sampling {
     // binned feeds BOTH the histogram and the selection passes — pin it.
     // The grid is the histogram cut's (Quantiles.withBin): NaN scores bin
     // above every finite bin, where the exact window sorts them.
-    val binned = scope.pin(Quantiles.withBin(rows, col(scoreCol).cast("double"), binScale))
+    val binned = graft.CacheScope.pin(Quantiles.withBin(rows, col(scoreCol).cast("double"), binScale))
     val hist = Quantiles.collectHist(binned.groupBy(col(groupCol), col("__bin"))
       .agg(sum(col(weightCol).cast("long")).as("__w")), "selectByBudget")
     // per group: bins in score order (desc); boundary = first bin whose

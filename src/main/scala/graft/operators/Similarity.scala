@@ -1234,8 +1234,7 @@ object Similarity {
     * with [[semDedup]]'s brute-parity contracts in SemDedupSpec.
     */
   def semDedupWithCentroids(emb: DataFrame, idCol: String, vecCol: String,
-                            threshold: Double, cs: Seq[Seq[Double]],
-                            scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+                            threshold: Double, cs: Seq[Seq[Double]]): DataFrame = {
     Dedup.requireIntegralId(emb, idCol, "semDedupWithCentroids")
     require(cs.nonEmpty, "centroid list must be non-empty")
     graft.functions.VectorExprs.register(emb.sparkSession)
@@ -1245,7 +1244,7 @@ object Similarity {
     // pinned: three consumers read the assignment (the pair scan, the CC
     // vertex set, and the centroid-similarity join) — unpinned, each
     // re-scans the corpus and re-runs the nearest-centroid kernel
-    val tagged = scope.pin(nonNull
+    val tagged = graft.CacheScope.pin(nonNull
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .withColumn("bucket", nearestCentroids(col("vec"), cs, 1).getItem(0)))
     val pairs = bucketVerifiedPairs(tagged, threshold)

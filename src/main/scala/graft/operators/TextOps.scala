@@ -122,10 +122,9 @@ object TextOps {
     * `row_number()` window form would sort every doc's full vocabulary
     * in one task.
     */
-  def tfidfTopK(df: DataFrame, idCol: String, textCol: String, k: Int = 5,
-                scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+  def tfidfTopK(df: DataFrame, idCol: String, textCol: String, k: Int = 5): DataFrame = {
     graft.functions.VectorExprs.register(df.sparkSession)
-    val tf = scope.pin(
+    val tf = graft.CacheScope.pin(
       rawShingles(df, idCol, textCol, 1)
         .groupBy(col(idCol), col("sh").as("term"))
         .agg(count(lit(1)).as("tf")))
@@ -324,10 +323,9 @@ object TextOps {
     * when a small reference corpus makes them broadcast-sized).
     */
   def lmScore(lm: DataFrame, docs: DataFrame, idCol: String, textCol: String,
-              addK: Double = 0.5,
-              scope: graft.CacheScope = graft.CacheScope.session): DataFrame = {
+              addK: Double = 0.5): DataFrame = {
     require(addK > 0, s"addK must be positive (got $addK): k=0 makes unseen bigrams -log 0")
-    val uni = scope.pin(
+    val uni = graft.CacheScope.pin(
       rawShingles(lm, idCol, textCol, 1)
         .groupBy(col("sh").as("w1")).agg(count(lit(1)).as("cw")))
     val bi = rawShingles(lm, idCol, textCol, 2)

@@ -272,6 +272,11 @@ class ExtensionOpsSpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(dir).filter(_.toString.contains("rdd-"))
         .findFirst().isPresent
       assert(wrote, s"no reliable checkpoint files under $dir")
+      // every earlier round's files are deleted once the next round
+      // materializes: only the result's own checkpoint stays on disk
+      val rounds = java.nio.file.Files.walk(dir)
+        .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
+      assert(rounds == 1, s"$rounds rdd-* checkpoint dirs under $dir, expected the result's alone")
     } finally {
       org.apache.spark.graftest.CheckpointDirs.reset(spark.sparkContext)
       scala.util.Try {
@@ -500,13 +505,11 @@ class ExtensionOpsSpec extends SparkSpec {
     // the catalog query ships the sub-quadratic MinHash-LSH stage while the
     // DuckDB oracle replays exact near-dup SQL — this is the parity that
     // keeps the hash green (VERDICT r3 item 1)
-    CacheScope.scoped { sc =>
+    CacheScope.scoped {
       val viaLsh = ExtensionQueries.cleanCorpus(docs,
-        sv => Dedup.minHashLSH(sv, "doc_id", "text", n = 2, threshold = 0.5, scope = sc),
-        sc).collect().toSeq
+        sv => Dedup.minHashLSH(sv, "doc_id", "text", n = 2, threshold = 0.5)).collect().toSeq
       val viaDense = ExtensionQueries.cleanCorpus(docs,
-        sv => Dedup.jaccardPairsDense(sv, "doc_id", "text", 2, 0.5),
-        sc).collect().toSeq
+        sv => Dedup.jaccardPairsDense(sv, "doc_id", "text", 2, 0.5)).collect().toSeq
       assert(viaLsh == viaDense)
     }
   }
@@ -532,8 +535,8 @@ class ExtensionOpsSpec extends SparkSpec {
     // so a lingering checkpoint RDD from an earlier test can be GC'd
     // between the snapshots and mask the pin's +1 in a size comparison
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    CacheScope.scoped { sc =>
-      Dedup.minHashLSH(docs, "doc_id", "text", scope = sc).count()
+    CacheScope.scoped {
+      Dedup.minHashLSH(docs, "doc_id", "text").count()
       assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
         "pin did not persist")
     }
@@ -543,19 +546,22 @@ class ExtensionOpsSpec extends SparkSpec {
 
   test("CacheScope.release only unpersists pins the scope itself created") {
     val frame = docs.select(col("doc_id")).filter(col("doc_id") % 7 === 0)
-    val owner = new CacheScope()
-    owner.pin(frame).count()
-    assert(frame.storageLevel.useMemory, "owner pin must persist")
-    // a second scope pins an IDENTICAL plan: the CacheManager resolves it
-    // to the owner's cache, so the borrower must not claim (or drop) it
-    val borrower = new CacheScope()
-    val same = docs.select(col("doc_id")).filter(col("doc_id") % 7 === 0)
-    borrower.pin(same).count()
-    borrower.release()
-    assert(frame.storageLevel.useMemory,
-      "borrower.release() dropped a pin it never created")
-    owner.release()
-    assert(!frame.storageLevel.useMemory, "owner release must unpersist")
+    CacheScope.pin(frame)
+    assert(!frame.storageLevel.useMemory, "a pin with no open scope must not persist")
+    CacheScope.scoped {
+      CacheScope.pin(frame).count()
+      assert(frame.storageLevel.useMemory, "owner pin must persist")
+      // an inner scope pins an IDENTICAL plan: the CacheManager resolves
+      // it to the owner's cache, so the inner scope must not claim (or
+      // drop) it
+      CacheScope.scoped {
+        val same = docs.select(col("doc_id")).filter(col("doc_id") % 7 === 0)
+        CacheScope.pin(same).count()
+      }
+      assert(frame.storageLevel.useMemory,
+        "the inner scope's exit dropped a pin it never created")
+    }
+    assert(!frame.storageLevel.useMemory, "the owner scope's exit must unpersist")
   }
 
   test("ivfDupPairs: subset of exact pairs, recall floor, sub-quadratic candidates") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftest.Listeners
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -126,6 +127,33 @@ class IncrementalCcSpec extends SparkSpec {
     val left = persistedBy(
       Dedup.incrementalComponents(oldLabels, newIds, "doc_id", newPairs).collect())
     assert(left.isEmpty, s"incrementalComponents left persisted RDDs $left")
+  }
+
+  test("readLshIndex reads the stored index with its fixed schema: one job, the params row") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val oldDocs = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_read").toString
+    Dedup.buildLshIndex(oldDocs, "doc_id", "text", dir)
+    var read: Dedup.LshIndex = null
+    val jobs = Listeners.jobsStarted(spark.sparkContext) { read = Dedup.readLshIndex(spark, dir) }
+    assert(jobs == 1, s"readLshIndex started $jobs jobs; schema inference is back")
+    // the fixed schema reads back exactly what was banded in memory
+    val built = Dedup.lshIndex(oldDocs, "doc_id", "text", read.params)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    assert(read.buckets.schema("c_id").dataType == docs.schema("doc_id").dataType)
+    assert(rows(read.buckets, "c_id", "band", "bsig") == rows(built.buckets, "c_id", "band", "bsig"))
+    assert(rows(read.arrays, "c_id", "c_ids") == rows(built.arrays, "c_id", "c_ids"))
+  }
+
+  test("buildLshIndex shingles its input once across the arrays and buckets writes") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .filter(pmod(col("doc_id"), lit(10)) =!= 0)
+    val touched = spark.sparkContext.longAccumulator("lsh-index-input")
+    val tap = udf((s: String) => { touched.add(1); s })
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_write").toString
+    Dedup.buildLshIndex(docs.withColumn("text", tap(col("text"))), "doc_id", "text", dir)
+    assert(touched.value == docs.count(), s"input rows read ${touched.value} times for ${docs.count()} docs")
   }
 
   test("lshIndexPairs persists nothing") {

@@ -55,11 +55,7 @@ class ScalingSpec extends SparkSpec {
         if (m != null) acc.addAndGet(m.shuffleWriteMetrics.recordsWritten)
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      action
-      org.apache.spark.graftest.ListenerDrain.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    org.apache.spark.graftest.Listeners.withListener(spark.sparkContext, listener)(action)
     acc.get()
   }
 
@@ -83,9 +79,9 @@ class ScalingSpec extends SparkSpec {
         .write.format("noop").mode("overwrite").save()
     }
     val cut = shuffleRecords {
-      CacheScope.scoped { scope =>
+      CacheScope.scoped {
         graft.operators.Sampling
-          .selectByBudget(rows, "grp", "id", "w", "score", 50000, scope = scope)
+          .selectByBudget(rows, "grp", "id", "w", "score", 50000)
           .write.format("noop").mode("overwrite").save()
       }
     }
@@ -238,12 +234,10 @@ class ScalingSpec extends SparkSpec {
 
     // --- LSH curve: shuffled records end to end -------------------------
     val lshSmall = shuffleRecords {
-      CacheScope.scoped(sc =>
-        Dedup.minHashLSH(small, "doc_id", "text", scope = sc).count())
+      CacheScope.scoped(Dedup.minHashLSH(small, "doc_id", "text").count())
     }
     val lshBig = shuffleRecords {
-      CacheScope.scoped(sc =>
-        Dedup.minHashLSH(big, "doc_id", "text", scope = sc).count())
+      CacheScope.scoped(Dedup.minHashLSH(big, "doc_id", "text").count())
     }
     val lshGrowth = lshBig.toDouble / lshSmall
     // linear expectation 4.0; slack for candidate growth and partial-agg
@@ -264,16 +258,16 @@ class ScalingSpec extends SparkSpec {
       s"dense pair work grew only ${denseGrowth}x on a 4x corpus — expected ~16x (quadratic)")
 
     // --- cross-path: LSH candidates are a vanishing fraction of all pairs
-    val candBig = CacheScope.scoped(sc =>
-      Dedup.minHashLSHCandidates(big, "doc_id", "text", scope = sc).count())
+    val candBig = CacheScope.scoped(
+      Dedup.minHashLSHCandidates(big, "doc_id", "text").count())
     assert(candBig <= denseBig / 20,
       s"LSH examined $candBig of $denseBig pairs (> 5%) — bucketing is not pruning")
 
     // --- and both sizes still find every planted near-dup ---------------
-    val foundSmall = CacheScope.scoped(sc =>
-      Dedup.minHashLSH(small, "doc_id", "text", threshold = 0.5, scope = sc).count())
-    val foundBig = CacheScope.scoped(sc =>
-      Dedup.minHashLSH(big, "doc_id", "text", threshold = 0.5, scope = sc).count())
+    val foundSmall = CacheScope.scoped(
+      Dedup.minHashLSH(small, "doc_id", "text", threshold = 0.5).count())
+    val foundBig = CacheScope.scoped(
+      Dedup.minHashLSH(big, "doc_id", "text", threshold = 0.5).count())
     assert(foundSmall >= nSmall / 10 * 9 / 10,
       s"small corpus: only $foundSmall of ~${nSmall / 10} planted pairs found")
     assert(foundBig >= nBig / 10 * 9 / 10,

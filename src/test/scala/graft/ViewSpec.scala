@@ -1,16 +1,15 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.concurrent.{Await, Future, Promise}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 
+import org.apache.spark.graftest.Listeners
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import graft.operators.{HeavyHitters, Histograms}
+import graft.operators.{HeavyHitters, Histograms, Quantiles, Sampling}
 
 /** View/session-layer checks: lineage, sketch memoization, job-group
   * cancellation, progressive partials (the reference's interactive model).
@@ -19,29 +18,7 @@ class ViewSpec extends SparkSpec {
 
   private def newSession = new ViewSession(spark)
 
-  /** Run `body` with `listener` registered; the listener bus is drained on
-    * both sides, so earlier jobs' events cannot leak in and `body`'s own
-    * events have all arrived on return.
-    */
-  private def withListener[T](listener: SparkListener)(body: => T): T = {
-    val sc = spark.sparkContext
-    org.apache.spark.graftest.ListenerDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.graftest.ListenerDrain.drain(sc)
-      r
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** Spark jobs started while `action` runs. */
-  private def jobsStarted(action: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    withListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    })(action)
-    n.get()
-  }
+  private def jobsStarted(action: => Unit): Int = Listeners.jobsStarted(spark.sparkContext)(action)
 
   test("child views chain lineage and stay lazy over the parent plan") {
     val s = newSession
@@ -124,6 +101,33 @@ class ViewSpec extends SparkSpec {
     assert(first.nonEmpty && first.toSeq == second.toSeq)
   }
 
+  test("sketches and progressive steps release what their ops pin") {
+    val s = newSession
+    val li = sources.Tables.open(spark, sf, "lineitem")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def perGroup(d: DataFrame) =
+      Quantiles.exactPerGroup(d, "l_returnflag", "l_quantity", Seq(0.5, 0.9))
+    def budget(d: DataFrame) =
+      Sampling.selectByBudget(d, "l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice", 500L)
+        .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
+    val before = persisted
+    // two views of one frame, so both sketches miss: the second can only
+    // differ from the first by reading a frame the first left cached
+    val first = jobsStarted(s.sketch(s.open("li-a", li), "q")(perGroup))
+    assert(persisted == before, "a sketch over exactPerGroup left its binned frame persisted")
+    val second = jobsStarted(s.sketch(s.open("li-b", li), "q")(perGroup))
+    assert(second == first, s"identical sketches started $first then $second jobs")
+    s.sketch(s.open("li-c", li), "budget")(budget)
+    assert(persisted == before, "a sketch over selectByBudget left its binned frame persisted")
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_prog_pins").toString
+    li.repartition(4).write.mode("overwrite").parquet(dir)
+    val steps = s.progressive(s.open("li4", spark.read.parquet(dir)), 4, budget,
+      (a: DataFrame, b: DataFrame) => a.unionByName(b).groupBy("l_returnflag").agg(sum("n").as("n")))
+    steps.next()
+    assert(persisted == before, "a progressive step left its op's pins persisted")
+  }
+
   test("cancel(viewId) aborts a running progressive step") {
     val s = newSession
     val dir = java.nio.file.Files.createTempDirectory("graft_prog_cancel").toString
@@ -135,7 +139,7 @@ class ViewSpec extends SparkSpec {
       _.agg(sum(slow(col("id"))).as("s")),
       (a: DataFrame, b: DataFrame) => a.unionByName(b).agg(sum("s").as("s")))
     val started = Promise[Unit]()
-    val err = withListener(new SparkListener {
+    val err = Listeners.withListener(spark.sparkContext, new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = started.trySuccess(())
     }) {
       val fut = Future(steps.next())

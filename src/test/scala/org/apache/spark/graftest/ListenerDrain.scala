@@ -1,6 +1,7 @@
 package org.apache.spark.graftest
 
 import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Test-only bridge to the `private[spark]` listener bus: metric
   * assertions must flush asynchronously-delivered task-end events before
@@ -10,6 +11,32 @@ import org.apache.spark.SparkContext
   */
 object ListenerDrain {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
+
+/** The one way specs observe scheduler events: `withListener` runs `body`
+  * with `listener` registered and drains the bus on both sides, so
+  * earlier jobs' events cannot leak in and `body`'s own events have all
+  * arrived on return.
+  */
+object Listeners {
+  def withListener[T](sc: SparkContext, listener: SparkListener)(body: => T): T = {
+    ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      ListenerDrain.drain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Spark jobs started while `action` runs. */
+  def jobsStarted(sc: SparkContext)(action: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    withListener(sc, new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    })(action)
+    n.get()
+  }
 }
 
 /** Test-only bridge to the `private[spark]` checkpoint-dir var: the
