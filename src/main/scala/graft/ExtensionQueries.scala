@@ -3323,10 +3323,12 @@ object ExtensionQueries {
       """SELECT l_returnflag AS value, cnt FROM (
         |  SELECT l_returnflag, COUNT(*) AS cnt FROM lineitem GROUP BY 1)
         |ORDER BY value ASC NULLS FIRST""".stripMargin) {
-      (s, d) => t(s, d, "lineitem")
-        .agg(MisraGries.sketch(col("l_returnflag"), 10).as("mg"))
-        .select(explode(col("mg")).as(Seq("value", "cnt")))
-        .orderBy(col("value").asc_nulls_first)
+      (s, d) =>
+        graft.functions.VectorExprs.register(s)
+        t(s, d, "lineitem")
+          .agg(MisraGries.sketch(col("l_returnflag"), 10).as("mg"))
+          .select(explode(col("mg")).as(Seq("value", "cnt")))
+          .orderBy(col("value").asc_nulls_first)
     },
 
     // ---- Misra-Gries over a tuple key (reference sketches schema subsets) --

@@ -1,36 +1,21 @@
 package graft.functions
 
-import org.apache.datasketches.kll.KllDoublesSketch
-import org.apache.datasketches.memory.Memory
-import org.apache.datasketches.theta.{SetOperation, Sketches, Union}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
 
-/** Native aggregates over Apache DataSketches theta and KLL sketches —
-  * the two sketch families that extend the mergeable-sketch-TABLE model
-  * ([[graft.operators.SketchTables]]) past what Spark's built-in HLL
-  * aggregates can answer:
-  *
-  *  - THETA sketches support full distinct-set ALGEBRA: union (like
-  *    HLL), but also intersection and difference — "distinct users who
-  *    did A and B" is not derivable from two HLL counts;
-  *  - KLL sketches are mergeable QUANTILE summaries: per-fine-group
-  *    sketches roll up to coarser groups by merge, answering "p95 by
-  *    week" from a per-day sketch table without rescanning the base
-  *    data, with a proven rank-error bound.
-  *
-  * All four aggregates follow the [[MisraGriesSketch]] contract: a
+/** Native Count-Min aggregates for [[graft.operators.SketchTables]], the
+  * one sketch-table family Spark does not ship a merge aggregate for
+  * (the HLL, theta and KLL families call Spark's own DataSketches
+  * functions). Both follow the [[MisraGriesSketch]] contract: a
   * commutative-monoid `TypedImperativeAggregate` whose partials are
-  * sketch-sized, serialized in the sketches' own portable wire formats
-  * (compact-ordered theta; KLL byte array), so the sketch COLUMNS the
-  * operators persist are readable by any DataSketches binding.
+  * sketch-sized, serialized in Spark's own `CountMinSketch` wire format.
   */
 private[graft] object DataSketchAggs {
-  /** Foldable positive-int parameter check shared by both builders. */
+  /** Foldable int parameter check for the Count-Min builder. */
   def checkFoldableInt(e: Expression, name: String, param: String,
                        lo: Int, hi: Int): TypeCheckResult =
     e.dataType match {
@@ -43,226 +28,6 @@ private[graft] object DataSketchAggs {
         }
       case t => TypeCheckFailure(s"$name needs a foldable int $param, got ${t.simpleString}")
     }
-}
-
-/** Theta sketch build aggregate: `graft_theta_sketch(longCol, lgK)` →
-  * compact-ordered sketch bytes. Deterministic for a given input SET
-  * (fixed default seed; the retained set is a pure hash threshold).
-  */
-case class ThetaSketchAgg(
-    child: Expression,
-    lgKExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] {
-
-  override def children: Seq[Expression] = Seq(child, lgKExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_theta_sketch"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case LongType => DataSketchAggs.checkFoldableInt(lgKExpr, prettyName, "lgK", 4, 26)
-      case t => TypeCheckFailure(s"$prettyName sketches LONG values, got ${t.simpleString}")
-    }
-
-  private lazy val lgK: Int = lgKExpr.eval(null).asInstanceOf[Int]
-
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().setLogNominalEntries(lgK).buildUnion()
-
-  override def update(b: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) b.update(v.asInstanceOf[Long])
-    b
-  }
-
-  override def merge(b1: Union, b2: Union): Union = {
-    b1.union(b2.getResult)
-    b1
-  }
-
-  override def eval(b: Union): Any = b.getResult.toByteArray
-
-  override def serialize(b: Union): Array[Byte] = b.getResult.toByteArray
-  override def deserialize(storage: Array[Byte]): Union = {
-    val u = createAggregationBuffer()
-    u.union(Sketches.wrapSketch(Memory.wrap(storage)))
-    u
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), lgKExpr = newChildren(1))
-}
-
-/** Theta sketch rollup aggregate: `graft_theta_union(sketchBytesCol)` —
-  * unions already-built sketches (the rollup path never touches base
-  * data). Null sketches are skipped.
-  */
-case class ThetaUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Union] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_theta_union"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckSuccess
-      case t => TypeCheckFailure(s"$prettyName unions sketch BYTES, got ${t.simpleString}")
-    }
-
-  override def createAggregationBuffer(): Union =
-    SetOperation.builder().buildUnion()
-
-  override def update(b: Union, input: InternalRow): Union = {
-    val v = child.eval(input)
-    if (v != null) b.union(Sketches.wrapSketch(Memory.wrap(v.asInstanceOf[Array[Byte]])))
-    b
-  }
-
-  override def merge(b1: Union, b2: Union): Union = { b1.union(b2.getResult); b1 }
-  override def eval(b: Union): Any = b.getResult.toByteArray
-  override def serialize(b: Union): Array[Byte] = b.getResult.toByteArray
-  override def deserialize(storage: Array[Byte]): Union = {
-    val u = createAggregationBuffer()
-    u.union(Sketches.wrapSketch(Memory.wrap(storage)))
-    u
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): ThetaUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): ThetaUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
-}
-
-/** KLL quantile-sketch build aggregate: `graft_kll_sketch(doubleCol, k)`
-  * → KLL bytes. Normalized rank error ≈ 2.66%/1.65%/... by k (k = 200
-  * gives ~1.65% one-sided); nulls and NaNs are skipped (quantiles over
-  * the observed finite-or-infinite values, matching the sketch's own
-  * contract).
-  */
-case class KllSketchAgg(
-    child: Expression,
-    kExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] {
-
-  override def children: Seq[Expression] = Seq(child, kExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_kll_sketch"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case DoubleType => DataSketchAggs.checkFoldableInt(kExpr, prettyName, "k", 8, 65535)
-      case t => TypeCheckFailure(s"$prettyName sketches DOUBLE values, got ${t.simpleString}")
-    }
-
-  private lazy val k: Int = kExpr.eval(null).asInstanceOf[Int]
-
-  override def createAggregationBuffer(): KllDoublesSketch =
-    KllDoublesSketch.newHeapInstance(k)
-
-  override def update(b: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v != null) {
-      val d = v.asInstanceOf[Double]
-      if (!d.isNaN) b.update(d)
-    }
-    b
-  }
-
-  override def merge(b1: KllDoublesSketch, b2: KllDoublesSketch): KllDoublesSketch = {
-    b1.merge(b2)
-    b1
-  }
-
-  override def eval(b: KllDoublesSketch): Any = b.toByteArray
-  override def serialize(b: KllDoublesSketch): Array[Byte] = b.toByteArray
-  override def deserialize(storage: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(storage))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllSketchAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0), kExpr = newChildren(1))
-}
-
-/** KLL rollup aggregate: `graft_kll_merge(sketchBytesCol)` — merges
-  * already-built KLL sketches. Null sketches are skipped.
-  */
-case class KllMergeAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[KllDoublesSketch] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_kll_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckSuccess
-      case t => TypeCheckFailure(s"$prettyName merges sketch BYTES, got ${t.simpleString}")
-    }
-
-  // merge into a sketch with the DEFAULT k: merging a higher-accuracy
-  // sketch into a lower-k buffer degrades to the buffer's k, so the
-  // buffer adopts the FIRST input's k instead (null until first input)
-  override def createAggregationBuffer(): KllDoublesSketch = null
-
-  override def update(b: KllDoublesSketch, input: InternalRow): KllDoublesSketch = {
-    val v = child.eval(input)
-    if (v == null) b
-    else {
-      val s = KllDoublesSketch.heapify(Memory.wrap(v.asInstanceOf[Array[Byte]]))
-      if (b == null) s else { b.merge(s); b }
-    }
-  }
-
-  override def merge(b1: KllDoublesSketch, b2: KllDoublesSketch): KllDoublesSketch =
-    if (b1 == null) b2
-    else if (b2 == null) b1
-    // an EMPTY buffer must not impose its k on a populated partial
-    // (merging into the lower-k side degrades accuracy permanently)
-    else if (b1.getN == 0 && b1.getK != b2.getK) { b2.merge(b1); b2 }
-    else { b1.merge(b2); b1 }
-
-  private def orEmpty(b: KllDoublesSketch): KllDoublesSketch =
-    if (b != null) b else KllDoublesSketch.newHeapInstance()
-
-  override def eval(b: KllDoublesSketch): Any = orEmpty(b).toByteArray
-  override def serialize(b: KllDoublesSketch): Array[Byte] = orEmpty(b).toByteArray
-  override def deserialize(storage: Array[Byte]): KllDoublesSketch =
-    KllDoublesSketch.heapify(Memory.wrap(storage))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KllMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
 }
 
 /** Count-Min sketch build aggregate:

@@ -1,85 +1,26 @@
 package graft.functions
 
-import scala.collection.mutable
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{call_function, lit, struct}
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.{call_function, lit, struct, udaf}
-
-/** Misra-Gries heavy-hitters sketch as a typed Spark Aggregator.
-  *
-  * The reference's trickiest sketch (`ref:P/sketches/FreqKSketch.java`,
-  * paper §4.4): k counters per partition, pairwise-mergeable, candidate
-  * counts are lower bounds with error ≤ N/(k+1); every value with true
-  * frequency > N/(k+1) is guaranteed present (no false negatives above
-  * threshold).
-  *
-  * Algorithm (from the published Misra-Gries construction, not the
-  * reference code):
-  *  - reduce: increment; if > k counters, decrement all by the minimum
-  *    excess and drop zeros;
-  *  - merge: sum counts, then subtract the (k+1)-th largest count from all
-  *    and drop non-positives (standard mergeable-summaries result).
-  *
-  * The buffer is a mutable hash map updated in place per row — the
-  * Aggregator runs as a TypedImperativeAggregate, so the object lives
-  * across updates and is only (kryo-)serialized at partial/final shuffle
-  * boundaries. Scale: this is the shuffle-free path for
-  * unbounded-cardinality keys — partial aggregation produces one
-  * ≤k-entry map per partition, merged like the reference's merge tree.
-  * The exact `HeavyHitters.exact` path shuffles (key, partialCount)
-  * pairs instead; tests cross-check the two.
+/** Column forms of the Misra-Gries heavy-hitters sketch
+  * ([[MisraGriesSketch]], `ref:P/sketches/FreqKSketch.java`, paper §4.4).
+  * Both require the graft native functions registered in the session —
+  * `VectorExprs.register(spark)` (the HeavyHitters entry points do this).
   */
-class MisraGries(k: Int)
-    extends Aggregator[String, mutable.HashMap[String, Long], Map[String, Long]] {
-  require(k > 0)
-
-  override def zero: mutable.HashMap[String, Long] = mutable.HashMap.empty
-
-  override def reduce(b: mutable.HashMap[String, Long], a: String): mutable.HashMap[String, Long] = {
-    b(a) = b.getOrElse(a, 0L) + 1L
-    if (b.size > k) compress(b)
-    b
-  }
-
-  override def merge(b1: mutable.HashMap[String, Long],
-                     b2: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    val (into, from) = if (b1.size >= b2.size) (b1, b2) else (b2, b1)
-    from.foreach { case (v, c) => into(v) = into.getOrElse(v, 0L) + c }
-    if (into.size > k) compress(into)
-    into
-  }
-
-  /** Subtract the (k+1)-th largest count from every counter; drop ≤ 0. */
-  private def compress(m: mutable.HashMap[String, Long]): Unit = {
-    val d = m.values.toArray.sortInPlace()(Ordering[Long].reverse).apply(k)
-    m.mapValuesInPlace((_, c) => c - d)
-    m.filterInPlace((_, c) => c > 0)
-  }
-
-  override def finish(reduction: mutable.HashMap[String, Long]): Map[String, Long] =
-    reduction.toMap
-  override def bufferEncoder: Encoder[mutable.HashMap[String, Long]] =
-    Encoders.kryo[mutable.HashMap[String, Long]]
-  override def outputEncoder: Encoder[Map[String, Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-}
-
 object MisraGries {
-  /** Column form: mg_sketch(col) → map<string,bigint> of candidates. */
+  /** mg_sketch(col) → map<key, bigint> of candidates, keyed by the
+    * column's own type.
+    */
   def sketch(c: Column, k: Int): Column =
-    udaf(new MisraGries(k), Encoders.STRING).apply(c)
+    call_function("graft_mg_sketch", c, lit(k))
 
   /** Tuple-key form — the reference sketches multi-column rows
     * (`ref:P/sketches/FreqKSketch.java` over a schema subset). The key is
-    * the actual column-value STRUCT via the native [[MisraGriesSketch]]
-    * aggregate: null parts and separator-containing strings are faithful
-    * (the earlier string-rendered form silently skipped null parts and
-    * could merge distinct tuples; see MisraGriesSketch's scaladoc).
-    * Output: map<struct<...>, bigint>. Requires the graft native functions
-    * registered in the session — `VectorExprs.register(spark)` (the
-    * HeavyHitters entry points do this).
+    * the actual column-value STRUCT, so null parts and separator-containing
+    * strings are faithful tuple keys (see MisraGriesSketch's scaladoc).
+    * Output: map<struct<...>, bigint>.
     */
   def sketchStruct(cols: Seq[Column], k: Int): Column =
-    call_function("graft_mg_sketch", struct(cols: _*), lit(k))
+    sketch(struct(cols: _*), k)
 }

@@ -19,16 +19,26 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, MapType}
   * the two-phase probe — and (2) separator-containing parts injecting
   * false tuple boundaries.
   *
+  * The reference's trickiest sketch (`ref:P/sketches/FreqKSketch.java`,
+  * paper §4.4): ≤ k counters, pairwise-mergeable; candidate counts are
+  * lower bounds within N/(k+1), and every value with true frequency
+  * > N/(k+1) is present, under any partitioning/merge order
+  * (MisraGriesSpec pins these laws). Algorithm (from the published
+  * Misra-Gries construction, not the reference code):
+  *  - update: increment; past k counters, compress;
+  *  - merge: sum counts, then compress;
+  *  - compress: subtract the (k+1)-th largest count from all and drop
+  *    non-positives (standard mergeable-summaries result).
+  *
   * Keys are held as single-field `UnsafeRow`s (byte-wise equals/hashCode,
   * one `UnsafeProjection` per task, copied on first sight only), so the
   * hot update path is a hash-map probe on raw bytes with no string
-  * rendering. Same algorithm and mergeable-summaries guarantees as
-  * [[MisraGries]] (`ref:P/sketches/FreqKSketch.java`, paper §4.4):
-  * ≤ k counters, counts are lower bounds within N/(k+1), no false
-  * negatives above N/(k+1), under any partitioning/merge order.
+  * rendering.
   *
-  * Scale shape: identical to the string form — partial aggregation yields
-  * one ≤ k-entry map per partition; only sketch-sized partials shuffle.
+  * Scale shape: partial aggregation yields one ≤ k-entry map per
+  * partition; only sketch-sized partials shuffle. The exact
+  * `HeavyHitters.exact` path shuffles (key, partialCount) pairs instead;
+  * tests cross-check the two.
   */
 case class MisraGriesSketch(
     child: Expression,

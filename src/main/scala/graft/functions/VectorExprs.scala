@@ -332,10 +332,6 @@ object VectorExprs {
     // AggregateExpressions like any registered aggregate
     ("graft_mg_sketch", 2, exprs => MisraGriesSketch(exprs.head, exprs(1))),
     ("graft_nextk_page", 3, exprs => NextKPageAgg(exprs.head, exprs(1), exprs(2))),
-    ("graft_theta_sketch", 2, exprs => ThetaSketchAgg(exprs.head, exprs(1))),
-    ("graft_theta_union", 1, exprs => ThetaUnionAgg(exprs.head)),
-    ("graft_kll_sketch", 2, exprs => KllSketchAgg(exprs.head, exprs(1))),
-    ("graft_kll_merge", 1, exprs => KllMergeAgg(exprs.head)),
     ("graft_cms_sketch", 4,
       exprs => CmsSketchAgg(exprs.head, exprs(1), exprs(2), exprs(3))),
     ("graft_cms_merge", 1, exprs => CmsMergeAgg(exprs.head)))

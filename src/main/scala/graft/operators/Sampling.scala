@@ -577,15 +577,4 @@ object Sampling {
 
   private def keyedNoise(w: DataFrame, u: Column): DataFrame =
     w.withColumn("__key", col("log_weight") - log(-log(u)))
-
-  /** Resolution-aware sampling rate (paper §4.1): a histogram rendered at
-    * `pixelHeight` with `buckets` bars is statistically indistinguishable
-    * from exact when built on ~ c·buckets·pixelHeight² samples (Chernoff
-    * argument). Returns min(1, that / rowCount).
-    */
-  def resolutionRate(rowCount: Long, buckets: Int, pixelHeight: Int,
-                     c: Double = 5.0): Double = {
-    if (rowCount <= 0) 1.0
-    else math.min(1.0, c * buckets.toDouble * pixelHeight * pixelHeight / rowCount)
-  }
 }

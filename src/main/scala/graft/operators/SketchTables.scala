@@ -13,10 +13,12 @@ import org.apache.spark.sql.functions._
   * persist like any other column (build table = batch job, serve rollups
   * = sketch-table scans).
   *
-  * Uses Spark's native Apache DataSketches HLL aggregates
-  * (`hll_sketch_agg` / `hll_union_agg` / `hll_sketch_estimate`) — codegen
-  * aggregation, binary sketch columns, deterministic for a given input
-  * set (the sketch hash is seed-fixed).
+  * The HLL, theta and KLL families use Spark's native Apache
+  * DataSketches functions (`hll_*`, `theta_*`, `kll_*_double`) — binary
+  * sketch columns in the library's portable wire formats. HLL and theta
+  * are deterministic for a given input set (the sketch hash is
+  * seed-fixed). Count-Min runs on [[graft.functions.CmsSketchAgg]]:
+  * Spark has no Count-Min merge aggregate.
   */
 object SketchTables {
 
@@ -47,72 +49,40 @@ object SketchTables {
   // ---- Theta sketch tables: distinct-set ALGEBRA -------------------------
   // HLL answers union-rollups only; theta sketches also intersect and
   // difference — "distinct users who did A AND B" (audience overlap) is
-  // not derivable from two HLL counts. Build/rollup are native
-  // TypedImperativeAggregates ([[graft.functions.ThetaSketchAgg]]);
-  // sketches below their nominal-entries bound are in EXACT mode, so
+  // not derivable from two HLL counts. Sketches below their
+  // nominal-entries bound are in EXACT mode, so
   // small-cohort set ops are exact and large ones degrade gracefully to
   // the documented ~1/sqrt(2^lgK) relative error.
 
   /** Build the per-group theta sketch table over a LONG value column. */
   def thetaTable(df: DataFrame, groupCols: Seq[String], valueCol: String,
-                 lgK: Int = 12): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+                 lgK: Int = 12): DataFrame =
     df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_theta_sketch",
-        col(valueCol).cast("long"), lit(lgK)).as("theta"))
-  }
+      .agg(theta_sketch_agg(col(valueCol).cast("long"), lgK).as("theta"))
 
   /** Roll a theta table up to coarser groups by sketch union. */
-  def thetaRollup(table: DataFrame, groupCols: Seq[String]): DataFrame = {
-    graft.functions.VectorExprs.register(table.sparkSession)
+  def thetaRollup(table: DataFrame, groupCols: Seq[String]): DataFrame =
     table.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_theta_union", col("theta")).as("theta"))
-  }
-
-  private val thetaEstimateUdf =
-    udf((b: Array[Byte]) => math.round(
-      org.apache.datasketches.theta.Sketches
-        .wrapSketch(org.apache.datasketches.memory.Memory.wrap(b)).getEstimate))
+      .agg(theta_union_agg(col("theta")).as("theta"))
 
   /** Materialize estimates: sketch column → `n_distinct`. */
   def thetaEstimate(table: DataFrame): DataFrame =
-    table.withColumn("n_distinct", thetaEstimateUdf(col("theta"))).drop("theta")
-
-  private val thetaSetOpsUdf = udf { (a: Array[Byte], b: Array[Byte]) =>
-    import org.apache.datasketches.memory.Memory
-    import org.apache.datasketches.theta.{SetOperation, Sketches}
-    val sa = Sketches.wrapSketch(Memory.wrap(a))
-    val sb = Sketches.wrapSketch(Memory.wrap(b))
-    val inter = SetOperation.builder().buildIntersection().intersect(sa, sb).getEstimate
-    val uni = SetOperation.builder().buildUnion().union(sa, sb).getEstimate
-    (math.round(inter), math.round(uni))
-  }
+    table.withColumn("n_distinct", theta_sketch_estimate(col("theta"))).drop("theta")
 
   /** Pairwise overlap matrix from a theta table: for every unordered key
     * pair (a < b), the per-key distinct counts plus |A∩B| and |A∪B|
     * estimates. The cross join is over the SKETCH TABLE (groups-sized by
-    * contract — a handful of audience rows, never base data), which is
-    * also why plain Scala UDFs are acceptable here: they run once per
-    * key pair, not per corpus row.
+    * contract — a handful of audience rows, never base data).
     */
   def thetaOverlap(table: DataFrame, keyCol: String): DataFrame = {
     val a = table.select(col(keyCol).as("key_a"), col("theta").as("__ta"))
     val b = table.select(col(keyCol).as("key_b"), col("theta").as("__tb"))
     a.join(b, col("key_a") < col("key_b"))
-      .withColumn("__ops", thetaSetOpsUdf(col("__ta"), col("__tb")))
       .select(col("key_a"), col("key_b"),
-        thetaEstimateUdf(col("__ta")).as("n_a"),
-        thetaEstimateUdf(col("__tb")).as("n_b"),
-        col("__ops._1").as("n_intersect"),
-        col("__ops._2").as("n_union"))
-  }
-
-  private val thetaDiffUdf = udf { (a: Array[Byte], b: Array[Byte]) =>
-    import org.apache.datasketches.memory.Memory
-    import org.apache.datasketches.theta.{SetOperation, Sketches}
-    val d = SetOperation.builder().buildANotB()
-      .aNotB(Sketches.wrapSketch(Memory.wrap(a)), Sketches.wrapSketch(Memory.wrap(b)))
-    math.round(d.getEstimate)
+        theta_sketch_estimate(col("__ta")).as("n_a"),
+        theta_sketch_estimate(col("__tb")).as("n_b"),
+        theta_sketch_estimate(theta_intersection(col("__ta"), col("__tb"))).as("n_intersect"),
+        theta_sketch_estimate(theta_union(col("__ta"), col("__tb"))).as("n_union"))
   }
 
   /** Directed set DIFFERENCE matrix from a theta table: for every ordered
@@ -127,7 +97,7 @@ object SketchTables {
     val b = table.select(col(keyCol).as("key_b"), col("theta").as("__tb"))
     a.join(b, col("key_a") =!= col("key_b"))
       .select(col("key_a"), col("key_b"),
-        thetaDiffUdf(col("__ta"), col("__tb")).as("n_a_only"))
+        theta_sketch_estimate(theta_difference(col("__ta"), col("__tb"))).as("n_a_only"))
   }
 
   // ---- KLL quantile sketch tables ----------------------------------------
@@ -135,42 +105,34 @@ object SketchTables {
   // answer "p95 by week/month" by merge — the dashboard-tile shape where
   // exact per-group quantiles (Quantiles.exactPerGroup) would rescan the
   // base table per rollup level. Rank error is the KLL bound (~1.65%
-  // one-sided at k = 200).
+  // one-sided at k = 200). The sketch is randomized, so two runs may
+  // return different values within that bound.
 
-  /** Build the per-group KLL sketch table over a DOUBLE value column. */
+  /** Build the per-group KLL sketch table over a DOUBLE value column.
+    * Nulls and NaNs are not observations.
+    */
   def kllTable(df: DataFrame, groupCols: Seq[String], valueCol: String,
-               k: Int = 200): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
+               k: Int = 200): DataFrame =
     df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_kll_sketch",
-        col(valueCol).cast("double"), lit(k)).as("kll"))
-  }
+      .agg(kll_sketch_agg_double(col(valueCol).cast("double"), k).as("kll"))
 
   /** Roll a KLL table up to coarser groups by sketch merge. */
-  def kllRollup(table: DataFrame, groupCols: Seq[String]): DataFrame = {
-    graft.functions.VectorExprs.register(table.sparkSession)
+  def kllRollup(table: DataFrame, groupCols: Seq[String]): DataFrame =
     table.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_kll_merge", col("kll")).as("kll"))
-  }
-
-  private val kllQuantileUdf = udf { (b: Array[Byte], p: Double) =>
-    import org.apache.datasketches.kll.KllDoublesSketch
-    import org.apache.datasketches.memory.Memory
-    val s = KllDoublesSketch.heapify(Memory.wrap(b))
-    if (s.isEmpty) None
-    else Some(s.getQuantile(p,
-      org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE))
-  }
+      .agg(kll_merge_agg_double(col("kll")).as("kll"))
 
   /** Materialize quantile estimates: sketch column → one `p<N>` column
     * per requested prob (the [[Quantiles.exact]] naming convention).
-    * Empty-sketch groups yield nulls.
+    * Ranks are inclusive. Empty-sketch groups yield nulls: the native
+    * getter throws on an empty sketch, so it is guarded by the count.
     */
   def kllQuantiles(table: DataFrame, probs: Seq[Double]): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
       s"probs must be in [0, 1], got $probs")
     probs.foldLeft(table) { (acc, p) =>
-      acc.withColumn(s"p${(p * 100).round}", kllQuantileUdf(col("kll"), lit(p)))
+      acc.withColumn(s"p${(p * 100).round}",
+        when(kll_sketch_get_n_double(col("kll")) > 0,
+          kll_sketch_get_quantile_double(col("kll"), lit(p))))
     }.drop("kll")
   }
 

@@ -126,10 +126,14 @@ class CoreOpsSpec extends SparkSpec {
   }
 
   test("every query runs at sf0.001 and yields a well-formed result") {
+    // one scope per row, as the harnesses run them: the row's pins
+    // persist while it counts and are released when it returns
     SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty, s"$name has no columns")
-      assert(df.count() >= 0, s"$name failed to execute")
+      CacheScope.scoped {
+        val df = fn(spark, sf)
+        assert(df.columns.nonEmpty, s"$name has no columns")
+        assert(df.count() >= 0, s"$name failed to execute")
+      }
     }
   }
 
@@ -374,9 +378,10 @@ class CoreOpsSpec extends SparkSpec {
   }
 
   test("resolution-aware sampling rate formula") {
-    assert(Sampling.resolutionRate(1000000000L, 40, 100) < 1.0)
-    assert(Sampling.resolutionRate(100L, 40, 100) == 1.0)
-    val r = Sampling.resolutionRate(2000000L, 40, 100, c = 5.0)
+    val s = new ViewSession(spark)
+    assert(s.samplingRate(1000000000L, 100, 40) < 1.0)
+    assert(s.samplingRate(100L, 100, 40) == 1.0)
+    val r = s.samplingRate(2000000L, 100, 40, c = 5.0)
     assert(math.abs(r - 1.0) < 1e-9)
   }
 

@@ -995,8 +995,9 @@ class ExtensionOpsSpec extends SparkSpec {
   test("Misra-Gries Spark aggregator in the sketch regime vs exact counts") {
     // k=20 well below distinct l_partkey count — MG guarantee, not exact:
     // every key with freq > N/(k+1) present; counts are lower bounds
-    // within N/(k+1). Cross-checks the Aggregator against the exact
+    // within N/(k+1). Cross-checks the aggregate against the exact
     // groupBy path on real distributed partitions.
+    graft.functions.VectorExprs.register(spark)
     val k = 20
     val li = sources.Tables.open(spark, sf, "lineitem")
     val n = li.count()

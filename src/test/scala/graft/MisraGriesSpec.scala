@@ -1,25 +1,47 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.MapData
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.MisraGries
+import graft.functions.MisraGriesSketch
 
 /** Sketch-law property tests (SURVEY.md §5): the parallel≡local invariant
   * of the reference — any partitioning of the input into merged partials
   * must preserve the Misra-Gries guarantee (no false negatives above
   * N/(k+1), counts are lower bounds within N/(k+1)). Randomized over 300
-  * seeded trials (deterministic).
+  * seeded trials (deterministic). Drives the native aggregate's buffer
+  * API directly over string rows, so no Spark job runs; every partial
+  * goes through serialize/deserialize, as it would across a shuffle.
   */
 class MisraGriesSpec extends AnyFunSuite {
 
   private val k = 5
   private val alphabet = Vector("a", "b", "c", "d", "e", "f", "g", "h", "i", "j")
+  private val mg = MisraGriesSketch(BoundReference(0, StringType, nullable = true), Literal(k))
+  private type Buf = mutable.HashMap[UnsafeRow, Long]
 
-  private def runPartitioned(xs: Seq[String], splits: Int): collection.Map[String, Long] = {
-    val mg = new MisraGries(k)
+  private def build(xs: Seq[String]): Buf =
+    xs.foldLeft(mg.createAggregationBuffer()) { (b, x) =>
+      mg.update(b, InternalRow(UTF8String.fromString(x)))
+    }
+
+  private def result(b: Buf): Map[String, Long] = {
+    val m = mg.eval(b).asInstanceOf[MapData]
+    (0 until m.numElements()).map { i =>
+      m.keyArray().getUTF8String(i).toString -> m.valueArray().getLong(i)
+    }.toMap
+  }
+
+  private def runPartitioned(xs: Seq[String], splits: Int): Map[String, Long] = {
     val parts = if (splits <= 1) Seq(xs)
       else xs.grouped(math.max(1, xs.length / splits)).toSeq
-    parts.map(p => p.foldLeft(mg.zero)(mg.reduce))
-      .foldLeft(mg.zero)(mg.merge)
+    result(parts.map(p => mg.deserialize(mg.serialize(build(p))))
+      .foldLeft(mg.createAggregationBuffer())(mg.merge))
   }
 
   private def trials(f: (List[String], Int) => Unit): Unit = {
@@ -58,23 +80,20 @@ class MisraGriesSpec extends AnyFunSuite {
 
   test("buffer never exceeds k counters") {
     trials { (xs, _) =>
-      val mg = new MisraGries(k)
-      val buf = xs.foldLeft(mg.zero)(mg.reduce)
-      assert(buf.size <= k)
+      assert(build(xs).size <= k)
     }
   }
 
   test("merge is commutative on the result set") {
-    val mg = new MisraGries(k)
     // merge may mutate its arguments (mutable buffer) — rebuild fresh
     // buffers for each merge order from the same seeds
-    def build(seed: Long) = {
+    def seeded(seed: Long) = {
       val rnd = new scala.util.Random(seed)
-      List.fill(100)(alphabet(rnd.nextInt(10))).foldLeft(mg.zero)(mg.reduce)
+      build(List.fill(100)(alphabet(rnd.nextInt(10))))
     }
     (1 to 100).foreach { i =>
-      val r1 = mg.merge(build(2L * i), build(2L * i + 1))
-      val r2 = mg.merge(build(2L * i + 1), build(2L * i))
+      val r1 = result(mg.merge(seeded(2L * i), seeded(2L * i + 1)))
+      val r2 = result(mg.merge(seeded(2L * i + 1), seeded(2L * i)))
       assert(r1 == r2)
     }
   }

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.SketchTables
 
-/** Mergeable HLL sketch tables: accuracy at fixture cardinalities and —
-  * the load-bearing property — rollup-by-merge consistency with direct
-  * sketching of the coarser grain.
+/** Mergeable sketch tables (HLL, theta, KLL): accuracy at fixture
+  * cardinalities and — the load-bearing property — rollup-by-merge
+  * consistency with direct sketching of the coarser grain.
   */
 class SketchTablesSpec extends SparkSpec {
 
@@ -73,7 +73,7 @@ class SketchTablesSpec extends SparkSpec {
     assert(perDay == exact)
     // weekly rollup by union ≡ direct weekly sketching (exact mode)
     val daily = SketchTables.thetaTable(events, Seq("week", "day"), "user_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft_theta").toString
+    val dir = java.nio.file.Files.createTempDirectory("theta_table").toString
     daily.write.mode("overwrite").parquet(dir)
     val merged = SketchTables.thetaEstimate(
         SketchTables.thetaRollup(spark.read.parquet(dir), Seq("week")))
@@ -161,5 +161,30 @@ class SketchTablesSpec extends SparkSpec {
       assert(math.abs(rankOf(p50) - 0.5) <= 0.035, s"type $t p50 rank ${rankOf(p50)}")
       assert(math.abs(rankOf(p95) - 0.95) <= 0.035, s"type $t p95 rank ${rankOf(p95)}")
     }
+  }
+
+  test("kll edge cases: NaN and null skipped, all-null groups null, inclusive rank") {
+    import spark.implicits._
+    // group a: 1..10 plus one NaN and one null; group b: nulls only. Each
+    // group is split over two sub-groups so the rollup merges an empty
+    // sketch too. At n = 10 the sketch is exact, so the values are fixed.
+    val rows = (1 to 10).map(i => ("a", i % 2, Option(i.toDouble))) ++
+      Seq(("a", 0, Some(Double.NaN)), ("a", 1, None), ("b", 0, None), ("b", 1, None))
+    val df = rows.toDF("grp", "sub", "v")
+    val direct = SketchTables.kllQuantiles(
+      SketchTables.kllTable(df, Seq("grp"), "v"), Seq(0.5, 0.95))
+    val rolled = SketchTables.kllQuantiles(SketchTables.kllRollup(
+      SketchTables.kllTable(df, Seq("grp", "sub"), "v"), Seq("grp")), Seq(0.5, 0.95))
+    Seq("direct" -> direct, "rollup" -> rolled).foreach { case (how, q) =>
+      val got = q.collect().map(r => r.getString(0) ->
+        (Option(r.get(1)), Option(r.get(2)))).toMap
+      // inclusive rank: p50 of 1..10 is 5.0 (a counted NaN would make it 6.0)
+      assert(got("a") == ((Some(5.0), Some(10.0))), s"$how: ${got("a")}")
+      assert(got("b") == ((None, None)), s"$how: ${got("b")}")
+    }
+    // theta estimates are bigint
+    val theta = SketchTables.thetaEstimate(SketchTables.thetaTable(df, Seq("grp"), "sub"))
+    assert(theta.schema("n_distinct").dataType == org.apache.spark.sql.types.LongType)
+    assert(theta.filter(col("grp") === "a").head().getLong(1) == 2L)
   }
 }

@@ -237,5 +237,7 @@ class ViewSpec extends SparkSpec {
     val r = s.samplingRate(100L * 1000 * 1000 * 1000, 100, 40)
     assert(r > 0 && r < 0.01, s"big data must sample hard, got $r")
     assert(s.samplingRate(0L, 100, 40) == 1.0)
+    // the boundary: exactly c·buckets·h² rows need every row
+    assert(math.abs(s.samplingRate(2000000L, 100, 40, c = 5.0) - 1.0) < 1e-9)
   }
 }
