@@ -293,11 +293,81 @@ object ExtensionQueries {
        |       * sqrt(list_sum(list_transform(range(1, 65),
        |            i -> CAST($b.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE))))), 6)""".stripMargin
 
-  /** The pinned data-derived constant vectors `vec_id ∈ [lo, hi]` as
-    * driver doubles — sketch-sized by contract (the `similarity_ivf_pinned`
-    * centroid convention: data-derived so both engines read the SAME
-    * floats, never literals that could drift between the two parsers).
+  /** The pinned coarse quantizer's distance CTEs: `c` is the four
+    * data-derived centroids (vectors 100-103 as buckets 0-3) and `ad`
+    * every vector's squared-L2 distance to each of them, summed in
+    * dimension order (the NearestCentroids kernel's fold) — the first
+    * stage of every IVF-pinned replay.
     */
+  private val sqlPinnedDist: String =
+    """c AS (
+      |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
+      |  WHERE vec_id BETWEEN 100 AND 103),
+      |ad AS (
+      |  SELECT v.vec_id, c.bucket,
+      |         list_sum(list_transform(range(1, 65),
+      |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
+      |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
+      |  FROM embeddings v CROSS JOIN c)""".stripMargin
+
+  /** CTE `cte` over [[sqlPinnedDist]]'s `ad`: for each vector passing
+    * `where`, its buckets ranked by ascending (dist, bucket) — the
+    * NearestCentroids order — kept while the rank satisfies `cut`.
+    */
+  private def sqlNearestBuckets(cte: String, id: String, where: String, cut: String): String =
+    s"""$cte AS (
+       |  SELECT $id, bucket FROM (
+       |    SELECT vec_id, bucket,
+       |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
+       |    FROM ad$where) WHERE r $cut)""".stripMargin
+
+  /** `assign`: every vector's nearest pinned bucket. */
+  private val sqlPinnedAssign: String = sqlNearestBuckets("assign", "vec_id", "", "= 1")
+
+  /** `probe`: the `nprobe` nearest pinned buckets (q_id, bucket) of each
+    * query vector matching `pred`. */
+  private def sqlPinnedProbe(pred: String, nprobe: Int): String =
+    sqlNearestBuckets("probe", "vec_id AS q_id", s" WHERE $pred", s"<= $nprobe")
+
+  /** The `rk` page every top-k replay ends with: per query the 10 rows of
+    * `from` with the highest rounded `score`, ties on ascending n_id (the
+    * page aggregate's order).
+    */
+  private def sqlTopKPage(score: String, from: String): String =
+    s"""SELECT q_id, n_id, $score, rk FROM (
+       |  SELECT q_id, n_id, $score,
+       |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY $score DESC, n_id ASC) AS BIGINT) AS rk
+       |  FROM $from)
+       |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin
+
+  /** `cte`: each query's probed candidates with their rounded cosine —
+    * the corpus rows [[sqlPinnedAssign]] put in a bucket
+    * [[sqlPinnedProbe]] probed, the query itself excluded. */
+  private def sqlProbedSims(cte: String): String =
+    s"""$cte AS (
+       |  SELECT p.q_id, s.vec_id AS n_id, ${sqlCos("a", "b")} AS sim
+       |  FROM probe p
+       |  JOIN assign s ON s.bucket = p.bucket
+       |  JOIN embeddings a ON a.vec_id = p.q_id
+       |  JOIN embeddings b ON b.vec_id = s.vec_id
+       |  WHERE p.q_id <> s.vec_id)""".stripMargin
+
+  /** The refine stage of a two-stage replay (the `Similarity.rerankShortlist`
+    * twin): `short` keeps each query's `n` best rows of `from` by rounded
+    * `asim` (ties on ascending n_id, the page order), and `out` scores
+    * them with the exact rounded cosine over the original vectors. */
+  private def sqlShortlistRerank(from: String, n: Int, out: String): String =
+    s"""short AS (
+       |  SELECT q_id, n_id FROM (
+       |    SELECT q_id, n_id,
+       |           row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, n_id ASC) AS r
+       |    FROM $from) WHERE r <= $n),
+       |$out AS (
+       |  SELECT s.q_id, s.n_id, ${sqlCos("a", "b")} AS sim
+       |  FROM short s
+       |  JOIN embeddings a ON a.vec_id = s.q_id
+       |  JOIN embeddings b ON b.vec_id = s.n_id)""".stripMargin
+
   /** The sf0.01-trained 12-merge head, pinned as literals for the
     * hash-exact encode twin (`text_bpe_tokens_pinned`). Rank order is
     * the list order; includes a composed merge (p+ar) and end-mark
@@ -373,25 +443,9 @@ object ExtensionQueries {
     * rows are value-identical.
     */
   private lazy val sqlStreamEmbedPinned: String =
-    s"""WITH c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |cassign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id % 10 <> 0) WHERE r = 1),
-        |probe AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id % 10 = 0) WHERE r <= 2),
+    s"""WITH $sqlPinnedDist,
+        |${sqlNearestBuckets("cassign", "vec_id", " WHERE vec_id % 10 <> 0", "= 1")},
+        |${sqlNearestBuckets("probe", "vec_id", " WHERE vec_id % 10 = 0", "<= 2")},
         |m AS (
         |  SELECT p.vec_id AS sid, COUNT(DISTINCT s.vec_id) AS n
         |  FROM probe p
@@ -405,6 +459,11 @@ object ExtensionQueries {
         |FROM embeddings e LEFT JOIN m ON m.sid = e.vec_id
         |WHERE e.vec_id % 10 = 0 ORDER BY e.vec_id""".stripMargin
 
+  /** The pinned data-derived constant vectors `vec_id ∈ [lo, hi]` as
+    * driver doubles — sketch-sized by contract (the `similarity_ivf_pinned`
+    * centroid convention: data-derived so both engines read the SAME
+    * floats, never literals that could drift between the two parsers).
+    */
   private def pinnedVecs(s: org.apache.spark.sql.SparkSession, d: String,
                          lo: Int, hi: Int): Array[Array[Double]] =
     // sort the handful of pinned rows on the DRIVER: a distributed
@@ -519,31 +578,8 @@ object ExtensionQueries {
        |             / (l.qn * sqrt(list_sum(list_transform(range(0, 8), s -> cn.cn2[CAST(s*4 + o.code[s+1] + 1 AS INTEGER)])))), 6) AS asim
        |  FROM lutq l CROSS JOIN codes o CROSS JOIN cn
        |  WHERE l.q_id <> o.vec_id)${
-      if (refine <= 1) ""
-      else
-        s""",
-           |short AS (
-           |  SELECT q_id, n_id FROM (
-           |    SELECT q_id, n_id,
-           |           row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, n_id ASC) AS r
-           |    FROM sims) WHERE r <= ${10 * refine}),
-           |ex AS (
-           |  SELECT s.q_id, s.n_id, ${sqlCos("a", "b")} AS sim
-           |  FROM short s
-           |  JOIN embeddings a ON a.vec_id = s.q_id
-           |  JOIN embeddings b ON b.vec_id = s.n_id)""".stripMargin}
-       |${
-      if (refine <= 1)
-        """SELECT q_id, n_id, asim, rk FROM (
-          |  SELECT q_id, n_id, asim,
-          |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, n_id ASC) AS BIGINT) AS rk
-          |  FROM sims)""".stripMargin
-      else
-        """SELECT q_id, n_id, sim, rk FROM (
-          |  SELECT q_id, n_id, sim,
-          |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-          |  FROM ex)""".stripMargin}
-       |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin
+      if (refine <= 1) "\n" + sqlTopKPage("asim", "sims")
+      else s",\n${sqlShortlistRerank("sims", 10 * refine, "ex")}\n${sqlTopKPage("sim", "ex")}"}""".stripMargin
   }
 
   /** Shared DuckDB CTEs for the sliding-window exact-substring pass
@@ -1187,20 +1223,8 @@ object ExtensionQueries {
     // clusters keep everything. Whole selection replayed in SQL
     // (assignment argmin + md5 rank), every kept (bucket, vec_id) pinned.
     Q("pipeline_cluster_balance",
-      """WITH c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |cassign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
+      s"""WITH $sqlPinnedDist,
+        |${sqlNearestBuckets("cassign", "vec_id", "", "= 1")},
         |rk AS (
         |  SELECT bucket, vec_id,
         |         row_number() OVER (PARTITION BY bucket
@@ -1629,20 +1653,8 @@ object ExtensionQueries {
     // Bucket recall vs nprobe stays with dedup_embedding_ivf's zero-FP /
     // recall tests where it belongs.
     Q("dedup_embedding_ivf_pinned",
-      s"""WITH c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |probe AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r <= 2),
+      s"""WITH $sqlPinnedDist,
+        |${sqlNearestBuckets("probe", "vec_id", "", "<= 2")},
         |cand AS (
         |  SELECT DISTINCT p1.vec_id AS d1, p2.vec_id AS d2
         |  FROM probe p1 JOIN probe p2
@@ -1667,20 +1679,8 @@ object ExtensionQueries {
     // cluster flow (bucket → verify → transitive closure → min-label rep)
     // replays in one DuckDB query.
     Q("dedup_groups_embedding_ivf_pinned",
-      s"""WITH RECURSIVE c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |probe AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r <= 2),
+      s"""WITH RECURSIVE $sqlPinnedDist,
+        |${sqlNearestBuckets("probe", "vec_id", "", "<= 2")},
         |pairs AS (
         |  SELECT d1, d2 FROM (
         |    SELECT cand.d1, cand.d2, ${sqlCos("a", "b")} AS sim
@@ -1710,7 +1710,7 @@ object ExtensionQueries {
 
     // ---- Brute-force cosine top-k (ANN baseline) ---------------------------
     Q("similarity_topk",
-      """WITH sims AS (
+      s"""WITH sims AS (
         |  SELECT a.vec_id AS q_id, b.vec_id AS n_id,
         |    round(list_sum(list_transform(range(1, 65),
         |            i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
@@ -1720,11 +1720,7 @@ object ExtensionQueries {
         |            i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))), 6) AS sim
         |  FROM embeddings a, embeddings b
         |  WHERE a.vec_id < 5 AND a.vec_id <> b.vec_id)
-        |SELECT q_id, n_id, sim, rk FROM (
-        |  SELECT q_id, n_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+        |${sqlTopKPage("sim", "sims")}""".stripMargin) {
       (s, d) => Similarity.cosineTopK(t(s, d, "embeddings"), "vec_id", "embedding",
         col("vec_id") < 5, 10)
     },
@@ -1738,7 +1734,7 @@ object ExtensionQueries {
     // near-dup the band must EXCLUDE. Band and order on the rounded
     // cosine; queries with no in-band neighbor are absent by contract.
     Q("similarity_hard_negatives",
-      """WITH sims AS (
+      s"""WITH sims AS (
         |  SELECT a.vec_id AS q_id, b.vec_id AS n_id,
         |    round(list_sum(list_transform(range(1, 65),
         |            i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
@@ -1748,11 +1744,7 @@ object ExtensionQueries {
         |            i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))))), 6) AS sim
         |  FROM embeddings a, embeddings b
         |  WHERE a.vec_id < 10 AND a.vec_id <> b.vec_id)
-        |SELECT q_id, n_id, sim, rk FROM (
-        |  SELECT q_id, n_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims WHERE sim >= 0.25 AND sim < 0.45)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+        |${sqlTopKPage("sim", "sims WHERE sim >= 0.25 AND sim < 0.45")}""".stripMargin) {
       (s, d) => Similarity.hardNegatives(t(s, d, "embeddings"), "vec_id",
         "embedding", col("vec_id") < 10, 10, loSim = 0.25, hiSim = 0.45)
     },
@@ -1764,37 +1756,11 @@ object ExtensionQueries {
     // cosine and the page. Negative mining at 100 TB runs THIS shape:
     // the band only ever sees nprobe/nlist of the corpus.
     Q("similarity_hard_negatives_ivf_pinned",
-      s"""WITH c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
-        |probe AS (
-        |  SELECT vec_id AS q_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id < 10) WHERE r <= 2),
-        |sims AS (
-        |  SELECT p.q_id, s.vec_id AS n_id, ${sqlCos("a", "b")} AS sim
-        |  FROM probe p
-        |  JOIN assign s ON s.bucket = p.bucket
-        |  JOIN embeddings a ON a.vec_id = p.q_id
-        |  JOIN embeddings b ON b.vec_id = s.vec_id
-        |  WHERE p.q_id <> s.vec_id)
-        |SELECT q_id, n_id, sim, rk FROM (
-        |  SELECT q_id, n_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims WHERE sim >= 0.25 AND sim < 0.45)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+      s"""WITH $sqlPinnedDist,
+        |$sqlPinnedAssign,
+        |${sqlPinnedProbe("vec_id < 10", 2)},
+        |${sqlProbedSims("sims")}
+        |${sqlTopKPage("sim", "sims WHERE sim >= 0.25 AND sim < 0.45")}""".stripMargin) {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         Similarity.hardNegativesIvfWithCentroids(emb, "vec_id", "embedding",
@@ -1876,32 +1842,10 @@ object ExtensionQueries {
     // similarity_mmr_ivf's full-probe≡brute parity.
     Q("similarity_mmr_ivf_pinned",
       s"""WITH RECURSIVE
-        |c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
-        |probe AS (
-        |  SELECT vec_id AS q_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id < 5) WHERE r <= 2),
-        |sims AS (
-        |  SELECT p.q_id, s.vec_id AS n_id, ${sqlCos("a", "b")} AS sim
-        |  FROM probe p
-        |  JOIN assign s ON s.bucket = p.bucket
-        |  JOIN embeddings a ON a.vec_id = p.q_id
-        |  JOIN embeddings b ON b.vec_id = s.vec_id
-        |  WHERE p.q_id <> s.vec_id),
+        |$sqlPinnedDist,
+        |$sqlPinnedAssign,
+        |${sqlPinnedProbe("vec_id < 5", 2)},
+        |${sqlProbedSims("sims")},
         |cand AS (
         |  SELECT q_id, n_id, CAST(sim AS DECIMAL(18, 6)) AS sim FROM (
         |    SELECT q_id, n_id, sim,
@@ -1975,11 +1919,7 @@ object ExtensionQueries {
         |  FROM cand c
         |  JOIN embeddings a ON a.vec_id = c.q_id
         |  JOIN embeddings b ON b.vec_id = c.n_id)
-        |SELECT q_id, n_id, sim, rk FROM (
-        |  SELECT q_id, n_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+        |${sqlTopKPage("sim", "sims")}""".stripMargin) {
       (s, d) => Similarity.lshTopKWithPlanes(t(s, d, "embeddings"), "vec_id",
         "embedding", col("vec_id") < 5, 10,
         Seq(pinnedVecs(s, d, 110, 113).map(_.toSeq).toSeq))
@@ -2018,37 +1958,11 @@ object ExtensionQueries {
     // k-means QUALITY question stays with similarity_ivf's recall tests
     // where it belongs.
     Q("similarity_ivf_pinned",
-      s"""WITH c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
-        |probe AS (
-        |  SELECT vec_id AS q_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id < 5) WHERE r <= 2),
-        |sims AS (
-        |  SELECT p.q_id, s.vec_id AS n_id, ${sqlCos("a", "b")} AS sim
-        |  FROM probe p
-        |  JOIN assign s ON s.bucket = p.bucket
-        |  JOIN embeddings a ON a.vec_id = p.q_id
-        |  JOIN embeddings b ON b.vec_id = s.vec_id
-        |  WHERE p.q_id <> s.vec_id)
-        |SELECT q_id, n_id, sim, rk FROM (
-        |  SELECT q_id, n_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+      s"""WITH $sqlPinnedDist,
+        |$sqlPinnedAssign,
+        |${sqlPinnedProbe("vec_id < 5", 2)},
+        |${sqlProbedSims("sims")}
+        |${sqlTopKPage("sim", "sims")}""".stripMargin) {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         // the pinned quantizer: four data-derived vectors, collected by
@@ -2097,7 +2011,7 @@ object ExtensionQueries {
     // contracts; served≡artifact parity (disk-built index vs in-memory
     // artifacts) is pinned in PqSpec.
     Q("similarity_ivfpq_pinned",
-      """WITH cq AS (
+      s"""WITH cq AS (
         |  SELECT CAST(vec_id - 100 AS INTEGER) AS bucket, embedding FROM embeddings
         |  WHERE vec_id BETWEEN 100 AND 103),
         |ad AS (
@@ -2153,11 +2067,7 @@ object ExtensionQueries {
         |  JOIN codes o ON o.vec_id = b.vec_id
         |  CROSS JOIN cn
         |  WHERE l.q_id <> o.vec_id)
-        |SELECT q_id, n_id, asim, rk FROM (
-        |  SELECT q_id, n_id, asim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+        |${sqlTopKPage("asim", "sims")}""".stripMargin) {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         Pq.ivfPqTopKWithArtifacts(emb, "vec_id", "embedding",
@@ -2177,7 +2087,7 @@ object ExtensionQueries {
     // Residual-codebook QUALITY (tighter reconstruction on clustered
     // corpora) stays with PqSpec's residual-MSE contract.
     Q("similarity_ivfpq_residual_pinned",
-      """WITH cq AS (
+      s"""WITH cq AS (
         |  SELECT CAST(vec_id - 100 AS INTEGER) AS bucket, embedding FROM embeddings
         |  WHERE vec_id BETWEEN 100 AND 103),
         |ad AS (
@@ -2263,11 +2173,7 @@ object ExtensionQueries {
         |  JOIN crs x ON x.bucket = b.bucket
         |  CROSS JOIN cn
         |  WHERE l.q_id <> o.vec_id)
-        |SELECT q_id, n_id, asim, rk FROM (
-        |  SELECT q_id, n_id, asim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+        |${sqlTopKPage("asim", "sims")}""".stripMargin) {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         Pq.ivfPqTopKWithArtifacts(emb, "vec_id", "embedding",
@@ -2317,21 +2223,8 @@ object ExtensionQueries {
         |         round((64 - len(list_filter(range(1, 65),
         |           i -> (q.embedding[i] >= 0) <> (n.embedding[i] >= 0)))) / 64.0, 6) AS asim
         |  FROM q, embeddings n WHERE q.q_id <> n.vec_id),
-        |short AS (
-        |  SELECT q_id, n_id FROM (
-        |    SELECT q_id, n_id,
-        |           row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, n_id ASC) AS r
-        |    FROM ham) WHERE r <= 80),
-        |sims AS (
-        |  SELECT s.q_id, s.n_id, ${sqlCos("a", "b")} AS sim
-        |  FROM short s
-        |  JOIN embeddings a ON a.vec_id = s.q_id
-        |  JOIN embeddings b ON b.vec_id = s.n_id)
-        |SELECT q_id, n_id, sim, rk FROM (
-        |  SELECT q_id, n_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+        |${sqlShortlistRerank("ham", 80, "sims")}
+        |${sqlTopKPage("sim", "sims")}""".stripMargin) {
       (s, d) => Bq.bqTopKWithThresholds(t(s, d, "embeddings"), "vec_id", "embedding",
         col("vec_id") < 5, 10, Array.fill(64)(0.0), refine = 8)
     },
@@ -2398,7 +2291,7 @@ object ExtensionQueries {
     // same sequential-fold ADC cosine as the PQ replay. Grid QUALITY
     // (per-dim min/max training) stays with Sq.train's bounds in SqSpec.
     Q("similarity_sq_pinned",
-      """WITH codes AS (
+      s"""WITH codes AS (
         |  SELECT vec_id, list_transform(range(1, 65), i ->
         |    LEAST(GREATEST(
         |      CASE WHEN ((CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE) + 2.0) / 0.25)
@@ -2419,11 +2312,7 @@ object ExtensionQueries {
         |                 CAST(q.embedding[CAST(i AS INTEGER)] AS DOUBLE) * r.rec[CAST(i AS INTEGER)]))
         |             / (q.qn * sqrt(list_sum(list_transform(r.rec, x -> x * x)))), 6) AS asim
         |  FROM qn q CROSS JOIN recs r WHERE q.q_id <> r.vec_id)
-        |SELECT q_id, n_id, asim, rk FROM (
-        |  SELECT q_id, n_id, asim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY asim DESC, n_id ASC) AS BIGINT) AS rk
-        |  FROM sims)
-        |WHERE rk <= 10 ORDER BY q_id, rk""".stripMargin) {
+        |${sqlTopKPage("asim", "sims")}""".stripMargin) {
       (s, d) => Sq.sqTopKWithGrid(t(s, d, "embeddings"), "vec_id", "embedding",
         col("vec_id") < 5, 10, dim = 64, lo = -2.0, delta = 0.25, levels = 17)
     },
@@ -2994,32 +2883,10 @@ object ExtensionQueries {
         |       CROSS JOIN st GROUP BY 1),
         |sp AS (SELECT doc_id, CAST(row_number() OVER (ORDER BY round(score, 6) DESC, doc_id) AS BIGINT) AS rank
         |       FROM (SELECT doc_id, score FROM sc ORDER BY round(score, 6) DESC, doc_id LIMIT 15)),
-        |c AS (
-        |  SELECT vec_id - 100 AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65),
-        |           i -> (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-        |              * (CAST(v.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
-        |probe AS (
-        |  SELECT vec_id AS q_id, bucket FROM (
-        |    SELECT vec_id, bucket,
-        |           row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id = 0) WHERE r <= 2),
-        |dsims AS (
-        |  SELECT p.q_id, s.vec_id AS n_id, ${sqlCos("a", "b")} AS sim
-        |  FROM probe p
-        |  JOIN assign s ON s.bucket = p.bucket
-        |  JOIN embeddings a ON a.vec_id = p.q_id
-        |  JOIN embeddings b ON b.vec_id = s.vec_id
-        |  WHERE p.q_id <> s.vec_id),
+        |$sqlPinnedDist,
+        |$sqlPinnedAssign,
+        |${sqlPinnedProbe("vec_id = 0", 2)},
+        |${sqlProbedSims("dsims")},
         |dn AS (
         |  SELECT n_id, rk FROM (
         |    SELECT n_id, CAST(row_number() OVER (ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk

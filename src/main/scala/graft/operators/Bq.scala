@@ -118,29 +118,21 @@ object Bq {
     Pq.pageTopK(scored, k)
   }
 
-  /** Fused train → encode → Hamming shortlist → EXACT re-rank: `refine·k`
-    * bit-scan candidates per query are re-scored with the exact cosine
-    * over the original vectors (`refine = 1` returns the raw bit-
-    * agreement ranking — useful for plan inspection, coarse by
-    * construction: only dim+1 distinct scores exist, ties broken by
-    * n_id). Output matches the other top-k paths: (q_id, n_id, sim|asim,
-    * rk).
+  /** BQ top-k: train, then the pinned serve — [[train]]'s thresholds
+    * handed to [[bqTopKWithThresholds]] (encode → Hamming shortlist →
+    * EXACT re-rank: `refine·k` bit-scan candidates per query are
+    * re-scored with the exact cosine over the original vectors;
+    * `refine = 1` returns the raw bit-agreement ranking — useful for plan
+    * inspection, coarse by construction: only dim+1 distinct scores
+    * exist, ties broken by n_id). Output matches the other top-k paths:
+    * (q_id, n_id, sim|asim, rk).
     */
   def bqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, seed: Long = 42L,
-             refine: Int = 8, maxQueryBatch: Int = 100000): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(Seq("bigint", "int", "smallint").contains(
-      emb.schema(idCol).dataType.simpleString),
-      s"bqTopK needs an integral id column, got ${emb.schema(idCol).dataType}")
-    val thr = train(emb, idCol, vecCol, seed)
-    val codes = encode(emb, idCol, vecCol, thr)
-      .select(col(idCol).cast("long").as("n_id"), col("code"))
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-    serve(codes, thr, queries, emb.select(
-      col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec")),
-      k, refine, maxQueryBatch)
+             refine: Int = 8): DataFrame = {
+    Pq.requireServable(emb, idCol, refine, "bqTopK")
+    bqTopKWithThresholds(emb, idCol, vecCol, queryPred, k,
+      train(emb, idCol, vecCol, seed), refine)
   }
 
   /** [[bqTopK]] under CALLER-SUPPLIED thresholds (training replaced by
@@ -157,9 +149,8 @@ object Bq {
     */
   def bqTopKWithThresholds(emb: DataFrame, idCol: String, vecCol: String,
                            queryPred: Column, k: Int, thr: Array[Double],
-                           refine: Int = 8,
-                           maxQueryBatch: Int = 100000): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
+                           refine: Int = 8): DataFrame = {
+    Pq.requireServable(emb, idCol, refine, "bqTopKWithThresholds")
     require(thr.nonEmpty, "threshold vector must be non-empty")
     val codes = encode(emb, idCol, vecCol, thr)
       .select(col(idCol).cast("long").as("n_id"), col("code"))
@@ -167,25 +158,19 @@ object Bq {
       .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
     serve(codes, thr, queries, emb.select(
       col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec")),
-      k, refine, maxQueryBatch)
+      k, refine)
   }
 
   /** Shared fused/served tail: encode the query batch driver-side, bit-
     * scan, optionally exact-re-rank against `corpusVecs`.
     */
   private def serve(codes: DataFrame, thr: Array[Double], queries: DataFrame,
-                    corpusVecs: DataFrame, k: Int, refine: Int,
-                    maxQueryBatch: Int): DataFrame = {
-    val qs = Pq.collectQueries(queries, thr.length, maxQueryBatch)
+                    corpusVecs: DataFrame, k: Int, refine: Int): DataFrame = {
+    val qs = Pq.collectQueries(queries, thr.length, Similarity.MaxQueryBatch)
     val qSigs = qs.map { case (qid, q) => (qid, signBits(q, thr)) }
     if (refine <= 1) hammingTopK(codes, qSigs, thr.length, k)
-    else {
-      val shortlist = hammingTopK(codes, qSigs, thr.length, k * refine)
-      Similarity.rerankTopK(
-        shortlist.select(col("q_id"), col("n_id"))
-          .join(queries, Seq("q_id")).join(corpusVecs, Seq("n_id"))
-          .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec")), k)
-    }
+    else Similarity.rerankShortlist(
+      hammingTopK(codes, qSigs, thr.length, k * refine), queries, corpusVecs, k)
   }
 
   /** Persist thresholds + signatures: `indexDir/thresholds` is one row
@@ -194,6 +179,7 @@ object Bq {
     */
   def buildBqIndex(emb: DataFrame, idCol: String, vecCol: String,
                    indexDir: String, seed: Long = 42L): Array[Double] = {
+    Dedup.requireIntegralId(emb, idCol, "buildBqIndex")
     val spark = emb.sparkSession
     val thr = train(emb, idCol, vecCol, seed)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -229,13 +215,12 @@ object Bq {
     */
   def bqTopKFromIndex(queries: DataFrame, corpus: DataFrame,
                       idCol: String, vecCol: String, indexDir: String,
-                      k: Int, refine: Int = 8,
-                      maxQueryBatch: Int = 100000): DataFrame = {
+                      k: Int, refine: Int = 8): DataFrame = {
     val spark = queries.sparkSession
     val thr = loadThresholds(spark, indexDir)
     serve(spark.read.parquet(s"$indexDir/codes"), thr,
       queries.select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec")),
       corpus.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec")),
-      k, refine, maxQueryBatch)
+      k, refine)
   }
 }

@@ -597,9 +597,10 @@ object Dedup {
     spark.createDataFrame(paired).toDF("d1", "d2", "jacc")
   }
 
-  /** The dense/block pair paths cast ids to long for block routing; a
-    * non-numeric id would cast to null (decoded as 0), silently collapse
-    * every doc onto id 0, and return an empty result — fail fast instead.
+  /** The dense/block pair paths and the vector indexes cast ids to long;
+    * a non-numeric id would cast to null (the pair paths decode it as 0
+    * and silently collapse every doc onto id 0; a vector index stores a
+    * null id) — fail fast instead.
     */
   private[operators] def requireIntegralId(df: DataFrame, idCol: String, op: String): Unit = {
     val t = df.schema(idCol).dataType
@@ -608,7 +609,7 @@ object Dedup {
            _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    require(ok, s"$op requires an integral id column for block routing; '$idCol' is $t")
+    require(ok, s"$op requires an integral id column; '$idCol' is $t")
   }
 
   /** Exact-Jaccard verification of candidate (d1, d2) pairs against the
@@ -696,25 +697,27 @@ object Dedup {
     *   `indexDir/buckets`  (c_id, bsig) Hive-partitioned by `band`;
     *   `indexDir/arrays`   (c_id, c_ids) sorted shingle-hash arrays for
     *                       the exact-Jaccard verify join;
-    *   `indexDir/params`   one row (n, bands, rows_per_band, seed,
-    *                       id_type) — the serve path derives probe
-    *                       signatures from THIS, so an index probed with
-    *                       mismatched banding (which would silently have
-    *                       zero recall) cannot happen.
+    *   `indexDir/params`   one tab-separated line (n, bands,
+    *                       rows_per_band, seed, id_type) — the serve path
+    *                       derives probe signatures from THIS, so an index
+    *                       probed with mismatched banding (which would
+    *                       silently have zero recall) cannot happen.
     * `c_id` keeps the corpus id column's own type (no widening); params
     * records it as DDL (`id_type`), so every table reads back with its
-    * full fixed schema and no schema-inference job.
+    * full fixed schema and no schema-inference job. The params file is
+    * written and read through the Hadoop `FileSystem` directly, so reading
+    * it back starts no Spark job.
     */
   def buildLshIndex(corpus: DataFrame, idCol: String, textCol: String,
                     indexDir: String, n: Int = 2, bands: Int = 8,
                     rowsPerBand: Int = 4, seed: Long = 42L): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     writeLshIndex(corpus, idCol, textCol, LshParams(n, bands, rowsPerBand, seed),
       indexDir, "overwrite")
-    Seq((n, bands, rowsPerBand, seed, corpus.schema(idCol).dataType.sql))
-      .toDF("n", "bands", "rows_per_band", "seed", "id_type")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexDir/params")
+    val (fs, path) = lshParamsFile(corpus.sparkSession, indexDir)
+    val out = fs.create(path, true)
+    try out.write(Seq(n, bands, rowsPerBand, seed, corpus.schema(idCol).dataType.sql)
+      .mkString("\t").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** Incremental maintenance for a [[buildLshIndex]] artifact: append
@@ -743,20 +746,26 @@ object Dedup {
         .write.mode(mode).partitionBy("band").parquet(s"$indexDir/buckets")
     }
 
-  /** The `params` table's fixed schema: read with it, the one-row table
-    * costs one job, not a schema-inference job first. */
-  private val LshParamsSchema = "n INT, bands INT, rows_per_band INT, seed BIGINT, id_type STRING"
+  private def lshParamsFile(spark: org.apache.spark.sql.SparkSession, indexDir: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val path = new org.apache.hadoop.fs.Path(s"$indexDir/params")
+    (path.getFileSystem(spark.sessionState.newHadoopConf()), path)
+  }
 
-  /** The index's banding and the DDL type of its `c_id` column. */
+  /** The index's banding and the DDL type of its `c_id` column, read from
+    * the one-line `params` file on the driver — no Spark job. */
   private def readLshParams(spark: org.apache.spark.sql.SparkSession,
                             indexDir: String): (LshParams, String) = {
-    val r = spark.read.schema(LshParamsSchema).parquet(s"$indexDir/params").head()
-    (LshParams(r.getAs[Int]("n"), r.getAs[Int]("bands"),
-      r.getAs[Int]("rows_per_band"), r.getAs[Long]("seed")), r.getAs[String]("id_type"))
+    val (fs, path) = lshParamsFile(spark, indexDir)
+    val in = fs.open(path)
+    val Array(n, bands, rowsPerBand, seed, idType) =
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).split('\t')
+      finally in.close()
+    (LshParams(n.toInt, bands.toInt, rowsPerBand.toInt, seed.toLong), idType)
   }
 
   /** A persisted [[buildLshIndex]] artifact as index frames, banded under
-    * its own recorded params; the params row is its one job. */
+    * its own recorded params; reading it starts no job. */
   private[graft] def readLshIndex(spark: org.apache.spark.sql.SparkSession,
                                   indexDir: String): LshIndex = {
     val (p, idType) = readLshParams(spark, indexDir)

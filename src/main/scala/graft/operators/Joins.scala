@@ -75,9 +75,9 @@ object Joins {
     * toward Spark's 2³¹ `sequence` element cap and kill its task — a
     * single bad ROW taking down a 100 TB ingest job. Any interval
     * spanning more than `maxCellsPerInterval` grid cells therefore FAILS
-    * LOUDLY (`raise_error` naming the span — the `maxQueryBatch`
-    * precedent: a guard the caller must consciously raise, never a
-    * silent drop that changes the answer). The default (2²⁰ cells) is
+    * LOUDLY (`raise_error` naming the span — the `MaxQueryBatch`
+    * precedent: a loud guard, never a silent drop that changes the
+    * answer). The default (2²⁰ cells) is
     * generous: a well-chosen `bucketWidth` puts typical spans near ONE
     * cell, so 10⁶ replicas per row is already a mis-sized grid, not a
     * workload.

@@ -298,35 +298,20 @@ object Pq {
     (best._1, best._2)
   }
 
-  /** Fused OPQ train → rotate+encode → ADC search, with optional exact
-    * re-rank — [[pqTopK]]'s deployment shape with the learned rotation in
-    * front: corpus rows rotate inside the (map-side) encoder, the query
-    * batch rotates driver-side, and because R is an isometry the ADC
-    * score still estimates the ORIGINAL cosine (the refine re-rank uses
-    * the untouched original vectors either way).
+  /** OPQ top-k: train, then the pinned serve — [[trainOpq]]'s (codebooks,
+    * rotation) pair handed to [[pqTopKWithCodebooks]]. Corpus rows rotate
+    * inside the (map-side) encoder, the query batch rotates driver-side,
+    * and because R is an isometry the ADC score still estimates the
+    * ORIGINAL cosine (the refine re-rank uses the untouched original
+    * vectors either way).
     */
   def pqTopKOpq(emb: DataFrame, idCol: String, vecCol: String,
                 queryPred: Column, k: Int, m: Int = 8, ksub: Int = 16,
                 seed: Long = 42L, refine: Int = 1,
                 opqIters: Int = 8): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(Seq("bigint", "int", "smallint").contains(
-      emb.schema(idCol).dataType.simpleString),
-      s"pqTopKOpq needs an integral id column, got ${emb.schema(idCol).dataType}")
+    requireServable(emb, idCol, refine, "pqTopKOpq")
     val (cb, r) = trainOpq(emb, idCol, vecCol, m, ksub, seed, opqIters = opqIters)
-    val codes = encode(emb, idCol, vecCol, cb, rotation = Some(r))
-      .select(col(idCol).cast("long").as("n_id"), col("code"))
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-    if (refine <= 1) adcTopK(codes, cb, queries, k, rotation = Some(r))
-    else {
-      val shortlist = adcTopK(codes, cb, queries, k * refine, rotation = Some(r))
-      val cv = emb.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-      Similarity.rerankTopK(
-        shortlist.select(col("q_id"), col("n_id"))
-          .join(queries, Seq("q_id")).join(cv, Seq("n_id"))
-          .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec")), k)
-    }
+    pqTopKWithCodebooks(emb, idCol, vecCol, queryPred, k, cb, Some(r), refine)
   }
 
   /** Sample mean squared reconstruction error of (codebooks, rotation) —
@@ -421,34 +406,16 @@ object Pq {
       }
     }
 
-  /** ADC approximate cosine top-k over PQ codes: per query, approximate
-    * `cos(q, x) ≈ Σ_s lut_s(code_s(x)) / (|q| · |x̃|)` where
-    * `lut_s(j) = q_s · c_{s,j}` and `x̃` is the reconstruction — we fold
-    * BOTH the dot product and the reconstruction norm through the same
-    * lookup tables (`|x̃|² = Σ_s |c_{s,code_s}|²`), so scoring is `2m`
-    * lookups per row, dimension-free. The query side is exact (asymmetric
-    * distance — the paper's ADC estimator).
-    *
-    * Partition kernel, not a per-row UDF, because the LUTs must build
-    * once per (query, partition) — `|Q| · m · ksub` doubles — and then
-    * amortize over every row in the partition; a scalar expression would
-    * recompute them per row, turning the m-lookup score back into a
-    * dim-multiply score. Emitted (q_id, n_id, asim) rows fold into the
-    * bounded page aggregate map-side, so the shuffle stays
-    * `partitions · |Q| · k`.
-    *
-    * `queries` is collected (sketch-sized by contract — the
-    * ivfTopKFromIndex batch precedent, same loud cap).
-    */
   /** Collect + validate a sketch-sized query batch (the ivfTopKFromIndex
-    * precedent, same loud cap) as (q_id, dense double vector) pairs.
+    * precedent: at most `batchCap` rows, or a loud error) as (q_id, dense
+    * double vector) pairs.
     */
   private[operators] def collectQueries(queries: DataFrame, dim: Int,
-                                        maxQueryBatch: Int): Array[(Long, Array[Double])] = {
-    val qRows = queries.limit(maxQueryBatch + 1).collect()
-    require(qRows.length <= maxQueryBatch,
-      s"PQ query batch exceeds maxQueryBatch=$maxQueryBatch rows — " +
-        "query batches are sketch-sized by contract; split the batch or raise the cap")
+                                        batchCap: Int): Array[(Long, Array[Double])] = {
+    val qRows = queries.limit(batchCap + 1).collect()
+    require(qRows.length <= batchCap,
+      s"PQ query batch exceeds MaxQueryBatch=$batchCap rows — " +
+        "query batches are sketch-sized by contract; split the batch")
     val qs = qRows.map { r =>
       val v = r.getSeq[Float](1)
       (r.getLong(0), v.map(_.toDouble).toArray)
@@ -516,15 +483,42 @@ object Pq {
         col("e.key.asim").as("asim"), (col("pos") + 1).cast("long").as("rk"))
       .orderBy(col("q_id"), col("rk"))
 
-  def adcTopK(codes: DataFrame, cb: Codebooks, queries: DataFrame,
-              k: Int, maxQueryBatch: Int = 100000,
-              rotation: Option[Array[Array[Double]]] = None): DataFrame = {
+  /** ADC approximate cosine top-k over PQ codes (n_id, code) for a
+    * (q_id, q_vec) query batch: per query, approximate
+    * `cos(q, x) ≈ Σ_s lut_s(code_s(x)) / (|q| · |x̃|)` where
+    * `lut_s(j) = q_s · c_{s,j}` and `x̃` is the reconstruction — we fold
+    * BOTH the dot product and the reconstruction norm through the same
+    * lookup tables (`|x̃|² = Σ_s |c_{s,code_s}|²`), so scoring is `2m`
+    * lookups per row, dimension-free. The query side is exact (asymmetric
+    * distance — the paper's ADC estimator).
+    *
+    * Partition kernel, not a per-row UDF, because the LUTs must build
+    * once per (query, partition) — `|Q| · m · ksub` doubles — and then
+    * amortize over every row in the partition; a scalar expression would
+    * recompute them per row, turning the m-lookup score back into a
+    * dim-multiply score. Emitted (q_id, n_id, asim) rows fold into the
+    * bounded page aggregate map-side, so the shuffle stays
+    * `partitions · |Q| · k`.
+    *
+    * `queries` is collected (sketch-sized by contract: at most
+    * [[Similarity.MaxQueryBatch]] rows, the ivfTopKFromIndex precedent).
+    */
+  def adcTopK(codes: DataFrame, cb: Codebooks, queries: DataFrame, k: Int,
+              rotation: Option[Array[Array[Double]]] = None): DataFrame =
+    adcScan(codes, cb, queries, k, rotation, Similarity.MaxQueryBatch)
+
+  /** [[adcTopK]] under a caller-chosen query-batch cap (SQ's per-query
+    * lookup tables are larger, so its cap, [[Sq.MaxQueryBatch]], is lower).
+    */
+  private[operators] def adcScan(codes: DataFrame, cb: Codebooks, queries: DataFrame,
+                                 k: Int, rotation: Option[Array[Array[Double]]],
+                                 batchCap: Int): DataFrame = {
     val spark = codes.sparkSession
     graft.functions.VectorExprs.register(spark)
     // OPQ: queries rotate into the codebook space driver-side (the batch
     // is already collected); R is orthogonal so the ADC estimate still
     // approximates the ORIGINAL cosine
-    val qs = collectQueries(queries, cb.dim, maxQueryBatch)
+    val qs = collectQueries(queries, cb.dim, batchCap)
       .map { case (qid, q) => (qid, rotation.map(rotateVec(q, _)).getOrElse(q)) }
     val bc = spark.sparkContext.broadcast((cb, qs))
     import spark.implicits._
@@ -544,36 +538,31 @@ object Pq {
     pageTopK(scored, k)
   }
 
-  /** Fused train → encode → ADC search, with optional EXACT re-rank:
-    * `refine > 1` retrieves `refine·k` ADC candidates per query and
-    * re-ranks them with the exact cosine over the original vectors (the
-    * LSH/IVF re-rank precedent) — the standard two-stage PQ deployment
-    * where compressed codes cut the corpus to a candidate shortlist and
-    * only `refine·k` full vectors per query are ever touched. Output
-    * matches the other top-k paths: (q_id, n_id, sim|asim, rk).
+  /** PQ top-k: train, then the pinned serve — [[train]]'s codebooks
+    * handed to [[pqTopKWithCodebooks]] (encode → ADC search, with optional
+    * EXACT re-rank: `refine > 1` retrieves `refine·k` ADC candidates per
+    * query and re-ranks them with the exact cosine over the original
+    * vectors — the standard two-stage PQ deployment where compressed
+    * codes cut the corpus to a candidate shortlist and only `refine·k`
+    * full vectors per query are ever touched). Output matches the other
+    * top-k paths: (q_id, n_id, sim|asim, rk).
     */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, m: Int = 8, ksub: Int = 16,
              seed: Long = 42L, refine: Int = 1): DataFrame = {
+    requireServable(emb, idCol, refine, "pqTopK")
+    pqTopKWithCodebooks(emb, idCol, vecCol, queryPred, k,
+      train(emb, idCol, vecCol, m, ksub, seed), refine = refine)
+  }
+
+  /** The checks every fused vector serve makes before any training pass:
+    * a positive shortlist factor, and an integral id column (ids are cast
+    * to long, so a string id would silently become a null id).
+    */
+  private[operators] def requireServable(emb: DataFrame, idCol: String,
+                                         refine: Int, op: String): Unit = {
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(Seq("bigint", "int", "smallint").contains(
-      emb.schema(idCol).dataType.simpleString),
-      s"pqTopK needs an integral id column, got ${emb.schema(idCol).dataType}")
-    val cb = train(emb, idCol, vecCol, m, ksub, seed)
-    val codes = encode(emb, idCol, vecCol, cb)
-      .select(col(idCol).cast("long").as("n_id"), col("code"))
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-    if (refine <= 1) adcTopK(codes, cb, queries, k)
-    else {
-      val shortlist = adcTopK(codes, cb, queries, k * refine)
-      val qv = queries
-      val cv = emb.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-      Similarity.rerankTopK(
-        shortlist.select(col("q_id"), col("n_id"))
-          .join(qv, Seq("q_id")).join(cv, Seq("n_id"))
-          .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec")), k)
-    }
+    Dedup.requireIntegralId(emb, idCol, op)
   }
 
   /** [[pqTopK]] under CALLER-SUPPLIED codebooks (training replaced by
@@ -594,25 +583,30 @@ object Pq {
   def pqTopKWithCodebooks(emb: DataFrame, idCol: String, vecCol: String,
                           queryPred: Column, k: Int, cb: Codebooks,
                           rotation: Option[Array[Array[Double]]] = None,
-                          refine: Int = 1,
-                          maxQueryBatch: Int = 100000): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(Seq("bigint", "int", "smallint").contains(
-      emb.schema(idCol).dataType.simpleString),
-      s"pqTopKWithCodebooks needs an integral id column, got ${emb.schema(idCol).dataType}")
-    val codes = encode(emb, idCol, vecCol, cb, rotation)
-      .select(col(idCol).cast("long").as("n_id"), col("code"))
+                          refine: Int = 1): DataFrame = {
+    requireServable(emb, idCol, refine, "pqTopKWithCodebooks")
+    serveCodes(emb, idCol, vecCol, queryPred, k, cb,
+      encode(emb, idCol, vecCol, cb, rotation), rotation, refine, Similarity.MaxQueryBatch)
+  }
+
+  /** The one serve tail of the fused PQ, OPQ and SQ entry points: the
+    * encoded corpus `codes` (idCol, code) is ADC-scored for the
+    * `queryPred` rows ([[adcScan]]); `refine > 1` makes that a `refine·k`
+    * shortlist per query, re-ranked by the exact cosine over the original
+    * vectors ([[Similarity.rerankShortlist]]).
+    */
+  private[operators] def serveCodes(emb: DataFrame, idCol: String, vecCol: String,
+                                    queryPred: Column, k: Int, cb: Codebooks,
+                                    codes: DataFrame,
+                                    rotation: Option[Array[Array[Double]]],
+                                    refine: Int, batchCap: Int): DataFrame = {
+    val nCodes = codes.select(col(idCol).cast("long").as("n_id"), col("code"))
     val queries = emb.filter(queryPred)
       .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-    if (refine <= 1) adcTopK(codes, cb, queries, k, maxQueryBatch, rotation)
-    else {
-      val shortlist = adcTopK(codes, cb, queries, k * refine, maxQueryBatch, rotation)
-      val cv = emb.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-      Similarity.rerankTopK(
-        shortlist.select(col("q_id"), col("n_id"))
-          .join(queries, Seq("q_id")).join(cv, Seq("n_id"))
-          .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec")), k)
-    }
+    if (refine <= 1) adcScan(nCodes, cb, queries, k, rotation, batchCap)
+    else Similarity.rerankShortlist(
+      adcScan(nCodes, cb, queries, k * refine, rotation, batchCap), queries,
+      emb.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec")), k)
   }
 
   // ---- persisted build / serve split (the IVF index precedent) -----------
@@ -643,6 +637,7 @@ object Pq {
   def buildPqIndex(emb: DataFrame, idCol: String, vecCol: String,
                    indexDir: String, m: Int = 8, ksub: Int = 16,
                    seed: Long = 42L): Codebooks = {
+    Dedup.requireIntegralId(emb, idCol, "buildPqIndex")
     val cb = train(emb, idCol, vecCol, m, ksub, seed)
     writeCodebooks(emb.sparkSession, cb, indexDir)
     encode(emb, idCol, vecCol, cb)
@@ -709,6 +704,7 @@ object Pq {
                       indexDir: String, nlist: Int = 16, m: Int = 8,
                       ksub: Int = 16, seed: Long = 42L,
                       residual: Boolean = false): Unit = {
+    Dedup.requireIntegralId(emb, idCol, "buildIvfPqIndex")
     val spark = emb.sparkSession
     graft.functions.VectorExprs.register(spark)
     import spark.implicits._
@@ -729,31 +725,39 @@ object Pq {
         }, m, ksub, seed, maxIters = 12)
       }
     writeCodebooks(spark, cb, indexDir)
-    val cs: Seq[Seq[Double]] = cents.toSeq.map(_.toSeq)
-    import graft.functions.VectorExprs.nearestCentroids
-    val bucketCol = element_at(nearestCentroids(col(vecCol), cs, 1), 1).as("bucket")
-    // one pass over the corpus: code and coarse bucket from the same scan
-    val codes =
-      if (!residual)
-        emb.select(col(idCol).cast("long").as("n_id"),
-          encoderUdf(cb)(col(vecCol)).as("code"), bucketCol)
-      else {
-        val bcCs = csArr // broadcast via closure — nlist·dim doubles
-        val resEncoder = udf { (v: Seq[Float], b: Int) =>
-          if (v == null || v.length != cb.dim) null
-          else {
-            val c = bcCs(b)
-            encodeVec(cb, Array.tabulate(v.length)(i => v(i) - c(i)))
-          }
-        }
-        emb.select(col(idCol).cast("long").as("n_id"), col(vecCol), bucketCol)
-          .select(col("n_id"), resEncoder(col(vecCol), col("bucket")).as("code"),
-            col("bucket"))
-      }
-    codes.write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/codes")
+    ivfPqCodes(emb, idCol, vecCol, cents.toSeq.map(_.toSeq), cb, residual)
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"$indexDir/codes")
     val marker = new org.apache.hadoop.fs.Path(s"$indexDir/_RESIDUAL")
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
     if (residual) fs.create(marker, true).close() else fs.delete(marker, false)
+  }
+
+  /** The IVF-PQ code table (n_id, code, bucket): code and coarse bucket
+    * from one pass over the corpus. `residual` codes quantize
+    * `v − c_bucket(v)` (the IVFADC encoding), the centroids broadcast via
+    * the closure (nlist·dim doubles — sketch-sized).
+    */
+  private def ivfPqCodes(emb: DataFrame, idCol: String, vecCol: String,
+                         cs: Seq[Seq[Double]], cb: Codebooks,
+                         residual: Boolean): DataFrame = {
+    import graft.functions.VectorExprs.nearestCentroids
+    val bucketCol = element_at(nearestCentroids(col(vecCol), cs, 1), 1).as("bucket")
+    if (!residual)
+      emb.select(col(idCol).cast("long").as("n_id"),
+        encoderUdf(cb)(col(vecCol)).as("code"), bucketCol)
+    else {
+      val bcCs = cs.map(_.toArray).toArray
+      val resEncoder = udf { (v: Seq[Float], b: Int) =>
+        if (v == null || v.length != cb.dim) null
+        else {
+          val c = bcCs(b)
+          encodeVec(cb, Array.tabulate(v.length)(i => v(i) - c(i)))
+        }
+      }
+      emb.select(col(idCol).cast("long").as("n_id"), col(vecCol), bucketCol)
+        .select(col("n_id"), resEncoder(col(vecCol), col("bucket")).as("code"),
+          col("bucket"))
+    }
   }
 
   private def nearestBucket(v: Array[Double], cs: Array[Array[Double]]): Int = {
@@ -779,8 +783,7 @@ object Pq {
     * read.
     */
   def ivfPqTopKFromIndex(queries: DataFrame, idCol: String, vecCol: String,
-                         indexDir: String, k: Int, nprobe: Int = 4,
-                         maxQueryBatch: Int = 100000): DataFrame = {
+                         indexDir: String, k: Int, nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.VectorExprs.register(spark)
     val cb = loadCodebooks(spark, indexDir)
@@ -792,7 +795,7 @@ object Pq {
       spark.sessionState.newHadoopConf()).exists(markerPath)
     val qs = collectQueries(
       queries.select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec")),
-      cb.dim, maxQueryBatch)
+      cb.dim, Similarity.MaxQueryBatch)
     serveIvfPqCodes(spark.read.parquet(s"$indexDir/codes"), cb, cs, qs,
       nprobe, residual, k)
   }
@@ -820,40 +823,15 @@ object Pq {
   def ivfPqTopKWithArtifacts(emb: DataFrame, idCol: String, vecCol: String,
                              queryPred: Column, k: Int, cs: Seq[Seq[Double]],
                              cb: Codebooks, nprobe: Int,
-                             maxQueryBatch: Int = 100000,
                              residual: Boolean = false): DataFrame = {
-    require(Seq("bigint", "int", "smallint").contains(
-      emb.schema(idCol).dataType.simpleString),
-      s"ivfPqTopKWithArtifacts needs an integral id column, got ${emb.schema(idCol).dataType}")
+    Dedup.requireIntegralId(emb, idCol, "ivfPqTopKWithArtifacts")
     require(cs.nonEmpty, "centroid list must be non-empty")
-    val spark = emb.sparkSession
-    graft.functions.VectorExprs.register(spark)
-    import graft.functions.VectorExprs.nearestCentroids
-    val csSeq: Seq[Seq[Double]] = cs.map(_.toSeq)
-    val bucketCol = element_at(nearestCentroids(col(vecCol), csSeq, 1), 1)
-      .as("bucket")
-    val codes =
-      if (!residual)
-        emb.select(col(idCol).cast("long").as("n_id"),
-          encoderUdf(cb)(col(vecCol)).as("code"), bucketCol)
-      else {
-        // the buildIvfPqIndex residual encoding, on the fly: closure-
-        // broadcast centroids (nlist·dim doubles — sketch-sized)
-        val bcCs = cs.map(_.toArray).toArray
-        val resEncoder = udf { (v: Seq[Float], b: Int) =>
-          if (v == null || v.length != cb.dim) null
-          else {
-            val c = bcCs(b)
-            encodeVec(cb, Array.tabulate(v.length)(i => v(i) - c(i)))
-          }
-        }
-        emb.select(col(idCol).cast("long").as("n_id"), col(vecCol), bucketCol)
-          .select(col("n_id"),
-            resEncoder(col(vecCol), col("bucket")).as("code"), col("bucket"))
-      }
+    graft.functions.VectorExprs.register(emb.sparkSession)
+    // the buildIvfPqIndex encoding, on the fly
+    val codes = ivfPqCodes(emb, idCol, vecCol, cs, cb, residual)
     val qs = collectQueries(emb.filter(queryPred)
       .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec")),
-      cb.dim, maxQueryBatch)
+      cb.dim, Similarity.MaxQueryBatch)
     serveIvfPqCodes(codes, cb, cs.map(_.toArray).toArray, qs,
       nprobe, residual, k)
   }

@@ -133,10 +133,9 @@ object Similarity {
     val cand = q.join(c, Seq("tbl", "bucket"))
       .filter(col("q_id") =!= col("n_id"))
       .select("q_id", "n_id").distinct()
-    val qv = emb.filter(queryPred).select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val cv = emb.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    rerankTopK(cand.join(qv, Seq("q_id")).join(cv, Seq("n_id"))
-      .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec")), k)
+    rerankShortlist(cand,
+      emb.filter(queryPred).select(col(idCol).as("q_id"), col(vecCol).as("q_vec")),
+      emb.select(col(idCol).as("n_id"), col(vecCol).as("n_vec")), k)
   }
 
   /** Exact cosine re-rank of a candidate frame (q_id, q_vec, n_id, n_vec)
@@ -155,6 +154,23 @@ object Similarity {
     */
   private[graft] def rerankTopK(cand: DataFrame, k: Int): DataFrame =
     pageBySim(roundedSims(cand), k)
+
+  /** The second stage of every shortlist-then-refine path (LSH, PQ, OPQ,
+    * SQ, BQ): a (q_id, n_id) shortlist joined back to the query vectors
+    * (q_id, q_vec) and the corpus vectors (n_id, n_vec), then the exact
+    * [[rerankTopK]] page — only the shortlisted full vectors are read.
+    */
+  private[operators] def rerankShortlist(shortlist: DataFrame, queries: DataFrame,
+                                         corpus: DataFrame, k: Int): DataFrame =
+    rerankTopK(shortlist.select(col("q_id"), col("n_id"))
+      .join(queries, Seq("q_id")).join(corpus, Seq("n_id"))
+      .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec")), k)
+
+  /** Rows a served query batch may hold: batches are collected to the
+    * driver, so they are sketch-sized by contract, and a larger batch
+    * (say the whole corpus passed as "queries") fails loudly instead.
+    */
+  private[graft] final val MaxQueryBatch = 100000
 
   private def roundedSims(cand: DataFrame): DataFrame = {
     graft.functions.VectorExprs.register(cand.sparkSession)
@@ -912,8 +928,7 @@ object Similarity {
     * as `PartitionFilters` in the scan.
     */
   def ivfTopKFromIndex(queries: DataFrame, idCol: String, vecCol: String,
-                       indexDir: String, k: Int, nprobe: Int = 4,
-                       maxQueryBatch: Int = 100000): DataFrame = {
+                       indexDir: String, k: Int, nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.nearestCentroids
@@ -926,10 +941,10 @@ object Similarity {
     // the whole corpus passed as "queries") raises a named error instead
     // of silently collecting corpus-sized vectors onto the driver
     val qBatch = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val qRows = qBatch.limit(maxQueryBatch + 1).collect()
-    require(qRows.length <= maxQueryBatch,
-      s"ivfTopKFromIndex query batch exceeds maxQueryBatch=$maxQueryBatch rows — " +
-        "query batches are sketch-sized by contract; split the batch or raise the cap")
+    val qRows = qBatch.limit(MaxQueryBatch + 1).collect()
+    require(qRows.length <= MaxQueryBatch,
+      s"ivfTopKFromIndex query batch exceeds MaxQueryBatch=$MaxQueryBatch rows — " +
+        "query batches are sketch-sized by contract; split the batch")
     val qLocal = spark.createDataFrame(
       java.util.Arrays.asList(qRows: _*), qBatch.schema)
     val q = qLocal

@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: the ADC lookup tables are `dim·levels` doubles PER QUERY
   * (128 KB at dim 64) versus PQ's `m·ksub` (1 KB), so the query-batch cap
-  * defaults 32× lower here; corpus-side cost is what SQ8 optimizes and
-  * that is strictly smaller (4× less scan bandwidth than brute force).
+  * ([[MaxQueryBatch]]) is 32× lower here; corpus-side cost is what SQ8
+  * optimizes and that is strictly smaller (4× less scan bandwidth than
+  * brute force).
   *
   * Like every approximate family here, exactness is the brute-force
   * sibling's job ([[Similarity.cosineTopK]]); SQ rows are `no_oracle`
@@ -36,6 +37,12 @@ import org.apache.spark.sql.functions._
   * exactness contracts pinned in SqSpec.
   */
 object Sq {
+
+  /** Query-batch cap of every SQ serve, below [[Similarity.MaxQueryBatch]]
+    * because each query's lookup tables (`dim·levels` doubles) are far
+    * larger than PQ's (`m·ksub`).
+    */
+  private[graft] final val MaxQueryBatch = 4096
 
   /** Train the per-dimension uniform grid: sample min/max per dimension
     * over the deterministic bottom-k-by-hash sample (the PQ training
@@ -117,43 +124,20 @@ object Sq {
     emb.select(col(idCol), enc(col(vecCol)).as("code"))
   }
 
-  /** Fused train → encode → ADC search with optional EXACT re-rank —
-    * [[Pq.pqTopK]]'s deployment shape on the uniform grid: `refine > 1`
-    * shortlists `refine·k` rows from the compressed scan and re-ranks
-    * them with the exact cosine over the original vectors. Output matches
-    * the other top-k paths: (q_id, n_id, sim|asim, rk).
+  /** SQ top-k: train, then the pinned serve — [[train]]'s per-dimension
+    * grid, its codes served by the PQ tail ([[Pq.pqTopK]]'s deployment
+    * shape on the uniform grid): `refine > 1` shortlists `refine·k` rows
+    * from the compressed scan and re-ranks them with the exact cosine
+    * over the original vectors. Output matches the other top-k paths:
+    * (q_id, n_id, sim|asim, rk).
     */
   def sqTopK(emb: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, levels: Int = 256,
-             seed: Long = 42L, refine: Int = 1,
-             maxQueryBatch: Int = 4096): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(Seq("bigint", "int", "smallint").contains(
-      emb.schema(idCol).dataType.simpleString),
-      s"sqTopK needs an integral id column, got ${emb.schema(idCol).dataType}")
+             seed: Long = 42L, refine: Int = 1): DataFrame = {
+    Pq.requireServable(emb, idCol, refine, "sqTopK")
     val cb = train(emb, idCol, vecCol, levels, seed)
-    serveFused(emb, idCol, vecCol, queryPred, k, cb, refine, maxQueryBatch)
-  }
-
-  /** Shared fused tail (encode → ADC → optional exact re-rank) for the
-    * trained and pinned-grid entry points.
-    */
-  private def serveFused(emb: DataFrame, idCol: String, vecCol: String,
-                         queryPred: Column, k: Int, cb: Pq.Codebooks,
-                         refine: Int, maxQueryBatch: Int): DataFrame = {
-    val codes = encode(emb, idCol, vecCol, cb)
-      .select(col(idCol).cast("long").as("n_id"), col("code"))
-    val queries = emb.filter(queryPred)
-      .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-    if (refine <= 1) Pq.adcTopK(codes, cb, queries, k, maxQueryBatch)
-    else {
-      val shortlist = Pq.adcTopK(codes, cb, queries, k * refine, maxQueryBatch)
-      val cv = emb.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-      Similarity.rerankTopK(
-        shortlist.select(col("q_id"), col("n_id"))
-          .join(queries, Seq("q_id")).join(cv, Seq("n_id"))
-          .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec")), k)
-    }
+    Pq.serveCodes(emb, idCol, vecCol, queryPred, k, cb,
+      encode(emb, idCol, vecCol, cb), None, refine, MaxQueryBatch)
   }
 
   /** The uniform grid `centroid(s)(j) = lo + j·delta` for every dimension
@@ -185,14 +169,11 @@ object Sq {
     */
   def sqTopKWithGrid(emb: DataFrame, idCol: String, vecCol: String,
                      queryPred: Column, k: Int, dim: Int, lo: Double,
-                     delta: Double, levels: Int, refine: Int = 1,
-                     maxQueryBatch: Int = 4096): DataFrame = {
-    require(refine >= 1, s"refine must be >= 1, got $refine")
-    require(Seq("bigint", "int", "smallint").contains(
-      emb.schema(idCol).dataType.simpleString),
-      s"sqTopKWithGrid needs an integral id column, got ${emb.schema(idCol).dataType}")
-    serveFused(emb, idCol, vecCol, queryPred, k,
-      gridCodebooks(dim, lo, delta, levels), refine, maxQueryBatch)
+                     delta: Double, levels: Int, refine: Int = 1): DataFrame = {
+    Pq.requireServable(emb, idCol, refine, "sqTopKWithGrid")
+    val cb = gridCodebooks(dim, lo, delta, levels)
+    Pq.serveCodes(emb, idCol, vecCol, queryPred, k, cb,
+      encode(emb, idCol, vecCol, cb), None, refine, MaxQueryBatch)
   }
 
   /** Persist grid + codes in the EXACT [[Pq.buildPqIndex]] layout
@@ -204,6 +185,7 @@ object Sq {
   def buildSqIndex(emb: DataFrame, idCol: String, vecCol: String,
                    indexDir: String, levels: Int = 256,
                    seed: Long = 42L): Pq.Codebooks = {
+    Dedup.requireIntegralId(emb, idCol, "buildSqIndex")
     val cb = train(emb, idCol, vecCol, levels, seed)
     Pq.writeCodebooks(emb.sparkSession, cb, indexDir)
     encode(emb, idCol, vecCol, cb)
@@ -218,12 +200,11 @@ object Sq {
     * artifact layouts are identical) with the SQ-sized query-batch cap.
     */
   def sqTopKFromIndex(queries: DataFrame, idCol: String, vecCol: String,
-                      indexDir: String, k: Int,
-                      maxQueryBatch: Int = 4096): DataFrame = {
+                      indexDir: String, k: Int): DataFrame = {
     val spark = queries.sparkSession
     val cb = Pq.loadCodebooks(spark, indexDir)
-    Pq.adcTopK(spark.read.parquet(s"$indexDir/codes"), cb,
+    Pq.adcScan(spark.read.parquet(s"$indexDir/codes"), cb,
       queries.select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec")),
-      k, maxQueryBatch)
+      k, None, MaxQueryBatch)
   }
 }

@@ -120,7 +120,7 @@ object StreamDedup {
     * `Dedup.buildLshIndex` artifact: no corpus shingling at ingest time —
     * the executed plan is the stream side's map-side signatures joined to
     * two parquet reads (buckets, verify arrays). Band parameters (n,
-    * bands, rowsPerBand, seed) come from the index's own `params` table,
+    * bands, rowsPerBand, seed) come from the index's own `params` file,
     * so probe signatures always match the stored buckets — a drifted
     * parameter would otherwise yield silent zero recall, the failure mode
     * this contract removes. Same output and recall contract as the fused

@@ -124,14 +124,17 @@ class IvfIndexSpec extends SparkSpec {
     val emb = embeddings(300).cache(); emb.count()
     val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/ivf_spec/cap"
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nlist = 16, seed = 42L)
+    // MaxQueryBatch + 1 synthetic queries: the cap fires on the limited
+    // collect, before any query vector is read
+    val big = spark.range(Similarity.MaxQueryBatch + 1)
+      .select(col("id").as("vec_id"), array(lit(0.5f)).as("embedding"))
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfTopKFromIndex(emb, "vec_id", "embedding", dir, 10,
-        nprobe = 2, maxQueryBatch = 100)
+      Similarity.ivfTopKFromIndex(big, "vec_id", "embedding", dir, 10, nprobe = 2)
     }
-    assert(e.getMessage.contains("maxQueryBatch"), e.getMessage)
-    // at or under the cap the same call serves normally
+    assert(e.getMessage.contains("MaxQueryBatch"), e.getMessage)
+    // under the cap the same call serves normally
     assert(Similarity.ivfTopKFromIndex(emb.filter(col("vec_id") < 5),
-      "vec_id", "embedding", dir, 10, nprobe = 2, maxQueryBatch = 100)
+      "vec_id", "embedding", dir, 10, nprobe = 2)
       .count() > 0)
     emb.unpersist()
   }

@@ -135,7 +135,7 @@ class PlanGuardSpec extends SparkSpec {
       "TextOps.scala"       -> 1,
       // train: the deterministic codebook sample (sampleSize rows, the
       // k-means|| candidate-cap precedent); collectQueries: the query
-      // batch (loud maxQueryBatch cap, the ivfTopKFromIndex precedent);
+      // batch (loud MaxQueryBatch cap, the ivfTopKFromIndex precedent);
       // loadCodebooks: m·ksub rows; ivfPqTopKFromIndex: the nlist-row
       // centroid table
       "Pq.scala"            -> 4,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Pq, Similarity}
+import graft.operators.{Bq, Pq, Similarity, Sq}
 
 /** Product-quantization ANN (`Pq`): code geometry, determinism, recall
   * floors, exact-parity of the full-refine path, and build/serve parity.
@@ -311,5 +311,45 @@ class PqSpec extends SparkSpec {
         rotation = Some(r))) ==
       rows(Pq.pqTopKOpq(emb, "vec_id", "embedding", pred, 10, m = 8, ksub = 16,
         opqIters = 4)))
+  }
+
+  test("oversized query batches fail fast instead of collecting onto the driver") {
+    // MaxQueryBatch + 1 queries over a synthetic 2-dim corpus under one
+    // pinned 2-code subspace
+    val big = spark.range(Similarity.MaxQueryBatch + 1)
+      .select(col("id").as("vec_id"), array(lit(0.5f), lit(-0.5f)).as("embedding"))
+    val cb = Pq.Codebooks(m = 1, dsub = 2, ksub = 2,
+      Array(Array(Array(0.5, -0.5), Array(-0.5, 0.5))))
+    val e = intercept[IllegalArgumentException] {
+      Pq.pqTopKWithCodebooks(big, "vec_id", "embedding", lit(true), 10, cb)
+    }
+    assert(e.getMessage.contains("MaxQueryBatch"), e.getMessage)
+    // under the cap the same call serves normally
+    assert(Pq.pqTopKWithCodebooks(big, "vec_id", "embedding", col("vec_id") < 5, 10, cb)
+      .count() == 50)
+  }
+
+  test("a string id column fails loudly, naming the column, before any training pass") {
+    // ids are cast to long, so a string id would silently become a null
+    // id; the frame is empty, so a training pass run ahead of the check
+    // would fail on the empty sample instead
+    val strIds = emb.limit(0).withColumn("vec_id", col("vec_id").cast("string"))
+    val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/pq_spec/string_ids"
+    val pred = col("vec_id") < 5
+    val calls: Seq[(String, () => Any)] = Seq(
+      "pqTopK" -> (() => Pq.pqTopK(strIds, "vec_id", "embedding", pred, 10)),
+      "pqTopKOpq" -> (() => Pq.pqTopKOpq(strIds, "vec_id", "embedding", pred, 10)),
+      "sqTopK" -> (() => Sq.sqTopK(strIds, "vec_id", "embedding", pred, 10)),
+      "bqTopK" -> (() => Bq.bqTopK(strIds, "vec_id", "embedding", pred, 10)),
+      "bqTopKWithThresholds" -> (() => Bq.bqTopKWithThresholds(strIds, "vec_id",
+        "embedding", pred, 10, Array.fill(64)(0.0))),
+      "buildPqIndex" -> (() => Pq.buildPqIndex(strIds, "vec_id", "embedding", dir)),
+      "buildSqIndex" -> (() => Sq.buildSqIndex(strIds, "vec_id", "embedding", dir)),
+      "buildBqIndex" -> (() => Bq.buildBqIndex(strIds, "vec_id", "embedding", dir)),
+      "buildIvfPqIndex" -> (() => Pq.buildIvfPqIndex(strIds, "vec_id", "embedding", dir)))
+    calls.foreach { case (op, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(op) && e.getMessage.contains("'vec_id'"), e.getMessage)
+    }
   }
 }

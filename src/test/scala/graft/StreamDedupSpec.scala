@@ -153,7 +153,7 @@ class StreamDedupSpec extends SparkSpec {
     val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
     val incoming = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
     val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/lsh_spec/parity"
-    // non-default banding: serve parity then ALSO proves the params table
+    // non-default banding: serve parity then ALSO proves the params file
     // is honored (default-parameter probes against these buckets would
     // have near-zero recall, not equality)
     graft.operators.Dedup.buildLshIndex(corpus, "doc_id", "text", dir,
