@@ -16,8 +16,7 @@ import org.apache.spark.sql.SparkSession
   *  - each query runs in one `CacheScope.scoped` block, so the frames
   *    its operators pin are released before the next query; the cache is
   *    still cleared between queries, which also drops what the
-  *    `Tables`/`StreamDedup` registries persisted (they re-pin on their
-  *    next use);
+  *    `Tables` registry persisted (it re-pins on its next use);
   *  - two timed passes (second in REVERSE order so a throttling window's
   *    positional span cannot cover the same query twice), per-query
   *    MINIMUM reported: the host shows minutes-long throttling windows
@@ -47,8 +46,8 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
           None
       }
-    // also unpersists the Tables/StreamDedup registry entries, which
-    // re-pin themselves on next use
+    // also unpersists the Tables registry entries, which re-pin
+    // themselves on next use
     spark.catalog.clearCache()
     // between-measurement GC (outside the timed window): a heap full of
     // the PREVIOUS query's garbage (e.g. 1500 JPEG buffers before an

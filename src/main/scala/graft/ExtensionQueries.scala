@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.functions.MisraGries
 import graft.QueryDefs._
+import graft.streaming.{StreamDedup, StreamWindows}
 
 /** North-star extension operators (SURVEY.md §2.11 + training-data
   * pipeline requirements): dedup (exact / Jaccard / MinHash-LSH / SimHash),
@@ -38,18 +39,28 @@ object ExtensionQueries {
         sum(col("n_tokens")).as("total_tokens"))
   }
 
-  /** Build-once memo for the persisted IVF index: the serving contract is
-    * "index built by a prior batch job", so within one harness process the
-    * first invocation builds and every later one (e.g. the bench's second
-    * pass) probes only. Keyed by the scratch path, which is already
-    * per-(process, sf). `computeIfAbsent` is the build-COMPLETION barrier:
-    * a concurrent second caller blocks until the winning build finishes
-    * (a bare Set.add would let it probe a half-written index), and a
+  /** Build-once memo for the persisted artifacts the `*Dir` builders
+    * below serve from (indexes, labels, assignments): the serving
+    * contract is "artifact built by a prior batch job", so within one
+    * harness process the first invocation builds and every later one
+    * (e.g. the bench's second pass) serves only. Keyed by the scratch
+    * path, which is already per-(process, sf).
+    */
+  private val artifactsBuilt =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  /** `ioDir(d, leaf)`, built by `build` the first time this process asks
+    * for it. `computeIfAbsent` is the build-COMPLETION barrier: a
+    * concurrent second caller blocks until the winning build finishes (a
+    * bare Set.add would let it serve a half-written artifact), and a
     * failed build stores nothing, so the next invocation rebuilds instead
     * of serving truncated results.
     */
-  private val ivfIndexBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private def builtOnce(d: String, leaf: String)(build: String => Unit): String = {
+    val dir = QueryDefs.ioDir(d, leaf)
+    artifactsBuilt.computeIfAbsent(dir, _ => { build(dir); java.lang.Boolean.TRUE })
+    dir
+  }
 
   /** Memoized embeddings row count per sf dir (fixtures are immutable
     * within a harness process): `autoNlist` sizing must not re-scan the
@@ -84,90 +95,60 @@ object ExtensionQueries {
     "similarity_ivfpq_index",          // ivfPqIndexDir
     "similarity_ivfpq_residual")       // ivfPqResIndexDir
 
-  private def ivfIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivf_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ivfIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivf_index")(dir =>
       Similarity.buildIvfIndex(t(s, d, "embeddings"), "vec_id", "embedding",
-        dir, nlist = embNlist(s, d))
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+        dir, nlist = embNlist(s, d)))
 
-  /** Build-once memo for the persisted IVF-PQ index (same completion-
-    * barrier contract as [[ivfIndexDir]]): coarse buckets + PQ codes, the
+  /** The persisted IVF-PQ index: coarse buckets + PQ codes, the
     * compressed+pruned serving artifact.
     */
-  private def ivfPqIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivfpq_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ivfPqIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivfpq_index")(dir =>
       Pq.buildIvfPqIndex(t(s, d, "embeddings"), "vec_id", "embedding",
-        dir, nlist = embNlist(s, d))
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+        dir, nlist = embNlist(s, d)))
 
   /** The residual-coded sibling of [[ivfPqIndexDir]] (FAISS IVFADC
-    * shape): same memo contract, own directory.
+    * shape), in its own directory.
     */
-  private def ivfPqResIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivfpq_res_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ivfPqResIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivfpq_res_index")(dir =>
       Pq.buildIvfPqIndex(t(s, d, "embeddings"), "vec_id", "embedding",
-        dir, nlist = embNlist(s, d), residual = true)
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+        dir, nlist = embNlist(s, d), residual = true))
 
-  /** Build-once memo for the persisted MinHash-LSH index (text sibling of
-    * [[ivfIndexDir]], same completion-barrier contract): indexes the 90%
-    * reference split the ingest rows probe.
+  /** The persisted MinHash-LSH index (text sibling of [[ivfIndexDir]]):
+    * indexes the 90% reference split the ingest rows probe.
     */
-  private def lshIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "lsh_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def lshIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "lsh_index")(dir =>
       Dedup.buildLshIndex(
         t(s, d, "documents").filter(pmod(col("doc_id"), lit(10)) =!= 0),
-        "doc_id", "text", dir)
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+        "doc_id", "text", dir))
 
-  /** Build-once memo for the persisted OLD-corpus clustering LABELS — the
-    * build/serve split for the incremental-fold row (same pattern as the
-    * LSH/IVF indexes): a prior batch job clustered the 90% corpus once
-    * (star CC over its LSH pairs) and wrote (id, rep_id); every nightly
-    * fold reads the label table, never re-clusters the corpus.
+  /** The persisted OLD-corpus clustering LABELS — the build/serve split
+    * for the incremental-fold row (same pattern as the LSH/IVF indexes):
+    * a prior batch job clustered the 90% corpus once (star CC over its
+    * LSH pairs) and wrote (id, rep_id); every nightly fold reads the
+    * label table, never re-clusters the corpus.
     */
-  private def ccLabelsDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "cc_labels")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ccLabelsDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "cc_labels") { dir =>
       val oldDocs = t(s, d, "documents").filter(pmod(col("doc_id"), lit(10)) =!= 0)
       Dedup.connectedComponentsStar(oldDocs, "doc_id",
           Dedup.minHashLSH(oldDocs, "doc_id", "text", n = 2, threshold = 0.5))
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
-  /** Build-once memo for the IVF index over the 90% CORPUS split (the
-    * embedding ingest gate's static side — distinct from [[ivfIndexDir]],
-    * which indexes the full table for the ANN rows).
+  /** The IVF index over the 90% CORPUS split (the embedding ingest
+    * gate's static side — distinct from [[ivfIndexDir]], which indexes
+    * the full table for the ANN rows).
     */
-  private def ivfCorpusIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = QueryDefs.ioDir(d, "ivf_corpus_index")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+  private def ivfCorpusIndexDir(s: org.apache.spark.sql.SparkSession, d: String): String =
+    builtOnce(d, "ivf_corpus_index") { dir =>
       val corpus = t(s, d, "embeddings").filter(pmod(col("vec_id"), lit(10)) =!= 0)
       Similarity.buildIvfIndex(corpus, "vec_id", "embedding", dir,
         nlist = Similarity.autoNlist(corpus.count()))
-      java.lang.Boolean.TRUE
-    })
-    dir
-  }
+    }
 
   /** Shared DuckDB fragment: distinct word-bigram shingles per doc. */
   private val sqlBigrams =
@@ -198,6 +179,22 @@ object ExtensionQueries {
        |FROM documents d LEFT JOIN m ON m.sd = d.doc_id
        |WHERE d.doc_id % 10 = 0
        |ORDER BY d.doc_id""".stripMargin
+
+  /** Shared closed-form DuckDB oracle of the two streaming perceptual
+    * gates (`dedup_stream_image`, `dedup_stream_audio`): corpus docs with
+    * doc_id % 20 = 1 render the PREVIOUS id's pattern, so incoming doc d
+    * matches exactly [d % 20 = 0 and d+1 exists].
+    */
+  private val sqlStreamPlantedPair =
+    """SELECT d.doc_id,
+      |       CAST((SELECT COUNT(*) FROM documents x
+      |             WHERE x.doc_id = d.doc_id + 1
+      |               AND d.doc_id % 20 = 0) AS BIGINT) AS n_matches,
+      |       EXISTS(SELECT 1 FROM documents x
+      |              WHERE x.doc_id = d.doc_id + 1
+      |                AND d.doc_id % 20 = 0) AS is_dup
+      |FROM documents d WHERE d.doc_id % 10 = 0
+      |ORDER BY d.doc_id""".stripMargin
 
   /** Shared DuckDB oracle: exact bigram-Jaccard pairs at threshold 0.5 —
     * the ONE copy serving both `dedup_jaccard` and `dedup_minhash_lsh`
@@ -414,26 +411,37 @@ object ExtensionQueries {
        |ORDER BY w0.doc_id""".stripMargin
   }
 
-  /** Build-once memo for the pinned-centroid corpus ASSIGNMENT — the
-    * serve-side artifact of the streaming embedding gate (the same
-    * build/serve split as the LSH/IVF index dirs): a batch job assigns
-    * the 90% corpus to the pinned centroids ONCE and persists
-    * (c_id, c_vec, bucket); every gate session reads it back. The
-    * `dedup_stream_embedding_served` row times THIS configuration — the
-    * per-session steady state — while the `_pinned` row keeps timing
-    * build + serve as the cold-start contrast.
+  /** The pinned-centroid corpus ASSIGNMENT — the serve-side artifact of
+    * the streaming embedding gate (the same build/serve split as the
+    * LSH/IVF index dirs): a batch job assigns the 90% corpus to the
+    * pinned centroids ONCE and persists (c_id, c_vec, bucket); every gate
+    * session reads it back. The `dedup_stream_embedding_served` row times
+    * THIS configuration — the per-session steady state — while the
+    * `_pinned` row keeps timing build + serve as the cold-start contrast.
     */
   private def embedAssignDir(s: org.apache.spark.sql.SparkSession, d: String,
-                             cs: Seq[Seq[Double]]): String = {
-    val dir = QueryDefs.ioDir(d, "stream_embed_served_assign")
-    ivfIndexBuilt.computeIfAbsent(dir, _ => {
+                             cs: Seq[Seq[Double]]): String =
+    builtOnce(d, "stream_embed_served_assign") { dir =>
       val corpus = t(s, d, "embeddings")
         .filter(pmod(col("vec_id"), lit(10)) =!= 0)
-      graft.streaming.StreamDedup.assignCentroids(corpus, "vec_id", "embedding", cs)
+      StreamDedup.assignCentroids(corpus, "vec_id", "embedding", cs)
         .write.mode("overwrite").parquet(dir)
-      java.lang.Boolean.TRUE
-    })
-    dir
+    }
+
+  /** A streaming gate's fixture replay: rows of `table` with
+    * `idCol % 10 ≠ 0` are the static side, rows with `idCol % 10 = 0`
+    * replay as a file stream (`Tables.streamTable`) into `gate(static,
+    * incoming)`, and `StreamWindows.runToResult` drives the gate's keyed
+    * aggregate to completion and copies the result out of its sink.
+    */
+  private def replayGate(s: org.apache.spark.sql.SparkSession, d: String,
+                         table: String, idCol: String)(
+      gate: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val rows = t(s, d, table)
+    val incoming = graft.sources.Tables.streamTable(s, d, table, rows.schema)
+      .filter(pmod(col(idCol), lit(10)) === 0)
+    StreamWindows.runToResult(
+      gate(rows.filter(pmod(col(idCol), lit(10)) =!= 0), incoming), s"${table}_gate")
   }
 
   /** Shared EXACT oracle of the pinned streaming embedding gate —
@@ -512,6 +520,54 @@ object ExtensionQueries {
       Array.tabulate(8)(sub => Array.tabulate(src.length)(j =>
         Array.tabulate(8)(i => src(j)(sub * 8 + i)))))
 
+  /** The raw table's element accessor: element `idx` of `row.embedding`
+    * cast to DOUBLE, as both kernels read the stored floats. */
+  private def sqlEmbEl(row: String, idx: String): String =
+    s"CAST($row.embedding[$idx] AS DOUBLE)"
+
+  /** The PQ stages of a pinned-codebook replay (m=8, dsub=8, ksub=4):
+    * `src` is codebook source vectors `lo`..`lo+3` of `table` (column
+    * `vec`, code j = vec_id − lo); `ss` the subspaces; `sub`, `assign`
+    * and `codes` encode every row of `coded` per subspace by squared-L2
+    * argmin (ties to the lowest code); `cn` holds the codebook norms and
+    * `lutq` the lookup tables and norms of the queries `vec_id < 5` of
+    * `table`, both flattened to `(s·ksub + j)`-indexed lists so the
+    * subspace sums replay in the kernel's order. `el(row, idx)` reads an
+    * element of a `table` row as DOUBLE, `codedEl` one of a `coded` row.
+    */
+  private def sqlPqStages(table: String, vec: String,
+                          el: (String, String) => String, lo: Int)(
+      coded: String = table, codedEl: (String, String) => String = el): String =
+    s"""src AS (SELECT CAST(vec_id - $lo AS INTEGER) AS j, $vec
+       |        FROM $table WHERE vec_id BETWEEN $lo AND ${lo + 3}),
+       |ss AS (SELECT CAST(unnest(range(0, 8)) AS INTEGER) AS s),
+       |sub AS (
+       |  SELECT v.vec_id, ss.s, c.j,
+       |         list_sum(list_transform(range(1, 9), i ->
+       |           (${codedEl("v", "ss.s*8 + i")} - ${el("c", "ss.s*8 + i")})
+       |         * (${codedEl("v", "ss.s*8 + i")} - ${el("c", "ss.s*8 + i")}))) AS dist
+       |  FROM $coded v CROSS JOIN ss CROSS JOIN src c),
+       |assign AS (
+       |  SELECT vec_id, s, j FROM (
+       |    SELECT vec_id, s, j, row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, j) AS r
+       |    FROM sub) WHERE r = 1),
+       |codes AS (SELECT vec_id, list(j ORDER BY s) AS code FROM assign GROUP BY vec_id),
+       |cn AS (
+       |  SELECT list(n ORDER BY s, j) AS cn2 FROM (
+       |    SELECT ss.s, c.j,
+       |           list_sum(list_transform(range(1, 9), i ->
+       |             ${el("c", "ss.s*8 + i")} * ${el("c", "ss.s*8 + i")})) AS n
+       |    FROM ss CROSS JOIN src c)),
+       |lutq AS (
+       |  SELECT q_id, list(d ORDER BY s, j) AS lut, any_value(qn) AS qn FROM (
+       |    SELECT q.vec_id AS q_id, ss.s, c.j,
+       |           list_sum(list_transform(range(1, 9), i ->
+       |             ${el("q", "ss.s*8 + i")} * ${el("c", "ss.s*8 + i")})) AS d,
+       |           sqrt(list_sum(list_transform(range(1, 65), i ->
+       |             ${el("q", "CAST(i AS INTEGER)")} * ${el("q", "CAST(i AS INTEGER)")}))) AS qn
+       |    FROM $table q CROSS JOIN ss CROSS JOIN src c WHERE q.vec_id < 5)
+       |  GROUP BY q_id)""".stripMargin
+
   /** DuckDB replay of the pinned-codebook ADC serve (the
     * `similarity_pq_pinned` / `similarity_opq_pinned` oracle): rebuild
     * the codebooks from source vectors 100-103 (`rotated` additionally
@@ -540,38 +596,10 @@ object ExtensionQueries {
     val table = if (rotated) "rot" else "embeddings"
     // element accessor: the rot CTE already emits DOUBLE lists; the raw
     // table needs the float→double cast both kernels apply
-    def el(row: String, idx: String): String =
-      if (rotated) s"$row.r[$idx]" else s"CAST($row.embedding[$idx] AS DOUBLE)"
+    val el: (String, String) => String =
+      if (rotated) (row, idx) => s"$row.r[$idx]" else sqlEmbEl
     s"""WITH $pre
-       |src AS (SELECT CAST(vec_id - 100 AS INTEGER) AS j, ${if (rotated) "r" else "embedding"}
-       |        FROM $table WHERE vec_id BETWEEN 100 AND 103),
-       |ss AS (SELECT CAST(unnest(range(0, 8)) AS INTEGER) AS s),
-       |sub AS (
-       |  SELECT v.vec_id, ss.s, c.j,
-       |         list_sum(list_transform(range(1, 9), i ->
-       |           (${el("v", "ss.s*8 + i")} - ${el("c", "ss.s*8 + i")})
-       |         * (${el("v", "ss.s*8 + i")} - ${el("c", "ss.s*8 + i")}))) AS dist
-       |  FROM $table v CROSS JOIN ss CROSS JOIN src c),
-       |assign AS (
-       |  SELECT vec_id, s, j FROM (
-       |    SELECT vec_id, s, j, row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, j) AS r
-       |    FROM sub) WHERE r = 1),
-       |codes AS (SELECT vec_id, list(j ORDER BY s) AS code FROM assign GROUP BY vec_id),
-       |cn AS (
-       |  SELECT list(n ORDER BY s, j) AS cn2 FROM (
-       |    SELECT ss.s, c.j,
-       |           list_sum(list_transform(range(1, 9), i ->
-       |             ${el("c", "ss.s*8 + i")} * ${el("c", "ss.s*8 + i")})) AS n
-       |    FROM ss CROSS JOIN src c)),
-       |lutq AS (
-       |  SELECT q_id, list(d ORDER BY s, j) AS lut, any_value(qn) AS qn FROM (
-       |    SELECT q.vec_id AS q_id, ss.s, c.j,
-       |           list_sum(list_transform(range(1, 9), i ->
-       |             ${el("q", "ss.s*8 + i")} * ${el("c", "ss.s*8 + i")})) AS d,
-       |           sqrt(list_sum(list_transform(range(1, 65), i ->
-       |             ${el("q", "CAST(i AS INTEGER)")} * ${el("q", "CAST(i AS INTEGER)")}))) AS qn
-       |    FROM $table q CROSS JOIN ss CROSS JOIN src c WHERE q.vec_id < 5)
-       |  GROUP BY q_id),
+       |${sqlPqStages(table, if (rotated) "r" else "embedding", el, 100)()},
        |sims AS (
        |  SELECT l.q_id, o.vec_id AS n_id,
        |         round(list_sum(list_transform(range(0, 8), s -> l.lut[CAST(s*4 + o.code[s+1] + 1 AS INTEGER)]))
@@ -995,7 +1023,8 @@ object ExtensionQueries {
     // false positives are impossible at any recall).
     Q("dedup_stream_ingest", sqlStreamIngest) {
       (s, d) =>
-        graft.streaming.StreamDedup.ingestDedup(s, d)
+        replayGate(s, d, "documents", "doc_id")(
+            StreamDedup.dedupAgainstCorpus(_, _, "doc_id", "text"))
           .select(col("doc_id"), col("n_matches"), col("is_dup"))
           .orderBy(col("doc_id"))
     },
@@ -1012,18 +1041,16 @@ object ExtensionQueries {
     // other pattern pair sits ≥ Hamming 14 apart (the bijective-mix
     // contract multimodal_image_dedup pins). Stream ≡ batch in
     // StreamDedupSpec.
-    Q("dedup_stream_image",
-      """SELECT d.doc_id,
-        |       CAST((SELECT COUNT(*) FROM documents x
-        |             WHERE x.doc_id = d.doc_id + 1
-        |               AND d.doc_id % 20 = 0) AS BIGINT) AS n_matches,
-        |       EXISTS(SELECT 1 FROM documents x
-        |              WHERE x.doc_id = d.doc_id + 1
-        |                AND d.doc_id % 20 = 0) AS is_dup
-        |FROM documents d WHERE d.doc_id % 10 = 0
-        |ORDER BY d.doc_id""".stripMargin) {
+    Q("dedup_stream_image", sqlStreamPlantedPair) {
       (s, d) =>
-        graft.streaming.StreamDedup.imageIngestDedup(s, d)
+        val base = when(pmod(col("doc_id"), lit(20)) === 1, col("doc_id") - 1)
+          .otherwise(col("doc_id"))
+        def fp(docs: DataFrame): DataFrame = Multimodal.imageHashes(
+          Multimodal.synthesizePatternPng(docs.select(col("doc_id")), base),
+          "doc_id", col("png"))
+        replayGate(s, d, "documents", "doc_id")((corpus, incoming) =>
+          StreamDedup.fingerprintDedupAgainstCorpus(fp(corpus), fp(incoming),
+            "doc_id", "dhash"))
           .select(col("doc_id"), col("n_matches"), col("is_dup"))
           .orderBy(col("doc_id"))
     },
@@ -1038,18 +1065,17 @@ object ExtensionQueries {
     // split as dedup_stream_image; distinct patterns stay ≥ Hamming 4
     // apart (the bijective-mix contract multimodal_audio_dedup pins).
     // Stream ≡ batch in StreamDedupSpec.
-    Q("dedup_stream_audio",
-      """SELECT d.doc_id,
-        |       CAST((SELECT COUNT(*) FROM documents x
-        |             WHERE x.doc_id = d.doc_id + 1
-        |               AND d.doc_id % 20 = 0) AS BIGINT) AS n_matches,
-        |       EXISTS(SELECT 1 FROM documents x
-        |              WHERE x.doc_id = d.doc_id + 1
-        |                AND d.doc_id % 20 = 0) AS is_dup
-        |FROM documents d WHERE d.doc_id % 10 = 0
-        |ORDER BY d.doc_id""".stripMargin) {
+    Q("dedup_stream_audio", sqlStreamPlantedPair) {
       (s, d) =>
-        graft.streaming.StreamDedup.audioIngestDedup(s, d)
+        val isCopy = pmod(col("doc_id"), lit(20)) === 1
+        val base = when(isCopy, col("doc_id") - 1).otherwise(col("doc_id"))
+        val gain = when(isCopy, lit(2)).otherwise(lit(1))
+        def fp(docs: DataFrame): DataFrame = Multimodal.audioHashes(
+          Multimodal.synthesizePatternWav(docs.select(col("doc_id")), base, gain),
+          "doc_id", col("wav"))
+        replayGate(s, d, "documents", "doc_id")((corpus, incoming) =>
+          StreamDedup.fingerprintDedupAgainstCorpus(fp(corpus), fp(incoming),
+            "doc_id", "afp"))
           .select(col("doc_id"), col("n_matches"), col("is_dup"))
           .orderBy(col("doc_id"))
     },
@@ -1088,7 +1114,8 @@ object ExtensionQueries {
         |WHERE tn.doc_id % 10 = 0
         |ORDER BY doc_id""".stripMargin) {
       (s, d) =>
-        graft.streaming.StreamDedup.ingestDecontam(s, d)
+        replayGate(s, d, "documents", "doc_id")(
+            StreamDedup.decontamGate(_, _, "doc_id", "text"))
           .orderBy(col("doc_id"))
     },
 
@@ -1097,7 +1124,9 @@ object ExtensionQueries {
     // production ingest gate runs (batch builds, micro-batches probe).
     Q("dedup_stream_ingest_index", sqlStreamIngest) {
       (s, d) =>
-        graft.streaming.StreamDedup.ingestDedupFromIndex(s, d, lshIndexDir(s, d))
+        replayGate(s, d, "documents", "doc_id")((_, incoming) =>
+            StreamDedup.dedupAgainstLshIndex(s, incoming, "doc_id", "text",
+              lshIndexDir(s, d)))
           .select(col("doc_id"), col("n_matches"), col("is_dup"))
           .orderBy(col("doc_id"))
     },
@@ -1111,7 +1140,10 @@ object ExtensionQueries {
     // positives at any nprobe, and exactness at nprobe = nlist.
     Q.noOracle("dedup_stream_embedding") {
       (s, d) =>
-        graft.streaming.StreamDedup.embeddingIngestDedup(s, d)
+        replayGate(s, d, "embeddings", "vec_id")((corpus, incoming) =>
+            StreamDedup.embeddingDedupAgainstCorpus(corpus, incoming,
+              "vec_id", "embedding", nlist = Similarity.autoNlist(corpus.count()),
+              nprobe = 4))
           .orderBy(col("vec_id"))
     },
 
@@ -1120,8 +1152,9 @@ object ExtensionQueries {
     // row; StreamDedupSpec pins served ≡ fused.
     Q.noOracle("dedup_stream_embedding_index") {
       (s, d) =>
-        graft.streaming.StreamDedup.embeddingIngestDedupFromIndex(
-            s, d, ivfCorpusIndexDir(s, d))
+        replayGate(s, d, "embeddings", "vec_id")((_, incoming) =>
+            StreamDedup.embeddingDedupAgainstIvfIndex(s, incoming,
+              "vec_id", "embedding", ivfCorpusIndexDir(s, d), nprobe = 4))
           .orderBy(col("vec_id"))
     },
 
@@ -1134,10 +1167,20 @@ object ExtensionQueries {
     // nprobe stays with the trained rows' zero-FP/exactness tests.
     Q("dedup_stream_embedding_pinned", sqlStreamEmbedPinned) {
       (s, d) =>
-        graft.streaming.StreamDedup.embeddingIngestDedupPinned(s, d,
-            pinnedVecs(s, d, 100, 103).map(_.toSeq).toSeq,
-            nprobe = 2, threshold = 0.45)
-          .orderBy(col("vec_id"))
+        val cs = pinnedVecs(s, d, 100, 103).map(_.toSeq).toSeq
+        replayGate(s, d, "embeddings", "vec_id") { (corpus, incoming) =>
+          // serve-cost hygiene: the corpus assignment is derived ONCE and
+          // written to scratch parquet — the streaming query re-plans its
+          // static side per trigger, so a fused assignment would re-assign
+          // the WHOLE corpus every micro-batch. Flat layout: at gate scale
+          // the bucket-partitioned write/discovery overhead exceeds the
+          // pruning it buys (measured)
+          val dir = ioDir(d, "stream_embed_pinned_assign")
+          StreamDedup.assignCentroids(corpus, "vec_id", "embedding", cs)
+            .write.mode("overwrite").parquet(dir)
+          StreamDedup.embeddingDedupWithAssignments(s.read.parquet(dir), incoming,
+            "vec_id", "embedding", cs, nprobe = 2, threshold = 0.45)
+        }.orderBy(col("vec_id"))
     },
 
     // ---- SERVE-ONLY streaming embedding gate (persisted assignment) --------
@@ -1151,8 +1194,10 @@ object ExtensionQueries {
     Q("dedup_stream_embedding_served", sqlStreamEmbedPinned) {
       (s, d) =>
         val cs = pinnedVecs(s, d, 100, 103).map(_.toSeq).toSeq
-        graft.streaming.StreamDedup.embeddingIngestDedupServed(s, d,
-            embedAssignDir(s, d, cs), cs, nprobe = 2, threshold = 0.45)
+        replayGate(s, d, "embeddings", "vec_id")((_, incoming) =>
+            StreamDedup.embeddingDedupWithAssignments(
+              s.read.parquet(embedAssignDir(s, d, cs)), incoming,
+              "vec_id", "embedding", cs, nprobe = 2, threshold = 0.45))
           .orderBy(col("vec_id"))
     },
 
@@ -1574,19 +1619,8 @@ object ExtensionQueries {
     // keep rule is min-(centroid_sim, id) per group. k-means QUALITY
     // stays with SemDedupSpec's brute-parity contracts.
     Q("dedup_semantic_pinned",
-      s"""WITH RECURSIVE c AS (
-        |  SELECT CAST(vec_id - 100 AS INTEGER) AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65), i ->
-        |           (CAST(v.embedding[CAST(i AS INTEGER)] AS DOUBLE) - CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE))
-        |         * (CAST(v.embedding[CAST(i AS INTEGER)] AS DOUBLE) - CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN c),
-        |assign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket, row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
+      s"""WITH RECURSIVE $sqlPinnedDist,
+        |$sqlPinnedAssign,
         |pairs AS (
         |  SELECT sa.vec_id AS d1, sb.vec_id AS d2
         |  FROM assign sa JOIN assign sb ON sa.bucket = sb.bucket AND sa.vec_id < sb.vec_id
@@ -1963,17 +1997,9 @@ object ExtensionQueries {
         |${sqlPinnedProbe("vec_id < 5", 2)},
         |${sqlProbedSims("sims")}
         |${sqlTopKPage("sim", "sims")}""".stripMargin) {
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        // the pinned quantizer: four data-derived vectors, collected by
-        // contract (4·64 doubles — sketch-sized, the centroid convention)
-        val cs: Seq[Seq[Double]] = emb
-          .filter(col("vec_id") >= 100 && col("vec_id") <= 103)
-          .orderBy(col("vec_id")).select(col("embedding")).collect()
-          .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-        Similarity.ivfTopKWithCentroids(emb, "vec_id", "embedding",
-          col("vec_id") < 5, 10, cs, nprobe = 2)
-      }
+      (s, d) =>
+        Similarity.ivfTopKWithCentroids(t(s, d, "embeddings"), "vec_id", "embedding",
+          col("vec_id") < 5, 10, pinnedVecs(s, d, 100, 103).map(_.toSeq).toSeq, nprobe = 2)
     },
 
     // ---- IVF-PQ serve: partition-pruned scan of 32×-compressed codes -------
@@ -2011,52 +2037,10 @@ object ExtensionQueries {
     // contracts; served≡artifact parity (disk-built index vs in-memory
     // artifacts) is pinned in PqSpec.
     Q("similarity_ivfpq_pinned",
-      s"""WITH cq AS (
-        |  SELECT CAST(vec_id - 100 AS INTEGER) AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65), i ->
-        |           (CAST(v.embedding[CAST(i AS INTEGER)] AS DOUBLE) - CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE))
-        |         * (CAST(v.embedding[CAST(i AS INTEGER)] AS DOUBLE) - CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN cq c),
-        |bassign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket, row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
-        |probe AS (
-        |  SELECT vec_id AS q_id, bucket FROM (
-        |    SELECT vec_id, bucket, row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id < 5) WHERE r <= 2),
-        |src AS (SELECT CAST(vec_id - 104 AS INTEGER) AS j, embedding FROM embeddings
-        |        WHERE vec_id BETWEEN 104 AND 107),
-        |ss AS (SELECT CAST(unnest(range(0, 8)) AS INTEGER) AS s),
-        |sub AS (
-        |  SELECT v.vec_id, ss.s, c.j,
-        |         list_sum(list_transform(range(1, 9), i ->
-        |           (CAST(v.embedding[ss.s*8 + i] AS DOUBLE) - CAST(c.embedding[ss.s*8 + i] AS DOUBLE))
-        |         * (CAST(v.embedding[ss.s*8 + i] AS DOUBLE) - CAST(c.embedding[ss.s*8 + i] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN ss CROSS JOIN src c),
-        |assign AS (
-        |  SELECT vec_id, s, j FROM (
-        |    SELECT vec_id, s, j, row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, j) AS r
-        |    FROM sub) WHERE r = 1),
-        |codes AS (SELECT vec_id, list(j ORDER BY s) AS code FROM assign GROUP BY vec_id),
-        |cn AS (
-        |  SELECT list(n ORDER BY s, j) AS cn2 FROM (
-        |    SELECT ss.s, c.j,
-        |           list_sum(list_transform(range(1, 9), i ->
-        |             CAST(c.embedding[ss.s*8 + i] AS DOUBLE) * CAST(c.embedding[ss.s*8 + i] AS DOUBLE))) AS n
-        |    FROM ss CROSS JOIN src c)),
-        |lutq AS (
-        |  SELECT q_id, list(d ORDER BY s, j) AS lut, any_value(qn) AS qn FROM (
-        |    SELECT q.vec_id AS q_id, ss.s, c.j,
-        |           list_sum(list_transform(range(1, 9), i ->
-        |             CAST(q.embedding[ss.s*8 + i] AS DOUBLE) * CAST(c.embedding[ss.s*8 + i] AS DOUBLE))) AS d,
-        |           sqrt(list_sum(list_transform(range(1, 65), i ->
-        |             CAST(q.embedding[CAST(i AS INTEGER)] AS DOUBLE) * CAST(q.embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS qn
-        |    FROM embeddings q CROSS JOIN ss CROSS JOIN src c WHERE q.vec_id < 5)
-        |  GROUP BY q_id),
+      s"""WITH $sqlPinnedDist,
+        |${sqlNearestBuckets("bassign", "vec_id", "", "= 1")},
+        |${sqlPinnedProbe("vec_id < 5", 2)},
+        |${sqlPqStages("embeddings", "embedding", sqlEmbEl, 104)()},
         |sims AS (
         |  SELECT l.q_id, o.vec_id AS n_id,
         |         round(list_sum(list_transform(range(0, 8), s -> l.lut[CAST(s*4 + o.code[s+1] + 1 AS INTEGER)]))
@@ -2087,75 +2071,33 @@ object ExtensionQueries {
     // Residual-codebook QUALITY (tighter reconstruction on clustered
     // corpora) stays with PqSpec's residual-MSE contract.
     Q("similarity_ivfpq_residual_pinned",
-      s"""WITH cq AS (
-        |  SELECT CAST(vec_id - 100 AS INTEGER) AS bucket, embedding FROM embeddings
-        |  WHERE vec_id BETWEEN 100 AND 103),
-        |ad AS (
-        |  SELECT v.vec_id, c.bucket,
-        |         list_sum(list_transform(range(1, 65), i ->
-        |           (CAST(v.embedding[CAST(i AS INTEGER)] AS DOUBLE) - CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE))
-        |         * (CAST(v.embedding[CAST(i AS INTEGER)] AS DOUBLE) - CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS dist
-        |  FROM embeddings v CROSS JOIN cq c),
-        |bassign AS (
-        |  SELECT vec_id, bucket FROM (
-        |    SELECT vec_id, bucket, row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad) WHERE r = 1),
-        |probe AS (
-        |  SELECT vec_id AS q_id, bucket FROM (
-        |    SELECT vec_id, bucket, row_number() OVER (PARTITION BY vec_id ORDER BY dist, bucket) AS r
-        |    FROM ad WHERE vec_id < 5) WHERE r <= 2),
+      s"""WITH $sqlPinnedDist,
+        |${sqlNearestBuckets("bassign", "vec_id", "", "= 1")},
+        |${sqlPinnedProbe("vec_id < 5", 2)},
         |res AS (
         |  SELECT v.vec_id, b.bucket,
         |         list_transform(range(1, 65), i ->
         |           CAST(v.embedding[CAST(i AS INTEGER)] AS DOUBLE) - CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE)) AS rv
         |  FROM embeddings v
         |  JOIN bassign b ON b.vec_id = v.vec_id
-        |  JOIN cq c ON c.bucket = b.bucket),
-        |src AS (SELECT CAST(vec_id - 104 AS INTEGER) AS j, embedding FROM embeddings
-        |        WHERE vec_id BETWEEN 104 AND 107),
-        |ss AS (SELECT CAST(unnest(range(0, 8)) AS INTEGER) AS s),
-        |sub AS (
-        |  SELECT v.vec_id, ss.s, c.j,
-        |         list_sum(list_transform(range(1, 9), i ->
-        |           (v.rv[CAST(ss.s*8 + i AS INTEGER)] - CAST(c.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE))
-        |         * (v.rv[CAST(ss.s*8 + i AS INTEGER)] - CAST(c.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE)))) AS dist
-        |  FROM res v CROSS JOIN ss CROSS JOIN src c),
-        |assign AS (
-        |  SELECT vec_id, s, j FROM (
-        |    SELECT vec_id, s, j, row_number() OVER (PARTITION BY vec_id, s ORDER BY dist, j) AS r
-        |    FROM sub) WHERE r = 1),
-        |codes AS (SELECT vec_id, list(j ORDER BY s) AS code FROM assign GROUP BY vec_id),
-        |cn AS (
-        |  SELECT list(n ORDER BY s, j) AS cn2 FROM (
-        |    SELECT ss.s, c.j,
-        |           list_sum(list_transform(range(1, 9), i ->
-        |             CAST(c.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE) * CAST(c.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE))) AS n
-        |    FROM ss CROSS JOIN src c)),
+        |  JOIN c ON c.bucket = b.bucket),
+        |${sqlPqStages("embeddings", "embedding", sqlEmbEl, 104)("res", (row, idx) => s"$row.rv[$idx]")},
         |cbn AS (
         |  SELECT bucket, list_sum(list_transform(range(1, 65), i ->
         |           CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE) * CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE))) AS cb2
-        |  FROM cq),
+        |  FROM c),
         |crs AS (
         |  SELECT bucket, list(x ORDER BY s, j) AS crx FROM (
         |    SELECT cq.bucket, ss.s, c.j,
         |           list_sum(list_transform(range(1, 9), i ->
-        |             CAST(cq.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE) * CAST(c.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE))) AS x
-        |    FROM cq CROSS JOIN ss CROSS JOIN src c)
+        |             CAST(cq.embedding[ss.s*8 + i] AS DOUBLE) * CAST(c.embedding[ss.s*8 + i] AS DOUBLE))) AS x
+        |    FROM c AS cq CROSS JOIN ss CROSS JOIN src c)
         |  GROUP BY bucket),
         |qcb AS (
         |  SELECT q.vec_id AS q_id, c.bucket,
         |         list_sum(list_transform(range(1, 65), i ->
         |           CAST(q.embedding[CAST(i AS INTEGER)] AS DOUBLE) * CAST(c.embedding[CAST(i AS INTEGER)] AS DOUBLE))) AS qc
-        |  FROM embeddings q CROSS JOIN cq c WHERE q.vec_id < 5),
-        |lutq AS (
-        |  SELECT q_id, list(d ORDER BY s, j) AS lut, any_value(qn) AS qn FROM (
-        |    SELECT q.vec_id AS q_id, ss.s, c.j,
-        |           list_sum(list_transform(range(1, 9), i ->
-        |             CAST(q.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE) * CAST(c.embedding[CAST(ss.s*8 + i AS INTEGER)] AS DOUBLE))) AS d,
-        |           sqrt(list_sum(list_transform(range(1, 65), i ->
-        |             CAST(q.embedding[CAST(i AS INTEGER)] AS DOUBLE) * CAST(q.embedding[CAST(i AS INTEGER)] AS DOUBLE)))) AS qn
-        |    FROM embeddings q CROSS JOIN ss CROSS JOIN src c WHERE q.vec_id < 5)
-        |  GROUP BY q_id),
+        |  FROM embeddings q CROSS JOIN c WHERE q.vec_id < 5),
         |sims AS (
         |  SELECT l.q_id, o.vec_id AS n_id,
         |         round(list_sum(list_concat([w.qc], list_transform(range(0, 8), s ->

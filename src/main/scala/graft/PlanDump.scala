@@ -37,7 +37,7 @@ object PlanDump {
             System.err.println(s"[plandump] wrote ${n}_$suffix.txt")
           } catch { case scala.util.control.NonFatal(e) =>
             System.err.println(s"[plandump] $n FAILED: $e")
-          } finally spark.catalog.clearCache() // drop the Tables/StreamDedup registry caches
+          } finally spark.catalog.clearCache() // drop the Tables registry caches
       }
     }
     spark.stop()

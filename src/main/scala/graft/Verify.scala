@@ -34,8 +34,8 @@ object Verify {
         Seq(failed(name)).toDF("spark_error")
           .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // the row's pins died with its scope; this drops the Tables and
-      // StreamDedup registry caches, which re-pin themselves on next use
+      // the row's pins died with its scope; this drops the Tables
+      // registry caches, which re-pin themselves on next use
       spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

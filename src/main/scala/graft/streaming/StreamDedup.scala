@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{Dedup, Similarity}
 
 /** Incremental ingest dedup (SURVEY.md §2.9 × §2.11): documents arriving
@@ -34,62 +31,13 @@ import graft.operators.{Dedup, Similarity}
   * (`Dedup.minHashLSH` on the accepted batch); this operator answers
   * "is this new doc a near-dup of anything we already have", which is the
   * decision an ingest gate actually makes.
+  *
+  * Every gate here takes frames: a streaming or batch `incoming` and a
+  * static corpus, index or eval side. Loading and replaying data is the
+  * caller's job; the catalog rows replay each fixture's 90/10 split
+  * through `ExtensionQueries.replayGate` and `StreamWindows.runToResult`.
   */
 object StreamDedup {
-
-  /** Memoized persisted eval-gram sets for [[decontamGate]], keyed by
-    * (session, canonicalized eval plan, n) — structural plan equality, so
-    * two gates over the same benchmark frame share ONE MEMORY_AND_DISK
-    * cache (and one guard count) instead of accumulating copies per
-    * construction. Entries are frame-sized handles; the cached DATA obeys
-    * the maxEvalGrams bound.
-    *
-    * Lifecycle: an entry whose persisted blocks were dropped (a
-    * `clearCache()`, explicit unpersist, or executor loss) is REBUILT on
-    * the next construction — re-derived, re-persisted, and re-counted, so
-    * the broadcast-size guard always reflects the data the gate will
-    * actually ship (an eval source that grew under the same canonicalized
-    * plan — overwritten parquet path, refreshed table — is re-guarded,
-    * not served from the stale snapshot). [[clearMemo]] evicts
-    * explicitly; entries of STOPPED sessions are swept on every
-    * construction, so a long-lived JVM cycling sessions (test suites,
-    * notebook servers) does not retain dead sessions or their plans.
-    */
-  private val evalGramCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    (DataFrame, Long)]()
-
-  /** Drop every memoized eval-gram cache (unpersisting each): the next
-    * gate construction re-derives, re-persists, and re-guards. Call after
-    * mutating an eval source in place (same path/plan, new data) to force
-    * the rebuild immediately rather than at the next block drop.
-    */
-  def clearMemo(): Unit = {
-    val it = evalGramCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      it.remove()
-      try e.getValue._1.unpersist()
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
-
-  /** Entry count (test observability for the eviction contracts). */
-  private[graft] def memoSize: Int = evalGramCache.size()
-
-  /** Sweep entries whose session has been stopped — their cached blocks
-    * are gone with the session's executors, and keeping the keys would
-    * strongly retain the stopped session (and its analyzed plan) for the
-    * JVM lifetime.
-    */
-  private def sweepDeadSessions(): Unit = {
-    val it = evalGramCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
-    }
-  }
-
-  private val nameSeq = new AtomicLong(0)
 
   /** Flag every incoming document against the reference corpus.
     *
@@ -276,86 +224,6 @@ object StreamDedup {
       .withColumn("is_dup", col("n_matches") > 0)
   }
 
-  /** The embeddings fixture split 90/10 into corpus and replayed stream,
-    * flagged via [[embeddingDedupAgainstCorpus]] with the √N-sized
-    * quantizer — the catalog/bench entry point.
-    */
-  def embeddingIngestDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val corpus = emb.filter(pmod(col("vec_id"), lit(10)) =!= 0)
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "embeddings", emb.schema)
-      .filter(pmod(col("vec_id"), lit(10)) === 0)
-    val nlist = Similarity.autoNlist(corpus.count())
-    val flagged = embeddingDedupAgainstCorpus(corpus, incoming,
-      "vec_id", "embedding", nlist = nlist, nprobe = 4)
-    runKeyed(flagged)
-  }
-
-  /** Pinned-quantizer sibling of [[embeddingIngestDedup]] — same split
-    * and output, the entry the hash-gated catalog row drives. Serve-cost
-    * hygiene: the corpus assignment is derived ONCE and persisted to
-    * scratch parquet, then the gate runs through
-    * [[embeddingDedupWithAssignments]] — without this the streaming
-    * query's re-planned static side re-assigned the WHOLE corpus on
-    * every micro-batch (a production gate would pay it every trigger).
-    * Assignment under pinned centroids is deterministic, so the result —
-    * and the catalog row's oracle hash — is unchanged.
-    */
-  def embeddingIngestDedupPinned(spark: SparkSession, sfDir: String,
-                                 cs: Seq[Seq[Double]], nprobe: Int,
-                                 threshold: Double): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val corpus = emb.filter(pmod(col("vec_id"), lit(10)) =!= 0)
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "embeddings", emb.schema)
-      .filter(pmod(col("vec_id"), lit(10)) === 0)
-    val dir = graft.QueryDefs.ioDir(sfDir, "stream_embed_pinned_assign")
-    // flat layout: the bucket-partitioned (pruning) deployment is the
-    // index-served row's job (buildIvfIndex already stores assignments
-    // bucket-partitioned); at gate scale the partitioned write/discovery
-    // overhead exceeds the pruning it buys (measured)
-    assignCentroids(corpus, "vec_id", "embedding", cs)
-      .write.mode("overwrite").parquet(dir)
-    runKeyed(embeddingDedupWithAssignments(spark.read.parquet(dir), incoming,
-      "vec_id", "embedding", cs, nprobe, threshold))
-  }
-
-  /** Index-served sibling of [[embeddingIngestDedup]]: same split and
-    * output, corpus side served from the persisted `buildIvfIndex`
-    * artifact at `indexDir` (the production gate configuration).
-    */
-  def embeddingIngestDedupFromIndex(spark: SparkSession, sfDir: String,
-                                    indexDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "embeddings", emb.schema)
-      .filter(pmod(col("vec_id"), lit(10)) === 0)
-    runKeyed(embeddingDedupAgainstIvfIndex(spark, incoming,
-      "vec_id", "embedding", indexDir, nprobe = 4))
-  }
-
-  /** SERVE-ONLY sibling of [[embeddingIngestDedupPinned]]: the corpus
-    * assignment is read back from `assignDir` — a PRE-BUILT
-    * [[assignCentroids]] parquet (the caller builds it once, out of
-    * band) — so this measures what a long-lived production gate pays
-    * PER SESSION: load the assignment, run the triggers. Identical
-    * output to the pinned row (same centroids ⇒ same deterministic
-    * assignment ⇒ same oracle hash); the pinned row keeps timing
-    * build + serve as the cold-start cost, this row times the steady
-    * state.
-    */
-  def embeddingIngestDedupServed(spark: SparkSession, sfDir: String,
-                                 assignDir: String, cs: Seq[Seq[Double]],
-                                 nprobe: Int, threshold: Double): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "embeddings", emb.schema)
-      .filter(pmod(col("vec_id"), lit(10)) === 0)
-    runKeyed(embeddingDedupWithAssignments(spark.read.parquet(assignDir),
-      incoming, "vec_id", "embedding", cs, nprobe, threshold))
-  }
-
   /** Perceptual-fingerprint sibling of [[dedupAgainstCorpus]] — the
     * MULTIMODAL ingest gate: incoming assets, already reduced to 64-bit
     * perceptual fingerprints (image dHash, audio fingerprint — any
@@ -401,121 +269,6 @@ object StreamDedup {
       .withColumn("is_dup", col("n_matches") > 0)
   }
 
-  /** The documents fixture as a synthetic IMAGE corpus (real PNG encode +
-    * decode + dHash per row, the `multimodal_image_dedup` construction),
-    * split into static corpus (doc_id % 10 ≠ 0) and a replayed incoming
-    * stream (doc_id % 10 = 0), gated through
-    * [[fingerprintDedupAgainstCorpus]] — the catalog/bench entry point.
-    * Corpus docs with doc_id % 20 = 1 render the PREVIOUS id's pattern,
-    * planting exactly one corpus near-dup for every OTHER incoming doc
-    * (those with doc_id % 20 = 0 and a successor in the table) while the
-    * % 20 = 10 half stays novel — closed-form oracle with both outcomes;
-    * all other pattern pairs sit ≥ Hamming 14 apart (the bijective-mix
-    * contract).
-    */
-  def imageIngestDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val base = when(pmod(col("doc_id"), lit(20)) === 1, col("doc_id") - 1)
-      .otherwise(col("doc_id"))
-    val corpusFp = graft.operators.Multimodal.imageHashes(
-      graft.operators.Multimodal.synthesizePatternPng(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0).select(col("doc_id")), base),
-      "doc_id", col("png"))
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "documents", docs.schema)
-      .filter(pmod(col("doc_id"), lit(10)) === 0)
-    val incomingFp = graft.operators.Multimodal.imageHashes(
-      graft.operators.Multimodal.synthesizePatternPng(
-        incoming.select(col("doc_id")), base),
-      "doc_id", col("png"))
-    runKeyed(fingerprintDedupAgainstCorpus(corpusFp, incomingFp, "doc_id", "dhash"))
-  }
-
-  /** Audio sibling of [[imageIngestDedup]]: the documents fixture as a
-    * synthetic WAV corpus (real RIFF encode + decode + gain-invariant
-    * fingerprint per row, the `multimodal_audio_dedup` construction),
-    * split static/stream on doc_id % 10 and gated through
-    * [[fingerprintDedupAgainstCorpus]]. The planted corpus near-dups
-    * (% 20 = 1 docs render the PREVIOUS id's pattern) play at GAIN 2 —
-    * the gate must match them through the fingerprint's gain invariance,
-    * exactly the robustness `multimodal_audio_dedup` pins batch-side.
-    * Same closed-form oracle as the image gate: incoming doc d matches
-    * iff d % 20 = 0 and d+1 exists; the % 20 = 10 half stays novel.
-    */
-  def audioIngestDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val isCopy = pmod(col("doc_id"), lit(20)) === 1
-    val base = when(isCopy, col("doc_id") - 1).otherwise(col("doc_id"))
-    val gain = when(isCopy, lit(2)).otherwise(lit(1))
-    val corpusFp = graft.operators.Multimodal.audioHashes(
-      graft.operators.Multimodal.synthesizePatternWav(
-        docs.filter(pmod(col("doc_id"), lit(10)) =!= 0).select(col("doc_id")),
-        base, gain),
-      "doc_id", col("wav"))
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "documents", docs.schema)
-      .filter(pmod(col("doc_id"), lit(10)) === 0)
-    val incomingFp = graft.operators.Multimodal.audioHashes(
-      graft.operators.Multimodal.synthesizePatternWav(
-        incoming.select(col("doc_id")), base, gain),
-      "doc_id", col("wav"))
-    runKeyed(fingerprintDedupAgainstCorpus(corpusFp, incomingFp, "doc_id", "afp"))
-  }
-
-  /** Complete-mode memory-sink runner for a KEYED streaming aggregate
-    * (same lifecycle as StreamWindows.runToResult; shared by both ingest
-    * paths).
-    */
-  private def runKeyed(flagged: DataFrame): DataFrame = {
-    val spark = flagged.sparkSession
-    val name = s"graft_stream_ingest_${nameSeq.incrementAndGet()}"
-    val q = flagged.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q.stop()
-    val sink = spark.table(name)
-    val rows = sink.collect()
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), sink.schema)
-  }
-
-  /** The documents fixture split into reference corpus (doc_id % 10 ≠ 0)
-    * and a replayed incoming stream (doc_id % 10 = 0), flagged against
-    * each other — the catalog/bench entry point. Complete-mode memory
-    * sink, `Trigger.AvailableNow`, result copied out and the sink view
-    * dropped (same lifecycle as StreamWindows.runToResult, which cannot
-    * be reused verbatim: this result is keyed, not windowed).
-    */
-  def ingestDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "documents", docs.schema)
-      .filter(pmod(col("doc_id"), lit(10)) === 0)
-    runKeyed(dedupAgainstCorpus(corpus, incoming, "doc_id", "text"))
-  }
-
-  /** Index-served sibling of [[ingestDedup]]: same split and output, but
-    * the corpus side is the persisted `buildLshIndex` artifact at
-    * `indexDir` — the configuration a production gate actually runs
-    * (index built once by batch, probed per micro-batch).
-    */
-  def ingestDedupFromIndex(spark: SparkSession, sfDir: String,
-                           indexDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "documents", docs.schema)
-      .filter(pmod(col("doc_id"), lit(10)) === 0)
-    runKeyed(dedupAgainstLshIndex(spark, incoming, "doc_id", "text", indexDir))
-  }
-
   /** Streaming DECONTAMINATION gate: incoming documents flagged against a
     * STATIC eval/benchmark window-hash set at exact-substring (sliding
     * n-token window) granularity — the ingest-time form of
@@ -538,9 +291,8 @@ object StreamDedup {
     * executor (that is the design — the benchmark side is small by
     * contract), so a caller who swaps the frames — or points `eval` at a
     * raw training corpus — would OOM the entire fleet, not one task. The
-    * gate therefore counts the distinct eval grams ONCE at build time
-    * (the eval side is static; the count is one pass over the small
-    * frame) and FAILS LOUDLY past `maxEvalGrams` (the
+    * gate therefore counts the distinct eval grams at build time (the
+    * eval side is static; the count is one pass over the small frame) and FAILS LOUDLY past `maxEvalGrams` (the
     * `maxCellsPerInterval` precedent: a guard the caller must consciously
     * raise, never a silent degradation). The default (2²⁴ ≈ 16.8M grams,
     * ~32 B of md5 key each — a few hundred MB broadcast) is generous for
@@ -548,59 +300,40 @@ object StreamDedup {
     * by orders of magnitude.
     *
     * NOTE: construction is EAGER — the guard runs one Spark job (a count
-    * over the eval side) at gate build, even when the returned frame is
-    * never executed; a caller constructing gates speculatively pays that
-    * count up front. The persisted eval gram set is MEMOIZED per
-    * (session, canonicalized eval plan, n), so constructing the gate
-    * repeatedly in one session (bench passes, several streaming queries
-    * over one benchmark suite) reuses a single cache — and a memo hit
-    * skips the guard job too — instead of accumulating one
-    * MEMORY_AND_DISK copy per construction. A memo entry is only served
-    * while its persisted blocks are still registered: after a
-    * `clearCache()` (or any unpersist) the next construction REBUILDS —
-    * re-deriving, re-persisting, and re-running the guard count — so an
-    * eval source that changed in place under the same canonicalized plan
-    * is re-guarded and re-snapshotted, never silently served stale.
-    * [[clearMemo]] forces that eviction immediately.
+    * over the eval side) at every gate build, even when the returned
+    * frame is never executed; a caller constructing gates speculatively
+    * pays that count up front.
+    *
+    * Scope contract: the distinct eval gram set is pinned with
+    * `CacheScope.pin`, so the call that collects owns it. Inside
+    * `CacheScope.scoped { … }` the guard count materializes it once and
+    * every micro-batch reads it back; a second construction over the
+    * same eval plan in the same scope reuses that cache (the guard then
+    * counts the cached rows), and the scope unpersists it on exit. With
+    * no scope open nothing is persisted and each micro-batch re-derives
+    * the set. Within one scope the set is a snapshot; a construction in a
+    * later scope re-derives and re-guards, so an eval source regrown in
+    * place is counted again.
     */
   def decontamGate(eval: DataFrame, incoming: DataFrame,
                    idCol: String, textCol: String, n: Int = 8,
                    maxEvalGrams: Long = 1L << 24): DataFrame = {
     import graft.operators.NgramSpans
     require(maxEvalGrams > 0, s"maxEvalGrams must be positive, got $maxEvalGrams")
-    sweepDeadSessions()
-    // persisted: the guard count materializes the SAME cache every
-    // micro-batch then reuses — without it each micro-batch re-derives
-    // the distinct eval gram set from text (measured doubling the gate's
-    // cost), and the guard count would add a third derivation. Bounded
-    // by the guard itself (≤ maxEvalGrams rows). `compute` (not
-    // computeIfAbsent) so an entry whose cache blocks were dropped is
-    // rebuilt atomically: persistence is the marker that the memoized
-    // nEval still describes the data — once the blocks are gone the
-    // source may have changed, and serving the old handle would both
-    // skip the size guard on the regrown data and pin a stale snapshot
-    val key = (eval.sparkSession, eval.queryExecution.analyzed.canonicalized, n)
-    val (evalGrams, nEval) = evalGramCache.compute(key, (_, prev) => {
-      if (prev != null &&
-          prev._1.storageLevel != org.apache.spark.storage.StorageLevel.NONE) prev
-      else {
-        val g = NgramSpans.windowHashArray(eval, idCol, textCol, n)
-          .select(explode(col("__grams")).as("__gram")).distinct()
-          .withColumn("__hit", lit(true))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (g, g.count())
-      }
-    })
-    if (nEval > maxEvalGrams) {
-      // don't leak (or keep serving) the oversized cache with the failure
-      evalGramCache.remove(key)
-      evalGrams.unpersist()
+    // pinned: without it each micro-batch re-derives the distinct eval
+    // gram set from text (measured doubling the gate's cost). Bounded by
+    // the guard itself (≤ maxEvalGrams rows)
+    val evalGrams = graft.CacheScope.pin(
+      NgramSpans.windowHashArray(eval, idCol, textCol, n)
+        .select(explode(col("__grams")).as("__gram")).distinct()
+        .withColumn("__hit", lit(true)))
+    val nEval = evalGrams.count()
+    if (nEval > maxEvalGrams)
       throw new IllegalArgumentException(
         s"decontamGate: eval window-hash set has $nEval distinct grams > " +
           s"maxEvalGrams=$maxEvalGrams — the eval side broadcasts to every " +
           "executor and must stay benchmark-sized; check the frames are not " +
           "swapped, or consciously raise the cap")
-    }
     NgramSpans.windowHashArray(incoming, idCol, textCol, n)
       .select(col(idCol), explode_outer(col("__grams")).as("__gram"))
       .join(broadcast(evalGrams), Seq("__gram"), "left")
@@ -608,20 +341,5 @@ object StreamDedup {
       .agg(count(col("__gram")).as("n_grams"),
         count(when(col("__hit"), 1)).as("n_hit_grams"))
       .withColumn("is_contaminated", col("n_hit_grams") > 0)
-  }
-
-  /** The documents fixture split into a static eval/benchmark side
-    * (doc_id % 10 ≠ 0) and a replayed incoming stream (doc_id % 10 = 0),
-    * gated at window granularity — the catalog/bench entry point (same
-    * split and sink lifecycle as [[ingestDedup]]).
-    */
-  def ingestDecontam(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val eval = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
-    val incoming = graft.sources.Tables
-      .streamTable(spark, sfDir, "documents", docs.schema)
-      .filter(pmod(col("doc_id"), lit(10)) === 0)
-    runKeyed(decontamGate(eval, incoming, "doc_id", "text"))
   }
 }

@@ -42,6 +42,7 @@ object StreamWindows {
     * watermark still exercises the state-store path. The (small) result
     * is copied out and the sink's temp view dropped, so repeated
     * invocations don't accumulate materialized tables on the driver.
+    * Also drives the keyed ingest gates of `StreamDedup` in the catalog.
     */
   def runToResult(stream: DataFrame, label: String): DataFrame = {
     val spark = stream.sparkSession

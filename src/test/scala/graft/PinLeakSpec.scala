@@ -17,7 +17,7 @@ class PinLeakSpec extends SparkSpec {
     "quantiles_per_group", "events_value_quantiles_exact",
     "histogram_equidepth_per_group", "pipeline_quality_tiers",
     "pipeline_token_budget", "text_tfidf_topk", "text_lm_score",
-    "dedup_semantic_pinned")
+    "dedup_semantic_pinned", "pipeline_stream_decontam")
 
   /** `persistentRdds` holds its RDDs weakly: draining the listener bus
     * (whose queued events still reference the last query) and a GC first
@@ -39,5 +39,16 @@ class PinLeakSpec extends SparkSpec {
       val left = second.diff(first).flatMap(spark.sparkContext.getPersistentRDDs.get)
       assert(second == first, s"$name: the second run left persisted ${left.map(_.toDebugString)}")
     }
+  }
+
+  test("one scoped run of the streaming decontamination gate leaves no persisted RDD") {
+    // the gate pins its eval-gram set into the caller's scope: nothing
+    // may outlive the run, not even on the first run of a session
+    val before = persisted
+    CacheScope.scoped(SparkEntry.queries("pipeline_stream_decontam")(spark, sf).collect())
+    val after = persisted
+    val left = after.diff(before).flatMap(spark.sparkContext.getPersistentRDDs.get)
+    assert(after.diff(before).isEmpty,
+      s"pipeline_stream_decontam left persisted ${left.map(_.toDebugString)}")
   }
 }

@@ -13,12 +13,16 @@ class StreamDedupSpec extends SparkSpec {
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).toSeq.sorted
 
+  /** A catalog row replaying the fixture's 90/10 split through its gate. */
+  private def row(name: String, dir: String = sf): org.apache.spark.sql.DataFrame =
+    SparkEntry.queries(name)(spark, dir)
+
   test("streamed ingest dedup equals the batch plan on the fixture split") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val corpus = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
     val incoming = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
     val batch = StreamDedup.dedupAgainstCorpus(corpus, incoming, "doc_id", "text")
-    val stream = StreamDedup.ingestDedup(spark, sf)
+    val stream = row("dedup_stream_ingest")
     assert(canon(stream) == canon(batch))
     // the stream must answer for EVERY incoming doc, dup or not
     assert(stream.count() == incoming.count())
@@ -29,7 +33,7 @@ class StreamDedupSpec extends SparkSpec {
     val eval = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
     val incoming = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
     val batch = StreamDedup.decontamGate(eval, incoming, "doc_id", "text")
-    val stream = StreamDedup.ingestDecontam(spark, sf)
+    val stream = row("pipeline_stream_decontam")
     assert(canon(stream) == canon(batch))
     // gram accounting agrees with the batch span operator's stats columns
     val spanStats = graft.operators.NgramSpans
@@ -55,7 +59,7 @@ class StreamDedupSpec extends SparkSpec {
     val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/stream_layout"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val stream = StreamDedup.ingestDecontam(spark, dir)
+    val stream = row("pipeline_stream_decontam", dir)
     assert(stream.count() ==
       docs.filter(pmod(col("doc_id"), lit(10)) === 0 && col("text").isNotNull).count(),
       "directory-layout stream must carry every incoming doc")
@@ -84,33 +88,41 @@ class StreamDedupSpec extends SparkSpec {
       incoming.filter(col("text").isNotNull).count())
   }
 
-  test("repeated gate constructions share ONE memoized eval-gram cache") {
+  test("two constructions in one scope pin ONE eval-gram set; the scope frees it") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val eval = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
     val incoming = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-    val first = StreamDedup.decontamGate(eval, incoming, "doc_id", "text")
-    first.count() // materialize the persisted gram set
-    val before = spark.sparkContext.getPersistentRDDs.size
-    // same eval plan (fresh DataFrame object — memo keys on the
-    // CANONICALIZED plan, not reference identity) must not add a cache
-    val again = StreamDedup.decontamGate(
-      docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), incoming, "doc_id", "text")
-    again.count()
-    assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "a second gate construction over the same eval frame added a cache copy")
-    // and the shared cache did not change answers
-    assert(again.collect().map(_.toSeq).toSet == first.collect().map(_.toSeq).toSet)
+    // weakly held: drain the bus and GC so only live persisted RDDs count
+    def persisted: Set[Int] = {
+      org.apache.spark.graftest.ListenerDrain.drain(spark.sparkContext)
+      System.gc()
+      spark.sparkContext.getPersistentRDDs.keySet.toSet
+    }
+    val before = persisted
+    val (first, again) = CacheScope.scoped {
+      val first = StreamDedup.decontamGate(eval, incoming, "doc_id", "text")
+        .collect().map(_.toSeq).toSet
+      // same eval plan, fresh DataFrame object: the cache manager matches
+      // the CANONICALIZED plan, so the second pin reuses the first's data
+      val again = StreamDedup.decontamGate(
+          docs.filter(pmod(col("doc_id"), lit(10)) =!= 0), incoming, "doc_id", "text")
+        .collect().map(_.toSeq).toSet
+      assert(persisted.diff(before).size == 1,
+        "two constructions over one eval plan must add exactly one persisted RDD")
+      (first, again)
+    }
+    assert(again == first)
+    assert(persisted.diff(before).isEmpty,
+      "the scope must unpersist the gate's eval-gram set")
   }
 
-  test("decontamGate re-guards and re-snapshots once its cache blocks are dropped") {
+  test("an eval source regrown in place trips the guard on the next construction") {
     import spark.implicits._
     // an eval source that GROWS IN PLACE under the same canonicalized plan
     // (overwritten parquet path — InMemoryFileIndex equality is by root
-    // path, so the memo key does not change) must be re-counted by the
-    // broadcast-size guard as soon as the persisted snapshot is gone; the
-    // pre-fix behavior re-persisted the stale frame and reused the
-    // first-construction count forever
-    val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/gate_memo/eval.parquet"
+    // path) must be re-counted by the broadcast-size guard: every
+    // construction counts, and the pinned snapshot died with its scope
+    val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/gate_regrow/eval.parquet"
     Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
       .toDF("doc_id", "text").write.mode("overwrite").parquet(dir)
     val incoming = Seq(
@@ -118,34 +130,18 @@ class StreamDedupSpec extends SparkSpec {
       (11L, "unrelated words that never appear in the evaluation suite x"))
       .toDF("doc_id", "text")
     val cap = 50L
-    val g1 = StreamDedup.decontamGate(spark.read.parquet(dir), incoming,
-      "doc_id", "text", n = 8, maxEvalGrams = cap)
-    assert(g1.filter(col("is_contaminated")).count() == 1L)
+    def gate(maxEvalGrams: Long) = StreamDedup.decontamGate(spark.read.parquet(dir),
+      incoming, "doc_id", "text", n = 8, maxEvalGrams = maxEvalGrams)
+    assert(CacheScope.scoped(gate(cap).filter(col("is_contaminated")).count()) == 1L)
     // grow the eval side past the cap, same path/plan
     spark.range(0, 200)
       .select(col("id").as("doc_id"),
         concat_ws(" ", (0 to 8).map(i => concat(lit(s"w$i"), col("id"))): _*).as("text"))
       .write.mode("overwrite").parquet(dir)
-    // while the old snapshot's blocks are registered the gate keeps
-    // serving it (documented); clearMemo forces the rebuild immediately
-    StreamDedup.clearMemo()
-    assert(StreamDedup.memoSize == 0, "clearMemo must drop every entry")
-    val e = intercept[IllegalArgumentException] {
-      StreamDedup.decontamGate(spark.read.parquet(dir), incoming,
-        "doc_id", "text", n = 8, maxEvalGrams = cap)
-    }
+    val e = intercept[IllegalArgumentException](CacheScope.scoped(gate(cap)))
     assert(e.getMessage.contains("maxEvalGrams"), e.getMessage)
-    // a clearCache() (blocks dropped, entry left) must ALSO rebuild and
-    // re-guard on the next construction — the pre-fix stale-reuse path
-    val g2 = StreamDedup.decontamGate(spark.read.parquet(dir), incoming,
-      "doc_id", "text", n = 8, maxEvalGrams = 1L << 20)
-    assert(g2.count() == 2L)
-    spark.catalog.clearCache()
-    val e2 = intercept[IllegalArgumentException] {
-      StreamDedup.decontamGate(spark.read.parquet(dir), incoming,
-        "doc_id", "text", n = 8, maxEvalGrams = cap)
-    }
-    assert(e2.getMessage.contains("maxEvalGrams"), e2.getMessage)
+    // and a raised cap serves the regrown data, not the first snapshot
+    assert(CacheScope.scoped(gate(1L << 20).count()) == 2L)
   }
 
   test("persisted LSH index serves identically to the fused plan; params ride the index") {
@@ -164,12 +160,9 @@ class StreamDedupSpec extends SparkSpec {
       "doc_id", "text", n = 3, bands = 6, rowsPerBand = 5, seed = 7L)
     assert(canon(served) == canon(fused))
     assert(served.count() == incoming.count())
-    // streaming entry point over the index agrees with the batch serve
-    val streamed = StreamDedup.ingestDedupFromIndex(spark, sf, {
-      val d2 = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/lsh_spec/default"
-      graft.operators.Dedup.buildLshIndex(corpus, "doc_id", "text", d2)
-      d2
-    })
+    // the streamed catalog row over its default-parameter index of the
+    // same split agrees with the batch serve
+    val streamed = row("dedup_stream_ingest_index")
     val fusedDefault = StreamDedup.dedupAgainstCorpus(corpus, incoming,
       "doc_id", "text")
     assert(canon(streamed) == canon(fusedDefault))
@@ -311,7 +304,7 @@ class StreamDedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
     // stream ≡ batch for the catalog configuration
-    val stream = StreamDedup.embeddingIngestDedup(spark, sf)
+    val stream = row("dedup_stream_embedding")
     val batch = StreamDedup.embeddingDedupAgainstCorpus(corpus, incoming,
       "vec_id", "embedding",
       nlist = graft.operators.Similarity.autoNlist(corpus.count()), nprobe = 4)
@@ -370,10 +363,8 @@ class StreamDedupSpec extends SparkSpec {
     // row (assignment pre-built out of band, memoized) and the pinned
     // row (build + serve each run) must be value-identical — both are
     // the same deterministic assignment under the same pinned centroids
-    val pinned = SparkEntry.queries("dedup_stream_embedding_pinned")(spark, sf)
-      .collect().map(_.toSeq).toSeq
-    val served = SparkEntry.queries("dedup_stream_embedding_served")(spark, sf)
-      .collect().map(_.toSeq).toSeq
+    val pinned = row("dedup_stream_embedding_pinned").collect().map(_.toSeq).toSeq
+    val served = row("dedup_stream_embedding_served").collect().map(_.toSeq).toSeq
     assert(served === pinned)
     assert(pinned.nonEmpty)
   }
@@ -393,7 +384,7 @@ class StreamDedupSpec extends SparkSpec {
       "doc_id", col("png"))
     val batch = StreamDedup.fingerprintDedupAgainstCorpus(
       corpusFp, incomingFp, "doc_id", "dhash")
-    val stream = StreamDedup.imageIngestDedup(spark, sf)
+    val stream = row("dedup_stream_image")
     assert(canon(stream) == canon(batch))
     // one row per incoming asset, and the fixture plants both outcomes
     assert(stream.count() ==
@@ -429,7 +420,7 @@ class StreamDedupSpec extends SparkSpec {
       "doc_id", col("wav"))
     val batch = StreamDedup.fingerprintDedupAgainstCorpus(
       corpusFp, incomingFp, "doc_id", "afp")
-    val stream = StreamDedup.audioIngestDedup(spark, sf)
+    val stream = row("dedup_stream_audio")
     assert(canon(stream) == canon(batch))
     // the planted near-dups play at GAIN 2 — a match proves the gate
     // flags through the fingerprint's volume invariance, not byte
