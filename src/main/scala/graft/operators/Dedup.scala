@@ -341,8 +341,8 @@ object Dedup {
       .select(coalesce(col("ra"), col("a")).as("d1"),
         coalesce(col("rb"), col("b")).as("d2"))
       .filter(col("d1") =!= col("d2"))
-    val edges = contracted.limit(MaxContractedEdges + 1).as[(Long, Long)].collect()
-    require(edges.length <= MaxContractedEdges,
+    val edges = org.apache.spark.sql.graftshim.Internals.collectCapped(
+      contracted.as[(Long, Long)], MaxContractedEdges)(
       s"incrementalComponents: the batch's contracted edge set exceeds " +
         s"$MaxContractedEdges rows — fold the ingest in smaller batches; " +
         "the touched subgraph is clustered on the driver")
@@ -487,33 +487,27 @@ object Dedup {
     * `train.join(flagged, anti)`, mirroring the exact operator.
     *
     * Scale shape (the asymmetric twin of [[minHashLSH]]'s self-join): the
-    * eval side is benchmark-sized by contract, so its band buckets AND its
-    * verify arrays BROADCAST; the train side computes band signatures
-    * map-side from its own shingle arrays and candidates emerge from a
-    * broadcast hash join — the 100 TB corpus is never self-joined and
-    * never shuffles its shingle sets anywhere (the only wide exchange is
-    * the per-doc array fold, linear in the corpus). Exact Jaccard is then
-    * verified on the (small) candidate set only, with recall governed by
-    * the banding curve: 1-(1-s^r)^b, e.g. 8×4 bands at s=0.8 → 0.93,
-    * s=0.97 → ~1.0.
+    * eval side is benchmark-sized by contract, so its in-memory
+    * [[lshIndex]] — band buckets AND verify arrays — BROADCASTS, and the
+    * train side runs the ingest gate's [[probeLshIndex]] against it: band
+    * signatures and shingle-hash arrays computed per row, candidates and
+    * their exact Jaccard from two broadcast hash joins. The 100 TB corpus
+    * is never self-joined and never shuffles its shingle sets or arrays;
+    * the only wide exchange is the final distinct over verified pairs.
+    * Both inputs hold one row per id (rows are not merged by id). Recall
+    * is governed by the banding curve: 1-(1-s^r)^b, e.g. 8×4 bands at
+    * s=0.8 → 0.93, s=0.97 → ~1.0.
     */
   def contaminationFuzzy(train: DataFrame, evalSet: DataFrame, idCol: String,
                          textCol: String, n: Int = 2, bands: Int = 8,
                          rowsPerBand: Int = 4, threshold: Double = 0.5,
                          seed: Long = 42L): DataFrame = {
-    graft.functions.VectorExprs.register(train.sparkSession) // native bandSigs
-    val p = LshParams(n, bands, rowsPerBand, seed)
-    val edocs = shingleIdArrays(evalSet, idCol, textCol, n)
-      .select(col(idCol).as("eval_id"), col("ids").as("e_ids"))
-    val tdocs = shingleIdArrays(train, idCol, textCol, n)
-    val cand = bandBuckets(tdocs, idCol, "ids", p)
-      .join(broadcast(bandBuckets(edocs, "eval_id", "e_ids", p)), Seq("band", "bsig"))
-      .select(col(idCol), col("eval_id")).distinct()
-    cand
-      .join(tdocs, Seq(idCol))
-      .join(broadcast(edocs), Seq("eval_id"))
-      .select(col(idCol), col("eval_id"), arrayJaccard(col("ids"), col("e_ids")).as("jacc"))
+    val e = lshIndex(evalSet, idCol, textCol, LshParams(n, bands, rowsPerBand, seed))
+    // a pair colliding in several bands verifies once per band; the
+    // distinct folds the identical repeats
+    probeLshIndex(LshIndex(broadcast(e.buckets), broadcast(e.arrays), e.params), train, idCol, textCol)
       .filter(col("jacc") >= threshold)
+      .select(col("s_id").as(idCol), col("c_id").as("eval_id"), col("jacc")).distinct()
   }
 
   /** All-pairs exact n-gram Jaccard ≥ `threshold` — prefix-filtered
@@ -558,8 +552,9 @@ object Dedup {
     * filtering cannot prune (small/shared vocabularies: every shingle is
     * common, so candidate joins explode — the fixture corpus has ~900
     * distinct bigrams across 5000 docs). Each doc becomes one sorted
-    * array of 64-bit shingle hashes (no global dictionary, so nothing
-    * needs a global pass), and a block nested-loop counts intersections
+    * array of 64-bit shingle hashes, built per row (no global dictionary,
+    * so nothing needs a global pass; `df` holds one row per id), and a
+    * block nested-loop counts intersections
     * with a linear merge over primitive arrays — no shuffle of candidate
     * pairs at all. Pair cost is the irreducible N²/2 merges; for corpora
     * too large for any all-pairs walk, `minHashLSH` is the sub-quadratic
@@ -572,9 +567,7 @@ object Dedup {
     requireIntegralId(df, idCol, "jaccardPairsDense")
     val spark = df.sparkSession
     import spark.implicits._
-    val docs = TextOps.shingleSet(df, idCol, textCol, n)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(xxhash64(col("sh")))).as("ids"))
+    val docs = shingleIdArrays(df, idCol, textCol, n)
       .select(col(idCol).cast("long"), col("ids"))
       .as[(Long, Array[Long])]
     def intersect(a: Array[Long], b: Array[Long]): Int = {
@@ -646,10 +639,11 @@ object Dedup {
     * numHashes = bands * rowsPerBand. Collision prob for similarity s is
     * 1-(1-s^rowsPerBand)^bands (e.g. 32 = 8×4: s=0.8 → 0.93, s=0.2 → 0.013).
     *
-    * Plan shape: ONE groupBy folds each doc to its sorted shingle-hash
-    * array; minhashes derive map-side from that array (array_min over a
-    * rehash lambda — no second shuffle of shingles); candidates come from
-    * the band-bucket self-join; verification joins only the (small)
+    * Plan shape: each doc's sorted shingle-hash array is a per-row
+    * projection (no shuffle, so `df` must hold one row per id — rows that
+    * share an id are not merged); band signatures derive map-side from
+    * that array (the native rehash-min kernel); candidates come from the
+    * band-bucket self-join; verification joins only the (small)
     * candidate set back to the per-doc arrays and counts the exact
     * intersection with the codegen'd built-in `array_intersect` (the
     * arrays are distinct by construction).
@@ -692,8 +686,9 @@ object Dedup {
     * continuous-ingest dedup gate: a 100 TB corpus is shingled, hashed,
     * and band-bucketed by a batch job; every later ingest batch routes
     * into the stored buckets without touching corpus text again (the
-    * corpus-side shingle pass is THE cost the split removes — the probe
-    * side is per-row map work).
+    * corpus-side shingle pass is THE cost the split removes). Both sides
+    * build a doc's array the same way, as per-row map work with no
+    * shuffle, so `corpus` holds one row per id (rows are not merged).
     *   `indexDir/buckets`  (c_id, bsig) Hive-partitioned by `band`;
     *   `indexDir/arrays`   (c_id, c_ids) sorted shingle-hash arrays for
     *                       the exact-Jaccard verify join;
@@ -774,21 +769,21 @@ object Dedup {
   }
 
   /** The index frames of a corpus, in memory — what [[buildLshIndex]]
-    * persists, and the static side of the fused ingest gate. Docs with no
-    * shingles have no buckets. */
+    * persists, and the static side of the fused ingest gate: a per-row
+    * projection of `corpus` (one row per id) with no shuffle. Docs with
+    * no shingles have no arrays and no buckets. */
   private[graft] def lshIndex(corpus: DataFrame, idCol: String, textCol: String,
                               p: LshParams): LshIndex = {
-    graft.functions.VectorExprs.register(corpus.sparkSession) // native bandSigs
     val arrays = shingleIdArrays(corpus, idCol, textCol, p.n)
       .select(col(idCol).as("c_id"), col("ids").as("c_ids"))
     LshIndex(bandBuckets(arrays, "c_id", "c_ids", p), arrays, p)
   }
 
   /** The batch-vs-index probe shared by the ingest gate
-    * (`StreamDedup.dedupAgainstLshIndex` and its fused form) and
-    * [[lshIndexPairs]]: each incoming ROW's shingle-hash array and band
-    * signatures computed MAP-SIDE, the (band, bsig) bucket join, exact
-    * Jaccard against the stored arrays. One row per (incoming doc, band
+    * (`StreamDedup.dedupAgainstLshIndex` and its fused form),
+    * [[lshIndexPairs]] and [[contaminationFuzzy]]: each incoming ROW's
+    * shingle-hash array and band signatures computed MAP-SIDE, the
+    * (band, bsig) bucket join, exact Jaccard against the stored arrays. One row per (incoming doc, band
     * collision): (s_id, c_id, jacc). Left joins keep no-candidate docs
     * alive with null c_id and jacc, and `explode_outer` of a null band
     * array keeps shingle-less docs. Streaming-legal by construction — no
@@ -798,19 +793,10 @@ object Dedup {
   private[graft] def probeLshIndex(index: LshIndex, incoming: DataFrame,
                                    idCol: String, textCol: String): DataFrame = {
     val p = index.params
-    graft.functions.VectorExprs.register(incoming.sparkSession) // native bandSigs
-    // `array_distinct` over hashes mirrors shingleSet's distinct-shingle
-    // contract (identical sets absent 64-bit collisions); the token array
-    // materializes first per the HOF re-evaluation rule in TextOps
-    val sh = if (p.n == 1) col("__toks") else TextOps.shingles(col("__toks"), p.n)
-    incoming
-      .select(col(idCol).as("s_id"), TextOps.tokens(col(textCol)).as("__toks"))
-      .select(col("s_id"),
-        array_sort(array_distinct(transform(sh, x => xxhash64(x)))).as("s_ids"))
-      .select(col("s_id"), col("s_ids"),
-        explode_outer(when(size(col("s_ids")) > 0, bandSigs(col("s_ids"), p))).as("bk"))
-      .select(col("s_id"), col("s_ids"),
-        col("bk.band").as("band"), col("bk.bsig").as("bsig"))
+    shingleHashes(incoming, idCol, textCol, p.n)
+      .select(col(idCol).as("s_id"), col("ids").as("s_ids"),
+        explode_outer(when(size(col("ids")) > 0, bandSigs(col("ids"), p))).as("bk"))
+      .select(col("s_id"), col("s_ids"), col("bk.band").as("band"), col("bk.bsig").as("bsig"))
       .join(index.buckets, Seq("band", "bsig"), "left")
       .join(index.arrays, Seq("c_id"), "left")
       .select(col("s_id"), col("c_id"),
@@ -893,20 +879,38 @@ object Dedup {
       struct(lit(b).as("band"), xxhash64(mins: _*).as("bsig"))
     }: _*)
 
-  /** Per-doc sorted shingle-hash arrays — the `ids` representation every
-    * LSH/dense path verifies against. */
-  private def shingleIdArrays(df: DataFrame, idCol: String,
-                              textCol: String, n: Int): DataFrame =
-    TextOps.shingleSet(df, idCol, textCol, n)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(xxhash64(col("sh")))).as("ids"))
+  /** Each row's sorted, distinct shingle-hash array `ids` — the
+    * representation every LSH/dense path bands and verifies against —
+    * built MAP-SIDE: (idCol, ids), one output row per input row, no
+    * shuffle. Rows are not merged by id, so callers hold one row per
+    * document. `array_distinct` over hashes mirrors [[TextOps.shingleSet]]'s
+    * distinct-shingle contract (identical sets absent 64-bit collisions);
+    * the token array materializes first per the HOF re-evaluation rule in
+    * TextOps. A shingle-less row keeps its empty array (a null text keeps
+    * a null one), which [[probeLshIndex]] needs to keep such docs alive.
+    */
+  private def shingleHashes(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
+    graft.functions.VectorExprs.register(df.sparkSession) // native shingles, bandSigs
+    val sh = if (n == 1) col("__toks") else TextOps.shingles(col("__toks"), n)
+    df.select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
+      .select(col(idCol), array_sort(array_distinct(transform(sh, x => xxhash64(x)))).as("ids"))
+  }
+
+  /** [[shingleHashes]] without shingle-less documents: the per-doc arrays
+    * of the batch LSH/dense paths, which would otherwise band or pair an
+    * empty set. The drop is a one-row generator, not a filter: the
+    * optimizer pushes a filter on `ids` below the projection that builds
+    * it, which then builds every array twice. */
+  private[graft] def shingleIdArrays(df: DataFrame, idCol: String,
+                                     textCol: String, n: Int): DataFrame =
+    shingleHashes(df, idCol, textCol, n)
+      .select(col(idCol), explode(when(size(col("ids")) > 0, array(col("ids")))).as("ids"))
 
   /** Shared LSH pipeline prefix: per-doc sorted shingle-hash arrays and
     * the band-collision candidate pairs over them.
     */
   private def lshStages(df: DataFrame, idCol: String, textCol: String,
                         n: Int, bands: Int, rowsPerBand: Int, seed: Long): (DataFrame, DataFrame) = {
-    graft.functions.VectorExprs.register(df.sparkSession) // native bandSigs
     val docs = graft.CacheScope.pin(shingleIdArrays(df, idCol, textCol, n))
     val buckets = bandBuckets(docs, idCol, "ids", LshParams(n, bands, rowsPerBand, seed))
     val cand = buckets.as("l").join(buckets.as("r"), Seq("band", "bsig"))

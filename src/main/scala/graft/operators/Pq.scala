@@ -412,8 +412,7 @@ object Pq {
     */
   private[operators] def collectQueries(queries: DataFrame, dim: Int,
                                         batchCap: Int): Array[(Long, Array[Double])] = {
-    val qRows = queries.limit(batchCap + 1).collect()
-    require(qRows.length <= batchCap,
+    val qRows = org.apache.spark.sql.graftshim.Internals.collectCapped(queries, batchCap)(
       s"PQ query batch exceeds MaxQueryBatch=$batchCap rows — " +
         "query batches are sketch-sized by contract; split the batch")
     val qs = qRows.map { r =>

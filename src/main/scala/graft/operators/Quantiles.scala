@@ -169,13 +169,10 @@ object Quantiles {
 
   /** Runs a per-(group, `__bin`) aggregate and brings its rows to the
     * driver, failing loudly past [[MaxHistRows]]. */
-  private[operators] def collectHist(hist: DataFrame, what: String): Array[Row] = {
-    val rows = hist.limit(MaxHistRows + 1).collect()
-    require(rows.length <= MaxHistRows,
+  private[operators] def collectHist(hist: DataFrame, what: String): Array[Row] =
+    org.apache.spark.sql.graftshim.Internals.collectCapped(hist, MaxHistRows)(
       s"$what histogram exceeds $MaxHistRows (group, bin) rows — coarsen the " +
         "grid (lower binScale); the driver cut table must stay sketch-sized")
-    rows
-  }
 
   /** The rank selector: for every value of column `group` of `binned`
     * (a [[withBin]] frame), the rows at the 1-based ranks `ranks(n)` of

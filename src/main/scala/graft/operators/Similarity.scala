@@ -937,12 +937,11 @@ object Similarity {
     // batch feeds both the probed-bucket collection and the candidate
     // join, and leaving it lazy would re-execute the whole query-side
     // subplan (often a filter over the full corpus) for each. The
-    // limit(max+1) makes the contract fail FAST: an oversized batch (say
-    // the whole corpus passed as "queries") raises a named error instead
-    // of silently collecting corpus-sized vectors onto the driver
+    // guarded collect makes the contract fail FAST: an oversized batch
+    // (say the whole corpus passed as "queries") raises a named error
+    // instead of silently collecting corpus-sized vectors onto the driver
     val qBatch = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val qRows = qBatch.limit(MaxQueryBatch + 1).collect()
-    require(qRows.length <= MaxQueryBatch,
+    val qRows = org.apache.spark.sql.graftshim.Internals.collectCapped(qBatch, MaxQueryBatch)(
       s"ivfTopKFromIndex query batch exceeds MaxQueryBatch=$MaxQueryBatch rows — " +
         "query batches are sketch-sized by contract; split the batch")
     val qLocal = spark.createDataFrame(

@@ -1,13 +1,17 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The single Spark-internal bridge in this engine: rebuilding a
-  * DataFrame from a transformed logical plan. `Dataset.ofRows` is
-  * `private[sql]`, so the bridge lives under the `org.apache.spark.sql`
-  * package; nothing else in graft reaches into Spark internals this way.
+  * DataFrame from a transformed logical plan, and the guarded driver
+  * collect. `Dataset.ofRows` and a Dataset's encoder are `private[sql]`,
+  * so the bridge lives under the `org.apache.spark.sql` package; nothing
+  * else in graft reaches into Spark internals this way.
   */
 object Internals {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -33,4 +37,32 @@ object Internals {
   def normalizeFloats(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** The rows of `ds`, a result bounded by contract, on the driver,
+    * failing loudly with `tooMany` when it holds more than `cap` rows —
+    * the one guarded driver collect. It runs as ONE SQL execution whose
+    * final stage is ONE job: each task returns at most `cap + 1` rows of
+    * its partition, and the driver keeps results only until their running
+    * total passes `cap` (the job still runs to its end), so it never holds
+    * more than about 2·(cap + 1) rows. (The obvious collect of
+    * `limit(cap + 1)` plans a `CollectLimitExec`, whose incremental scan
+    * runs one job over the first partition and a second over the rest
+    * whenever the result is under the cap.) Rows come back in partition
+    * order, as from `collect()`.
+    */
+  def collectCapped[T](ds: Dataset[T], cap: Int)(tooMany: => String): Array[T] = {
+    val d = ds.asInstanceOf[classic.Dataset[T]]
+    val enc = d.exprEnc.resolveAndBind(d.logicalPlan.output, d.sparkSession.sessionState.analyzer)
+    val rows = SQLExecution.withNewExecutionId(d.queryExecution, Some("collect")) {
+      val rdd = d.queryExecution.executedPlan.execute()
+      val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+      var held = 0L
+      d.sparkSession.sparkContext.runJob(rdd, (_: TaskContext, it: Iterator[InternalRow]) =>
+        it.take(cap + 1).map(_.copy()).toArray, parts.indices,
+        (i: Int, rs: Array[InternalRow]) => if (held <= cap) { parts(i) = rs; held += rs.length })
+      Option.when(held <= cap)(parts.flatten)
+    }
+    require(rows.isDefined, tooMany)
+    rows.get.map(enc.createDeserializer())(enc.clsTag)
+  }
 }

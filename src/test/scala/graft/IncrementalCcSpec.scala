@@ -169,4 +169,27 @@ class IncrementalCcSpec extends SparkSpec {
     val left = persistedBy(Dedup.lshIndexPairs(spark, newDocs, "doc_id", "text", dir).collect())
     assert(left.isEmpty, s"lshIndexPairs left persisted RDDs $left")
   }
+
+  /** The fixture's docs with `doc_id % 10 == r` as a batch, and a fresh
+    * index dir holding all the other docs. */
+  private def indexedBatch(r: Int): (org.apache.spark.sql.DataFrame, String) = {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_jobs").toString
+    Dedup.buildLshIndex(docs.filter(pmod(col("doc_id"), lit(10)) =!= r), "doc_id", "text", dir)
+    (docs.filter(pmod(col("doc_id"), lit(10)) === r), dir)
+  }
+
+  test("appendToLshIndex of a batch starts at most 2 jobs, one per table written") {
+    val (batch, dir) = indexedBatch(6)
+    val jobs = Listeners.jobsStarted(spark.sparkContext)(
+      Dedup.appendToLshIndex(batch, "doc_id", "text", dir))
+    assert(jobs <= 2, s"appendToLshIndex started $jobs jobs")
+  }
+
+  test("lshIndexPairs of a batch collects in at most 4 jobs") {
+    val (batch, dir) = indexedBatch(8)
+    val jobs = Listeners.jobsStarted(spark.sparkContext)(
+      Dedup.lshIndexPairs(spark, batch, "doc_id", "text", dir).collect())
+    assert(jobs <= 4, s"lshIndexPairs started $jobs jobs")
+  }
 }

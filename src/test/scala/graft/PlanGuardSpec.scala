@@ -91,8 +91,10 @@ class PlanGuardSpec extends SparkSpec {
     // file -> number of contract collects (each collects a SKETCH-sized
     // result: memoized sketch rows, progressive partials, REPL render,
     // streaming memory sink of a windowed or keyed aggregate, LAMP landmarks, IVF
-    // centroid table). Raising a count or adding a file is a design
-    // decision — justify it here alongside the contract note.
+    // centroid table). A call of the guarded collect
+    // `graftshim.Internals.collectCapped` counts as one collect. Raising a
+    // count or adding a file is a design decision — justify it here
+    // alongside the contract note.
     val allowed: Map[String, Int] = Map(
       "View.scala"          -> 2,
       "Repl.scala"          -> 1,
@@ -192,7 +194,7 @@ class PlanGuardSpec extends SparkSpec {
     val counts = scalaFiles(new java.io.File("src/main/scala"))
       .map { f =>
         val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        f.getName -> "\\.collect\\(\\)".r.findAllIn(src).length
+        f.getName -> "\\.collect\\(\\)|collectCapped\\(".r.findAllIn(src).length
       }
       .filter(_._2 > 0).toMap
     val violations = counts.filter { case (f, n) => n > allowed.getOrElse(f, 0) }

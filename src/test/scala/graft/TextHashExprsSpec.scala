@@ -152,6 +152,30 @@ class TextHashExprsSpec extends SparkSpec {
     assert(!n2.exists(t => Set(1L, 3L, 4L)(t._1))) // no bigram -> absent
   }
 
+  test("map-side shingle-hash arrays equal the explode+distinct+groupBy form incl. hostile docs") {
+    import spark.implicits._
+    // the shuffle form every LSH path built its arrays with before they
+    // became a per-row projection, kept as the parity reference
+    def grouped(df: org.apache.spark.sql.DataFrame, n: Int) =
+      TextOps.shingleSet(df, "doc_id", "text", n)
+        .groupBy(col("doc_id")).agg(sort_array(collect_list(xxhash64(col("sh")))).as("ids"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val fixture = rows(Dedup.shingleIdArrays(docs, "doc_id", "text", 2))
+    assert(fixture.nonEmpty && fixture == rows(grouped(docs, 2)))
+    // empty, spaces only, one token, a repeated bigram, tabs, NBSP (not a
+    // `\s` split point), null text, one bigram
+    val weird = Seq(
+      (1L, ""), (2L, "   "), (3L, "one"), (4L, "a b a b a b"), (5L, "a\tb\t\tc a"),
+      (6L, "a\u00a0b c a\u00a0b c"), (7L, null.asInstanceOf[String]), (8L, "x y"))
+      .toDF("doc_id", "text")
+    for (n <- Seq(1, 2, 3))
+      assert(rows(Dedup.shingleIdArrays(weird, "doc_id", "text", n)) == rows(grouped(weird, n)), s"n = $n")
+    val bigrams = rows(Dedup.shingleIdArrays(weird, "doc_id", "text", 2))
+    assert(!bigrams.keySet.exists(Set(1L, 2L, 3L, 7L)), s"shingle-less docs kept: ${bigrams.keySet}")
+    assert(bigrams(4L).size == 2 && bigrams(6L).size == 2 && bigrams(8L).size == 1)
+  }
+
   test("the native kernels participate in whole-stage codegen") {
     VectorExprs.register(spark)
     // the input must itself be codegen-friendly (a HOF-built array would
