@@ -3133,7 +3133,6 @@ object ExtensionQueries {
         |  SELECT l_returnflag, COUNT(*) AS cnt FROM lineitem GROUP BY 1)
         |ORDER BY value ASC NULLS FIRST""".stripMargin) {
       (s, d) =>
-        graft.functions.VectorExprs.register(s)
         t(s, d, "lineitem")
           .agg(MisraGries.sketch(col("l_returnflag"), 10).as("mg"))
           .select(explode(col("mg")).as(Seq("value", "cnt")))
@@ -3148,7 +3147,6 @@ object ExtensionQueries {
       """SELECT l_returnflag || '|' || l_linestatus AS value, COUNT(*) AS cnt
         |FROM lineitem GROUP BY 1 ORDER BY value ASC NULLS FIRST""".stripMargin) {
       (s, d) =>
-        graft.functions.VectorExprs.register(s)
         t(s, d, "lineitem")
           .agg(MisraGries.sketchStruct(
             Seq(col("l_returnflag"), col("l_linestatus")), 10).as("mg"))

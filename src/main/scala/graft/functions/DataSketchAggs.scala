@@ -15,6 +15,19 @@ import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType}
   * sketch-sized, serialized in Spark's own `CountMinSketch` wire format.
   */
 private[graft] object DataSketchAggs {
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.functions.lit
+  import org.apache.spark.sql.graftshim.Internals.{column, expression}
+
+  /** [[CmsSketchAgg]] over a LONG column. */
+  def cmsSketch(c: Column, depth: Int, width: Int, seed: Int): Column =
+    column(CmsSketchAgg(expression(c), expression(lit(depth)), expression(lit(width)),
+      expression(lit(seed))).toAggregateExpression())
+
+  /** [[CmsMergeAgg]] over a sketch-bytes column. */
+  def cmsMerge(c: Column): Column =
+    column(CmsMergeAgg(expression(c)).toAggregateExpression())
+
   /** Foldable int parameter check for the Count-Min builder. */
   def checkFoldableInt(e: Expression, name: String, param: String,
                        lo: Int, hi: Int): TypeCheckResult =

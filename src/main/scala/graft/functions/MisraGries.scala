@@ -1,19 +1,18 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{call_function, lit, struct}
+import org.apache.spark.sql.functions.{lit, struct}
+import org.apache.spark.sql.graftshim.Internals.{column, expression}
 
 /** Column forms of the Misra-Gries heavy-hitters sketch
   * ([[MisraGriesSketch]], `ref:P/sketches/FreqKSketch.java`, paper §4.4).
-  * Both require the graft native functions registered in the session —
-  * `VectorExprs.register(spark)` (the HeavyHitters entry points do this).
   */
 object MisraGries {
   /** mg_sketch(col) → map<key, bigint> of candidates, keyed by the
     * column's own type.
     */
   def sketch(c: Column, k: Int): Column =
-    call_function("graft_mg_sketch", c, lit(k))
+    column(MisraGriesSketch(expression(c), expression(lit(k))).toAggregateExpression())
 
   /** Tuple-key form — the reference sketches multi-column rows
     * (`ref:P/sketches/FreqKSketch.java` over a schema subset). The key is

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
@@ -7,6 +8,19 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Des
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+
+/** Column form of [[NextKPageAgg]]. */
+object NextKPage {
+  import org.apache.spark.sql.functions.{lit, typedlit}
+  import org.apache.spark.sql.graftshim.Internals.{column, expression}
+
+  /** The page of the `key` struct column: its k smallest distinct values
+    * under per-field `asc` flags, each with its count, in page order.
+    */
+  def page(key: Column, asc: Seq[Boolean], k: Int): Column =
+    column(NextKPageAgg(expression(key), expression(typedlit(asc)), expression(lit(k)))
+      .toAggregateExpression())
+}
 
 /** The NextK page sketch as a native bounded-buffer aggregate — the
   * reference's signature paging monoid (`ref:P/sketches/NextKSketch.java`,

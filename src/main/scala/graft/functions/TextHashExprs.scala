@@ -32,29 +32,21 @@ import org.apache.spark.unsafe.types.UTF8String
   *    evaluates).
   */
 object TextHashExprs {
+  import org.apache.spark.sql.functions.lit
+  import org.apache.spark.sql.graftshim.Internals.{column, expression}
 
-  /** Column forms (resolve against the session registry — callers
-    * register via [[VectorExprs.register]], which owns the one function
-    * table).
-    */
   def lshBandSigs(ids: Column, bands: Int, rowsPerBand: Int, seed: Long): Column =
-    org.apache.spark.sql.functions.call_function("graft_lsh_band_sigs", ids,
-      org.apache.spark.sql.functions.lit(bands),
-      org.apache.spark.sql.functions.lit(rowsPerBand),
-      org.apache.spark.sql.functions.lit(seed))
+    column(LshBandSigs(expression(ids), expression(lit(bands)),
+      expression(lit(rowsPerBand)), expression(lit(seed))))
 
   def tokenWindows(toks: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_token_windows", toks,
-      org.apache.spark.sql.functions.lit(n))
+    column(TokenWindows(expression(toks), expression(lit(n))))
 
   def tokenWindowMd5s(toks: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_token_window_md5s", toks,
-      org.apache.spark.sql.functions.lit(n))
+    column(TokenWindowMd5s(expression(toks), expression(lit(n))))
 
   def winnowMinMd5s(toks: Column, k: Int, window: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_winnow_min_md5s", toks,
-      org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(window))
+    column(WinnowMinMd5s(expression(toks), expression(lit(k)), expression(lit(window))))
 }
 
 /** MinHash band signatures over a doc's (sorted, distinct) shingle-hash

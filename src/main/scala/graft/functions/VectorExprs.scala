@@ -1,11 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Native Catalyst expression for the float-vector dot product — the hot
@@ -311,64 +310,21 @@ case class HyperplaneSignature(vec: Expression, planesExpr: Expression)
 }
 
 object VectorExprs {
+  import org.apache.spark.sql.functions.{lit, typedlit}
+  import org.apache.spark.sql.graftshim.Internals.{column, expression}
 
-  /** The ONE table of native functions — (name, arity, builder) — feeding
-    * both registration paths (`register` for ad-hoc sessions,
-    * `GraftExtensions` for cluster-wide injection), so the two can never
-    * diverge. Builders validate arity up front: raw SQL reaches them, and
-    * an IndexOutOfBoundsException names nothing.
-    */
-  val functionTable: Seq[(String, Int, Seq[Expression] => Expression)] = Seq(
-    ("graft_fdot", 2, exprs => FloatVectorDot(exprs.head, exprs(1))),
-    ("graft_nearest_centroids", 3, exprs => NearestCentroids(exprs.head, exprs(1), exprs(2))),
-    ("graft_hyperplane_sig", 2, exprs => HyperplaneSignature(exprs.head, exprs(1))),
-    ("graft_lsh_band_sigs", 4,
-      exprs => LshBandSigs(exprs.head, exprs(1), exprs(2), exprs(3))),
-    ("graft_token_windows", 2, exprs => TokenWindows(exprs.head, exprs(1))),
-    ("graft_token_window_md5s", 2, exprs => TokenWindowMd5s(exprs.head, exprs(1))),
-    ("graft_winnow_min_md5s", 3,
-      exprs => WinnowMinMd5s(exprs.head, exprs(1), exprs(2))),
-    // AggregateFunction builders — the analyzer wraps them in
-    // AggregateExpressions like any registered aggregate
-    ("graft_mg_sketch", 2, exprs => MisraGriesSketch(exprs.head, exprs(1))),
-    ("graft_nextk_page", 3, exprs => NextKPageAgg(exprs.head, exprs(1), exprs(2))),
-    ("graft_cms_sketch", 4,
-      exprs => CmsSketchAgg(exprs.head, exprs(1), exprs(2), exprs(3))),
-    ("graft_cms_merge", 1, exprs => CmsMergeAgg(exprs.head)))
-
-  /** Arity-checked builder for `name`. */
-  def builderFor(name: String, arity: Int,
-                 build: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    exprs => {
-      if (exprs.length != arity)
-        throw new IllegalArgumentException(
-          s"$name takes $arity arguments, got ${exprs.length}")
-      build(exprs)
-    }
-
-  /** Register the native vector functions in the session's registry
-    * (idempotent — createOrReplace semantics, cheap enough to call per
-    * query build).
-    */
-  def register(spark: SparkSession): Unit =
-    functionTable.foreach { case (name, arity, build) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builderFor(name, arity, build), "built-in")
-    }
-
-  /** Column form (resolves against the registry at analysis time). */
-  def fdot(a: Column, b: Column): Column = call_function("graft_fdot", a, b)
+  /** Dot product of two array<float> columns. */
+  def fdot(a: Column, b: Column): Column =
+    column(FloatVectorDot(expression(a), expression(b)))
 
   /** The `nprobe` nearest centroid indices for each vector (ascending by
     * distance, ties to the lower index).
     */
   def nearestCentroids(v: Column, centroids: Seq[Seq[Double]], nprobe: Int): Column =
-    call_function("graft_nearest_centroids", v,
-      org.apache.spark.sql.functions.typedlit(centroids),
-      org.apache.spark.sql.functions.lit(nprobe))
+    column(NearestCentroids(expression(v), expression(typedlit(centroids)),
+      expression(lit(nprobe))))
 
   /** Packed sign-bit LSH signature of `v` against the plane matrix. */
   def hyperplaneSig(v: Column, planes: Seq[Seq[Double]]): Column =
-    call_function("graft_hyperplane_sig", v,
-      org.apache.spark.sql.functions.typedlit(planes))
+    column(HyperplaneSignature(expression(v), expression(typedlit(planes))))
 }

@@ -94,7 +94,6 @@ object Bq {
   private def hammingTopK(codes: DataFrame, qs: Array[(Long, Array[Byte])],
                           dim: Int, k: Int): DataFrame = {
     val spark = codes.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val bc = spark.sparkContext.broadcast(qs)
     import spark.implicits._
     val scored = codes

@@ -851,9 +851,7 @@ object Dedup {
     * CodegenFallback), which dominated every LSH row's cost at sf0.1; the
     * native kernel is one primitive loop per row using Spark's own XXH64,
     * bit-identical by construction (parity-pinned in TextHashExprsSpec
-    * against [[bandSigsFold]]). Callers must have run
-    * `VectorExprs.register` on the session — every entry point in this
-    * file does.
+    * against [[bandSigsFold]]).
     */
   private def bandSigs(idsCol: Column, p: LshParams): Column =
     graft.functions.TextHashExprs.lshBandSigs(idsCol, p.bands, p.rowsPerBand, p.seed)
@@ -890,7 +888,6 @@ object Dedup {
     * a null one), which [[probeLshIndex]] needs to keep such docs alive.
     */
   private def shingleHashes(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession) // native shingles, bandSigs
     val sh = if (n == 1) col("__toks") else TextOps.shingles(col("__toks"), n)
     df.select(col(idCol), TextOps.tokens(col(textCol)).as("__toks"))
       .select(col(idCol), array_sort(array_distinct(transform(sh, x => xxhash64(x)))).as("ids"))

@@ -138,7 +138,6 @@ object HeavyHitters {
     * arbitrary-content strings flow through every phase faithfully.
     */
   def twoPhase(df: DataFrame, keys: Seq[String], k: Int, minCount: Long): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val cands = df
       .agg(graft.functions.MisraGries.sketchStruct(keys.map(col), k).as("mg"))
       .select(explode(map_keys(col("mg"))).as("cand"))

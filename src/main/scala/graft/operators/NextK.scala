@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NextKPage
 
 /** The spreadsheet page sketch — `ref:P/sketches/NextKSketch.java`
   * (paper §4.2): the k smallest *distinct* rows ≥ a start row under a
@@ -20,15 +21,13 @@ object NextK {
   /** @param start values aligned with `order` (None = first page). */
   def page(df: DataFrame, order: Seq[SortKey], start: Option[Seq[Column]],
            k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val base = start match {
       case Some(s) => df.filter(Filters.rowAtLeast(order, s))
       case None    => df
     }
     val page = base
-      .agg(call_function("graft_nextk_page",
-        struct(order.map(o => col(o.name)): _*),
-        typedlit(order.map(_.asc)), lit(k)).as("pg"))
+      .agg(NextKPage.page(struct(order.map(o => col(o.name)): _*), order.map(_.asc), k)
+        .as("pg"))
       .select(explode(col("pg")).as("e")) // array is already in page order
     page.select((order.map(o => col(s"e.key.${o.name}").as(o.name)) :+
       col("e.cnt").as("cnt")).toIndexedSeq: _*)

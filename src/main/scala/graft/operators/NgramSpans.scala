@@ -140,7 +140,6 @@ object NgramSpans {
     */
   private def evalMarked(toks: DataFrame, eval: DataFrame, idCol: String,
                          textCol: String, n: Int): DataFrame = {
-    graft.functions.VectorExprs.register(toks.sparkSession) // native windowHashes
     val evalGrams = tokenized(eval, idCol, textCol)
       .filter(col("n_tokens") >= n)
       .select(explode(windowHashes(n)).as("__gram")).distinct()
@@ -193,9 +192,7 @@ object NgramSpans {
     * fold form it replaces ([[windowHashesFold]], kept as the parity
     * baseline) ran one interpreted md5+concat_ws+slice lambda per window
     * (higher-order functions are CodegenFallback) and needed the
-    * `n_tokens >= n` guard against a DESCENDING `sequence`. Callers must
-    * have run `VectorExprs.register` on the session — [[windowHashArray]]
-    * and [[evalMarked]]'s entry points do.
+    * `n_tokens >= n` guard against a DESCENDING `sequence`.
     */
   private def windowHashes(n: Int): Column =
     graft.functions.TextHashExprs.tokenWindowMd5s(col("__toks"), n)
@@ -216,7 +213,6 @@ object NgramSpans {
   private[graft] def windowHashArray(df: DataFrame, idCol: String, textCol: String,
                                      n: Int): DataFrame = {
     require(n >= 2, "window width must be >= 2 tokens")
-    graft.functions.VectorExprs.register(df.sparkSession) // native windowHashes
     tokenized(df, idCol, textCol)
       .select(col(idCol), windowHashes(n).as("__grams"))
   }

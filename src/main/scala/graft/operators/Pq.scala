@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.NextKPage
 
 /** Product quantization (Jégou/Douze/Schmid, "Product Quantization for
   * Nearest Neighbor Search", IEEE PAMI 2011) — the ANN path that makes a
@@ -474,9 +475,8 @@ object Pq {
     */
   private[operators] def pageTopK(scored: DataFrame, k: Int): DataFrame =
     scored.groupBy(col("q_id"))
-      .agg(call_function("graft_nextk_page",
-        struct(round(col("asim"), 6).as("asim"), col("n_id")),
-        typedlit(Seq(false, true)), lit(k)).as("pg"))
+      .agg(NextKPage.page(struct(round(col("asim"), 6).as("asim"), col("n_id")),
+        Seq(false, true), k).as("pg"))
       .select(col("q_id"), posexplode(col("pg")).as(Seq("pos", "e")))
       .select(col("q_id"), col("e.key.n_id").as("n_id"),
         col("e.key.asim").as("asim"), (col("pos") + 1).cast("long").as("rk"))
@@ -513,7 +513,6 @@ object Pq {
                                  k: Int, rotation: Option[Array[Array[Double]]],
                                  batchCap: Int): DataFrame = {
     val spark = codes.sparkSession
-    graft.functions.VectorExprs.register(spark)
     // OPQ: queries rotate into the codebook space driver-side (the batch
     // is already collected); R is orthogonal so the ADC estimate still
     // approximates the ORIGINAL cosine
@@ -705,7 +704,6 @@ object Pq {
                       residual: Boolean = false): Unit = {
     Dedup.requireIntegralId(emb, idCol, "buildIvfPqIndex")
     val spark = emb.sparkSession
-    graft.functions.VectorExprs.register(spark)
     import spark.implicits._
     val cents = Similarity.trainCentroids(emb, idCol, vecCol, nlist, seed)
     cents.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
@@ -784,7 +782,6 @@ object Pq {
   def ivfPqTopKFromIndex(queries: DataFrame, idCol: String, vecCol: String,
                          indexDir: String, k: Int, nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.VectorExprs.register(spark)
     val cb = loadCodebooks(spark, indexDir)
     val cs: Array[Array[Double]] = spark.read.parquet(s"$indexDir/centroids")
       .orderBy(col("bucket")).select(col("centroid"))
@@ -825,7 +822,6 @@ object Pq {
                              residual: Boolean = false): DataFrame = {
     Dedup.requireIntegralId(emb, idCol, "ivfPqTopKWithArtifacts")
     require(cs.nonEmpty, "centroid list must be non-empty")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     // the buildIvfPqIndex encoding, on the fly
     val codes = ivfPqCodes(emb, idCol, vecCol, cs, cb, residual)
     val qs = collectQueries(emb.filter(queryPred)

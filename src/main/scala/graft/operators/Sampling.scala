@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NextKPage
 
 /** Row sampling — `ref:P/sketches/RandomSamplingSketch.java` and the
   * resolution-aware sampled histograms of paper §4.1.
@@ -258,7 +259,6 @@ object Sampling {
   private def hashPerGroup(df: DataFrame, groupCol: String, idCol: String,
                            k: Int, hashCol: org.apache.spark.sql.Column): DataFrame = {
     require(k > 0, s"k must be > 0, got $k")
-    graft.functions.VectorExprs.register(df.sparkSession)
     val payload = df.columns.filter(c => c != groupCol && c != idCol)
     // the (hash, id) prefix is unique so payload fields never decide a
     // comparison, but the page comparator is built over the whole key —
@@ -272,8 +272,7 @@ object Sampling {
     val keyCols = Seq(hashCol.as("__h"), col(idCol)) ++ payload.map(col)
     val flags = Seq.fill(keyCols.length)(true)
     df.groupBy(col(groupCol))
-      .agg(call_function("graft_nextk_page",
-        struct(keyCols: _*), typedlit(flags), lit(k)).as("pg"))
+      .agg(NextKPage.page(struct(keyCols: _*), flags, k).as("pg"))
       .select(col(groupCol), explode(col("pg")).as("e"))
       .select(col(groupCol) +: col(s"e.key.$idCol").as(idCol) +:
         payload.toIndexedSeq.map(c => col(s"e.key.$c").as(c)): _*)
@@ -418,7 +417,6 @@ object Sampling {
                    orderCol: String, k: Int,
                    descending: Boolean = true): DataFrame = {
     require(k > 0, s"k must be > 0, got $k")
-    graft.functions.VectorExprs.register(df.sparkSession)
     val payload = df.columns.filter(c => c != groupCol && c != idCol && c != orderCol)
     payload.foreach { c =>
       require(org.apache.spark.sql.catalyst.expressions.RowOrdering
@@ -429,8 +427,7 @@ object Sampling {
     val keyCols = Seq(col(orderCol), col(idCol)) ++ payload.map(col)
     val flags = (!descending) +: Seq.fill(keyCols.length - 1)(true)
     df.groupBy(col(groupCol))
-      .agg(call_function("graft_nextk_page",
-        struct(keyCols: _*), typedlit(flags), lit(k)).as("pg"))
+      .agg(NextKPage.page(struct(keyCols: _*), flags, k).as("pg"))
       .select(col(groupCol), explode(col("pg")).as("e"))
       .select(col(groupCol) +: col(s"e.key.$orderCol").as(orderCol) +:
         col(s"e.key.$idCol").as(idCol) +:

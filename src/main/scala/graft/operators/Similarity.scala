@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.NextKPage
 
 /** Similarity search over an embedding column (`array<float>`) —
   * north-star extension (SURVEY.md §2.11).
@@ -37,9 +38,7 @@ object Similarity {
 
   /** Codegen'd cosine via the native `FloatVectorDot` Catalyst expression
     * (same sequential double accumulation, so bit-identical to `cosine`
-    * and the oracle; VectorExprsSpec asserts parity). Callers must
-    * `VectorExprs.register(spark)` first — the top-k entry points below
-    * do.
+    * and the oracle; VectorExprsSpec asserts parity).
     */
   private[graft] def cosineNative(a: Column, b: Column): Column = {
     import graft.functions.VectorExprs.fdot
@@ -53,7 +52,6 @@ object Similarity {
     */
   def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
                  queryPred: Column, k: Int): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val q = emb.filter(queryPred)
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
     val c = emb.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
@@ -117,7 +115,6 @@ object Similarity {
                         planes: Seq[Seq[Seq[Double]]]): DataFrame = {
     require(planes.nonEmpty && planes.forall(_.nonEmpty),
       "at least one non-empty plane table required")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val sigs = planes.zipWithIndex.map { case (pm, l) =>
       struct(lit(l).as("tbl"),
         graft.functions.VectorExprs.hyperplaneSig(
@@ -173,7 +170,6 @@ object Similarity {
   private[graft] final val MaxQueryBatch = 100000
 
   private def roundedSims(cand: DataFrame): DataFrame = {
-    graft.functions.VectorExprs.register(cand.sparkSession)
     cand.select(col("q_id"), col("n_id"),
       round(cosineNative(col("q_vec"), col("n_vec")), 6).as("sim"))
   }
@@ -183,9 +179,7 @@ object Similarity {
     // every candidate path), so the page's dedup counts are all 1 and the
     // page IS the row_number sequence
     sims.groupBy(col("q_id"))
-      .agg(call_function("graft_nextk_page",
-        struct(col("sim"), col("n_id")),
-        typedlit(Seq(false, true)), lit(k)).as("pg"))
+      .agg(NextKPage.page(struct(col("sim"), col("n_id")), Seq(false, true), k).as("pg"))
       .select(col("q_id"), posexplode(col("pg")).as(Seq("pos", "e")))
       .select(col("q_id"), col("e.key.n_id").as("n_id"), col("e.key.sim").as("sim"),
         (col("pos") + 1).cast("long").as("rk"))
@@ -210,7 +204,6 @@ object Similarity {
                     queryPred: Column, k: Int,
                     loSim: Double, hiSim: Double): DataFrame = {
     require(loSim < hiSim, s"band must be non-empty, got [$loSim, $hiSim)")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val q = emb.filter(queryPred)
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
     val c = emb.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
@@ -273,7 +266,6 @@ object Similarity {
                             cs: Seq[Seq[Double]], k: Int,
                             seed: Long = 42L): DataFrame = {
     require(cs.nonEmpty, "centroid list must be non-empty")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     import graft.functions.VectorExprs.nearestCentroids
     val assigned = emb.select(col(idCol), col(vecCol))
       .withColumn("bucket", element_at(nearestCentroids(col(vecCol), cs, 1), 1))
@@ -791,7 +783,6 @@ object Similarity {
                                  queryPred: Column, cs: Seq[Seq[Double]],
                                  nprobe: Int): DataFrame = {
     require(cs.nonEmpty, "centroid list must be non-empty")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     import graft.functions.VectorExprs.nearestCentroids
     val corpus = assignNearest(emb, idCol, vecCol, cs)
     val queries = emb.filter(queryPred)
@@ -890,7 +881,6 @@ object Similarity {
     * it. */
   private[graft] def assignNearest(emb: DataFrame, idCol: String, vecCol: String,
                                    cs: Seq[Seq[Double]]): DataFrame = {
-    graft.functions.VectorExprs.register(emb.sparkSession)
     import graft.functions.VectorExprs.nearestCentroids
     emb.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .withColumn("bucket", element_at(nearestCentroids(col("n_vec"), cs, 1), 1))
@@ -930,7 +920,6 @@ object Similarity {
   def ivfTopKFromIndex(queries: DataFrame, idCol: String, vecCol: String,
                        indexDir: String, k: Int, nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.nearestCentroids
     val cs = ivfIndexCentroids(spark, indexDir)
     // materialize the query batch ONCE (sketch-sized by contract): the
@@ -1018,7 +1007,6 @@ object Similarity {
                                nprobe: Int): DataFrame = {
     require(cs.nonEmpty, "centroid list must be non-empty")
     Dedup.requireIntegralId(emb, idCol, "ivfDupPairsWithCentroids")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     import graft.functions.VectorExprs.nearestCentroids
     bucketVerifiedPairs(
       emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
@@ -1121,7 +1109,6 @@ object Similarity {
     // (the fused form's "no probing" degenerate) there would silently turn
     // "no candidates" into "all probe-1 candidates"
     require(nprobe >= 1, s"ivfDupPairsFromIndex needs nprobe >= 1, got $nprobe")
-    graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.nearestCentroids
     val assigned = ivfIndexAssignments(spark, indexDir)
       .select(col("n_id").cast("long").as("id"), col("n_vec").as("vec"),
@@ -1251,7 +1238,6 @@ object Similarity {
                             threshold: Double, cs: Seq[Seq[Double]]): DataFrame = {
     Dedup.requireIntegralId(emb, idCol, "semDedupWithCentroids")
     require(cs.nonEmpty, "centroid list must be non-empty")
-    graft.functions.VectorExprs.register(emb.sparkSession)
     val spark = emb.sparkSession
     import graft.functions.VectorExprs.nearestCentroids
     val nonNull = emb.filter(col(vecCol).isNotNull)

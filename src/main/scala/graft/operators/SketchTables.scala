@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.DataSketchAggs
 
 /** Mergeable sketch TABLES — the reference's core architectural idea
   * (every aggregation is a mergeable sketch; paper §3) surfaced as a
@@ -151,17 +152,14 @@ object SketchTables {
   def cmsTable(df: DataFrame, groupCols: Seq[String], keyCol: String,
                depth: Int = 5, width: Int = 4096,
                seed: Int = 42): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     df.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_cms_sketch", col(keyCol).cast("long"),
-        lit(depth), lit(width), lit(seed)).as("cms"))
+      .agg(DataSketchAggs.cmsSketch(col(keyCol).cast("long"), depth, width, seed).as("cms"))
   }
 
   /** Roll a Count-Min table up to coarser groups by exact counter sum. */
   def cmsRollup(table: DataFrame, groupCols: Seq[String]): DataFrame = {
-    graft.functions.VectorExprs.register(table.sparkSession)
     table.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_cms_merge", col("cms")).as("cms"))
+      .agg(DataSketchAggs.cmsMerge(col("cms")).as("cms"))
   }
 
   private val cmsEstimateUdf = udf { (b: Array[Byte], key: Long) =>

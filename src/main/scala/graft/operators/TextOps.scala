@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, functions}
 import org.apache.spark.sql.functions._
+import graft.functions.NextKPage
 
 /** Text-analysis operators over a document corpus (north-star extension,
   * SURVEY.md §2.11): tokenization, shingling, term frequencies, quality
@@ -43,8 +44,7 @@ object TextOps {
     // interpreted concat_ws lambda per window (higher-order functions are
     // CodegenFallback); the native kernel is one primitive loop per row,
     // value-identical (parity-pinned in TextHashExprsSpec against
-    // [[shinglesFold]]). Callers must have run VectorExprs.register on
-    // the session — rawShingles/repetitionScore/StreamDedup do.
+    // [[shinglesFold]]).
     graft.functions.TextHashExprs.tokenWindows(toksCol, n)
   }
 
@@ -77,7 +77,6 @@ object TextOps {
     * dedups AFTER its broadcast filter) build on this directly.
     */
   def rawShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession) // native shingles
     val withToks = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
     val sh = if (n == 1) col("__toks") else shingles(col("__toks"), n)
     withToks.select(col(idCol), explode(sh).as("sh"))
@@ -123,7 +122,6 @@ object TextOps {
     * in one task.
     */
   def tfidfTopK(df: DataFrame, idCol: String, textCol: String, k: Int = 5): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession)
     val tf = graft.CacheScope.pin(
       rawShingles(df, idCol, textCol, 1)
         .groupBy(col(idCol), col("sh").as("term"))
@@ -138,9 +136,8 @@ object TextOps {
     // are all 1 and the page IS the row_number sequence (the rerankTopK
     // precedent)
     scored.groupBy(col(idCol))
-      .agg(call_function("graft_nextk_page",
-        struct(col("tfidf"), col("term"), col("tf")),
-        typedlit(Seq(false, true, true)), lit(k)).as("pg"))
+      .agg(NextKPage.page(struct(col("tfidf"), col("term"), col("tf")),
+        Seq(false, true, true), k).as("pg"))
       .select(col(idCol), posexplode(col("pg")).as(Seq("pos", "e")))
       .select(col(idCol), col("e.key.term").as("term"), col("e.key.tf").as("tf"),
         col("e.key.tfidf").as("tfidf"), (col("pos") + 1).cast("long").as("rk"))
@@ -292,7 +289,6 @@ object TextOps {
     */
   def repetitionScore(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 2): DataFrame = {
-    graft.functions.VectorExprs.register(df.sparkSession) // native shingles
     val withToks = df.select(col(idCol), tokens(col(textCol)).as("__toks"))
     withToks.select(col(idCol), explode(shingles(col("__toks"), n)).as("sh"))
       .groupBy(col(idCol), col("sh")).agg(count(lit(1)).as("cnt"))
@@ -394,7 +390,6 @@ object TextOps {
   def fingerprint(df: DataFrame, idCol: String, textCol: String, n: Int = 2): DataFrame =
     if (n == 1) fingerprintShuffle(df, idCol, textCol, n)
     else {
-      graft.functions.VectorExprs.register(df.sparkSession)
       // absence filter on the cheap token count (size(toks) >= n ⟺ the
       // doc has ≥ 1 window), so no kernel output feeds a pushable
       // predicate (the §4.4 double-eval shape — see winnowFingerprints)
@@ -438,7 +433,6 @@ object TextOps {
     // of its result. The shuffle form below (explode + per-doc window
     // min + DISTINCT + rollup = three Exchanges) survives as
     // [[winnowFingerprintsShuffle]], the parity baseline.
-    graft.functions.VectorExprs.register(df.sparkSession)
     // the absence filter tests the CHEAP token count, not the kernel
     // output: a size(kernel(...)) predicate gets pushed below the
     // projection and re-evaluates the kernel per row (the §4.4

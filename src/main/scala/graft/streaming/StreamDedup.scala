@@ -169,7 +169,6 @@ object StreamDedup {
                                     cs: Seq[Seq[Double]], nprobe: Int,
                                     threshold: Double): DataFrame = {
     require(cs.nonEmpty, "centroid list must be non-empty")
-    graft.functions.VectorExprs.register(incoming.sparkSession)
     flagEmbedding(assignments, incoming, idCol, vecCol, cs, nprobe, threshold)
   }
 
@@ -186,7 +185,6 @@ object StreamDedup {
                                     idCol: String, vecCol: String,
                                     indexDir: String, nprobe: Int = 4,
                                     threshold: Double = 0.45): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     val cbuckets = Similarity.ivfIndexAssignments(spark, indexDir)
       .select(col("n_id").as("c_id"), col("n_vec").as("c_vec"), col("bucket"))
     flagEmbedding(cbuckets, incoming, idCol, vecCol,

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.DataSketchAggs
 import graft.operators.SketchTables
 
 /** Sketch TABLES maintained under a STREAM (SURVEY.md §2.9 × the
@@ -50,14 +51,13 @@ object StreamSketches {
   def dailyUserFreqSketches(spark: SparkSession, sfDir: String,
                             depth: Int = 5, width: Int = 4096,
                             seed: Int = 42): DataFrame = {
-    graft.functions.VectorExprs.register(spark)
     StreamWindows.runToResult(
       StreamWindows.eventsStream(spark, sfDir)
         .withColumn("day", to_date(col("ts")))
         .withColumn("week", date_format(date_trunc("week", col("ts")), "yyyy-MM-dd"))
         .groupBy(col("week"), col("day"))
-        .agg(call_function("graft_cms_sketch", col("user_id").cast("long"),
-          lit(depth), lit(width), lit(seed)).as("cms")),
+        .agg(DataSketchAggs.cmsSketch(col("user_id").cast("long"), depth, width, seed)
+          .as("cms")),
       "cms_table")
   }
 

@@ -5,15 +5,25 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 
-/** The single Spark-internal bridge in this engine: rebuilding a
-  * DataFrame from a transformed logical plan, and the guarded driver
-  * collect. `Dataset.ofRows` and a Dataset's encoder are `private[sql]`,
-  * so the bridge lives under the `org.apache.spark.sql` package; nothing
-  * else in graft reaches into Spark internals this way.
+/** The single Spark-internal bridge in this engine: building a Column
+  * from a Catalyst expression (and back), rebuilding a DataFrame from a
+  * transformed logical plan, and the guarded driver collect.
+  * `classic.ExpressionUtils`, `Dataset.ofRows` and a Dataset's encoder
+  * are `private[sql]`, so the bridge lives under the `org.apache.spark.sql`
+  * package; nothing else in graft reaches into Spark internals this way.
   */
 object Internals {
+  /** `e` as a Column — how graft's native expressions reach the
+    * DataFrame API without a session function registry.
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The Catalyst expression of `c` (unresolved until analysis). */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 

@@ -276,17 +276,15 @@ class CoreOpsSpec extends SparkSpec {
 
   test("graft_nextk_page skips a null struct input instead of NPE-ing the task") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{call_function, expr, lit, typedlit}
-    // NextK.page always feeds CreateStruct (never null), but the function
-    // is session-registered: direct SQL callers can hand it a nullable
-    // struct — null must count as a skipped row, like any agg input
-    graft.functions.VectorExprs.register(spark)
+    import org.apache.spark.sql.functions.expr
+    // NextK.page always feeds CreateStruct (never null), but SQL and
+    // direct `NextKPage.page` callers can hand it a nullable struct —
+    // null must count as a skipped row, like any agg input
     val df = Seq(Some("a"), None, Some("b"), Some("a"), None)
       .toDF("s").repartition(2)
     val page = df
-      .agg(call_function("graft_nextk_page",
-        expr("if(s is not null, struct(s), null)"),
-        typedlit(Seq(true)), lit(5)).as("pg"))
+      .agg(graft.functions.NextKPage.page(
+        expr("if(s is not null, struct(s), null)"), Seq(true), 5).as("pg"))
       .selectExpr("inline(pg)")
       .collect().map(r => (r.getStruct(0).getString(0), r.getLong(1))).toSeq
     assert(page == Seq(("a", 2L), ("b", 1L)), s"got $page")

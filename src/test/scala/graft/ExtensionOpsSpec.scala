@@ -48,7 +48,6 @@ class ExtensionOpsSpec extends SparkSpec {
 
   test("sketchStruct: separator-content and null parts are faithful tuple keys") {
     import spark.implicits._
-    functions.VectorExprs.register(spark)
     // the two failure modes of the old string rendering: parts containing
     // any would-be separator, and null parts (previously skipped so
     // ("a", null) collapsed to bare "a" — and could collide with ("a",""))
@@ -65,7 +64,6 @@ class ExtensionOpsSpec extends SparkSpec {
 
   test("sketchStruct handles wide mixed-type keys (long/double/date/decimal)") {
     import spark.implicits._
-    functions.VectorExprs.register(spark)
     // four fields of distinct physical layouts through UnsafeRow keying;
     // k > distinct so counts are exact and fully checkable
     val df = Seq(
@@ -86,7 +84,6 @@ class ExtensionOpsSpec extends SparkSpec {
 
   test("sketchStruct groups 0.0 with -0.0 (SQL GROUP BY float semantics)") {
     import spark.implicits._
-    functions.VectorExprs.register(spark)
     val got = Seq(("a", 0.0), ("a", -0.0), ("a", 1.0)).toDF("x", "y")
       .agg(functions.MisraGries.sketchStruct(Seq(col("x"), col("y")), 10).as("mg"))
       .select(explode(col("mg")).as(Seq("k", "cnt")))
@@ -98,7 +95,6 @@ class ExtensionOpsSpec extends SparkSpec {
 
   test("sketchStruct MG guarantees hold distributed (serialize + merge across partitions)") {
     import spark.implicits._
-    functions.VectorExprs.register(spark)
     val rnd = new scala.util.Random(5L)
     // skewed draw so some tuples cross the N/(k+1) threshold; ~10% null parts
     val rows = Seq.fill(4000)((
@@ -585,7 +581,6 @@ class ExtensionOpsSpec extends SparkSpec {
       (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f))).toDF("vec_id", "embedding")
       .cache()
     big.count()
-    graft.functions.VectorExprs.register(spark)
     val cs = Similarity.trainCentroids(big, "vec_id", "embedding", 64, 42L)
       .toSeq.map(_.toSeq)
     import graft.functions.VectorExprs.nearestCentroids
@@ -703,7 +698,6 @@ class ExtensionOpsSpec extends SparkSpec {
     val cs: Seq[Seq[Double]] = Similarity.trainCentroids(planted, "vec_id", "embedding",
         Similarity.autoNlist(600), 42L, forceParallelInit = true)
       .toSeq.map(_.toSeq)
-    graft.functions.VectorExprs.register(spark)
     import graft.functions.VectorExprs.nearestCentroids
     val buckets = planted
       .select(col("vec_id"), nearestCentroids(col("embedding"), cs, 2).as("bks"))
@@ -997,7 +991,6 @@ class ExtensionOpsSpec extends SparkSpec {
     // every key with freq > N/(k+1) present; counts are lower bounds
     // within N/(k+1). Cross-checks the aggregate against the exact
     // groupBy path on real distributed partitions.
-    graft.functions.VectorExprs.register(spark)
     val k = 20
     val li = sources.Tables.open(spark, sf, "lineitem")
     val n = li.count()

@@ -34,6 +34,16 @@ class PlanGuardSpec extends SparkSpec {
       "similarity_hard_negatives")
   private val scalarBroadcasts = Set("heavy_hitters_relative", "set_ops_counts")
 
+  /** Every src/main Scala file with its text. */
+  private def mainSources: Seq[(java.io.File, String)] = {
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] = {
+      val (dirs, files) = dir.listFiles.toSeq.partition(_.isDirectory)
+      files.filter(_.getName.endsWith(".scala")) ++ dirs.flatMap(scalaFiles)
+    }
+    scalaFiles(new java.io.File("src/main/scala")).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
   test("no catalog query plans a cartesian or nested-loop join (beyond the documented baselines)") {
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       if (allPairsBaselines(name) || scalarBroadcasts(name)) None
@@ -187,18 +197,23 @@ class PlanGuardSpec extends SparkSpec {
       // (4-vector constant reads — the nlist-row centroid-table
       // precedent, sketch-sized by contract)
       "ExtensionQueries.scala" -> 1)
-    def scalaFiles(dir: java.io.File): Seq[java.io.File] = {
-      val (dirs, files) = dir.listFiles.toSeq.partition(_.isDirectory)
-      files.filter(_.getName.endsWith(".scala")) ++ dirs.flatMap(scalaFiles)
-    }
-    val counts = scalaFiles(new java.io.File("src/main/scala"))
-      .map { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val counts = mainSources
+      .map { case (f, src) =>
         f.getName -> "\\.collect\\(\\)|collectCapped\\(".r.findAllIn(src).length
       }
       .filter(_._2 > 0).toMap
     val violations = counts.filter { case (f, n) => n > allowed.getOrElse(f, 0) }
     assert(violations.isEmpty,
       s"collect() outside the sketch/view contract: $violations (allowed: $allowed)")
+  }
+
+  test("operators build graft's expressions as columns, never through a session registry") {
+    // a column that resolves by name needs the caller's session to have
+    // registered the function first, and registering overwrites any user
+    // function of the same name; GraftExtensions alone owns the SQL names
+    val banned = Seq("VectorExprs.register", "createOrReplaceTempFunction",
+      "call_function(\"graft_")
+    val hits = for ((f, src) <- mainSources; b <- banned if src.contains(b)) yield s"${f.getName}: $b"
+    assert(hits.isEmpty, s"registry-resolved graft functions in src/main: $hits")
   }
 }

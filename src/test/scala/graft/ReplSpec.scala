@@ -8,12 +8,39 @@ import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader
   */
 class ReplSpec extends SparkSpec {
 
-  private def script(lines: String*): String = {
+  private def script(lines: String*): String = scriptOn(spark)(lines: _*)
+
+  private def scriptOn(session: org.apache.spark.sql.SparkSession)(lines: String*): String = {
     val in = new BufferedReader(new StringReader(lines.mkString("\n")))
     val bytes = new ByteArrayOutputStream()
     val out = new PrintStream(bytes, true, "UTF-8")
-    Repl.run(spark, sf, in, out)
+    Repl.run(session, sf, in, out)
     bytes.toString("UTF-8")
+  }
+
+  test("a fresh REPL session resolves graft functions in sql strings") {
+    import org.apache.spark.sql.SparkSession
+    // the REPL main's own session: LocalSession() over the shared context
+    // (clear default/active so it builds anew; never stop it — that would
+    // stop the shared context)
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val fresh = LocalSession()
+      assert(fresh ne shared)
+      val q = "SELECT graft_fdot(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT)), " +
+        "array(CAST(3.0 AS FLOAT), CAST(0.5 AS FLOAT))) AS d"
+      val out = scriptOn(fresh)(s"sql $q",
+        "explain sql SELECT graft_fdot(array(CAST(n_nationkey AS FLOAT)), " +
+          "array(CAST(2.0 AS FLOAT))) FROM nation", "quit")
+      assert(out.contains("d\n5.5"), out)
+      assert(out.contains("graft_fdot(") && !out.contains("error:"), out)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+      shared.sparkContext.setLogLevel("WARN") // LocalSession() set ERROR on the shared context
+    }
   }
 
   test("scripted session: open, filter, sketches, lineage, purge") {

@@ -40,4 +40,22 @@ class ShimPinSpec extends AnyFunSuite {
         "transformed logical plans for the SlicedFileIndex progressive partials " +
         "(plans/FileSlices.scala) — to whatever the internal constructor is now.")
   }
+
+  test("classic.ExpressionUtils.column(Expression) and expression(Column) still exist and round-trip") {
+    val companion = Class.forName("org.apache.spark.sql.classic.ExpressionUtils$")
+    def has(name: String, param: String) = companion.getMethods.exists { m =>
+      m.getName == name && m.getParameterCount == 1 && m.getParameterTypes()(0).getName == param
+    }
+    assert(has("column", "org.apache.spark.sql.catalyst.expressions.Expression") &&
+      has("expression", "org.apache.spark.sql.Column"),
+      "Spark upgrade broke the graftshim bridge: " +
+        "org.apache.spark.sql.classic.ExpressionUtils.column/expression is gone. Update " +
+        "org.apache.spark.sql.graftshim.Internals.column/expression — every graft " +
+        "column helper (VectorExprs.fdot, NextKPage.page, ...) builds its Catalyst " +
+        "expression through them.")
+    import org.apache.spark.sql.graftshim.Internals
+    val e = org.apache.spark.sql.catalyst.expressions.Literal(1)
+    assert(Internals.expression(Internals.column(e)) eq e,
+      "a column built from an expression must hand back that same expression")
+  }
 }

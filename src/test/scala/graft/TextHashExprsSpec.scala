@@ -19,7 +19,6 @@ class TextHashExprsSpec extends SparkSpec {
     * yields an EMPTY array downstreams must agree on.
     */
   private lazy val idArrays = {
-    VectorExprs.register(spark)
     docs.select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
         array_sort(array_distinct(transform(
@@ -27,7 +26,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("native LSH band signatures are bit-identical to the fold on every fixture doc") {
-    VectorExprs.register(spark)
     val both = idArrays.select(
       Dedup.bandSigsFold(col("ids"), 8, 4, 42L).as("fold"),
       TextHashExprs.lshBandSigs(col("ids"), 8, 4, 42L).as("native"))
@@ -38,7 +36,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("native LSH band signatures match the fold on hostile arrays") {
-    VectorExprs.register(spark)
     import spark.implicits._
     // null array, empty array, null element, single element — the fold's
     // null-skipping xxhash64 semantics and the bare-seed bsig (42) for
@@ -57,7 +54,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("native token windows are value-identical to the shingles fold") {
-    VectorExprs.register(spark)
     val toks = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
     val both = toks.select(
       TextOps.shinglesFold(col("__toks"), 2).as("fold"),
@@ -80,7 +76,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("native window md5s are value-identical to the guarded fold") {
-    VectorExprs.register(spark)
     val toks = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("__toks"))
       .withColumn("n_tokens", size(col("__toks")).cast("long"))
@@ -98,7 +93,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("map-side winnow equals the explode+window shuffle form on the fixture") {
-    VectorExprs.register(spark)
     val native = TextOps.winnowFingerprints(docs, "doc_id", "text", 3, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
     val shuffle = TextOps.winnowFingerprintsShuffle(docs, "doc_id", "text", 3, 4)
@@ -108,7 +102,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("winnow kernel handles hostile token arrays like the shuffle form") {
-    VectorExprs.register(spark)
     import spark.implicits._
     // shorter than k (no row), exactly k (one clipped window), between k
     // and k+window (clipped min), exactly one full window, several full
@@ -132,7 +125,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("map-side fingerprint equals the grouped shuffle form incl. hostile docs") {
-    VectorExprs.register(spark)
     val native = TextOps.fingerprint(docs, "doc_id", "text", 2)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     val shuffle = TextOps.fingerprintShuffle(docs, "doc_id", "text", 2)
@@ -177,7 +169,6 @@ class TextHashExprsSpec extends SparkSpec {
   }
 
   test("the native kernels participate in whole-stage codegen") {
-    VectorExprs.register(spark)
     // the input must itself be codegen-friendly (a HOF-built array would
     // break the span upstream of the expression under test)
     val plan = docs

@@ -13,7 +13,6 @@ class VectorExprsSpec extends SparkSpec {
   private lazy val emb = sources.Tables.open(spark, sf, "embeddings")
 
   test("native fdot is bit-identical to the fold dot on every fixture vector") {
-    VectorExprs.register(spark)
     val both = emb.select(
       Similarity.dot(col("embedding"), col("embedding")).as("fold"),
       VectorExprs.fdot(col("embedding"), col("embedding")).as("native"))
@@ -28,7 +27,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("fdot participates in whole-stage codegen") {
-    VectorExprs.register(spark)
     val plan = emb.select(VectorExprs.fdot(col("embedding"), col("embedding")).as("d"))
       .queryExecution.executedPlan.toString
     // "*(n)" prefixes mark operators inside a WholeStageCodegen span
@@ -36,7 +34,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("fdot returns null on length mismatch, matching the fold") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val df = Seq((Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f))).toDF("a", "b")
       .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
@@ -48,7 +45,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("fdot is null-safe") {
-    VectorExprs.register(spark)
     val row = emb.limit(1)
       .select(VectorExprs.fdot(lit(null).cast("array<float>"), col("embedding")).as("d"))
       .head()
@@ -56,7 +52,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("native hyperplane signature equals the fold construction on every fixture vector") {
-    VectorExprs.register(spark)
     val dim = emb.select(size(col("embedding"))).head.getInt(0)
     val planes = Similarity.planeMatrix(dim, 6, seed = 99L)
     val both = emb.select(
@@ -84,7 +79,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("hyperplane signature rejects more than 64 planes (bit-pack bound)") {
-    VectorExprs.register(spark)
     val tooMany = Seq.fill(65)(Seq(1.0))
     val e = intercept[Exception] {
       emb.limit(1).select(VectorExprs.hyperplaneSig(col("embedding"), tooMany)).collect()
@@ -93,7 +87,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("native function builders report arity instead of crashing the resolver") {
-    VectorExprs.register(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_fdot(array(CAST(1.0 AS FLOAT)))").collect()
     }
@@ -102,7 +95,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("nearestCentroids matches a scala model on random vectors (incl. ties)") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(7L)
     val dim = 8
@@ -128,7 +120,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("nearestCentroids survives NaN/Inf vector elements (corrupt embeddings rank last)") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val cs = Seq(Seq(0.0, 0.0), Seq(1.0, 1.0), Seq(2.0, 2.0))
     val df = Seq(
@@ -143,7 +134,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("validation failures name the function: negative nprobe, NULL matrices, oversized vector") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val one = Seq(Tuple1(Array(0.5f, 0.5f))).toDF("v")
     // nprobe < 0 → typed analysis failure, not NegativeArraySizeException
@@ -168,7 +158,6 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("nearestCentroids participates in whole-stage codegen and is null-safe") {
-    VectorExprs.register(spark)
     import spark.implicits._
     val cs = Seq(Seq(0.0, 0.0), Seq(1.0, 1.0))
     val plan = emb.select(VectorExprs.nearestCentroids(col("embedding"), cs, 1).as("b"))
