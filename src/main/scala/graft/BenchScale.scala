@@ -80,9 +80,10 @@ object BenchScale {
     // in the set DELIBERATELY even though its pair source is the
     // quadratic-by-contract dense walk: its super-linear exponent is the
     // measured CONTRAST against the sub-quadratic siblings right below
-    // (_lsh/_star compose the same clustering over LSH pairs and hold
-    // sub-linear exponents) — the artifact shows why the 100 TB flow
-    // routes through LSH, instead of hiding the quadratic path
+    // (_lsh and its twin name _star run the same star-contraction
+    // clusterer over LSH pairs and hold sub-linear exponents) — the
+    // artifact shows why the 100 TB flow routes through LSH, instead of
+    // hiding the quadratic path
     "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
     "dedup_simhash_portable",
     "dedup_subdoc", "dedup_subdoc_clean", "dedup_groups",
@@ -587,7 +588,7 @@ object BenchScale {
       // isomorphic to the base (no cross-copy edges), so connected
       // components replicate per copy: total component count AND
       // non-singleton (true dup-cluster) count are exactly factor× the
-      // base — a merge/collapse bug in the label propagation at scale
+      // base — a merge/collapse bug in the star contraction at scale
       // breaks this even when timings look fine. dedup_groups is the
       // exact-pair composition, so the check is exact, not statistical
       val b = q(srcDir, "dedup_groups")

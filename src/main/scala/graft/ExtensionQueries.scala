@@ -259,9 +259,10 @@ object ExtensionQueries {
        |FROM b ORDER BY doc_id""".stripMargin
 
   /** Shared DuckDB oracle for all three corpus-representative rows
-    * (dense-exact, LSH, star-contraction — identical kept sets on the
-    * fixture, where LSH recall is 1.0): recursive components of the
-    * exact pair graph, min-id representative, member counts.
+    * (dense-exact pairs, and LSH pairs under two row names — identical
+    * kept sets on the fixture, where LSH recall is 1.0): recursive
+    * components of the exact pair graph, min-id representative, member
+    * counts.
     */
   private val sqlCorpusReps =
     s"""WITH RECURSIVE pairs AS ($sqlExactPairs),
@@ -276,6 +277,27 @@ object ExtensionQueries {
        |sizes AS (SELECT rep, COUNT(*) AS n_members FROM comp GROUP BY 1)
        |SELECT d.doc_id, s.n_members FROM documents d
        |JOIN sizes s ON s.rep = d.doc_id ORDER BY doc_id""".stripMargin
+
+  /** The one body of `dedup_groups_lsh` and `dedup_groups_star`: star
+    * contraction over the MinHash-LSH pair graph of the documents. */
+  private def docGroupsLsh(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val docs = t(s, d, "documents")
+    val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
+    Dedup.connectedComponentsStar(docs, "doc_id", pairs)
+      .select(col("id").as("doc_id"), col("rep_id"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** The one body of `dedup_corpus_reps_lsh` and `dedup_corpus_reps_star`:
+    * one min-id document per star-contraction component of the
+    * MinHash-LSH pair graph, with its member count. */
+  private def corpusRepsLsh(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
+    val docs = t(s, d, "documents")
+    val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
+    Dedup.keepRepresentatives(docs, "doc_id", pairs)
+      .select(col("doc_id"), col("n_members"))
+      .orderBy(col("doc_id"))
+  }
 
   /** Rounded-cosine SQL fragment between two embedding rows aliased `a`
     * and `b` — the one expression the whole similarity family's oracles
@@ -874,7 +896,7 @@ object ExtensionQueries {
     // ---- Near-dup CLUSTERS: connected components over the pair graph -------
     // Pairs chain (A~B, B~C => one cluster even when A!~C): the pipeline
     // keeps one representative per COMPONENT, not per pair. Spark runs
-    // min-label propagation over the exact-Jaccard pair graph; the oracle
+    // star contraction over the exact-Jaccard pair graph; the oracle
     // computes the same components via a recursive transitive-closure CTE
     // on the shared exact-pair SQL. Every doc appears (singletons map to
     // themselves), rep_id = smallest doc_id in the component.
@@ -882,42 +904,22 @@ object ExtensionQueries {
       (s, d) =>
         val docs = t(s, d, "documents")
         val pairs = Dedup.jaccardPairsDense(docs, "doc_id", "text", 2, 0.5)
-        Dedup.connectedComponents(docs, "doc_id", pairs)
+        Dedup.connectedComponentsStar(docs, "doc_id", pairs)
           .select(col("id").as("doc_id"), col("rep_id"))
           .orderBy(col("doc_id"))
     },
 
     // ---- Near-dup clusters over the SUB-QUADRATIC pair path ----------------
-    // The 100 TB dedup flow end-to-end: the SAME clustering operator
+    // The 100 TB dedup flow end-to-end: the SAME star-contraction clusterer
     // composed over MinHash-LSH pairs (linear-shuffle candidates + exact
     // verify on candidates only) instead of the quadratic-by-contract
     // dense walk above. The oracle stays the recursive transitive-closure
     // CTE over the EXACT pair set — valid because LSH verifies exact
     // Jaccard on its candidates and its recall on the fixture corpus is
     // 1.0 (asserted in ExtensionOpsSpec), the dedup_minhash_lsh precedent.
-    Q("dedup_groups_lsh", sqlDocGroups) {
-      (s, d) =>
-        val docs = t(s, d, "documents")
-        val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
-        Dedup.connectedComponents(docs, "doc_id", pairs)
-          .select(col("id").as("doc_id"), col("rep_id"))
-          .orderBy(col("doc_id"))
-    },
-
-    // ---- Near-dup clusters via STAR CONTRACTION ----------------------------
-    // The high-diameter clustering sibling: alternating small-star/
-    // large-star edge rewriting (O(log² n) rounds regardless of component
-    // diameter) over the same sub-quadratic LSH pair path. Same component
-    // partition as min-label propagation, so the recursive-CTE oracle is
-    // shared verbatim with dedup_groups / dedup_groups_lsh.
-    Q("dedup_groups_star", sqlDocGroups) {
-      (s, d) =>
-        val docs = t(s, d, "documents")
-        val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
-        Dedup.connectedComponentsStar(docs, "doc_id", pairs)
-          .select(col("id").as("doc_id"), col("rep_id"))
-          .orderBy(col("doc_id"))
-    },
+    // `dedup_groups_star` is the same flow under its older name.
+    Q("dedup_groups_lsh", sqlDocGroups)(docGroupsLsh),
+    Q("dedup_groups_star", sqlDocGroups)(docGroupsLsh),
 
     // ---- INCREMENTAL clustering: fold an ingest batch into old labels ------
     // The nightly-ingest flow: the corpus (doc_id % 10 != 0) is already
@@ -984,34 +986,13 @@ object ExtensionQueries {
     // ---- Corpus transform over the SUB-QUADRATIC pair path -----------------
     // The complete 100 TB corpus-shrinking flow end-to-end: MinHash-LSH
     // candidates (linear shuffles) → exact-Jaccard verify on candidates →
-    // connected components → one min-id representative per component.
-    // Oracle shared with dedup_corpus_reps (exact pairs) — valid because
-    // LSH recall on the fixture is 1.0 (asserted in ExtensionOpsSpec), the
-    // dedup_groups_lsh precedent.
-    Q("dedup_corpus_reps_lsh",
-      sqlCorpusReps) {
-      (s, d) =>
-        val docs = t(s, d, "documents")
-        val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
-        Dedup.keepRepresentatives(docs, "doc_id", pairs)
-          .select(col("doc_id"), col("n_members"))
-          .orderBy(col("doc_id"))
-    },
-
-    // Same corpus-shrinking flow with the STAR-CONTRACTION clustering —
-    // keepRepresentativesOf decouples representative selection from the
-    // clusterer, and both clusterings emit min-id components, so the
-    // exact-pair oracle is shared verbatim with dedup_corpus_reps_lsh.
-    Q("dedup_corpus_reps_star",
-      sqlCorpusReps) {
-      (s, d) =>
-        val docs = t(s, d, "documents")
-        val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
-        Dedup.keepRepresentativesOf(docs, "doc_id",
-            Dedup.connectedComponentsStar(docs, "doc_id", pairs))
-          .select(col("doc_id"), col("n_members"))
-          .orderBy(col("doc_id"))
-    },
+    // star-contraction components → one min-id representative per
+    // component. Oracle shared with dedup_corpus_reps (exact pairs) — valid
+    // because LSH recall on the fixture is 1.0 (asserted in
+    // ExtensionOpsSpec), the dedup_groups_lsh precedent.
+    // `dedup_corpus_reps_star` is the same flow under its older name.
+    Q("dedup_corpus_reps_lsh", sqlCorpusReps)(corpusRepsLsh),
+    Q("dedup_corpus_reps_star", sqlCorpusReps)(corpusRepsLsh),
 
     // ---- Streaming ingest dedup: new docs vs the static corpus -------------
     // Incremental crawl ingestion: documents with doc_id % 10 = 0 replay as
@@ -1540,7 +1521,7 @@ object ExtensionQueries {
         col("d1"), col("d2"))
     },
 
-    // ---- Embedding near-dup CLUSTERS (connectedComponents composes) --------
+    // ---- Embedding near-dup CLUSTERS (star contraction composes) -----------
     // The same cluster operator as dedup_groups, over the embedding-cosine
     // pair graph: one representative per transitive near-dup component of
     // vectors. Oracle = the dedup_embedding pair SQL + a recursive
@@ -1568,14 +1549,14 @@ object ExtensionQueries {
       (s, d) =>
         val emb = t(s, d, "embeddings")
         val pairs = Similarity.cosineDupPairs(emb, "vec_id", "embedding", 0.45)
-        Dedup.connectedComponents(emb, "vec_id", pairs)
+        Dedup.connectedComponentsStar(emb, "vec_id", pairs)
           .select(col("id").as("vec_id"), col("rep_id"))
           .orderBy(col("vec_id"))
     },
 
     // ---- Embedding clusters over the SUB-QUADRATIC pair path ---------------
     // The 100 TB embedding-clustering flow end-to-end: IVF-bucketed
-    // verified pairs (candidates never shuffle) → connectedComponents.
+    // verified pairs (candidates never shuffle) → connectedComponentsStar.
     // no_oracle for the same reason as dedup_embedding_ivf (bucket recall
     // < 1 at the fixture's weak threshold); ExtensionOpsSpec pins the
     // REFINEMENT invariant — zero false positives make the IVF edge set a
@@ -1585,7 +1566,7 @@ object ExtensionQueries {
       (s, d) =>
         val emb = t(s, d, "embeddings")
         val pairs = Similarity.ivfDupPairsFromIndex(s, ivfIndexDir(s, d), 0.45, nprobe = 4)
-        Dedup.connectedComponents(emb, "vec_id", pairs)
+        Dedup.connectedComponentsStar(emb, "vec_id", pairs)
           .select(col("id").as("vec_id"), col("rep_id"))
           .orderBy(col("vec_id"))
     },
@@ -1615,7 +1596,7 @@ object ExtensionQueries {
     // similarity_ivf_pinned quantizer, the dedup_groups recursive-CTE
     // components): with centroids pinned to vectors 100-103, assignment
     // is squared-L2 argmin, within-cluster pairs use the shared rounded-
-    // cosine fragment at 0.45, components are min-label closure, and the
+    // cosine fragment at 0.45, components are min-id closure, and the
     // keep rule is min-(centroid_sim, id) per group. k-means QUALITY
     // stays with SemDedupSpec's brute-parity contracts.
     Q("dedup_semantic_pinned",
@@ -1707,10 +1688,10 @@ object ExtensionQueries {
     },
 
     // ---- Embedding clusters over the PINNED bucketed pair path -------------
-    // The components twin: connectedComponents over the pinned-quantizer
+    // The components twin: connectedComponentsStar over the pinned-quantizer
     // pair graph — the dedup_groups recursive-CTE closure seeded from the
     // dedup_embedding_ivf_pinned pair SQL, so the whole sub-quadratic
-    // cluster flow (bucket → verify → transitive closure → min-label rep)
+    // cluster flow (bucket → verify → transitive closure → min-id rep)
     // replays in one DuckDB query.
     Q("dedup_groups_embedding_ivf_pinned",
       s"""WITH RECURSIVE $sqlPinnedDist,
@@ -1736,7 +1717,7 @@ object ExtensionQueries {
         val pairs = Similarity.ivfDupPairsWithCentroids(emb, "vec_id",
           "embedding", 0.45, pinnedVecs(s, d, 100, 103).map(_.toSeq).toSeq,
           nprobe = 2)
-        Dedup.connectedComponents(emb, "vec_id", pairs)
+        Dedup.connectedComponentsStar(emb, "vec_id", pairs)
           .select(col("id").as("vec_id"), col("rep_id"))
           .orderBy(col("vec_id"))
       }

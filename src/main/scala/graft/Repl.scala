@@ -282,7 +282,7 @@ object Repl {
         // neardup (never the full-collect sketch memo)
         val d = df(vid)
         render(graft.operators.Dedup
-          .connectedComponents(d, idCol,
+          .connectedComponentsStar(d, idCol,
             graft.operators.Dedup.minHashLSH(d, idCol, textCol, threshold = thr.toDouble))
           .orderBy(col("id")))
       case "dedup" :: vid :: thr :: rest if rest.size == 0 || rest.size == 2 =>

@@ -102,99 +102,13 @@ object Dedup {
     * for EVERY vertex, rep_id = the smallest id in its component
     * (singletons map to themselves).
     *
-    * Algorithm: min-label propagation — each round every vertex adopts
-    * the smallest label among itself and its neighbors; converges in
-    * O(component diameter) rounds. Near-dup components are small and
-    * dense (that is WHY they are dup clusters), so the round count is
-    * tiny in practice; `maxIters` guards pathological chains and the
-    * operator FAILS LOUDLY rather than return unconverged (= wrong)
-    * labels. Each round is two linear shuffles (edge join + min
-    * aggregation). For corpora that DO present high-diameter components
-    * (e.g. paginated crawls chaining page-to-page), use the implemented
-    * sibling [[connectedComponentsStar]] — alternating small-star/
-    * large-star contraction, O(log² n) rounds regardless of diameter.
-    *
-    * Durability contract: each round truncates lineage with
-    * `localCheckpoint` — executor-LOCAL blocks, NOT fault-tolerant. On a
-    * single-JVM run that is free; on a real cluster an executor loss
-    * mid-run (or after, while downstream still reads the labels) fails
-    * the job, which matters for a dedup pass measured in hours. Set
-    * `spark.sparkContext.setCheckpointDir(...)` before calling and the
-    * loop upgrades itself to RELIABLE checkpoints (HDFS/object-store
-    * backed, survives executor loss) at the cost of one write+read of the
-    * two-long-per-vertex label table per round. Either way the previous
-    * round's blocks are released as soon as the next round materializes,
-    * so storage holds at most two label-table copies, not `maxIters`.
-    */
-  def connectedComponents(vertices: DataFrame, idCol: String,
-                          pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    requireIntegralId(vertices, idCol, "connectedComponents")
-    // Symmetrize with a map-side explode, NOT pairs.union(pairs.swapped):
-    // union scans the pair plan TWICE, and for an expensive generator
-    // (the MinHash-LSH candidate+verify DAG) that doubles the dominant
-    // cost of the whole operator before the cache ever materializes.
-    val edges = pairs
-      .select(col("d1").cast("long").as("a"), col("d2").cast("long").as("b"))
-      .select(explode(array(
-        struct(col("a").as("src"), col("b").as("dst")),
-        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct().cache()
-    var labels = vertices
-      .select(col(idCol).cast("long").as("id"))
-      .withColumn("rep_id", col("id"))
-    var prev: DataFrame = null // previous round's checkpointed frame
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("src"), col("rep_id")), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("rep_id")).as("nbr_min"))
-      // checkpoint, not cache: an iterative frame's LINEAGE doubles
-      // per round, and Catalyst re-analyzes the whole tree each iteration
-      // — by round ~12 planning time alone explodes. Checkpointing
-      // truncates the plan to the materialized partitions (label-table-
-      // sized); local vs reliable per the durability contract in the
-      // scaladoc. The round is ONE shuffling pass: the OLD label rides
-      // the checkpoint, so the changed count is a local scan over the
-      // materialized table — not the re-join (a second shuffle of two
-      // label tables per round) this replaces
-      val tagged = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("rep_id").as("old_rep"),
-          least(col("rep_id"), coalesce(col("nbr_min"), col("rep_id"))).as("rep_id"))
-      val next = Iterative.checkpoint(tagged)
-      changed = next.filter(col("rep_id") =!= col("old_rep")).count()
-      // `next` no longer reads round iter-1's blocks — release them now,
-      // or maxIters label-table copies pile up in storage memory for the
-      // life of the session
-      if (prev != null) Iterative.releaseCheckpoint(prev)
-      prev = if (iter > 0) labels else null // round 0's `labels` is the lazy seed
-      labels = next
-      iter += 1
-    }
-    if (prev != null) Iterative.releaseCheckpoint(prev)
-    edges.unpersist()
-    require(changed == 0,
-      s"connectedComponents did not converge in $maxIters rounds — " +
-        "component diameter exceeds the near-dup contract; raise maxIters " +
-        "or use a star-contraction variant")
-    labels.select(col("id"), col("rep_id"))
-  }
-
-  /** Connected components by alternating star contraction (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond") — the high-diameter
-    * sibling of [[connectedComponents]]. Min-label propagation needs
-    * O(component diameter) rounds, so a pathological chain (a crawl of
-    * paginated near-identical pages, each page similar only to its
-    * neighbors) can exceed any sane round budget; star contraction
-    * converges in O(log² n) rounds REGARDLESS of diameter by rewriting the
-    * edge set itself until every component is a star centered on its
-    * minimum id. Same output contract as [[connectedComponents]]:
-    * (id, rep_id) for every vertex, rep_id = component minimum, singletons
-    * map to themselves.
-    *
-    * Per round (one large-star + one small-star):
+    * Algorithm: alternating star contraction (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"). It rewrites the edge set itself
+    * until every component is a star centered on its minimum id, which
+    * takes O(log² n) rounds REGARDLESS of component diameter — a crawl of
+    * paginated near-identical pages, each similar only to its neighbors,
+    * collapses as fast as a dense cluster. Per round (one large-star + one
+    * small-star):
     *  - large-star: every vertex u computes m = min(Γ(u) ∪ {u}) and
     *    re-points each LARGER neighbor v > u at m — long tails fold onto
     *    local minima in parallel;
@@ -204,12 +118,25 @@ object Dedup {
     * Both are a groupBy(min) + a join co-partitioned on the same key (two
     * linear shuffles), and both only ever re-point edges at SMALLER ids,
     * so the edge set's id-sum strictly decreases until the star fixpoint.
-    * The fixpoint test is an exact set comparison (count + anti-join) on
-    * the materialized (checkpoint-truncated) edge tables; rounds are
-    * O(log²), so the extra per-round pass cannot dominate. Durability and
-    * storage follow [[connectedComponents]]'s contract: reliable
-    * checkpoints when a checkpoint dir is set, at most two edge-table
-    * copies held, loud failure rather than unconverged labels.
+    * The fixpoint test runs after each round on the materialized edge
+    * table; a round over a star forest returns the same edges, so an
+    * input that already is one costs one extra round and no more.
+    * `maxIters` bounds the rounds and the operator FAILS LOUDLY rather
+    * than return unconverged (= wrong) labels.
+    *
+    * Durability contract: each round truncates lineage with
+    * `localCheckpoint` — executor-LOCAL blocks, NOT fault-tolerant. On a
+    * single-JVM run that is free; on a real cluster an executor loss
+    * mid-run (or after, while downstream still reads the labels) fails
+    * the job, which matters for a dedup pass measured in hours. Set
+    * `spark.sparkContext.setCheckpointDir(...)` before calling and the
+    * loop upgrades itself to RELIABLE checkpoints (HDFS/object-store
+    * backed, survives executor loss) at the cost of one write+read of the
+    * edge table per round. Either way the previous round's blocks are
+    * released as soon as the next round materializes, so storage holds
+    * at most two edge-table copies, not `maxIters`. The final round's
+    * checkpoint backs the returned frame and stays until that frame is
+    * garbage-collected.
     */
   def connectedComponentsStar(vertices: DataFrame, idCol: String,
                               pairs: DataFrame, maxIters: Int = 48): DataFrame = {
@@ -268,7 +195,7 @@ object Dedup {
 
     var edges = Iterative.checkpoint(init)
     var prev: DataFrame = null
-    var done = isStarForest(edges)
+    var done = false
     var iter = 0
     while (!done && iter < maxIters) {
       val next = Iterative.checkpoint(smallStar(largeStar(edges)))
@@ -308,7 +235,7 @@ object Dedup {
     * The min-id contract survives composition because each old rep is
     * already its component's minimum, so the contracted graph's min IS
     * the member-level min. Output is exactly
-    * `connectedComponents(old ∪ new, oldPairs ∪ newPairs)` (parity-
+    * `connectedComponentsStar(old ∪ new, oldPairs ∪ newPairs)` (parity-
     * pinned in the spec, including the case where one new doc BRIDGES
     * two previously-separate old components, and a long chain of them).
     *
@@ -381,22 +308,21 @@ object Dedup {
   /** The corpus-level dedup TRANSFORM: keep exactly one representative
     * document per near-dup component (the smallest id), tagged with the
     * component size — the step that actually shrinks a training corpus
-    * once pairs have been clustered by [[connectedComponents]]. Dropped
-    * members are recoverable from the components frame; singletons pass
-    * through with n_members = 1.
+    * once pairs have been clustered by star contraction
+    * ([[connectedComponentsStar]]). Dropped members are recoverable from
+    * the components frame; singletons pass through with n_members = 1.
     */
   def keepRepresentatives(df: DataFrame, idCol: String,
                           pairs: DataFrame): DataFrame =
     keepRepresentativesOf(df, idCol,
-      connectedComponents(df.select(col(idCol)), idCol, pairs))
+      connectedComponentsStar(df.select(col(idCol)), idCol, pairs))
 
   /** [[keepRepresentatives]] over an ALREADY-CLUSTERED component frame
-    * (id, rep_id) — decouples representative selection from the
-    * clustering algorithm, so the same transform composes with
-    * [[connectedComponents]] (min-label) or [[connectedComponentsStar]]
-    * (diameter-robust contraction), or with labels loaded from a prior
-    * batch job's output. Both clusterings emit the min-id-per-component
-    * contract, so the kept set is identical whichever produced the frame.
+    * (id, rep_id): star-contraction labels from
+    * [[connectedComponentsStar]], labels folded by
+    * [[incrementalComponents]], or labels loaded from a prior batch job's
+    * output. Each emits the min-id-per-component contract, so the kept
+    * set is identical whichever produced the frame.
     */
   def keepRepresentativesOf(df: DataFrame, idCol: String,
                             components: DataFrame): DataFrame = {

@@ -59,19 +59,20 @@ object Export {
     * the plain form — as long as a component's min-id member stays in
     * the corpus, its split never moves.
     *
-    * Scale shape: the component labels are [[Dedup.connectedComponents]]
-    * (the audited iterative label propagation), one equi join back to
-    * the corpus, then the map-side hash label — no new shuffle class.
+    * Scale shape: the component labels are star contraction
+    * ([[Dedup.connectedComponentsStar]], O(log² n) rounds whatever the
+    * component diameter), one equi join back to the corpus, then the
+    * map-side hash label — no new shuffle class.
     */
   def splitByComponents(df: DataFrame, idCol: String, pairs: DataFrame,
                         fractions: Seq[(String, Double)],
                         seed: Long = 42L): DataFrame = {
     // loud type guard BEFORE the long-cast join below: a string-keyed
     // corpus would null-cast and silently drop every row at the equi
-    // join (connectedComponents requires integral ids anyway — fail
+    // join (connectedComponentsStar requires integral ids anyway — fail
     // here with this operator's name)
     Dedup.requireIntegralId(df, idCol, "splitByComponents")
-    val comp = Dedup.connectedComponents(df.select(col(idCol)), idCol, pairs)
+    val comp = Dedup.connectedComponentsStar(df.select(col(idCol)), idCol, pairs)
       .select(col("id").as("__cid"), col("rep_id").as("__rep"))
     val joined = df.join(comp, df(idCol).cast("long") === col("__cid"))
     splitByHash(joined, "__rep", fractions, seed).drop("__cid", "__rep")

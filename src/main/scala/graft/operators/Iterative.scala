@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Dataset
 
 /** Shared plumbing for iterative DataFrame/Dataset loops (connected
-  * components' label propagation, k-means|| oversampling): each round
+  * components' star contraction, k-means|| oversampling): each round
   * checkpoints to truncate lineage, and the PREVIOUS round's storage must
   * then be released explicitly or up to maxIters table copies accumulate
   * in executor storage memory for the life of the session.

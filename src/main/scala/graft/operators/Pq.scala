@@ -499,24 +499,17 @@ object Pq {
     * bounded page aggregate map-side, so the shuffle stays
     * `partitions · |Q| · k`.
     *
-    * `queries` is collected (sketch-sized by contract: at most
-    * [[Similarity.MaxQueryBatch]] rows, the ivfTopKFromIndex precedent).
+    * `queries` is collected (sketch-sized by contract, the
+    * ivfTopKFromIndex precedent: at most [[queryCap]] rows, or a loud
+    * error).
     */
   def adcTopK(codes: DataFrame, cb: Codebooks, queries: DataFrame, k: Int,
-              rotation: Option[Array[Array[Double]]] = None): DataFrame =
-    adcScan(codes, cb, queries, k, rotation, Similarity.MaxQueryBatch)
-
-  /** [[adcTopK]] under a caller-chosen query-batch cap (SQ's per-query
-    * lookup tables are larger, so its cap, [[Sq.MaxQueryBatch]], is lower).
-    */
-  private[operators] def adcScan(codes: DataFrame, cb: Codebooks, queries: DataFrame,
-                                 k: Int, rotation: Option[Array[Array[Double]]],
-                                 batchCap: Int): DataFrame = {
+              rotation: Option[Array[Array[Double]]] = None): DataFrame = {
     val spark = codes.sparkSession
     // OPQ: queries rotate into the codebook space driver-side (the batch
     // is already collected); R is orthogonal so the ADC estimate still
     // approximates the ORIGINAL cosine
-    val qs = collectQueries(queries, cb.dim, batchCap)
+    val qs = collectQueries(queries, cb.dim, queryCap(cb))
       .map { case (qid, q) => (qid, rotation.map(rotateVec(q, _)).getOrElse(q)) }
     val bc = spark.sparkContext.broadcast((cb, qs))
     import spark.implicits._
@@ -535,6 +528,15 @@ object Pq {
       .toDF("q_id", "n_id", "asim")
     pageTopK(scored, k)
   }
+
+  /** The query-batch cap of an ADC scan under `cb`: each query's lookup
+    * tables are `m·ksub` doubles, built once per (query, partition), so
+    * the cap keeps a batch's tables within 2^26 doubles (512 MB) —
+    * [[Similarity.MaxQueryBatch]] at PQ's default 8·16, 4 096 at SQ8's
+    * 64·256, whichever entry point serves the codes.
+    */
+  private[operators] def queryCap(cb: Codebooks): Int =
+    math.min(Similarity.MaxQueryBatch, (1 << 26) / (cb.m * cb.ksub))
 
   /** PQ top-k: train, then the pinned serve — [[train]]'s codebooks
     * handed to [[pqTopKWithCodebooks]] (encode → ADC search, with optional
@@ -584,12 +586,12 @@ object Pq {
                           refine: Int = 1): DataFrame = {
     requireServable(emb, idCol, refine, "pqTopKWithCodebooks")
     serveCodes(emb, idCol, vecCol, queryPred, k, cb,
-      encode(emb, idCol, vecCol, cb, rotation), rotation, refine, Similarity.MaxQueryBatch)
+      encode(emb, idCol, vecCol, cb, rotation), rotation, refine)
   }
 
   /** The one serve tail of the fused PQ, OPQ and SQ entry points: the
     * encoded corpus `codes` (idCol, code) is ADC-scored for the
-    * `queryPred` rows ([[adcScan]]); `refine > 1` makes that a `refine·k`
+    * `queryPred` rows ([[adcTopK]]); `refine > 1` makes that a `refine·k`
     * shortlist per query, re-ranked by the exact cosine over the original
     * vectors ([[Similarity.rerankShortlist]]).
     */
@@ -597,13 +599,13 @@ object Pq {
                                     queryPred: Column, k: Int, cb: Codebooks,
                                     codes: DataFrame,
                                     rotation: Option[Array[Array[Double]]],
-                                    refine: Int, batchCap: Int): DataFrame = {
+                                    refine: Int): DataFrame = {
     val nCodes = codes.select(col(idCol).cast("long").as("n_id"), col("code"))
     val queries = emb.filter(queryPred)
       .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-    if (refine <= 1) adcScan(nCodes, cb, queries, k, rotation, batchCap)
+    if (refine <= 1) adcTopK(nCodes, cb, queries, k, rotation)
     else Similarity.rerankShortlist(
-      adcScan(nCodes, cb, queries, k * refine, rotation, batchCap), queries,
+      adcTopK(nCodes, cb, queries, k * refine, rotation), queries,
       emb.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec")), k)
   }
 

@@ -594,7 +594,7 @@ object Similarity {
     * only that round's NEW candidates (broadcast, ~l vectors) — one
     * narrow pass, no shuffle — and the iterative frame is
     * checkpoint-truncated per round (same lineage-explosion guard as
-    * connectedComponents). Driver memory is O(|C|·dim) ≤
+    * connectedComponentsStar). Driver memory is O(|C|·dim) ≤
     * maxInitCandidates·dim; the final recluster costs O(k·|C|·dim) flops
     * once, the irreducible kmeans++ term.
     */
@@ -998,7 +998,7 @@ object Similarity {
     * probe-set intersections, and the verify is the shared rounded
     * cosine — so the output sits under the exact-oracle hash gate
     * (catalog `dedup_embedding_ivf_pinned`, and the components twin
-    * `dedup_groups_embedding_ivf_pinned` through connectedComponents).
+    * `dedup_groups_embedding_ivf_pinned` through connectedComponentsStar).
     * Bucketing QUALITY (recall vs nprobe) stays with the trained path's
     * recall/zero-FP tests.
     */
@@ -1196,8 +1196,8 @@ object Similarity {
     * at balanced sizes, and each cluster's scan is an independent
     * bucket-local task ([[ivfDupPairs]]'s nprobe=1 kernel: candidates
     * never shuffle, only surviving pairs do). Components come from the
-    * same `connectedComponents` loop as every other dedup family; the
-    * keep rule is one broadcast join (nlist centroid rows) plus one
+    * same star-contraction loop as every other dedup family; the keep
+    * rule is one broadcast join (nlist centroid rows) plus one
     * min_by aggregation — no window sort. Sizing regimes: nlist = √N
     * (`autoNlist`, the catalog row's choice) keeps total pair cost
     * ~N^1.5 with cluster sizes √N; a fixed cluster-size budget
@@ -1228,7 +1228,8 @@ object Similarity {
     * stage is deterministic replayable arithmetic — squared-L2 argmin
     * assignment (ascending (distance, index), the [[ivfTopKWithCentroids]]
     * precedent), within-cluster rounded-cosine pairs at `threshold`,
-    * min-label connected components, and the min-(centroid_sim, id) keep
+    * star-contraction connected components ([[Dedup.connectedComponentsStar]],
+    * min-id representatives), and the min-(centroid_sim, id) keep
     * rule. Catalog `dedup_semantic_pinned` replays the whole
     * cluster → pair → chain → prune flow in DuckDB (recursive-CTE
     * components, the `dedup_groups` oracle); clustering QUALITY stays
@@ -1248,7 +1249,7 @@ object Similarity {
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .withColumn("bucket", nearestCentroids(col("vec"), cs, 1).getItem(0)))
     val pairs = bucketVerifiedPairs(tagged, threshold)
-    val comps = Dedup.connectedComponents(
+    val comps = Dedup.connectedComponentsStar(
       tagged.select(col("id")), "id", pairs)
     // centroid similarity per member: nlist rows broadcast, cosine as the
     // same sequential-fold arithmetic the pair kernel uses

@@ -27,9 +27,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: the ADC lookup tables are `dim·levels` doubles PER QUERY
   * (128 KB at dim 64) versus PQ's `m·ksub` (1 KB), so the query-batch cap
-  * ([[MaxQueryBatch]]) is 32× lower here; corpus-side cost is what SQ8
-  * optimizes and that is strictly smaller (4× less scan bandwidth than
-  * brute force).
+  * ([[Pq.queryCap]], derived from the codebook) is 4 096 here, 24× lower
+  * than PQ's; corpus-side cost is what SQ8 optimizes and that is strictly
+  * smaller (4× less scan bandwidth than brute force).
   *
   * Like every approximate family here, exactness is the brute-force
   * sibling's job ([[Similarity.cosineTopK]]); SQ rows are `no_oracle`
@@ -37,12 +37,6 @@ import org.apache.spark.sql.functions._
   * exactness contracts pinned in SqSpec.
   */
 object Sq {
-
-  /** Query-batch cap of every SQ serve, below [[Similarity.MaxQueryBatch]]
-    * because each query's lookup tables (`dim·levels` doubles) are far
-    * larger than PQ's (`m·ksub`).
-    */
-  private[graft] final val MaxQueryBatch = 4096
 
   /** Train the per-dimension uniform grid: sample min/max per dimension
     * over the deterministic bottom-k-by-hash sample (the PQ training
@@ -137,7 +131,7 @@ object Sq {
     Pq.requireServable(emb, idCol, refine, "sqTopK")
     val cb = train(emb, idCol, vecCol, levels, seed)
     Pq.serveCodes(emb, idCol, vecCol, queryPred, k, cb,
-      encode(emb, idCol, vecCol, cb), None, refine, MaxQueryBatch)
+      encode(emb, idCol, vecCol, cb), None, refine)
   }
 
   /** The uniform grid `centroid(s)(j) = lo + j·delta` for every dimension
@@ -173,7 +167,7 @@ object Sq {
     Pq.requireServable(emb, idCol, refine, "sqTopKWithGrid")
     val cb = gridCodebooks(dim, lo, delta, levels)
     Pq.serveCodes(emb, idCol, vecCol, queryPred, k, cb,
-      encode(emb, idCol, vecCol, cb), None, refine, MaxQueryBatch)
+      encode(emb, idCol, vecCol, cb), None, refine)
   }
 
   /** Persist grid + codes in the EXACT [[Pq.buildPqIndex]] layout
@@ -196,15 +190,11 @@ object Sq {
 
   /** Serve ADC top-k from a persisted SQ index: one sketch-sized grid
     * read plus one scan of the 4×-compressed code table; original
-    * vectors never touched. Thin wrapper over the PQ serve path (the
-    * artifact layouts are identical) with the SQ-sized query-batch cap.
+    * vectors never touched. The PQ serve path itself
+    * ([[Pq.pqTopKFromIndex]]): the artifact layouts are identical, and
+    * the query-batch cap follows the stored grid's `dim·levels`.
     */
   def sqTopKFromIndex(queries: DataFrame, idCol: String, vecCol: String,
-                      indexDir: String, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    val cb = Pq.loadCodebooks(spark, indexDir)
-    Pq.adcScan(spark.read.parquet(s"$indexDir/codes"), cb,
-      queries.select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec")),
-      k, None, MaxQueryBatch)
-  }
+                      indexDir: String, k: Int): DataFrame =
+    Pq.pqTopKFromIndex(queries, idCol, vecCol, indexDir, k)
 }

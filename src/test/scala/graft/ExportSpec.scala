@@ -118,6 +118,19 @@ class ExportSpec extends SparkSpec {
     } finally { split.unpersist(); () }
   }
 
+  test("splitByComponents keeps a 40-hop near-dup chain in one split") {
+    import spark.implicits._
+    // a paginated crawl: each page near-dups only its neighbors, so the
+    // component's diameter is 40 — label propagation, one hop a round,
+    // would need 40 rounds
+    val pages = (0L to 40L).map(i => (i, s"page $i")).toDF("doc_id", "text")
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val split = Export.splitByComponents(pages, "doc_id", chain,
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
+      .select("split").distinct().collect()
+    assert(split.length == 1, split.toSeq.toString)
+  }
+
   test("splitByComponents rejects a string id column loudly") {
     import graft.operators.Dedup
     import spark.implicits._

@@ -141,11 +141,14 @@ class ExtensionOpsSpec extends SparkSpec {
     val model = (0 until n).map(i => (i.toLong, find(i).toLong))
     val verts = (0 until n).map(_.toLong).toDF("id")
     val pairsDf = pairRows.toDF("d1", "d2")
-    val got = Dedup.connectedComponents(verts, "id", pairsDf)
+    val got = Dedup.connectedComponentsStar(verts, "id", pairsDf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
     assert(got == model, s"CC diverges from union-find")
     // the planted 4-chain proves labels propagate MULTIPLE hops
     assert(got.filter(t => t._1 >= 190 && t._1 <= 193).map(_._2).distinct.size == 1)
+    // vertices no pair touches label themselves
+    val touched = pairRows.flatMap { case (a, b) => Seq(a, b) }.toSet
+    assert(got.filterNot(t => touched(t._1)).forall(t => t._1 == t._2))
   }
 
   test("keepRepresentatives keeps the min-id doc per cluster with its member count") {
@@ -160,23 +163,26 @@ class ExtensionOpsSpec extends SparkSpec {
     assert(kept == Set((1L, "a", 3L), (4L, "d", 1L), (9L, "e", 1L)), kept.toString)
   }
 
-  test("connectedComponents fails loudly instead of returning unconverged labels") {
+  test("connectedComponentsStar fails loudly instead of returning unconverged labels") {
     import spark.implicits._
-    // a 12-vertex path has diameter 11 > maxIters=3
-    val verts = (0L until 12L).toDF("id")
-    val chain = (0L until 11L).map(i => (i, i + 1)).toDF("d1", "d2")
+    // a 64-vertex path needs more than one contraction round
+    val verts = (0L until 64L).toDF("id")
+    val chain = (0L until 63L).map(i => (i, i + 1)).toDF("d1", "d2")
     val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(verts, "id", chain, maxIters = 3).collect()
+      Dedup.connectedComponentsStar(verts, "id", chain, maxIters = 1).collect()
     }
     assert(e.getMessage.contains("converge"), e.getMessage)
-    // and with enough rounds the same chain collapses to one component
-    val ok = Dedup.connectedComponents(verts, "id", chain, maxIters = 15)
+    // and with the default budget the same chain collapses to one component
+    val ok = Dedup.connectedComponentsStar(verts, "id", chain)
       .select("rep_id").distinct().collect()
     assert(ok.length == 1 && ok.head.getLong(0) == 0L)
   }
 
   test("connectedComponentsStar matches union-find and min-label propagation (randomized)") {
     import spark.implicits._
+    // deterministic random graph on 250 vertices plus a planted 5-chain;
+    // brute-force union-find and a driver-side min-label propagation are
+    // two independent models
     val rnd = new scala.util.Random(41L)
     val n = 250
     val pairRows = Seq.fill(150)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
@@ -195,23 +201,57 @@ class ExtensionOpsSpec extends SparkSpec {
     val star = Dedup.connectedComponentsStar(verts, "id", pairsDf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
     assert(star == model, "star contraction diverges from union-find")
-    val minLabel = Dedup.connectedComponents(verts, "id", pairsDf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+    // min-label propagation: every vertex takes the least label among
+    // itself and its neighbours, one hop a round, until nothing changes
+    val label = Array.tabulate(n)(_.toLong)
+    var changed = true
+    while (changed) {
+      changed = false
+      pairRows.foreach { case (a, b) =>
+        val m = math.min(label(a.toInt), label(b.toInt))
+        if (label(a.toInt) != m || label(b.toInt) != m) {
+          label(a.toInt) = m; label(b.toInt) = m; changed = true
+        }
+      }
+    }
+    val minLabel = (0 until n).map(i => (i.toLong, label(i)))
     assert(star == minLabel, "star contraction diverges from min-label propagation")
+    // the planted chain proves labels reach MULTIPLE hops
+    assert(star.filter(t => t._1 >= 240 && t._1 <= 244).map(_._2).distinct.size == 1)
+  }
+
+  test("connectedComponentsStar: a star-forest input is a fixed point") {
+    import spark.implicits._
+    // every child already points at its component minimum: one round
+    // returns the same edges, so the labels are the input stars themselves
+    val verts = (0L until 10L).toDF("id")
+    val stars = Seq((0L, 1L), (0L, 2L), (0L, 3L), (5L, 6L), (5L, 8L)).toDF("d1", "d2")
+    val got = Dedup.connectedComponentsStar(verts, "id", stars)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val want = Map(1L -> 0L, 2L -> 0L, 3L -> 0L, 6L -> 5L, 8L -> 5L)
+    assert(got == (0L until 10L).map(i => i -> want.getOrElse(i, i)).toMap, got.toString)
+  }
+
+  test("connectedComponentsStar tests for a star forest only after a round") {
+    import spark.implicits._
+    // a 9-vertex path is not a star forest: the loop's rounds and their
+    // after-round probes start 34 jobs, and a probe before the first
+    // round would add 3
+    val verts = (0L until 9L).toDF("id")
+    val chain = (0L until 8L).map(i => (i, i + 1)).toDF("d1", "d2")
+    val jobs = org.apache.spark.graftest.Listeners.jobsStarted(spark.sparkContext) {
+      Dedup.connectedComponentsStar(verts, "id", chain)
+    }
+    assert(jobs <= 34, s"$jobs jobs")
   }
 
   test("connectedComponentsStar collapses a path far beyond min-label's round budget") {
     import spark.implicits._
-    // a 2048-vertex path has diameter 2047: min-label propagation needs
-    // ~2047 rounds (default budget 25 fails loudly), star contraction is
-    // O(log² n) — THE case the variant exists for
+    // a 2048-vertex path has diameter 2047: label propagation, one hop a
+    // round, would need ~2047 rounds; star contraction is O(log² n)
     val n = 2048L
     val verts = (0L until n).toDF("id")
     val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("d1", "d2")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(verts, "id", chain).collect()
-    }
-    assert(e.getMessage.contains("converge"), e.getMessage)
     val labels = Dedup.connectedComponentsStar(verts, "id", chain)
     val reps = labels.select("rep_id").distinct().collect()
     assert(reps.length == 1 && reps.head.getLong(0) == 0L,
@@ -238,29 +278,29 @@ class ExtensionOpsSpec extends SparkSpec {
 
   test("connectedComponents releases every round's checkpoint except the result's") {
     import spark.implicits._
-    // a 13-vertex path forces ~12 propagation rounds; without the
-    // per-round release each round's label-table copy would stay in
-    // storage for the session (the leak this test pins closed)
+    // a 13-vertex path takes several contraction rounds; without the
+    // per-round release each round's checkpointed edge table would stay
+    // in storage for the session (the leak this test pins closed)
     val verts = (0L until 13L).toDF("id")
     val chain = (0L until 12L).map(i => (i, i + 1)).toDF("d1", "d2")
     val before = spark.sparkContext.getPersistentRDDs.size
-    val labels = Dedup.connectedComponents(verts, "id", chain)
+    val labels = Dedup.connectedComponentsStar(verts, "id", chain)
     assert(labels.select("rep_id").distinct().count() == 1)
     val after = spark.sparkContext.getPersistentRDDs.size
     // at most the RESULT's own checkpoint may remain pinned (it backs the
-    // returned frame); the ~11 earlier rounds must all be gone
+    // returned frame); every earlier round's must be gone
     assert(after <= before + 1,
       s"CC leaked checkpointed rounds: $before persistent RDDs before, $after after")
   }
 
-  test("connectedComponents upgrades to reliable checkpoints when a checkpoint dir is set") {
+  test("connectedComponentsStar upgrades to reliable checkpoints when a checkpoint dir is set") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
       val verts = (0L until 8L).toDF("id")
       val chain = (0L until 7L).map(i => (i, i + 1)).toDF("d1", "d2")
-      val got = Dedup.connectedComponents(verts, "id", chain)
+      val got = Dedup.connectedComponentsStar(verts, "id", chain)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == (0L until 8L).map((_, 0L)).toSet, got.toString)
       // reliable mode must actually write RDD checkpoint files (the
@@ -300,11 +340,11 @@ class ExtensionOpsSpec extends SparkSpec {
     // only split components, never merge across them — every IVF
     // component must therefore map into exactly ONE exact component.
     val exact = Similarity.cosineDupPairs(emb, "vec_id", "embedding", 0.45)
-    val exactComp = Dedup.connectedComponents(emb, "vec_id", exact)
+    val exactComp = Dedup.connectedComponentsStar(emb, "vec_id", exact)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ivfPairs = Similarity.ivfDupPairs(emb, "vec_id", "embedding", 0.45,
       nlist = Similarity.autoNlist(emb.count()), nprobe = 4)
-    val ivfComp = Dedup.connectedComponents(emb, "vec_id", ivfPairs)
+    val ivfComp = Dedup.connectedComponentsStar(emb, "vec_id", ivfPairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ivfComp.keySet == exactComp.keySet, "every vector must be labeled")
     val exactRepOf = ivfComp.groupBy(_._2).map { case (ivfRep, members) =>
@@ -515,12 +555,11 @@ class ExtensionOpsSpec extends SparkSpec {
     val plan = q.fn(spark, sf).queryExecution.optimizedPlan.toString
     // the dense block-pair path enters the plan as an RDD scan over the
     // (d1, d2, jacc) tuple schema; the LSH pipeline is pure DataFrame
-    // operators. The CLUSTERING stage's checkpointed label table is a
-    // legitimate RDD scan — its output schema (id, rep_id) is the
-    // discriminator
+    // operators. The CLUSTERING stage's checkpointed edge table is a
+    // legitimate RDD scan — its output schema (u, v) is the discriminator
     val rddScans = plan.linesIterator
       .filter(l => l.contains("ExistingRDD") || l.contains("LogicalRDD")).toSeq
-    assert(rddScans.forall(_.contains("rep_id")),
+    assert(rddScans.forall(l => """\[u#\d+L, v#\d+L\]""".r.findFirstIn(l).isDefined),
       s"non-clustering RDD scan (quadratic dense stage?) leaked into:\n$plan")
     spark.catalog.clearCache()
   }

@@ -38,7 +38,7 @@ class IncrementalCcSpec extends SparkSpec {
   test("fixture parity: incremental equals from-scratch recluster") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
-    val full = labelsOf(Dedup.connectedComponents(docs, "doc_id", pairs))
+    val full = labelsOf(Dedup.connectedComponentsStar(docs, "doc_id", pairs))
 
     val oldDocs = docs.filter(pmod(col("doc_id"), lit(10)) =!= 0)
     val newDocs = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
@@ -70,7 +70,7 @@ class IncrementalCcSpec extends SparkSpec {
   test("chained ingest: two successive batches still equal full recluster") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val pairs = Dedup.minHashLSH(docs, "doc_id", "text", n = 2, threshold = 0.5)
-    val full = labelsOf(Dedup.connectedComponents(docs, "doc_id", pairs))
+    val full = labelsOf(Dedup.connectedComponentsStar(docs, "doc_id", pairs))
 
     // base = %5 != 0; batch1 = %10 == 5; batch2 = %10 == 0
     val base = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)

@@ -117,6 +117,24 @@ class SqSpec extends SparkSpec {
     assert(viaPq == served)
   }
 
+  test("an SQ index caps its query batch by its grid, whichever path serves it") {
+    // 64 dims × 256 levels: every query's lookup tables are 16 384
+    // doubles, so a batch stops at 4 096 queries, through the PQ serve
+    // path as through the SQ one. The batch collects as the frame is
+    // built; no scan runs here
+    val dir = s"/tmp/graft_io/p${ProcessHandle.current().pid()}/sq_spec/cap"
+    Sq.buildSqIndex(emb, "vec_id", "embedding", dir, levels = 256)
+    def queries(n: Int) = spark.range(n)
+      .select(col("id").as("vec_id"), array_repeat(lit(0.5f), 64).as("embedding"))
+    for (serve <- Seq[(org.apache.spark.sql.DataFrame, Int) => Any](
+        Pq.pqTopKFromIndex(_, "vec_id", "embedding", dir, _),
+        Sq.sqTopKFromIndex(_, "vec_id", "embedding", dir, _))) {
+      val e = intercept[IllegalArgumentException](serve(queries(4097), 10))
+      assert(e.getMessage.contains("4096"), e.getMessage)
+      serve(queries(4096), 10)
+    }
+  }
+
   test("pinned uniform grid: exact grid geometry, clamped codes, full-refine equals brute") {
     // geometry: gridCodebooks lays out lo + j·Δ exactly (binary-exact at
     // lo=-2, Δ=0.25), every dimension identical
